@@ -38,6 +38,11 @@ from tempel_spark.functions.text import normalize_mention
 __all__ = ["score_pairs", "abbreviation_edges", "anchored_partial_sources", "MUST_LINK_RATIO"]
 
 MUST_LINK_RATIO = 0.2  # reference s03_dataset_creator.json:44
+# every column score_pairs adds (helpers included)
+_OUTPUT_COLS = (
+    "ratio_edit_distance", "jaccard", "_subset", "_diffcount", "jaro_winkler",
+    "cosine", "score", "must_link", "is_partial", "is_match",
+)
 
 
 def score_pairs(
@@ -116,7 +121,10 @@ def score_pairs(
     feats = bind_once(
         F.struct(F.split(na, " ").alias("ta"), F.split(nb, " ").alias("tb")), _feats
     )
-    out = pairs.select("*", F.inline(F.array(feats))).withColumn(
+    # the inline select APPENDS its columns: drop earlier copies of
+    # every output (re-scoring a scored frame) or later references are
+    # ambiguous — and a re-scored frame keeps the fresh column order
+    out = pairs.drop(*_OUTPUT_COLS).select("*", F.inline(F.array(feats))).withColumn(
         "jaro_winkler", jw
     )
     string_score = (

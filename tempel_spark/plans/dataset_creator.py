@@ -114,7 +114,14 @@ def entities_in_all_snapshots(stats: DataFrame, n_snapshots: int | None = None) 
     """J5 rewrite: entities present in every cut — ONE countDistinct
     aggregate instead of the reference's 10 chained inner joins
     (s03:219-224). Returns the filtered stats (inner join against the
-    qualifying entity ids, broadcast — the survivor list is small)."""
+    qualifying entity ids, broadcast — the survivor list is small).
+
+    A NULL snapshot_ts is not a cut: countDistinct would skip it, so
+    the query fails on one (raised lazily, when it runs)."""
+    stats = stats.withColumn(
+        "snapshot_ts",
+        F.coalesce("snapshot_ts", F.raise_error(F.lit("entities_in_all_snapshots: NULL snapshot_ts"))),
+    )
     # stats is read up to three times (snapshot census, keep agg, join)
     stats = stats.localCheckpoint(eager=False)
     per_entity = stats.groupBy("entity_id").agg(
@@ -126,7 +133,7 @@ def entities_in_all_snapshots(stats: DataFrame, n_snapshots: int | None = None) 
         # snapshot census as a LAZY 1-row broadcast instead of an
         # eager distinct().count() at construction time: the census
         # rides the query's own job rather than a separate
-        # driver-serial job per query build (same value either way)
+        # driver-serial job per query build (same value: no NULL cuts)
         census = stats.agg(F.countDistinct("snapshot_ts").alias("_tot"))
         keep = per_entity.crossJoin(F.broadcast(census)).filter(
             F.col("_n_cuts") == F.col("_tot")

@@ -51,6 +51,7 @@ from tempel_spark.operators.blocking import (
 from tempel_spark.operators.clustering import connected_components
 from tempel_spark.operators.metrics import pairwise_f1
 from tempel_spark.operators.scoring import abbreviation_edges, score_pairs
+from tempel_spark.session import codegen_compiles
 from tempel_spark.sources.catalog import Catalog
 
 __all__ = [
@@ -206,16 +207,22 @@ def run_pipeline(
     (cosine), instead of all going to the prior top-1. Off by
     default: the surface-level pivot is the reference-parity
     semantics; this is the accuracy upgrade on top.
+
+    profile: materialize each stage as it is built and also return
+    `timings` (stage → wall seconds) and `codegen_compiles` (stage →
+    generated classes compiled, i.e. code-generation cache misses).
     """
     # default = the reference's 10 yearly cuts 2013-2022
     # (s01_config_content.json:29-40)
     snaps = snapshots or yearly_snapshots(2013, 10)
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
 
     def ck(name: str, compute, partition_by=("snapshot_ts",), cache=False) -> DataFrame:
         import time as _time
 
         t0 = _time.time()
+        c0 = codegen_compiles(spark) if profile else 0
         if catalog is None:
             df = compute()
             # no durable checkpoint → persist hot intermediates so the
@@ -233,6 +240,7 @@ def run_pipeline(
             df = catalog.read_or_compute(name, compute, partition_by, force=force)
         if profile:
             timings[name] = round(_time.time() - t0, 3)
+            compiles[name] = codegen_compiles(spark) - c0
         return df
 
     mentions = ck("mentions", lambda: extract_mention_table(transcripts, snaps), cache=True)
@@ -504,6 +512,7 @@ def run_pipeline(
     }
     if profile:
         out["timings"] = timings  # type: ignore[assignment]
+        out["codegen_compiles"] = compiles  # type: ignore[assignment]
 
     if gold is not None:
         f1 = pairwise_f1(

@@ -164,6 +164,26 @@ def test_quality_filters_and_coverage(spark):
     assert surv.filter(F.col("entity_id") == "e1").count() > 0
 
 
+def test_entities_in_all_snapshots_rejects_null_cut(spark):
+    """A NULL snapshot_ts is not a cut the census can count: instead of
+    silently qualifying entities without it, the query fails with a
+    message naming the column — with and without an explicit count."""
+    import pytest
+
+    from tempel_spark.plans.dataset_creator import entities_in_all_snapshots
+
+    stats = spark.createDataFrame(
+        [("e1", "2013-01-01", 3), ("e1", "2014-01-01", 2), ("e2", "2013-01-01", 4), ("e2", None, 1)],
+        "entity_id string, snapshot_ts string, nr_links long",
+    )
+    for n in (None, 2):
+        with pytest.raises(Exception, match="NULL snapshot_ts"):
+            entities_in_all_snapshots(stats, n).collect()
+    # without the NULL row the same frame resolves normally
+    ok = entities_in_all_snapshots(stats.filter(F.col("snapshot_ts").isNotNull()))
+    assert sorted(r.entity_id for r in ok.select("entity_id").distinct().collect()) == ["e1"]
+
+
 def test_dataset_end_to_end_with_mentions(spark, tmp_path):
     """Full flow incl. instance pick + context windows + fan-out sink."""
     from tempel_spark.plans.dataset_creator import create_dataset

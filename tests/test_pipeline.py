@@ -161,3 +161,28 @@ def test_context_disambiguation_deterministic(spark):
     a = sorted(map(tuple, run_pipeline(spark, t, snapshots=SNAPSHOTS, context_dim=32)["components"].collect()))
     b = sorted(map(tuple, run_pipeline(spark, t, snapshots=SNAPSHOTS, context_dim=32)["components"].collect()))
     assert a == b
+
+
+def test_rebuild_reuses_generated_code(spark, transcripts):
+    """A second rebuild in one session compiles no generated class: the
+    code-generation cache holds the pipeline's whole working set
+    (session.CODEGEN_CACHE_ENTRIES; at Spark's default of 100 entries
+    every rebuild recompiled all of it). profile=True attributes the
+    compiles to stages."""
+    from tempel_spark.plans.pipeline import run_pipeline
+    from tempel_spark.session import codegen_compiles
+
+    trans = transcripts.drop("gold_entity_id", "surface")
+
+    def rebuild(profile=False):
+        before = codegen_compiles(spark)
+        res = run_pipeline(spark, trans, snapshots=SNAPSHOTS, profile=profile)
+        res["components"].collect()
+        return res, codegen_compiles(spark) - before
+
+    rebuild()
+    assert rebuild()[1] == 0
+    res, n = rebuild(profile=True)
+    per_stage = res["codegen_compiles"]
+    assert list(per_stage) == list(res["timings"])
+    assert all(v >= 0 for v in per_stage.values()) and sum(per_stage.values()) <= n
