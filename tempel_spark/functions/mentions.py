@@ -5,82 +5,46 @@ with pipe-trick / namespace / capitalization rules
 (s01_wikipedia_clean_and_tokenize.py:117-274, get_mention 136-206,
 parse_mentions_from_source 209-253; regexes misc/compiled_regexes.py:3-9).
 
-Two implementations:
+``extract_mentions`` carries the full rule set (pipe trick, namespace
+skip, first-letter capitalization, underscore canonicalization) plus
+span offsets as Column expressions only, so the stage runs in the JVM
+with no Python worker. It returns the reference's rows exactly
+(tests/test_mentions.py fuzzes it against the reference loop); the
+patterns make Java's regex engine behave as Python's `re` does:
 
-* ``extract_mentions_native`` — pure Column expressions
-  (regexp_extract_all → explode → split). Used in oracle-checked
-  queries: bit-identical semantics are expressible in ANSI SQL.
-* ``extract_mentions_pandas`` — Arrow-batched pandas UDF carrying the
-  full reference rule set (pipe trick, namespace skip, first-letter
-  capitalization, underscore canonicalization) plus span offsets.
-  This is the "mention extraction per turn with vectorized Arrow
-  UDFs" stage named by the north_rule.
+* ``(?d)`` (UNIX_LINES): Python's ``.`` stops only at ``\\n``; Java's
+  also stops at ``\\r``, U+0085, U+2028 and U+2029.
+* ``_PY_SPACE``: Python's ``str.strip()`` and ``\\s`` use
+  ``str.isspace()``; Spark's ``trim`` and Java's ``\\s`` use other sets.
+* ``(?iu)``: Python's ``(?i)`` is Unicode-aware (``\\u212a`` matches k).
+
+The one known divergence is the upper case of a target's first letter:
+Spark's case tables (ICU, Unicode 16) are newer than those of the
+Python the reference runs on (3.11: Unicode 14.0), so U+019B, U+0264
+and the Garay letters U+10D70.. are upper-cased here and left alone
+there (pinned by test_upper_case_divergence_pinned).
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["extract_mentions_native", "extract_mentions_pandas", "MENTION_SCHEMA"]
+__all__ = ["extract_mentions", "MENTION_SCHEMA"]
 
-ANCHOR_RE = r"\[\[(.*?)\]\]"
+ANCHOR_RE = r"(?d)\[\[(.*?)\]\]"
 
+# every character with str.isspace()
+_PY_SPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+_SPACE_CLASS = "[" + "".join(f"\\x{{{ord(c):X}}}" for c in _PY_SPACE) + "]"
+# pipe trick: [[Title (dab)|]] → "Title" (s01:136-206)
+_DAB_SUFFIX = rf"(?d){_SPACE_CLASS}*\(.*?\){_SPACE_CLASS}*$"
 # namespaces the reference skips (s01:136-206 ignore rules)
-_SKIP_PREFIX = re.compile(r"(?i)^(file|image|category|wikipedia|help|template|special|media|portal|book|draft|user|talk|[a-z\-]{2,3}):")
-_ANCHOR = re.compile(ANCHOR_RE)
-
-
-def extract_mentions_native(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Explode every `[[target|mention]]` (or `[[target]]`) anchor into
-    one row with (target_raw, mention_raw). Keeps all other columns.
-
-    Whole plan is JVM-side: regexp_extract_all + explode + split —
-    no Python in the hot path at all.
-    """
-    anchors = F.regexp_extract_all(F.col(text_col), F.lit(ANCHOR_RE), 1)
-    out = df.withColumn("anchor", F.explode(anchors))
-    # F.get (not getItem): null for missing pipe part instead of an
-    # out-of-bounds error under ANSI mode
-    return (
-        out.withColumn("target_raw", F.get(F.split(F.col("anchor"), r"\|"), 0))
-        .withColumn(
-            "mention_raw",
-            F.coalesce(F.get(F.split(F.col("anchor"), r"\|"), 1), F.col("target_raw")),
-        )
-        .drop("anchor")
-    )
-
-
-def _canon_target(t: str) -> str:
-    # capitalize first letter + space→underscore, the reference's page
-    # title canonicalization (s01:197-206)
-    t = t.strip()
-    if not t:
-        return t
-    return (t[0].upper() + t[1:]).replace(" ", "_")
-
-
-def _extract_one(text: str) -> list[tuple[str, str, int, int]]:
-    res = []
-    for m in _ANCHOR.finditer(text or ""):
-        inner = m.group(1)
-        if "|" in inner:
-            target, mention = inner.split("|", 1)
-            if mention == "":  # pipe trick: [[Title (dab)|]] → "Title"
-                mention = re.sub(r"\s*\(.*?\)\s*$", "", target).split(":")[-1]
-        else:
-            target = mention = inner
-        target = target.strip()
-        mention = mention.strip()
-        if not target or not mention or _SKIP_PREFIX.match(target):
-            continue
-        res.append((_canon_target(target), mention, m.start() + 1, m.end()))
-    return res
-
+_SKIP_PREFIX = r"(?iu)^(file|image|category|wikipedia|help|template|special|media|portal|book|draft|user|talk|[a-z\-]{2,3}):"
 
 MENTION_SCHEMA = (
     "conv_id string, turn_idx int, snapshot_ts timestamp, "
@@ -88,35 +52,53 @@ MENTION_SCHEMA = (
 )
 
 
-def extract_mentions_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Full reference-rule extraction with span offsets, via
-    mapInPandas (batch iterator — one Arrow batch in, n mention rows
-    out; the UDTF shape of SURVEY.md §2.11).
+def extract_mentions(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Every `[[target|mention]]` (or `[[target]]`) anchor of
+    ``text_col`` → one ``MENTION_SCHEMA`` row, span offsets 1-based
+    inclusive in code points. Anchors with an empty or namespaced
+    target are skipped.
 
     Input needs columns conv_id, turn_idx, snapshot_ts, ``text_col``.
     """
+    keys = ["conv_id", "turn_idx", "snapshot_ts"]
+    # a turn without "[[" can't yield a mention
+    turns = df.select(*keys, F.col(text_col).alias("text")).filter(F.col("text").contains("[["))
+    arrays = turns.select(
+        *keys,
+        F.regexp_extract_all("text", F.lit(ANCHOR_RE), 1).alias("inner"),
+        F.split("text", ANCHOR_RE, -1).alias("pieces"),
+    )
+    # anchor k ends after the text before it, itself and every earlier
+    # anchor: split keeps one piece before each match, so "[[" + inner
+    # + "]]" plus that piece is the k-th step of a running sum
+    steps = arrays.select(
+        *keys,
+        "inner",
+        F.zip_with(
+            "inner", F.slice("pieces", 1, F.size("inner")),
+            lambda x, p: F.length(p) + F.length(x) + 4,
+        ).alias("steps"),
+    )
+    ends = F.transform("steps", lambda _, i: F.aggregate(F.slice("steps", 1, i + 1), F.lit(0), lambda a, b: a + b))
+    anchors = steps.select(*keys, F.inline(F.arrays_zip(F.col("inner"), ends.alias("end"))))
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, snap, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["snapshot_ts"], pdf[text_col]
-            ):
-                for target, mention, s, e in _extract_one(text):
-                    rows.append((conv_id, turn_idx, snap, mention, target, s, e))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "snapshot_ts",
-                    "mention_text", "target_id", "span_start", "span_end",
-                ],
-            )
-
-    cols = ["conv_id", "turn_idx", "snapshot_ts", text_col]
-    # JVM-side pre-filter: a turn without "[[" can't yield a mention,
-    # so it never crosses the Arrow boundary. Semantics-preserving
-    # (such rows produce zero output rows anyway) and it cuts the
-    # Python-worker traffic by the anchor-free fraction of the corpus
-    # — at web scale most turns carry no anchor at all.
-    pre = df.select(*cols).filter(F.col(text_col).contains("[["))
-    return pre.mapInPandas(gen, schema=MENTION_SCHEMA)
+    parts = F.split("inner", r"\|", 2)
+    target = F.get(parts, 0)
+    pipe_trick = F.element_at(F.split(F.regexp_replace(target, _DAB_SUFFIX, ""), ":", -1), -1)
+    mention = F.when(F.size(parts) == 1, target).when(F.get(parts, 1) == "", pipe_trick).otherwise(F.get(parts, 1))
+    spaces = F.lit(_PY_SPACE)
+    ruled = anchors.select(
+        *keys,
+        F.btrim(target, spaces).alias("target"),
+        F.btrim(mention, spaces).alias("mention_text"),
+        (F.col("end") - F.length("inner") - 3).alias("span_start"),
+        F.col("end").alias("span_end"),
+    ).filter((F.col("target") != "") & (F.col("mention_text") != "") & ~F.col("target").rlike(_SKIP_PREFIX))
+    # page-title canonicalization: first letter upper, space → underscore (s01:197-206)
+    t = F.col("target")
+    target_id = F.translate(F.concat(F.upper(F.substring(t, 1, 1)), t.substr(F.lit(2), F.length(t))), " ", "_")
+    out = ruled.withColumn("target_id", target_id)
+    # the declared types, whatever the input's key types were
+    return out.select(
+        *(F.col(name).cast(typ).alias(name) for name, typ in (c.split(" ") for c in MENTION_SCHEMA.split(", ")))
+    )

@@ -116,38 +116,6 @@ def _jaro_winkler(s1: str, s2: str, p: float = 0.1, max_prefix: int = 4) -> floa
     return j + prefix * p * (1.0 - j)
 
 
-def _make_jw():
-    """Per-process Jaro-Winkler implementation picker: rapidfuzz's
-    C-backed scorer when it is installed AND bit-agrees with the pure
-    implementation on a probe set (guards against convention drift —
-    boost threshold, empty-string handling); else the pure fallback.
-    Evaluated once per Python worker at module import. The probe gate
-    means a cluster with rapidfuzz gets the ~20× scorer with zero
-    score drift (q_er_scored_pairs stays DuckDB-value-exact)."""
-    try:
-        from rapidfuzz.distance import JaroWinkler  # noqa: PLC0415
-    except ImportError:
-        return _jaro_winkler
-
-    def rf(x: str, y: str) -> float:
-        if not x or not y:
-            return 0.0
-        return JaroWinkler.normalized_similarity(x, y)
-
-    probes = [
-        ("martha", "marhta"), ("dwayne", "duane"), ("", ""), ("a", ""),
-        ("granite ember", "granite embers"), ("abcdef", "abcdef"),
-        ("ab", "ba"), ("jones", "johnson"), ("abcdefgh", "abzzzzzz"),
-        ("prefix match low", "prxyzqw"), ("x", "y"),
-    ]
-    for x, y in probes:
-        if abs(rf(x, y) - _jaro_winkler(x, y)) > 1e-9:
-            return _jaro_winkler
-    return rf
-
-
-_JW = _make_jw()
-
 # Strings longer than this take the scalar path: the vectorized
 # matcher's work is O(N·L²) in the padded batch width, so one huge
 # outlier string must not inflate every row's matrices.
@@ -262,18 +230,11 @@ def _jw_batch_numpy(xs: list[str], ys: list[str]) -> "list[float]":
 
 
 def _make_jw_batch():
-    """Batch-level scorer picker. Preference order: rapidfuzz (C, per
-    pair), NumPy vectorized (bit-parity probe-gated, long strings
-    routed to the scalar path), pure-Python fallback. The probe runs
-    once per worker process at import; any disagreement disables the
-    vectorized path entirely (same guard philosophy as _make_jw)."""
-    if _JW is not _jaro_winkler:  # rapidfuzz won the probe
-
-        def rf_batch(xs: list[str], ys: list[str]) -> list[float]:
-            return [_JW(x, y) for x, y in zip(xs, ys)]
-
-        return rf_batch
-
+    """Batch-level scorer picker: NumPy vectorized (bit-parity
+    probe-gated, long strings routed to the scalar path), else None
+    for the pure-Python scalar. The probe runs once per worker process
+    at import; any disagreement disables the vectorized path
+    entirely."""
     probes = [
         ("martha", "marhta"), ("dwayne", "duane"), ("", ""), ("a", ""),
         ("granite ember", "granite embers"), ("abcdef", "abcdef"),
@@ -333,14 +294,14 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Jaro-Winkler similarity, Arrow-batched. Fills the scoring role
     of the reference's learned bi-encoder dot product
     (biencoder.py:105-123) for surface-form pairs — the scoring
-    feature the north_rule names explicitly. Backed by rapidfuzz when
-    available, else by the probe-gated NumPy batch matcher
-    (_jw_batch_numpy); both verified bit-equal to the pure scalar."""
+    feature the north_rule names explicitly. Backed by the
+    probe-gated NumPy batch matcher (_jw_batch_numpy), verified
+    bit-equal to the pure scalar."""
     xs = [x or "" for x in a]
     ys = [y or "" for y in b]
     if _JW_BATCH is not None:
         return pd.Series(_JW_BATCH(xs, ys), dtype="float64")
-    return pd.Series([_JW(x, y) for x, y in zip(xs, ys)], dtype="float64")
+    return pd.Series([_jaro_winkler(x, y) for x, y in zip(xs, ys)], dtype="float64")
 
 
 def dot_product(a: Column | str, b: Column | str) -> Column:

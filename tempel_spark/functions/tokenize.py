@@ -25,7 +25,7 @@ import re
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,7 +34,6 @@ __all__ = [
     "tokenize_udf",
     "detokenize_udf",
     "sentence_chunks",
-    "word_tokens",
 ]
 
 _PUNCT = re.compile(r"[^\w\s]|_", re.UNICODE)
@@ -158,12 +157,6 @@ def detokenize_udf(tokens: pd.Series) -> pd.Series:
         return " ".join(out)
 
     return tokens.map(join)
-
-
-def word_tokens(col: Column | str) -> Column:
-    """Native whitespace tokens (the zero-Python fast path)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.trim(c), r"\s+")
 
 
 def sentence_chunks(df: DataFrame, text_col: str, max_words: int = 32) -> DataFrame:

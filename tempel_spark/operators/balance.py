@@ -11,31 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tempel_spark.functions.hashing import fingerprint64, hash_bucket, hash_uniform
+from tempel_spark.functions.hashing import fingerprint64, hash_uniform
 
 __all__ = [
-    "deterministic_sample_fraction",
-    "deterministic_sample_n",
     "round_robin_assign",
     "capped_round_robin_alloc",
     "weighted_reduce_to_quota",
     "shuffle_groups",
     "shuffle_rank",
 ]
-
-
-def deterministic_sample_fraction(df: DataFrame, key_col: str, fraction: float, seed: int = 42) -> DataFrame:
-    """R1: keep each row iff hash-uniform(key) < fraction. Same rows
-    on every run/retry/resume (reference df.sample, s03:422-423)."""
-    return df.filter(hash_uniform(key_col, seed=seed) < fraction)
-
-
-def deterministic_sample_n(df: DataFrame, key_col: str, n: int, seed: int = 42) -> DataFrame:
-    """R1 exact-n: global hash-rank then limit. One total-order sort of
-    the KEYS ONLY at the window — use for ≤ ~10^7 sampled universes
-    (the reference caps at 10k entities, s03_dataset_creator.json:67)."""
-    w = Window.orderBy(hash_uniform(key_col, seed=seed), F.col(key_col))
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n).drop("_rn")
 
 
 def round_robin_assign(

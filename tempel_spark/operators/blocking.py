@@ -38,8 +38,6 @@ __all__ = [
     "bind_once",
     "meta_block_prune",
     "norm_key",
-    "first_token_key",
-    "sorted_token_key",
     "char_shingles",
     "minhash_signature",
     "lsh_band_blocks",
@@ -61,15 +59,6 @@ SN_WINDOW = 3
 def norm_key(col: Column | str) -> Column:
     """Exact normalized-surface key — the alias-table blocking key."""
     return normalize_mention(col)
-
-
-def first_token_key(col: Column | str) -> Column:
-    return F.split(normalize_mention(col), " ").getItem(0)
-
-
-def sorted_token_key(col: Column | str) -> Column:
-    """Order-insensitive token signature (catches token swaps)."""
-    return F.array_join(F.array_sort(F.array_distinct(F.split(normalize_mention(col), " "))), " ")
 
 
 def bind_once(col: Column, fn) -> Column:

@@ -6,11 +6,8 @@ them can slot into the ER pipeline's blocking stage.
 
 * exact_dedup           — hash-groupBy on normalized content
 * ngram_jaccard_dedup   — char-n-gram Jaccard ≥ τ within LSH blocks
-* minhash_lsh_dedup     — band-bucket candidates (shingle→minhash→
-                          band→bucket-join), verified by true Jaccard
 * simhash64 / simhash_dedup — 64-bit SimHash + Hamming ≤ r within
                           rotated-band blocks
-* embedding_dedup       — cosine ≥ τ within hyperplane buckets
 * repeated_passages     — exact duplicated token-n-gram SPANS across
                           the corpus (substring-level dedup à la
                           "Deduplicating Training Data Makes LMs
@@ -33,17 +30,13 @@ from pyspark.sql import types as T
 
 from tempel_spark.functions.text import normalize_mention
 from tempel_spark.operators.blocking import candidate_pairs, char_shingles, lsh_band_blocks
-from tempel_spark.operators.topk import hyperplane_bucket
-from tempel_spark.functions.similarity import cosine_sim
 
 __all__ = [
     "exact_dedup",
     "ngram_jaccard_dedup",
-    "minhash_lsh_dedup",
     "simhash64",
     "simhash64_agg",
     "simhash_dedup",
-    "embedding_dedup",
     "repeated_passages",
     "excise_spans",
     "passage_dedup",
@@ -122,21 +115,6 @@ def ngram_jaccard_dedup(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def minhash_lsh_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    n_hashes: int = 8,
-    bands: int = 4,
-    k: int = 5,
-) -> DataFrame:
-    """Classic MinHash-LSH dedup: shingle → minhash → band → bucket
-    join → verify. Same plan as ngram_jaccard_dedup with coarser
-    shingles and more bands (tuned for long documents)."""
-    return ngram_jaccard_dedup(df, id_col, text_col, k, threshold, n_hashes, bands)
 
 
 def simhash64(text_col: Column | str, k: int = 3) -> Column:
@@ -270,42 +248,6 @@ def simhash_dedup(
         pairs.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-def embedding_dedup(
-    df: DataFrame,
-    id_col: str,
-    emb_col: str,
-    threshold: float = 0.95,
-    n_bits: int = 4,
-) -> DataFrame:
-    """Embedding-cosine near-dup within hyperplane buckets (exactly
-    the blocking the ivf_topk quantizer uses — near-identical vectors
-    land in the same bucket with high probability).
-
-    r6: bucket weights become literals (dim probed with one tiny
-    job), and the norms ride the pair payload instead of being
-    re-folded per pair — identical doubles, see brute_force_topk."""
-    from tempel_spark.functions.similarity import dot_product
-
-    row = df.select(emb_col).first()
-    dim = len(row[0]) if row is not None and row[0] is not None else None
-    b = df.select(id_col, emb_col).withColumn(
-        "_bucket", hyperplane_bucket(emb_col, n_bits, dim=dim)
-    ).withColumn("_nrm", F.sqrt(dot_product(emb_col, emb_col)))
-    pairs = candidate_pairs(
-        b, ["_bucket"], id_col, [emb_col, "_nrm"], cap=10_000, group_cols=[]
-    )
-    denom = F.col("_nrm_a") * F.col("_nrm_b")
-    sim = (
-        dot_product(f"{emb_col}_a", f"{emb_col}_b")
-        / F.when(denom > 0, denom).otherwise(F.lit(1.0))
-    ).cast("double")
-    return (
-        pairs.withColumn("cosine", sim)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 

@@ -4,7 +4,7 @@
       │  (per-turn text equality invariant: pass-through, stable
       │   (conv_id, turn_idx) ordering — BASELINE.json input_hint)
       ▼
-  mention extraction (Arrow mapInPandas, F1)
+  mention extraction (Column expressions, F1)
       ▼
   DISTINCT SURFACES per snapshot  ← the scale pivot: all pairwise
       │   work runs on the deduplicated surface vocabulary (grows
@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tempel_spark.functions.mentions import extract_mentions_pandas
+from tempel_spark.functions.mentions import extract_mentions
 from tempel_spark.operators.asof import assign_snapshot, yearly_snapshots
 from tempel_spark.operators.blocking import (
     candidate_pairs,
@@ -73,7 +73,7 @@ def extract_mention_table(transcripts: DataFrame, snapshots: list[str] | None = 
     downstream stage (and resume) sees identical ids.
     """
     snapped = assign_snapshot(transcripts, "ts", snapshots)
-    mentions = extract_mentions_pandas(snapped)
+    mentions = extract_mentions(snapped)
     return mentions.withColumn(
         "mention_id",
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"), F.col("span_start").cast("string")),

@@ -64,11 +64,10 @@ def q_whole_word_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_mention_extract_wiki(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 native path: `[[target|mention]]` anchors built onto the
-    documents rows, extracted with the library's explode pipeline
-    (extract_mentions_native semantics, s01:209-253) and aggregated."""
-    from tempel_spark.functions.mentions import extract_mentions_native
-
+    """F1 raw anchor split: `[[target|mention]]` anchors built onto the
+    documents rows, exploded and split at the first two pipe parts
+    (s01:209-253), then aggregated. The full rule set is
+    functions/mentions.extract_mentions."""
     d = t(spark, sf_dir, "documents")
     marked = d.select(
         "doc_id",
@@ -77,7 +76,14 @@ def q_mention_extract_wiki(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("]] mid [[Topic "), (F.col("doc_id") % 5).cast("string"), F.lit("]] end"),
         ).alias("text"),
     )
-    ext = extract_mentions_native(marked, "text")
+    anchor = F.explode(F.regexp_extract_all("text", F.lit(r"\[\[(.*?)\]\]"), 1)).alias("anchor")
+    parts = F.split("anchor", r"\|")
+    # F.get (not getItem): null for a missing pipe part instead of an
+    # out-of-bounds error under ANSI mode
+    ext = marked.select(anchor).select(
+        F.get(parts, 0).alias("target_raw"),
+        F.coalesce(F.get(parts, 1), F.get(parts, 0)).alias("mention_raw"),
+    )
     return ext.groupBy("target_raw", "mention_raw").agg(F.count(F.lit(1)).alias("n"))
 
 

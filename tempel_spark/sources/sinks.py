@@ -1,4 +1,4 @@
-"""Sinks (SURVEY.md §2.1 S6-S9).
+"""Sinks (SURVEY.md §2.1 S6-S8).
 
 The reference hand-rolls buffered per-cut CSV/JSONL writer processes
 (s01_wikipedia_clean_and_tokenize.py:277-397); Spark's partitioned
@@ -9,9 +9,8 @@ control.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-__all__ = ["write_partitioned", "write_fanout", "write_embeddings", "write_bucketed"]
+__all__ = ["write_partitioned", "write_fanout", "write_bucketed"]
 
 
 def write_partitioned(
@@ -40,21 +39,6 @@ def write_fanout(df: DataFrame, path: str, fmt: str = "json") -> None:
     (s03_final_dataset_creator_utils.py:822-894) as one partitioned
     write (json lines == JSONL)."""
     df.write.mode("overwrite").partitionBy("snapshot_ts", "subset").format(fmt).save(path)
-
-
-def write_embeddings(df: DataFrame, path: str) -> None:
-    """S9: tensor sink. The reference pickles (N×1024) float32 blobs +
-    id-map dicts per cut (s05_wikipedia_encode_utils.py:26-120); the
-    columnar equivalent is simply an array<float> column keyed by
-    (entity_id, snapshot_ts) — no separate id maps, no capacity
-    doubling, queryable in place."""
-    cols = df.columns
-    assert "embedding" in cols, "expects an `embedding` array<float> column"
-    part = ["snapshot_ts"] if "snapshot_ts" in cols else []
-    w = df.write.mode("overwrite")
-    if part:
-        w = w.partitionBy(*part)
-    w.parquet(path)
 
 
 def write_bucketed(

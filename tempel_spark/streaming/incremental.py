@@ -8,14 +8,14 @@ exactly-once, resumable shape (checkpointLocation carries the offsets)
 that replaces the reference's ad-hoc "skip already-processed qids"
 bookkeeping (s03:277-280).
 
-Extraction reuses the SAME Arrow mapInPandas stage as the batch
+Extraction reuses the SAME Column-expression stage as the batch
 pipeline, so incremental and batch outputs are bit-identical —
 `test_streaming_incremental` asserts it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from tempel_spark.plans.pipeline import extract_mention_table
@@ -58,6 +58,3 @@ def stream_mentions(
         .awaitTermination()
     )
 
-
-def read_mentions(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(output_dir)

@@ -5,7 +5,7 @@ The batch pipeline re-derives every stage from the full corpus; this
 module keeps the ER *pair state* continuously up to date instead. Per
 micro-batch:
 
-  new files ──▶ mention extraction (same Arrow stage as batch)
+  new files ──▶ mention extraction (same stage as batch)
       ▼
   batch norm counts ──anti-join──▶ GENUINELY NEW norms (never seen
       │                            in this (snapshot, norm) vocab)

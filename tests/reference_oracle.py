@@ -22,9 +22,10 @@ right — leakage-safe subset clustering
 pinned explicitly by
 tests/test_operators_divergence::test_containment_rule_divergence.
 
-Blocking hashes come from hashlib, clustering is union-find; only the
-mention-extraction regex rules are imported, because both sides are
-specified by the same reference lines (s01:117-274).
+Blocking hashes come from hashlib, clustering is union-find, and
+mention extraction is the reference's per-anchor Python loop
+(`_extract_one`, s01:117-274) that the library's Column-expression
+extractor is fuzz-checked against (tests/test_mentions.py).
 """
 
 from __future__ import annotations
@@ -33,10 +34,40 @@ import hashlib
 import re
 from collections import defaultdict
 
-from tempel_spark.functions.mentions import _extract_one
-
 MUST_LINK_RATIO = 0.2
 SCORE_THRESHOLD = 0.75
+
+
+# namespaces the reference skips (s01:136-206 ignore rules)
+_SKIP_PREFIX = re.compile(r"(?i)^(file|image|category|wikipedia|help|template|special|media|portal|book|draft|user|talk|[a-z\-]{2,3}):")
+_ANCHOR = re.compile(r"\[\[(.*?)\]\]")
+
+
+def _canon_target(t: str) -> str:
+    # capitalize first letter + space→underscore, the reference's page
+    # title canonicalization (s01:197-206)
+    t = t.strip()
+    if not t:
+        return t
+    return (t[0].upper() + t[1:]).replace(" ", "_")
+
+
+def _extract_one(text: str) -> list[tuple[str, str, int, int]]:
+    res = []
+    for m in _ANCHOR.finditer(text or ""):
+        inner = m.group(1)
+        if "|" in inner:
+            target, mention = inner.split("|", 1)
+            if mention == "":  # pipe trick: [[Title (dab)|]] → "Title"
+                mention = re.sub(r"\s*\(.*?\)\s*$", "", target).split(":")[-1]
+        else:
+            target = mention = inner
+        target = target.strip()
+        mention = mention.strip()
+        if not target or not mention or _SKIP_PREFIX.match(target):
+            continue
+        res.append((_canon_target(target), mention, m.start() + 1, m.end()))
+    return res
 
 
 def normalize(s: str) -> str:

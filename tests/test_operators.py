@@ -172,13 +172,13 @@ def test_acc_at_k_known(spark):
 
 
 def test_mention_extraction_rules(spark):
-    from tempel_spark.functions.mentions import extract_mentions_pandas
+    from tempel_spark.functions.mentions import extract_mentions
 
     rows = [
         ("c1", 0, dt.datetime(2013, 1, 1), "see [[Python (language)|]] and [[file:x.png]] plus [[plain link]]"),
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, snapshot_ts timestamp, text string")
-    got = {(r.mention_text, r.target_id) for r in extract_mentions_pandas(df).collect()}
+    got = {(r.mention_text, r.target_id) for r in extract_mentions(df).collect()}
     # pipe trick resolves to "Python"; file: namespace dropped;
     # plain link canonicalizes target with underscores + capital
     assert ("Python", "Python_(language)") in got

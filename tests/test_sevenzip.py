@@ -361,7 +361,7 @@ def test_enwiki_layout_dump_end_to_end(spark):
     asserting the final (page, cut, mention) rows."""
     from pyspark.sql import functions as F
 
-    from tempel_spark.functions.mentions import extract_mentions_pandas
+    from tempel_spark.functions.mentions import extract_mentions
     from tempel_spark.functions.text import clean_wikitext_udf
     from tempel_spark.operators.asof import asof_stable_version
     from tempel_spark.sources.xml_history import read_revision_history_7z
@@ -433,7 +433,7 @@ def test_enwiki_layout_dump_end_to_end(spark):
         assert "gaß" in c14[13]  # UTF-8 survived byte-level chunk splits
 
         # mention extraction on the stable source (s01:458-462)
-        m = extract_mentions_pandas(
+        m = extract_mentions(
             folded.select(
                 F.col("page_id").cast("string").alias("conv_id"),
                 F.col("rev_id").alias("turn_idx"),
