@@ -6,6 +6,7 @@ co-mention vs cosine routing)."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 
@@ -22,8 +23,13 @@ SNAPSHOTS = [f"{y}-01-01 00:00:00" for y in (2013, 2014, 2015, 2016)]
 
 
 def main() -> None:
-    # ablation variants: pass kw=val pairs, e.g.
-    #   python scripts/diag_hidden_gold.py stop_df=0.05 stop_group_frac=1.1 conv_vote=0
+    # ablation variants: pass kw=val pairs of disambiguate_occurrences
+    # tuning keywords (dim, seed, sample_per_surface, stop_df, margin,
+    # conv_vote), e.g.
+    #   python scripts/diag_hidden_gold.py stop_df=0.1 margin=0.02 conv_vote=1
+    import tempel_spark.operators.context_disambig as cd
+
+    defaults = inspect.signature(cd.disambiguate_occurrences).parameters
     variant: dict = {}
     brief = False
     for a in sys.argv[1:]:
@@ -31,10 +37,11 @@ def main() -> None:
             brief = True
             continue
         k, v = a.split("=", 1)
-        variant[k] = (v not in ("0", "false", "False")) if k == "conv_vote" else float(v)
+        if k not in defaults or defaults[k].default is inspect.Parameter.empty:
+            sys.exit(f"unknown ablation keyword {k!r}")
+        kind = type(defaults[k].default)
+        variant[k] = (v not in ("0", "false", "False")) if kind is bool else kind(v)
     if variant:
-        import tempel_spark.operators.context_disambig as cd
-
         orig = cd.disambiguate_occurrences
 
         def patched(*args, **kw):

@@ -23,12 +23,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from tempel_spark.operators.scoring import MATCH_THRESHOLD
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="transcripts parquet path (input_hint schema)")
     ap.add_argument("--synth", type=int, default=0, help="synthesize N conversations instead of --input")
     ap.add_argument("--catalog", required=True, help="checkpoint catalog base path")
     ap.add_argument("--snapshots", default=",".join(f"{y}-01-01" for y in range(2013, 2023)))
-    ap.add_argument("--threshold", type=float, default=0.75)
+    ap.add_argument("--threshold", type=float, default=MATCH_THRESHOLD)
     ap.add_argument("--force", action="store_true", help="recompute even if checkpoints exist")
     args = ap.parse_args()
 

@@ -46,6 +46,8 @@ __all__ = [
     "candidate_pairs",
     "sorted_neighborhood_pairs",
     "SN_WINDOW",
+    "LSH_HASHES",
+    "LSH_BANDS",
 ]
 
 # The sorted-neighborhood window BOTH the batch pipeline and the
@@ -54,6 +56,12 @@ __all__ = [
 # only at the same window (incremental_er.py module contract), so a
 # one-sided tweak would silently break batch/stream parity.
 SN_WINDOW = 3
+# MinHash-LSH shape of the ER blocking keys (pipeline.build_block_keys),
+# shared by batch and stream for the same parity reason: the stream
+# keys each norm once into a persisted key log that later batches
+# equi-join, so both sides must hash and band identically.
+LSH_HASHES = 12
+LSH_BANDS = 6
 
 
 def norm_key(col: Column | str) -> Column:

@@ -152,21 +152,20 @@ class CCResult:
 
 def connected_components(
     edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     nodes: DataFrame | None = None,
     max_iter: int = 25,
-    checkpoint_every: int = 1,
     durable_checkpoint=None,
     shuffle_partitions: int | None = None,
     resume_state: DataFrame | None = None,
     local_contract: bool = True,
     single_task_edges: int = 1_000_000,
 ) -> CCResult:
-    """edges: undirected pair list. nodes: optional full node universe
-    (id column named like ``id_a``) so singletons get their own
-    component. durable_checkpoint: optional fn(df, iteration) -> df
-    that persists and re-reads (catalog-backed) for resumability.
+    """edges: undirected pair list in columns ``id_a``/``id_b``. nodes:
+    optional full node universe (ids in its first column) so
+    singletons get their own component. Every iteration's edge state
+    is local-checkpointed (lineage truncation). durable_checkpoint:
+    optional fn(df, iteration) -> df that persists and re-reads
+    (catalog-backed) for resumability.
 
     resume_state: a previously durable-checkpointed edge state (a, b)
     to warm-start from. Large-star/small-star is monotone toward its
@@ -188,21 +187,21 @@ def connected_components(
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
         return _cc_loop(
-            edges, id_a, id_b, nodes, max_iter, checkpoint_every,
-            durable_checkpoint, resume_state, local_contract, single_task_edges,
+            edges, nodes, max_iter, durable_checkpoint, resume_state,
+            local_contract, single_task_edges,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
-def _cc_loop(edges, id_a, id_b, nodes, max_iter, checkpoint_every, durable_checkpoint, resume_state=None, local_contract=True, single_task_edges=1_000_000) -> CCResult:
+def _cc_loop(edges, nodes, max_iter, durable_checkpoint, resume_state, local_contract, single_task_edges) -> CCResult:
     if resume_state is not None:
         # resumed state is already (near-)star-shaped — contraction
         # would only add a Python pass
         e = resume_state.select("a", "b")
     else:
         e = (
-            edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+            edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
@@ -262,11 +261,9 @@ def _cc_loop(edges, id_a, id_b, nodes, max_iter, checkpoint_every, durable_check
     converged = False
     it = 0
     for it in range(1, max_iter + 1):
-        e = _small_star(_large_star(e))
-        if it % checkpoint_every == 0:
-            # lazy: the signature aggregate right below materializes it,
-            # so each iteration costs ONE job, not two
-            e = e.localCheckpoint(eager=False)
+        # lazy: the signature aggregate right below materializes it,
+        # so each iteration costs ONE job, not two
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         if durable_checkpoint is not None:
             e = durable_checkpoint(e, it)
         sig = _signature(e)

@@ -67,10 +67,9 @@ def ambiguous_candidates(scored: DataFrame) -> DataFrame:
         )
         .dropDuplicates(["snapshot_ts", "surface", "cand_surface"])
     )
-    anchored = anchored_partial_sources(
-        scored, ["snapshot_ts"], "norm_a", "norm_b", prenormalized=True
+    cand = cand.join(
+        anchored_partial_sources(scored), ["snapshot_ts", "surface"], "left_anti"
     )
-    cand = cand.join(anchored, ["snapshot_ts", "surface"], "left_anti")
     n = Window.partitionBy("snapshot_ts", "surface")
     return (
         cand.withColumn("_nc", F.count(F.lit(1)).over(n))

@@ -33,11 +33,14 @@ from tempel_spark.functions.similarity import (
     levenshtein_ratio,
     token_jaccard,
 )
-from tempel_spark.functions.text import normalize_mention
 
-__all__ = ["score_pairs", "abbreviation_edges", "anchored_partial_sources", "MUST_LINK_RATIO"]
+__all__ = [
+    "score_pairs", "with_embeddings", "abbreviation_edges", "anchored_partial_sources",
+    "MUST_LINK_RATIO", "MATCH_THRESHOLD",
+]
 
 MUST_LINK_RATIO = 0.2  # reference s03_dataset_creator.json:44
+MATCH_THRESHOLD = 0.75  # score_pairs' default is_match cut
 # every column score_pairs adds (helpers included)
 _OUTPUT_COLS = (
     "ratio_edit_distance", "jaccard", "_subset", "_diffcount", "jaro_winkler",
@@ -45,24 +48,16 @@ _OUTPUT_COLS = (
 )
 
 
-def score_pairs(
-    pairs: DataFrame,
-    text_a: str = "surface_a",
-    text_b: str = "surface_b",
-    emb_a: str | None = None,
-    emb_b: str | None = None,
-    threshold: float = 0.75,
-    prenormalized: bool = False,
-) -> DataFrame:
+def score_pairs(pairs: DataFrame, threshold: float = MATCH_THRESHOLD) -> DataFrame:
     """Add feature + score columns to a candidate-pair DataFrame and an
     `is_match` decision.
 
     score = 0.45·JW + 0.30·(1−lev_ratio) + 0.25·jaccard
-            (re-weighted to 0.35/0.25/0.20/0.20·cosine when
-             embeddings are present)
+            (re-weighted to 0.35/0.25/0.20/0.20·cosine when the frame
+             carries `emb_a`/`emb_b` columns, see with_embeddings)
     is_match = must_link OR (score ≥ threshold AND NOT is_partial)
 
-    prenormalized: pass True when text_a/text_b are ALREADY normalized
+    Features read the ALREADY-normalized `norm_a`/`norm_b` columns
     (the pipeline normalizes once per distinct surface upstream).
     Catalyst's CollapseProject inlines per-column expressions into
     every consumer, so an inline normalize here would be re-executed
@@ -73,10 +68,7 @@ def score_pairs(
     # collapse — the reference normalizes mentions the same way before
     # its alias-table stats, s02:253-254) so case/underscore drift
     # never splits a cluster.
-    if prenormalized:
-        na, nb = F.col(text_a), F.col(text_b)
-    else:
-        na, nb = normalize_mention(text_a), normalize_mention(text_b)
+    na, nb = F.col("norm_a"), F.col("norm_b")
     lev = levenshtein_ratio(na, nb)
     jw = jaro_winkler_udf(na, nb)
 
@@ -132,11 +124,12 @@ def score_pairs(
         + 0.30 * (1.0 - F.col("ratio_edit_distance"))
         + 0.25 * F.col("jaccard")
     )
-    if emb_a and emb_b:
+    if {"emb_a", "emb_b"} <= set(pairs.columns):
         out = out.withColumn(
             "cosine",
             F.when(
-                F.col(emb_a).isNotNull() & F.col(emb_b).isNotNull(), cosine_sim(emb_a, emb_b)
+                F.col("emb_a").isNotNull() & F.col("emb_b").isNotNull(),
+                cosine_sim("emb_a", "emb_b"),
             ),
         )
         emb_score = (
@@ -189,78 +182,76 @@ def score_pairs(
     )
 
 
-def anchored_partial_sources(
-    scored: DataFrame,
-    group_cols: list[str] | None = None,
-    text_a: str = "surface_a",
-    text_b: str = "surface_b",
-    prenormalized: bool = False,
-) -> DataFrame:
+def with_embeddings(pairs: DataFrame, embeddings: DataFrame) -> DataFrame:
+    """Attach cached embeddings to a candidate-pair frame as `emb_a` /
+    `emb_b` (left joins on (snapshot_ts, id_a|id_b) — a pair without a
+    cached vector keeps null and score_pairs falls back to the string
+    score). `embeddings` is (snapshot_ts, surface, embedding) keyed by
+    the NORMALIZED surface. The batch pipeline and the incremental
+    ingest both call this, so their scores agree bit-for-bit.
+
+    The table is reduced to one row per (snapshot_ts, surface) first:
+    a caller deriving norm-keyed embeddings from the surface
+    vocabulary gets several rows per norm, and a duplicated build side
+    would FAN OUT the pair table through the joins. The survivor is
+    the smallest vector (`min`), a choice row order cannot change —
+    keeping whichever duplicate arrived first would let two runs over
+    the same table score one pair differently.
+
+    Join strategy is deliberately left to Catalyst/AQE: at reference
+    scale the embedding table is TBs (BASELINE.md — 2.2 TB of 1024-d
+    fp32), far past any broadcast threshold, so an unconditional
+    F.broadcast here would OOM the driver; when one snapshot's
+    vocabulary IS small, AQE converts the shuffle join to broadcast at
+    runtime.
+    """
+    emb = embeddings.groupBy("snapshot_ts", "surface").agg(F.min("embedding").alias("embedding"))
+    ea = emb.select("snapshot_ts", F.col("surface").alias("id_a"), F.col("embedding").alias("emb_a"))
+    eb = emb.select("snapshot_ts", F.col("surface").alias("id_b"), F.col("embedding").alias("emb_b"))
+    return pairs.join(ea, ["snapshot_ts", "id_a"], "left").join(eb, ["snapshot_ts", "id_b"], "left")
+
+
+def anchored_partial_sources(scored: DataFrame) -> DataFrame:
     """Surfaces already must-linked to a strictly LONGER surface.
 
     Such a surface has a confirmed full form ("Juniper Raven" prefix-
     must-links "Juniper Raven Willow"); also giving it a prior-ranked
     partial edge to some OTHER full form would bridge two entities
     through it (the round-2 "Juniper Raven"→"Juniper Juniper Raven"
-    over-merge). Returns (group…, surface) to anti-join."""
-    groups = group_cols or ["snapshot_ts"]
-    if prenormalized:
-        na, nb = F.col(text_a), F.col(text_b)
-    else:
-        na, nb = normalize_mention(text_a), normalize_mention(text_b)
-    sa, sb = F.size(F.split(na, " ")), F.size(F.split(nb, " "))
+    over-merge). Token counts come from the normalized
+    `norm_a`/`norm_b`. Returns (snapshot_ts, surface) to anti-join."""
+    sa, sb = F.size(F.split("norm_a", " ")), F.size(F.split("norm_b", " "))
     ml = scored.filter(F.col("must_link"))
-    shorter_a = ml.filter(sa < sb).select(*groups, F.col("id_a").alias("surface"))
-    shorter_b = ml.filter(sb < sa).select(*groups, F.col("id_b").alias("surface"))
+    shorter_a = ml.filter(sa < sb).select("snapshot_ts", F.col("id_a").alias("surface"))
+    shorter_b = ml.filter(sb < sa).select("snapshot_ts", F.col("id_b").alias("surface"))
     return shorter_a.unionByName(shorter_b).distinct()
 
 
-def abbreviation_edges(
-    scored: DataFrame,
-    group_cols: list[str] | None = None,
-    text_a: str = "surface_a",
-    text_b: str = "surface_b",
-    prenormalized: bool = False,
-    freq_a: str | None = None,
-    freq_b: str | None = None,
-    exclude_anchored: bool = True,
-) -> DataFrame:
+def abbreviation_edges(scored: DataFrame) -> DataFrame:
     """Resolve PARTIAL pairs (token-subset ambiguity, incl. single-
     token abbreviations): each unanchored short side links to exactly
     one full-form candidate — ranked by the candidate's mention
-    FREQUENCY first (the alias-table prior: prior_rank = 1 wins,
-    s02_alias_table_generator.py:434-440), then string score, then
-    deterministic id tie-break. Pass freq_a/freq_b (per-surface
-    mention counts) to enable the prior; without them the rank falls
-    back to score-only. Sources that already must-link to a longer
-    surface are excluded (see anchored_partial_sources). Returns
-    (group…, id_a, id_b) edges to union into the clustering edge
-    list."""
-    groups = group_cols or ["snapshot_ts"]
-    if prenormalized:
-        na, nb = F.col(text_a), F.col(text_b)
-    else:
-        na, nb = normalize_mention(text_a), normalize_mention(text_b)
-    a_is_src = F.size(F.split(na, " ")) <= F.size(F.split(nb, " "))
+    FREQUENCY (`n_mentions_a`/`n_mentions_b`, the alias-table prior:
+    prior_rank = 1 wins, s02_alias_table_generator.py:434-440) first,
+    then string score, then deterministic id tie-break. Sources that
+    already must-link to a longer surface are excluded (see
+    anchored_partial_sources). Returns (snapshot_ts, id_a, id_b)
+    edges to union into the clustering edge list."""
+    a_is_src = F.size(F.split("norm_a", " ")) <= F.size(F.split("norm_b", " "))
     cand = scored.filter(F.col("is_partial") & ~F.col("is_match")).withColumn(
         "_src", F.when(a_is_src, F.col("id_a")).otherwise(F.col("id_b"))
     )
-    if exclude_anchored:
-        anchored = anchored_partial_sources(
-            scored, groups, text_a, text_b, prenormalized
-        ).withColumnRenamed("surface", "_src")
-        cand = cand.join(anchored, [*groups, "_src"], "left_anti")
-    order = []
-    if freq_a and freq_b:
-        # frequency of the FULL-FORM side (the candidate entity)
-        cand = cand.withColumn(
-            "_cand_freq", F.when(a_is_src, F.col(freq_b)).otherwise(F.col(freq_a))
-        )
-        order.append(F.col("_cand_freq").desc())
-    order += [F.col("score").desc(), F.col("id_a"), F.col("id_b")]
-    w = Window.partitionBy(*groups, "_src").orderBy(*order)
+    anchored = anchored_partial_sources(scored).withColumnRenamed("surface", "_src")
+    cand = cand.join(anchored, ["snapshot_ts", "_src"], "left_anti")
+    # frequency of the FULL-FORM side (the candidate entity)
+    cand = cand.withColumn(
+        "_cand_freq", F.when(a_is_src, F.col("n_mentions_b")).otherwise(F.col("n_mentions_a"))
+    )
+    w = Window.partitionBy("snapshot_ts", "_src").orderBy(
+        F.col("_cand_freq").desc(), F.col("score").desc(), F.col("id_a"), F.col("id_b")
+    )
     return (
         cand.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(*groups, "id_a", "id_b")
+        .select("snapshot_ts", "id_a", "id_b")
     )

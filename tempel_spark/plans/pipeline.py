@@ -27,7 +27,7 @@
       ▼
   mention→cluster assignment (one hash join on (snapshot, surface))
       ▼
-  temporal entity clusters per snapshot + pairwise-F1 metrics
+  temporal entity clusters per snapshot
 
 Every stage publishes to the checkpoint catalog and the whole run is
 resumable mid-pipeline (`force=False` skips published stages) — the
@@ -43,14 +43,20 @@ from pyspark.sql import functions as F
 from tempel_spark.functions.mentions import extract_mentions
 from tempel_spark.operators.asof import assign_snapshot, yearly_snapshots
 from tempel_spark.operators.blocking import (
+    LSH_BANDS,
+    LSH_HASHES,
     candidate_pairs,
     cap_block_size,
     lsh_band_blocks,
     norm_key,
 )
 from tempel_spark.operators.clustering import connected_components
-from tempel_spark.operators.metrics import pairwise_f1
-from tempel_spark.operators.scoring import abbreviation_edges, score_pairs
+from tempel_spark.operators.scoring import (
+    MATCH_THRESHOLD,
+    abbreviation_edges,
+    score_pairs,
+    with_embeddings,
+)
 from tempel_spark.session import codegen_compiles
 from tempel_spark.sources.catalog import Catalog
 
@@ -64,6 +70,9 @@ __all__ = [
 # node-id separator for snapshot-scoped CC nodes; \x1f (ASCII unit
 # separator) cannot appear in extracted surfaces
 _SEP = "\x1f"
+# shuffle width of the vocabulary-scale CC runs (batch + recluster):
+# size the CC shuffle to the edge list, not to the corpus-wide default
+CC_PARTITIONS = 16
 
 
 def extract_mention_table(transcripts: DataFrame, snapshots: list[str] | None = None) -> DataFrame:
@@ -80,12 +89,13 @@ def extract_mention_table(transcripts: DataFrame, snapshots: list[str] | None = 
     ).withColumn("surface", F.col("mention_text"))
 
 
-def build_block_keys(norms: DataFrame, lsh_hashes: int = 12, lsh_bands: int = 6) -> DataFrame:
+def build_block_keys(norms: DataFrame) -> DataFrame:
     """(snapshot_ts, norm, n_mentions) → the three equi-join blocking
     key families, one row per (norm, key). Keys derive from the norm
-    TEXT alone (stationary), so incremental ingestion can key a new
-    norm once and equi-join it against any existing vocabulary —
-    streaming/incremental_er.py relies on this.
+    TEXT alone (stationary, with the fixed LSH_HASHES/LSH_BANDS), so
+    incremental ingestion can key a new norm once and equi-join it
+    against any existing vocabulary — streaming/incremental_er.py
+    relies on this.
     """
     # order-insensitive token signature: catches token swaps
     # ("Ember Granite" ↔ "Granite Ember") norm equality misses
@@ -107,7 +117,7 @@ def build_block_keys(norms: DataFrame, lsh_hashes: int = 12, lsh_bands: int = 6)
             F.lit("P:"), F.array_join(F.slice(F.split(F.col("norm"), " "), 1, 2), " ")
         ).alias("block_key"),
     )
-    lsh = lsh_band_blocks(norms, "norm", n_hashes=lsh_hashes, bands=lsh_bands, normalize=False).select(
+    lsh = lsh_band_blocks(norms, "norm", n_hashes=LSH_HASHES, bands=LSH_BANDS, normalize=False).select(
         "snapshot_ts", "norm", "n_mentions",
         F.concat(F.lit("L"), F.col("band_id"), F.lit(":"), F.col("block_key")).alias("block_key"),
     )
@@ -175,28 +185,27 @@ def run_pipeline(
     transcripts: DataFrame,
     catalog: Catalog | None = None,
     snapshots: list[str] | None = None,
-    gold: DataFrame | None = None,
-    threshold: float = 0.75,
+    threshold: float = MATCH_THRESHOLD,
     pair_cap: int = 200,
-    lsh_hashes: int = 12,
-    lsh_bands: int = 6,
     force: bool = False,
     embeddings: DataFrame | None = None,
     context_dim: int = 0,
     profile: bool = False,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full flow. Returns the stage DataFrames.
+    Evaluation is the caller's: join `components` to gold labels and
+    call operators.metrics.pairwise_f1.
 
-    gold: optional (mention_id, gold_entity_id) for evaluation —
-    in tests it comes from the synthesizer's hidden labels; in the
-    TempEL-parity check it is the labeled anchor→entity pairs.
+    threshold: score_pairs' is_match cut. pair_cap: per-block pair
+    cap of every blocking family.
 
     embeddings: optional cached surface embeddings
     (snapshot_ts, surface, embedding array<float>) — the reference's
     s05 entity-encoding tables. The `surface` key must be the
     NORMALIZED surface (blocking.norm_key), since all pairwise work
     runs on the norm vocabulary. When given, scoring adds the cosine
-    feature (score reweighted, see score_pairs).
+    feature (score reweighted, see score_pairs; one vector per key,
+    see scoring.with_embeddings).
 
     context_dim: > 0 enables per-occurrence context disambiguation of
     ambiguous abbreviations (operators/context_disambig.py) — the
@@ -218,7 +227,7 @@ def run_pipeline(
     timings: dict[str, float] = {}
     compiles: dict[str, int] = {}
 
-    def ck(name: str, compute, partition_by=("snapshot_ts",), cache=False) -> DataFrame:
+    def ck(name: str, compute, cache=False) -> DataFrame:
         import time as _time
 
         t0 = _time.time()
@@ -237,7 +246,7 @@ def run_pipeline(
             if profile:
                 df.count()
         else:
-            df = catalog.read_or_compute(name, compute, partition_by, force=force)
+            df = catalog.read_or_compute(name, compute, ("snapshot_ts",), force=force)
         if profile:
             timings[name] = round(_time.time() - t0, 3)
             compiles[name] = codegen_compiles(spark) - c0
@@ -280,7 +289,7 @@ def run_pipeline(
         cache=True,
     )
 
-    blocks = ck("blocks", lambda: build_block_keys(norms, lsh_hashes, lsh_bands), cache=True)
+    blocks = ck("blocks", lambda: build_block_keys(norms), cache=True)
 
     def _pairs() -> DataFrame:
         # id_a/id_b ARE the norms: the duplicate norm_a/norm_b columns
@@ -327,32 +336,8 @@ def run_pipeline(
     pairs = ck("pairs", _pairs, cache=True)
 
     def _scored() -> DataFrame:
-        p = pairs
-        emb_kw: dict = {}
-        if embeddings is not None:
-            # defensive dedupe: a caller deriving norm-keyed embeddings
-            # from the surface vocabulary gets several rows per norm,
-            # and a duplicated build side would FAN OUT the pair table
-            # through the left joins (duplicated edges, inflated pair
-            # counts) — one row per (snapshot, key) is the contract
-            emb = embeddings.dropDuplicates(["snapshot_ts", "surface"])
-            ea = emb.select(
-                "snapshot_ts", F.col("surface").alias("id_a"), F.col("embedding").alias("emb_a")
-            )
-            eb = emb.select(
-                "snapshot_ts", F.col("surface").alias("id_b"), F.col("embedding").alias("emb_b")
-            )
-            # join strategy is deliberately left to Catalyst/AQE: at
-            # reference scale the embedding table is TBs (BASELINE.md
-            # — 2.2 TB of 1024-d fp32), far past any broadcast
-            # threshold, so an unconditional F.broadcast here would
-            # OOM the driver; when one snapshot's vocabulary IS small,
-            # AQE converts the shuffle join to broadcast at runtime.
-            p = p.join(ea, ["snapshot_ts", "id_a"], "left").join(
-                eb, ["snapshot_ts", "id_b"], "left"
-            )
-            emb_kw = {"emb_a": "emb_a", "emb_b": "emb_b"}
-        return score_pairs(p, "norm_a", "norm_b", threshold=threshold, prenormalized=True, **emb_kw)
+        p = pairs if embeddings is None else with_embeddings(pairs, embeddings)
+        return score_pairs(p, threshold)
 
     scored = ck("scored", _scored, cache=True)
 
@@ -369,10 +354,7 @@ def run_pipeline(
             "n_mentions_a", "n_mentions_b",
         ).filter(F.col("is_match") | F.col("is_partial")).localCheckpoint(eager=False)
         edges = relevant.filter(F.col("is_match")).select("snapshot_ts", "id_a", "id_b").unionByName(
-            abbreviation_edges(
-                relevant, text_a="norm_a", text_b="norm_b", prenormalized=True,
-                freq_a="n_mentions_a", freq_b="n_mentions_b",
-            )
+            abbreviation_edges(relevant)
         )
         # snapshot-scoped node ids keep one global CC run from ever
         # merging clusters across snapshots (ids never collide).
@@ -410,10 +392,8 @@ def run_pipeline(
                 catalog.put_meta("cc_edges", edge_fp)
                 return out
 
-        # vocabulary-scale graph: size the CC shuffle to the edge
-        # list, not to the corpus-wide session default
         res = connected_components(
-            e, nodes=nodes, shuffle_partitions=16,
+            e, nodes=nodes, shuffle_partitions=CC_PARTITIONS,
             durable_checkpoint=durable, resume_state=resume_state,
         )
         if catalog is not None:
@@ -477,7 +457,7 @@ def run_pipeline(
         # re-routed mention of a Zipf-hot ambiguous surface), not
         # vocabulary-scale — at the 10^12-mention posture forcing a
         # broadcast can OOM the driver.  Catalyst/AQE picks the strategy,
-        # mirroring the embeddings-join above.
+        # mirroring scoring.with_embeddings.
         return (
             base.join(
                 overrides.withColumnRenamed("component", "_ctx_component"),
@@ -513,14 +493,4 @@ def run_pipeline(
     if profile:
         out["timings"] = timings  # type: ignore[assignment]
         out["codegen_compiles"] = compiles  # type: ignore[assignment]
-
-    if gold is not None:
-        f1 = pairwise_f1(
-            components.withColumnRenamed("mention_id", "node"),
-            gold.withColumnRenamed("mention_id", "node"),
-            group_cols=["snapshot_ts"],
-        )
-        out["metrics"] = f1
-        if catalog is not None:
-            catalog.write(f1, "metrics_pairwise_f1", ("snapshot_ts",))
     return out

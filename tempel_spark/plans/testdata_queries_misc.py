@@ -239,7 +239,7 @@ def q_er_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = keyed.select(F.col("doc_id").alias("id_a"), F.col("norm").alias("norm_a"), "block_key")
     b = keyed.select(F.col("doc_id").alias("id_b"), F.col("norm").alias("norm_b"), "block_key")
     pairs = a.join(b, "block_key").filter(F.col("id_a") < F.col("id_b"))
-    scored = score_pairs(pairs, "norm_a", "norm_b", prenormalized=True)
+    scored = score_pairs(pairs)
     return scored.select(
         "id_a", "id_b",
         F.round("ratio_edit_distance", 6).alias("ratio_edit_distance"),

@@ -18,7 +18,8 @@ micro-batch:
       │   (new, all) / (all, new) roles
       ▼
   score_pairs (texts only ⇒ identical scores to batch) ──append──▶
-      durable scored-pair log
+      │   durable scored-pair log
+      │   (optional embeddings ride the same with_embeddings join)
       ▼
   vocab upsert LAST (Catalog.upsert_fold: only the delta's hash
           buckets are rewritten — per-ingest state I/O tracks the
@@ -46,6 +47,11 @@ candidates like any others and can only add recall. At
 vocabulary² candidate space per ingest and scoring only the
 new-norm frontier (new norms grow ~log-like while turns grow
 linearly).
+
+Batch and stream share one configuration, not a set of options:
+blocking.SN_WINDOW/LSH_HASHES/LSH_BANDS and scoring.MATCH_THRESHOLD
+are constants both import, so only pair_cap (and embeddings) must be
+passed alike on both sides.
 
 Clustering stays a periodic batch job (`recluster`): component merges
 are non-monotone under new evidence (a new bridging norm can merge two
@@ -75,8 +81,9 @@ from tempel_spark.operators.blocking import (
     norm_key,
     sorted_neighborhood_pairs,
 )
-from tempel_spark.operators.scoring import abbreviation_edges, score_pairs
+from tempel_spark.operators.scoring import abbreviation_edges, score_pairs, with_embeddings
 from tempel_spark.plans.pipeline import (
+    CC_PARTITIONS,
     bipartite_first_token_pairs,
     build_block_keys,
     extract_mention_table,
@@ -168,12 +175,7 @@ def _new_pairs(
     return blocked.unionByName(bip).dropDuplicates(["snapshot_ts", "id_a", "id_b"])
 
 
-def _insert_time_sn(
-    bn: DataFrame,
-    prev: DataFrame | None,
-    fresh: DataFrame,
-    window: int = SN_WINDOW,
-) -> DataFrame:
+def _insert_time_sn(bn: DataFrame, prev: DataFrame | None, fresh: DataFrame) -> DataFrame:
     """Insert-time sorted-neighborhood pairs for the frontier (the
     incremental counterpart of pipeline._pairs' SN union — module
     docstring has the superset proof).
@@ -182,7 +184,7 @@ def _insert_time_sn(
     vocabulary-scale sort per ingest — the same cost class as the
     per-ingest key-log read in the stationary families; the count
     payload fold is restricted to the SN *participants* (a
-    delta-proportional set: ≤ 2·(window−1) neighbors per fresh norm),
+    delta-proportional set: ≤ 2·(SN_WINDOW−1) neighbors per fresh norm),
     so the vocabulary is never re-aggregated. An Iceberg vocab table
     with a declared sort order would make the probe itself
     delta-priced (range-file pruning); with hash-bucketed parquet
@@ -194,7 +196,7 @@ def _insert_time_sn(
             prev.select("snapshot_ts", "norm", F.lit(False).alias("_fresh"))
         )
     sn = sorted_neighborhood_pairs(
-        names, sort_key="norm", id_col="norm", window=window,
+        names, sort_key="norm", id_col="norm", window=SN_WINDOW,
         group_cols=["snapshot_ts"], payload_cols=["_fresh"],
     ).filter(F.col("_fresh_a") | F.col("_fresh_b"))
     parts = (
@@ -233,10 +235,7 @@ def stream_incremental_er(
     input_dir: str,
     catalog: Catalog,
     snapshots: list[str] | None = None,
-    threshold: float = 0.75,
     pair_cap: int = 200,
-    lsh_hashes: int = 12,
-    lsh_bands: int = 6,
     checkpoint_dir: str | None = None,
     embeddings: DataFrame | None = None,
     state_parts: int = 64,
@@ -248,11 +247,17 @@ def stream_incremental_er(
     since the last run and stops. Returns the StreamingQuery — call
     `.awaitTermination()`.
 
+    Scoring uses score_pairs' default MATCH_THRESHOLD and blocking the
+    fixed LSH_HASHES/LSH_BANDS/SN_WINDOW — the batch pipeline's
+    defaults, so the pair log and a batch run agree. pair_cap must
+    equal the batch run's for the parity to hold.
+
     embeddings: optional cached NORM-keyed embeddings (snapshot_ts,
     surface, embedding) — the same contract as run_pipeline's: when
-    given, scoring adds the cosine feature with the reweighted score,
-    so incremental scores stay bit-identical to a batch run with the
-    same embedding table. (Embeddings must cover a norm at ingest
+    given, scoring adds the cosine feature with the reweighted score
+    through the same scoring.with_embeddings join, so incremental
+    scores stay bit-identical to a batch run with the same embedding
+    table. (Embeddings must cover a norm at ingest
     time — scores are immutable once logged — and the option must be
     used consistently over the pair log's lifetime: it changes the
     logged schema, and mixing modes would mis-append — enforced by a
@@ -336,9 +341,7 @@ def stream_incremental_er(
             # norm text alone, so a norm is MinHash-keyed exactly once
             # over its lifetime — per-ingest cost tracks the frontier,
             # not |vocab|)
-            kf = build_block_keys(fresh, lsh_hashes, lsh_bands).localCheckpoint(
-                eager=True
-            )
+            kf = build_block_keys(fresh).localCheckpoint(eager=True)
             ka = (
                 kf.unionByName(_vocab_keys(catalog))
                 if catalog.append_has_data(_KEYS)
@@ -374,29 +377,10 @@ def stream_incremental_er(
                 .unionByName(_insert_time_sn(bn, prev_full, fresh))
                 .dropDuplicates(["snapshot_ts", "id_a", "id_b"])
             )
-            emb_kw: dict = {}
             if embeddings is not None:
-                # same defensive dedupe + left joins as the batch
-                # pipeline (pipeline.py _scored) so scores match a
-                # batch run bit-for-bit
-                emb = embeddings.dropDuplicates(["snapshot_ts", "surface"])
-                ea = emb.select(
-                    "snapshot_ts", F.col("surface").alias("id_a"),
-                    F.col("embedding").alias("emb_a"),
-                )
-                eb = emb.select(
-                    "snapshot_ts", F.col("surface").alias("id_b"),
-                    F.col("embedding").alias("emb_b"),
-                )
-                pairs = pairs.join(ea, ["snapshot_ts", "id_a"], "left").join(
-                    eb, ["snapshot_ts", "id_b"], "left"
-                )
-                emb_kw = {"emb_a": "emb_a", "emb_b": "emb_b"}
-            scored = score_pairs(
-                pairs, "norm_a", "norm_b", threshold=threshold, prenormalized=True,
-                **emb_kw,
-            )
-            if emb_kw:
+                pairs = with_embeddings(pairs, embeddings)
+            scored = score_pairs(pairs)
+            if embeddings is not None:
                 # the raw embedding arrays must NOT enter the immutable
                 # append-only log — that would bloat the one table that
                 # is never rewritten by dim floats per pair, forever.
@@ -467,13 +451,7 @@ def read_scored_pairs(spark: SparkSession, catalog: Catalog) -> DataFrame:
     )
 
 
-def recluster(
-    spark: SparkSession,
-    catalog: Catalog,
-    shuffle_partitions: int = 16,
-    warm: bool = False,
-    persist_state: bool | None = None,
-):
+def recluster(spark: SparkSession, catalog: Catalog, warm: bool = False):
     """Periodic batch job over the accumulated pair log: match edges
     (+ abbreviation-prior edges against the CURRENT vocab frequencies)
     → connected components per snapshot. Vocabulary-scale, corpus-free.
@@ -492,11 +470,10 @@ def recluster(
     Warm wins once the match edge list is past the single-task-
     contraction threshold (a near-star start converges in ~2 rounds
     instead of ⌈log diameter⌉); below it the cold single-task path is
-    already one pass, so warm stays opt-in.
-
-    persist_state defaults to the value of `warm` (a warm chain keeps
-    refreshing its own state; a cold call stays single-pass and
-    persists nothing)."""
+    already one pass, so warm stays opt-in. A warm call also refreshes
+    `stream_cc_state` for the next one; a cold call stays single-pass
+    and persists nothing. Both CC passes run CC_PARTITIONS shuffle
+    partitions, like the batch pipeline's."""
     from tempel_spark.operators.clustering import connected_components
 
     vocab = catalog.read(_VOCAB)
@@ -528,8 +505,6 @@ def recluster(
             ["snapshot_ts", "id_b"],
         )
     )
-    if persist_state is None:
-        persist_state = warm
     sep = "\x1f"
 
     def scoped(df, a, b):
@@ -539,21 +514,15 @@ def recluster(
         )
 
     match_e = scoped(refreshed.filter(F.col("is_match")), "id_a", "id_b")
-    abbr_e = scoped(
-        abbreviation_edges(
-            refreshed, text_a="norm_a", text_b="norm_b", prenormalized=True,
-            freq_a="n_mentions_a", freq_b="n_mentions_b",
-        ),
-        "id_a", "id_b",
-    )
+    abbr_e = scoped(abbreviation_edges(refreshed), "id_a", "id_b")
     nodes = vocab.select(
         F.concat_ws(sep, F.col("snapshot_ts").cast("string"), "norm").alias("id_a")
     )
-    if warm or persist_state:
+    if warm:
         # stage 1: match-edge-only CC (the monotone, warm-startable
         # part — this is where the big edge list lives)
         resume = None
-        if warm and catalog.exists("stream_cc_state"):
+        if catalog.exists("stream_cc_state"):
             prev = catalog.read("stream_cc_state")
             resume = (
                 prev.unionByName(
@@ -563,23 +532,22 @@ def recluster(
                 .distinct()
             )
         res1 = connected_components(
-            match_e, shuffle_partitions=shuffle_partitions, resume_state=resume
+            match_e, shuffle_partitions=CC_PARTITIONS, resume_state=resume
         )
         star1 = res1.components.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("id_a"), F.col("component").alias("id_b")
         )
-        if persist_state:
-            star1 = catalog.write(
-                star1.withColumnRenamed("id_a", "a").withColumnRenamed("id_b", "b"),
-                "stream_cc_state",
-            ).select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+        star1 = catalog.write(
+            star1.withColumnRenamed("id_a", "a").withColumnRenamed("id_b", "b"),
+            "stream_cc_state",
+        ).select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         # stage 2: overlay the CURRENT prior-routed abbreviation edges
         # on the match star forest (near-star + tiny edge set → the
         # single-task endgame solves it in one pass)
         e = star1.unionByName(abbr_e)
     else:
         e = match_e.unionByName(abbr_e)
-    res = connected_components(e, nodes=nodes, shuffle_partitions=shuffle_partitions)
+    res = connected_components(e, nodes=nodes, shuffle_partitions=CC_PARTITIONS)
     return res.components.select(
         F.split_part("node", F.lit(sep), F.lit(1)).cast("timestamp").alias("snapshot_ts"),
         F.split_part("node", F.lit(sep), F.lit(2)).alias("norm"),

@@ -247,7 +247,7 @@ def cluster_transcripts(rows, snapshots: list[str]) -> dict[str, str]:
     # (surfaces must-linked to a strictly longer surface); pass 2:
     # prior-ranked resolution of unanchored PARTIAL (token-subset)
     # pairs — mirrors score_pairs is_partial + abbreviation_edges
-    # exclude_anchored semantics.
+    # anchored-source exclusion.
     partials = []
     anchored = set()
     for snap, sa, sb in sorted(pairs):

@@ -67,7 +67,7 @@ def test_ambiguous_candidates_and_anchoring(spark):
         "snapshot_ts string, id_a string, id_b string, n_mentions_a long, n_mentions_b long",
     ).withColumn("snapshot_ts", F.to_timestamp("snapshot_ts"))
     df = df.withColumn("norm_a", F.col("id_a")).withColumn("norm_b", F.col("id_b"))
-    scored = score_pairs(df, "norm_a", "norm_b", prenormalized=True)
+    scored = score_pairs(df)
     cands = ambiguous_candidates(scored)
     got = {(r.surface, r.cand_surface) for r in cands.collect()}
     assert ("falcon", "falcon krypton") in got
@@ -84,7 +84,7 @@ def test_partial_pairs_never_hard_match(spark):
          ("granite ember", "ember granite")],
         "norm_a string, norm_b string",
     )
-    out = score_pairs(df, "norm_a", "norm_b", prenormalized=True).collect()
+    out = score_pairs(df).collect()
     by = {(r.norm_a, r.norm_b): r for r in out}
     # token-subset shortenings: ambiguous, never a hard match
     r1 = by[("juniper", "juniper juniper")]

@@ -64,10 +64,51 @@ def test_missing_embeddings_fall_back_to_string_score(spark):
         "id_a string, id_b string, norm_a string, norm_b string, "
         "emb_a array<double>, emb_b array<double>",
     )
-    out = score_pairs(df, "norm_a", "norm_b", emb_a="emb_a", emb_b="emb_b", prenormalized=True)
+    out = score_pairs(df)
     got = {r.id_a: r for r in out.collect()}
     assert got["a1"].cosine is not None
     assert got["a2"].cosine is None
     assert got["a2"].score is not None  # fell back to string-only score
     # identical string features → only the cosine path differs
     assert abs(got["a1"].jaro_winkler - got["a2"].jaro_winkler) < 1e-12
+
+
+def test_conflicting_duplicate_embeddings_ignore_row_order(spark):
+    """Two different cached vectors for one norm: the pipeline keeps
+    the same one whichever order the table's rows arrive in, so a pair
+    scores identically and appears exactly once."""
+    import datetime as dt
+
+    from tempel_spark.operators.blocking import norm_key
+    from tempel_spark.plans.pipeline import extract_mention_table, run_pipeline
+
+    ts = dt.datetime(2014, 6, 1)
+    t = spark.createDataFrame(
+        [
+            ("conv_1", 0, "user", "I met [[Granite Ember]] today", "", ts),
+            ("conv_2", 0, "user", "and [[Granite Embers]] again", "", ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    norms = (
+        extract_mention_table(t, SNAPSHOTS)
+        .select("snapshot_ts", norm_key("surface").alias("surface"))
+        .distinct()
+    )
+
+    def vec(x, y):
+        return F.array(F.lit(x), F.lit(y)).cast("array<float>").alias("embedding")
+
+    base = norms.select("snapshot_ts", "surface", vec(1.0, 0.0))
+    other = norms.filter(F.col("surface") == "granite ember").select(
+        "snapshot_ts", "surface", vec(0.0, 1.0)
+    )
+    runs = []
+    for emb in (base.unionByName(other), other.unionByName(base)):
+        scored = run_pipeline(spark, t, snapshots=SNAPSHOTS, embeddings=emb.coalesce(1))["scored"]
+        key = ["snapshot_ts", "id_a", "id_b"]
+        keyed = scored.select(*key, *[c for c in scored.columns if c not in key])
+        runs.append(sorted(map(tuple, keyed.collect())))
+    assert runs[0] == runs[1]
+    ids = [r[:3] for r in runs[0]]
+    assert len(ids) == len(set(ids)) > 0

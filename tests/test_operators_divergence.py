@@ -40,7 +40,7 @@ def _score(spark, a, b):
     from tempel_spark.operators.scoring import score_pairs
 
     df = spark.createDataFrame([(a, b)], "norm_a string, norm_b string")
-    return score_pairs(df, "norm_a", "norm_b", prenormalized=True).first()
+    return score_pairs(df).first()
 
 
 def test_containment_rule_divergence(spark):
@@ -98,7 +98,7 @@ def test_score_pairs_schema_and_single_eval_shape(spark):
         [("granite ember", "granite embers"), ("falcon", "falcon krypton")],
         "norm_a string, norm_b string",
     )
-    out = score_pairs(df, "norm_a", "norm_b", prenormalized=True)
+    out = score_pairs(df)
     assert out.columns == [
         "norm_a", "norm_b",
         "ratio_edit_distance", "jaccard", "jaro_winkler",
@@ -130,7 +130,7 @@ def test_score_pairs_rescores_scored_frame(spark):
         [("granite ember", "granite embers"), ("falcon", "falcon krypton"), ("raven", "quartz vein")],
         "norm_a string, norm_b string",
     )
-    once = score_pairs(df, "norm_a", "norm_b", prenormalized=True)
-    twice = score_pairs(once, "norm_a", "norm_b", prenormalized=True)
+    once = score_pairs(df)
+    twice = score_pairs(once)
     assert twice.columns == once.columns
     assert sorted(map(tuple, twice.collect())) == sorted(map(tuple, once.collect()))
