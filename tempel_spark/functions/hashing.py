@@ -11,10 +11,13 @@ so task retries and resume-from-checkpoint are bitwise reproducible
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["hash_uniform", "hash_bucket", "md5_uniform", "md5_minhash_value", "fingerprint64"]
+__all__ = [
+    "hash_uniform", "hash_bucket", "md5_uniform", "md5_minhash_value",
+    "fingerprint64", "set_fingerprint",
+]
 
 _MOD = 1_000_000_000
 
@@ -57,3 +60,16 @@ def fingerprint64(col: Column | str) -> Column:
     chars of md5 (60 bits, < 2^63 so no overflow; same recipe works as
     `('0x'||substr(md5(x),1,15))::bigint` in the SQL oracle)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+
+
+def set_fingerprint(df: DataFrame, cols: tuple[str, ...]) -> tuple[int, int]:
+    """(row count, bit_xor of xxhash64 over ``cols``) of a frame, in
+    one driver job. Both aggregates are commutative, so the pair is
+    the same under any row order, partitioning or retry — a cheap
+    identity test for a row set. bit_xor, not sum: sum(xxhash64)
+    overflows long under ANSI mode."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), int(row["h"])

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from tempel_spark.functions.hashing import hash_bucket, md5_minhash_value
 from tempel_spark.functions.text import normalize_mention
@@ -56,6 +57,14 @@ __all__ = [
 # only at the same window (incremental_er.py module contract), so a
 # one-sided tweak would silently break batch/stream parity.
 SN_WINDOW = 3
+# Rank layout of sorted_neighborhood_pairs: key-prefix length of the
+# first bucketing, the bucket size past which a bucket deepens, how
+# many times its prefix may double, and the largest offset frame that
+# is broadcast rather than shuffled.
+SN_BUCKET_PREFIX = 2
+SN_BUCKET_MAX_ROWS = 100_000
+SN_MAX_DEEPEN_ROUNDS = 3
+SN_MAX_OFFSET_BROADCAST = 1_000_000
 # MinHash-LSH shape of the ER blocking keys (pipeline.build_block_keys),
 # shared by batch and stream for the same parity reason: the stream
 # keys each norm once into a persisted key log that later batches
@@ -244,27 +253,22 @@ def sorted_neighborhood_pairs(
     df: DataFrame,
     sort_key,
     id_col: str,
-    window: int = 3,
     group_cols: list[str] | None = None,
     payload_cols: list[str] | None = None,
-    bucket_prefix: int = 2,
-    bucket_max_rows: int = 100_000,
-    max_deepen_rounds: int = 3,
-    max_offset_broadcast: int = 1_000_000,
-    pin_rank: bool = True,
 ) -> DataFrame:
     """Sorted-neighborhood blocking — the classic ER candidate
     generator the alias/LSH families don't cover: order records by a
-    lexicographic key and pair each record with its next `window−1`
-    neighbors. Catches near-misses that token-equality blocks split
-    (e.g. 'color'/'colour' sort adjacently but share no exact key).
+    lexicographic key and pair each record with its next
+    `SN_WINDOW − 1` neighbors. Catches near-misses that token-equality
+    blocks split (e.g. 'color'/'colour' sort adjacently but share no
+    exact key).
 
     Spark shape: distributed global rank (deterministic key-prefix
     buckets → parallel local ranks → broadcast offset fold) + a rank
     equi-join for the neighbor probes — no block-size skew (every
-    record contributes exactly window−1 candidate pairs) and no
-    one-task-per-group sort: parallelism scales with the number of
-    distinct `bucket_prefix`-char key prefixes, not with the group
+    record contributes exactly `SN_WINDOW − 1` candidate pairs) and
+    no one-task-per-group sort: parallelism scales with the number of
+    distinct `SN_BUCKET_PREFIX`-char key prefixes, not with the group
     count. The bucket is a VALUE function of the key (UTF-8 prefix
     order is consistent with full-string order), NOT a sampled range
     partition: `repartitionByRange` boundaries come from sampling
@@ -276,23 +280,22 @@ def sorted_neighborhood_pairs(
     pure function of the data: same output at any core count, any
     plan instantiation, any task retry.
 
-    Skew: a bucket exceeding `bucket_max_rows` rows is adaptively
+    Skew: a bucket exceeding `SN_BUCKET_MAX_ROWS` rows is adaptively
     DEEPENED — its keys re-bucket on a prefix twice as long, up to
-    `max_deepen_rounds` doublings (p, 2p, 4p, 8p chars at the default
-    p=2). Variable-length prefixes stay order-consistent (each label
-    is a prefix of its keys, and prefix_L is monotone in the key), so
-    the rank remains a pure value function of the data — same output
-    at any core count. The only irreducible residue is keys IDENTICAL
-    through `bucket_prefix << max_deepen_rounds` chars, which no
-    prefix scheme can split (they tie on the sort key anyway). The
-    deepening decision itself depends only on data values and
-    parameters, never on partitioning. Non-string keys skip bucketing
-    entirely (prefix order is only sound for strings) and take the
-    classic ONE-TASK-PER-GROUP window — fine for small groups, a
-    deliberate serial fallback otherwise.
+    `SN_MAX_DEEPEN_ROUNDS` doublings (2, 4, 8, 16 chars).
+    Variable-length prefixes stay order-consistent (each label is a
+    prefix of its keys, and prefix_L is monotone in the key), so the
+    rank remains a pure value function of the data — same output at
+    any core count. The only irreducible residue is keys IDENTICAL
+    through 16 chars, which no prefix scheme can split (they tie on
+    the sort key anyway). The deepening decision itself depends only
+    on data values, never on partitioning.
+
+    The sort key must be a string: prefix order is only sound for
+    strings, so any other type raises `TypeError`.
 
     Driver safety: the per-(group, bucket) offset frame is broadcast
-    only while it holds ≤ `max_offset_broadcast` rows — bounded by
+    only while it holds ≤ `SN_MAX_OFFSET_BROADCAST` rows — bounded by
     |groups| × |distinct prefixes|, so high-cardinality `group_cols`
     can make it big. Past the bound the offsets join as a regular
     (shuffled) join instead of a driver-resident broadcast.
@@ -306,126 +309,108 @@ def sorted_neighborhood_pairs(
         *groups, F.col(id_col).alias("id_a"), key.alias("key_a"),
         *[F.col(c).alias(f"{c}_a") for c in payload],
     )
-    if window < 2:
-        # "no neighbors" is a valid sweep endpoint: empty pair set
-        # with the full output schema, not an analysis crash on an
-        # empty array<struct> literal
-        return base.filter(F.lit(False)).select(
-            *groups, "id_a", F.col("id_a").alias("id_b"),
-            "key_a", F.col("key_a").alias("key_b"),
-            *[x for c in payload for x in (F.col(f"{c}_a"), F.col(f"{c}_a").alias(f"{c}_b"))],
+    key_type = base.schema["key_a"].dataType
+    if not isinstance(key_type, StringType):
+        raise TypeError(
+            "sorted_neighborhood_pairs needs a string sort key, got "
+            f"{key_type.simpleString()}"
         )
-    # Distributed global rank — NOT `Window.partitionBy(*groups)`,
-    # which sorts each whole group in ONE task and caps the operator's
-    # parallelism at the number of groups (profiled: the pair stage's
-    # 2→8-core speedup fell to 1.9× with per-snapshot single-task
-    # sorts; a blocking family must scale with cores, not snapshots):
-    #  1. bucket on the first `bucket_prefix` chars of the key — a
-    #     value-defined split whose order is consistent with the key
-    #     order (prefix2(x) ≤ prefix2(y) whenever x ≤ y byte-wise);
-    #  2. rank within (group, bucket) in parallel;
-    #  3. per-(group, bucket) row counts — a groups×buckets-row
-    #     frame — cumulated into offsets and broadcast back, making
-    #     the local ranks global;
-    #  4. each record equi-joins its rank+1..rank+window−1 successors.
-    from pyspark.sql.types import StringType
-
-    if isinstance(base.schema["key_a"].dataType, StringType):
-        safe_key = F.coalesce(F.col("key_a"), F.lit(""))
-        rp = base.withColumn("_bkt", F.substring(safe_key, 1, bucket_prefix))
-        # ONE label-count pass per round serves BOTH the deepening
-        # decision and (on the final round) the offset fold — the
-        # previous shape paid separate eager jobs for the heavy check,
-        # the offset materialization and the offset size guard (4-5
-        # driver-serial jobs on the common no-deepening path; measured
-        # 3.3 s of fixed overhead on a 77k-row vocabulary at sf1.0).
-        depth = bucket_prefix
-        cnt = None
-        n_labels = 0
-        for round_no in range(max_deepen_rounds + 1):
-            # LAZY checkpoint + one summary collect: checkpoint
-            # materialization, the deepening decision (max label
-            # count) and the offset-broadcast size guard (label
-            # count) all ride ONE driver job — the eager-checkpoint +
-            # isEmpty + limit().count() shape paid three serial jobs
-            # per round on the common no-deepening path (same batching
-            # as the CC signature aggregate, clustering.py).
-            cnt = (
-                rp.groupBy(*groups, "_bkt")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .localCheckpoint(eager=False)
-            )
-            stats = cnt.agg(
-                F.max("_n").alias("_mx"), F.count(F.lit(1)).alias("_k")
-            ).collect()[0]
-            n_labels = stats["_k"]
-            has_heavy = stats["_mx"] is not None and stats["_mx"] > bucket_max_rows
-            if round_no == max_deepen_rounds or not has_heavy:
-                break
-            heavy = cnt.filter(F.col("_n") > bucket_max_rows).select(
-                *groups, "_bkt", F.lit(True).alias("_deepen")
-            )
-            depth *= 2
-            rp = (
-                rp.join(F.broadcast(heavy), [*groups, "_bkt"], "left")
-                .withColumn(
-                    "_bkt",
-                    F.when(
-                        F.col("_deepen"), F.substring(safe_key, 1, depth)
-                    ).otherwise(F.col("_bkt")),
-                )
-                .drop("_deepen")
-                # deepening actually happened: pin this round's labels
-                # so the next round's count — and the final offset/rank
-                # jobs — don't re-derive the whole prior join chain from
-                # the base scan each time (the common no-deepening path
-                # never pays this)
-                .localCheckpoint(eager=True)
-            )
-        w_local = Window.partitionBy(*groups, "_bkt").orderBy(
-            F.col("key_a").asc(), F.col("id_a").asc()
-        )
-        rp = rp.withColumn("_lr", F.row_number().over(w_local))
-        w_off = (
-            Window.partitionBy(*groups)
-            .orderBy("_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        off = cnt.withColumn(
-            "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-        ).drop("_n")
-        # broadcast is a driver/executor memory cliff when groups ×
-        # buckets is huge — past the bound, fall back to a shuffled
-        # join. The size came back with the label-count summary above.
-        if n_labels <= max_offset_broadcast:
-            off = F.broadcast(off)
-        ranked = (
-            rp.join(off, [*groups, "_bkt"])
-            .withColumn("_r", F.col("_lr") + F.col("_off"))
-            .drop("_bkt", "_lr", "_off")
-        )
-        # the rank frame feeds BOTH sides of the neighbor equi-join —
-        # pin it so the scan+window chain isn't computed twice.
-        # pin_rank=False keeps the full lineage visible (the plan-shape
-        # test asserts the window is keyed by the value bucket).
-        if pin_rank:
-            ranked = ranked.localCheckpoint(eager=False)
-    else:
-        w_global = Window.partitionBy(*groups).orderBy(
-            F.col("key_a").asc(), F.col("id_a").asc()
-        )
-        ranked = base.withColumn("_r", F.row_number().over(w_global))
+    # the rank frame feeds BOTH sides of the neighbor equi-join — pin
+    # it so the scan+window chain isn't computed twice
+    ranked = _sn_rank(base, groups).localCheckpoint(eager=False)
     right = ranked.select(
         *groups, F.col("_r").alias("_rb"),
         F.col("id_a").alias("id_b"), F.col("key_a").alias("key_b"),
         *[F.col(f"{c}_a").alias(f"{c}_b") for c in payload],
     )
     probe = ranked.withColumn(
-        "_j", F.explode(F.array(*[F.lit(j) for j in range(1, window)]))
+        "_j", F.explode(F.array(*[F.lit(j) for j in range(1, SN_WINDOW)]))
     ).withColumn("_rb", F.col("_r") + F.col("_j"))
     return probe.join(right, [*groups, "_rb"]).select(
         *groups, "id_a", "id_b", "key_a", "key_b",
         *[x for c in payload for x in (f"{c}_a", f"{c}_b")],
+    )
+
+
+def _sn_rank(base: DataFrame, groups: list[str]) -> DataFrame:
+    """`base` plus `_r`, each record's 1-based rank by (key_a, id_a)
+    within its group — a distributed global rank, NOT
+    `Window.partitionBy(*groups)`, which sorts each whole group in ONE
+    task and caps the operator's parallelism at the number of groups
+    (profiled: the pair stage's 2→8-core speedup fell to 1.9× with
+    per-snapshot single-task sorts; a blocking family must scale with
+    cores, not snapshots):
+
+      1. bucket on the first `SN_BUCKET_PREFIX` chars of the key — a
+         value-defined split whose order is consistent with the key
+         order (prefix2(x) ≤ prefix2(y) whenever x ≤ y byte-wise);
+      2. rank within (group, bucket) in parallel;
+      3. per-(group, bucket) row counts — a groups×buckets-row frame —
+         cumulated into offsets and broadcast back, making the local
+         ranks global.
+    """
+    safe_key = F.coalesce(F.col("key_a"), F.lit(""))
+    rp = base.withColumn("_bkt", F.substring(safe_key, 1, SN_BUCKET_PREFIX))
+    # ONE label count per round, pinned lazily and read by one summary
+    # collect, serves the deepening decision, the offset-broadcast size
+    # guard and (on the final round) the offset fold: one driver job on
+    # the common no-deepening path, where separate eager jobs cost 3.3 s
+    # of fixed overhead on a 77k-row vocabulary at sf1.0.
+    depth = SN_BUCKET_PREFIX
+    for round_no in range(SN_MAX_DEEPEN_ROUNDS + 1):
+        cnt = (
+            rp.groupBy(*groups, "_bkt")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .localCheckpoint(eager=False)
+        )
+        stats = cnt.agg(
+            F.max("_n").alias("_mx"), F.count(F.lit(1)).alias("_k")
+        ).collect()[0]
+        n_labels = stats["_k"]
+        has_heavy = stats["_mx"] is not None and stats["_mx"] > SN_BUCKET_MAX_ROWS
+        if round_no == SN_MAX_DEEPEN_ROUNDS or not has_heavy:
+            break
+        heavy = cnt.filter(F.col("_n") > SN_BUCKET_MAX_ROWS).select(
+            *groups, "_bkt", F.lit(True).alias("_deepen")
+        )
+        depth *= 2
+        rp = (
+            rp.join(F.broadcast(heavy), [*groups, "_bkt"], "left")
+            .withColumn(
+                "_bkt",
+                F.when(
+                    F.col("_deepen"), F.substring(safe_key, 1, depth)
+                ).otherwise(F.col("_bkt")),
+            )
+            .drop("_deepen")
+            # deepening actually happened: pin this round's labels so
+            # the next round's count — and the final offset/rank jobs
+            # — don't re-derive the whole prior join chain from the
+            # base scan each time (the common no-deepening path never
+            # pays this)
+            .localCheckpoint(eager=True)
+        )
+    w_local = Window.partitionBy(*groups, "_bkt").orderBy(
+        F.col("key_a").asc(), F.col("id_a").asc()
+    )
+    rp = rp.withColumn("_lr", F.row_number().over(w_local))
+    w_off = (
+        Window.partitionBy(*groups)
+        .orderBy("_bkt")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    off = cnt.withColumn(
+        "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
+    ).drop("_n")
+    # broadcast is a driver/executor memory cliff when groups × buckets
+    # is huge — past the bound, fall back to a shuffled join. The size
+    # came back with the label-count summary above.
+    if n_labels <= SN_MAX_OFFSET_BROADCAST:
+        off = F.broadcast(off)
+    return (
+        rp.join(off, [*groups, "_bkt"])
+        .withColumn("_r", F.col("_lr") + F.col("_off"))
+        .drop("_bkt", "_lr", "_off")
     )
 
 

@@ -48,7 +48,7 @@ from tempel_spark.functions.hashing import hash_uniform, md5_uniform
 from tempel_spark.functions.similarity import levenshtein_ratio
 from tempel_spark.functions.text import whole_word_contains
 from tempel_spark.operators.balance import capped_round_robin_alloc
-from tempel_spark.operators.clustering import connected_components
+from tempel_spark.operators.clustering import NODE_SEP, connected_components
 from tempel_spark.functions.text import context_window
 
 __all__ = [
@@ -87,7 +87,7 @@ def stats_from_pipeline(pipeline_out: dict) -> DataFrame:
         )
     )
 
-_SEP = "\x1f"
+
 DEFAULT_SUBSETS = ("train", "validation", "test")
 
 
@@ -205,16 +205,16 @@ def assign_subsets_leakage_safe(
                 F.lower("s_b"), F.lower("s_a")
             )
         edges = pairs.filter(link).select(
-            F.concat_ws(_SEP, "entity_id", "s_a").alias("id_a"),
-            F.concat_ws(_SEP, "entity_id", "s_b").alias("id_b"),
+            F.concat_ws(NODE_SEP, "entity_id", "s_a").alias("id_a"),
+            F.concat_ws(NODE_SEP, "entity_id", "s_b").alias("id_b"),
         )
-        nodes = surf.select(F.concat_ws(_SEP, "entity_id", "surface").alias("node"))
+        nodes = surf.select(F.concat_ws(NODE_SEP, "entity_id", "surface").alias("node"))
         cc = connected_components(edges, nodes=nodes, shuffle_partitions=8).components
 
         clusters = cc.select(
-            F.split_part("node", F.lit(_SEP), F.lit(1)).alias("entity_id"),
-            F.split_part("node", F.lit(_SEP), F.lit(2)).alias("surface"),
-            F.split_part("component", F.lit(_SEP), F.lit(2)).alias("cluster"),
+            F.split_part("node", F.lit(NODE_SEP), F.lit(1)).alias("entity_id"),
+            F.split_part("node", F.lit(NODE_SEP), F.lit(2)).alias("surface"),
+            F.split_part("component", F.lit(NODE_SEP), F.lit(2)).alias("cluster"),
         ).localCheckpoint(eager=False)
     # cluster weight = total links; big clusters assigned first
     # (rank 1 → subsets[0] = train, the reference's prefer_train)

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tempel_spark.functions.hashing import set_fingerprint
 from tempel_spark.functions.mentions import extract_mentions
 from tempel_spark.operators.asof import assign_snapshot, yearly_snapshots
 from tempel_spark.operators.blocking import (
@@ -50,7 +51,7 @@ from tempel_spark.operators.blocking import (
     lsh_band_blocks,
     norm_key,
 )
-from tempel_spark.operators.clustering import connected_components
+from tempel_spark.operators.clustering import NODE_SEP, connected_components
 from tempel_spark.operators.scoring import (
     MATCH_THRESHOLD,
     abbreviation_edges,
@@ -67,9 +68,6 @@ __all__ = [
     "bipartite_first_token_pairs",
 ]
 
-# node-id separator for snapshot-scoped CC nodes; \x1f (ASCII unit
-# separator) cannot appear in extracted surfaces
-_SEP = "\x1f"
 # shuffle width of the vocabulary-scale CC runs (batch + recluster):
 # size the CC shuffle to the edge list, not to the corpus-wide default
 CC_PARTITIONS = 16
@@ -306,21 +304,18 @@ def run_pipeline(
         bip = bipartite_first_token_pairs(norms, norms, pair_cap=pair_cap).select(
             "snapshot_ts", "id_a", "id_b", "n_mentions_a", "n_mentions_b"
         )
-        # sorted-neighborhood pass (window=3): each norm pairs with its
-        # 2 lexicographic successors per snapshot. Catches the recall
-        # hole every other family shares: a typo in the FIRST token
-        # ("merixian prairie" ↔ "meridian prairie") breaks the
-        # sorted/prefix/first-token keys at once and leaves only LSH
-        # luck (12/6 bands miss a J≈0.65 pair ~4% of the time —
+        # sorted-neighborhood pass: each norm pairs with its
+        # SN_WINDOW − 1 lexicographic successors per snapshot. Catches
+        # the recall hole every other family shares: a typo in the
+        # FIRST token ("merixian prairie" ↔ "meridian prairie") breaks
+        # the sorted/prefix/first-token keys at once and leaves only
+        # LSH luck (12/6 bands miss a J≈0.65 pair ~4% of the time —
         # observed splitting a real cluster). Cost: one vocab-scale
-        # sort per snapshot, exactly 2 pairs per norm, no block skew.
-        from tempel_spark.operators.blocking import (
-            SN_WINDOW,
-            sorted_neighborhood_pairs,
-        )
+        # distributed rank, SN_WINDOW − 1 pairs per norm, no block skew.
+        from tempel_spark.operators.blocking import sorted_neighborhood_pairs
 
         sn = sorted_neighborhood_pairs(
-            norms, sort_key="norm", id_col="norm", window=SN_WINDOW,
+            norms, sort_key="norm", id_col="norm",
             group_cols=["snapshot_ts"], payload_cols=["n_mentions"],
         ).select("snapshot_ts", "id_a", "id_b", "n_mentions_a", "n_mentions_b")
         return (
@@ -359,11 +354,11 @@ def run_pipeline(
         # snapshot-scoped node ids keep one global CC run from ever
         # merging clusters across snapshots (ids never collide).
         e = edges.select(
-            F.concat_ws(_SEP, F.col("snapshot_ts").cast("string"), "id_a").alias("id_a"),
-            F.concat_ws(_SEP, F.col("snapshot_ts").cast("string"), "id_b").alias("id_b"),
+            F.concat_ws(NODE_SEP, F.col("snapshot_ts").cast("string"), "id_a").alias("id_a"),
+            F.concat_ws(NODE_SEP, F.col("snapshot_ts").cast("string"), "id_b").alias("id_b"),
         )
         nodes = norms.select(
-            F.concat_ws(_SEP, F.col("snapshot_ts").cast("string"), "norm").alias("node")
+            F.concat_ws(NODE_SEP, F.col("snapshot_ts").cast("string"), "norm").alias("node")
         )
         # mid-clustering resumability: every iteration's edge state is
         # durably published; a rerun warm-starts from the latest state
@@ -376,11 +371,7 @@ def run_pipeline(
         durable = None
         resume_state = None
         if catalog is not None:
-            fp_row = e.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.expr("bit_xor(xxhash64(id_a, id_b))"), F.lit(0)).alias("h"),
-            ).collect()[0]
-            edge_fp = {"edges_n": int(fp_row["n"]), "edges_hash": int(fp_row["h"])}
+            edge_fp = dict(zip(("edges_n", "edges_hash"), set_fingerprint(e, ("id_a", "id_b"))))
             if catalog.exists("cc_edges"):
                 if not force and catalog.get_meta("cc_edges") == edge_fp:
                     resume_state = catalog.read("cc_edges")
@@ -402,9 +393,9 @@ def run_pipeline(
                 {"iterations": res.iterations, "converged": res.converged, "history": res.history},
             )
         norm_comp = res.components.select(
-            F.split_part("node", F.lit(_SEP), F.lit(1)).cast("timestamp").alias("snapshot_ts"),
-            F.split_part("node", F.lit(_SEP), F.lit(2)).alias("norm"),
-            F.split_part("component", F.lit(_SEP), F.lit(2)).alias("_comp_norm"),
+            F.split_part("node", F.lit(NODE_SEP), F.lit(1)).cast("timestamp").alias("snapshot_ts"),
+            F.split_part("node", F.lit(NODE_SEP), F.lit(2)).alias("norm"),
+            F.split_part("component", F.lit(NODE_SEP), F.lit(2)).alias("_comp_norm"),
         )
         # map back to surfaces and relabel each cluster to its
         # lexicographically smallest SURFACE — component ids stay real

@@ -1030,15 +1030,15 @@ def q_length_bucket_acc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood blocking (the classic ER candidate
-    generator — window=3 neighbors over the name-sorted order per
-    brand): each record pairs with its next two sort neighbors, one
-    window sort, no block-size skew. Complements the equality/LSH
+    generator over the name-sorted order per brand): each record
+    pairs with its next SN_WINDOW − 1 = 2 sort neighbors (the oracle's
+    two `lead`s), no block-size skew. Complements the equality/LSH
     block families with adjacency-based candidates."""
     from tempel_spark.operators.blocking import sorted_neighborhood_pairs
 
     p = t(spark, sf_dir, "part")
     return sorted_neighborhood_pairs(
-        p, F.lower("p_name"), "p_partkey", window=3, group_cols=["p_brand"]
+        p, F.lower("p_name"), "p_partkey", group_cols=["p_brand"]
     )
 
 

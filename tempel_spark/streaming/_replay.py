@@ -30,24 +30,18 @@ exactly the failure mode a shared helper removes.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from tempel_spark.functions.hashing import set_fingerprint
 
 __all__ = ["batch_content_fp", "make_marker", "check_replay"]
 
 
 def batch_content_fp(df: DataFrame, cols: tuple[str, ...]) -> str:
-    """Order-independent content fingerprint of a batch: row count +
-    bit_xor of xxhash64 over ``cols``. Both aggregates are commutative,
-    so the fingerprint is deterministic across retries, partitionings,
-    and core counts — which is what lets a marker comparison recognize
-    a true replay."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return f"{row['n']}:{row['h']}"
+    """Order-independent content fingerprint of a batch, as the
+    marker string "count:hash" (`set_fingerprint`): deterministic
+    across retries, partitionings, and core counts — which is what
+    lets a marker comparison recognize a true replay."""
+    return "%d:%d" % set_fingerprint(df, cols)
 
 
 def make_marker(

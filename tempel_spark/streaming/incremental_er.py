@@ -50,8 +50,8 @@ linearly).
 
 Batch and stream share one configuration, not a set of options:
 blocking.SN_WINDOW/LSH_HASHES/LSH_BANDS and scoring.MATCH_THRESHOLD
-are constants both import, so only pair_cap (and embeddings) must be
-passed alike on both sides.
+are constants both sides use, so only pair_cap (and embeddings) must
+be passed alike on both sides.
 
 Clustering stays a periodic batch job (`recluster`): component merges
 are non-monotone under new evidence (a new bridging norm can merge two
@@ -76,7 +76,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tempel_spark.operators.blocking import (
-    SN_WINDOW,
     cap_block_size,
     norm_key,
     sorted_neighborhood_pairs,
@@ -196,7 +195,7 @@ def _insert_time_sn(bn: DataFrame, prev: DataFrame | None, fresh: DataFrame) -> 
             prev.select("snapshot_ts", "norm", F.lit(False).alias("_fresh"))
         )
     sn = sorted_neighborhood_pairs(
-        names, sort_key="norm", id_col="norm", window=SN_WINDOW,
+        names, sort_key="norm", id_col="norm",
         group_cols=["snapshot_ts"], payload_cols=["_fresh"],
     ).filter(F.col("_fresh_a") | F.col("_fresh_b"))
     parts = (
@@ -474,7 +473,7 @@ def recluster(spark: SparkSession, catalog: Catalog, warm: bool = False):
     `stream_cc_state` for the next one; a cold call stays single-pass
     and persists nothing. Both CC passes run CC_PARTITIONS shuffle
     partitions, like the batch pipeline's."""
-    from tempel_spark.operators.clustering import connected_components
+    from tempel_spark.operators.clustering import NODE_SEP, connected_components
 
     vocab = catalog.read(_VOCAB)
     try:
@@ -505,18 +504,16 @@ def recluster(spark: SparkSession, catalog: Catalog, warm: bool = False):
             ["snapshot_ts", "id_b"],
         )
     )
-    sep = "\x1f"
-
     def scoped(df, a, b):
         return df.select(
-            F.concat_ws(sep, F.col("snapshot_ts").cast("string"), a).alias("id_a"),
-            F.concat_ws(sep, F.col("snapshot_ts").cast("string"), b).alias("id_b"),
+            F.concat_ws(NODE_SEP, F.col("snapshot_ts").cast("string"), a).alias("id_a"),
+            F.concat_ws(NODE_SEP, F.col("snapshot_ts").cast("string"), b).alias("id_b"),
         )
 
     match_e = scoped(refreshed.filter(F.col("is_match")), "id_a", "id_b")
     abbr_e = scoped(abbreviation_edges(refreshed), "id_a", "id_b")
     nodes = vocab.select(
-        F.concat_ws(sep, F.col("snapshot_ts").cast("string"), "norm").alias("id_a")
+        F.concat_ws(NODE_SEP, F.col("snapshot_ts").cast("string"), "norm").alias("id_a")
     )
     if warm:
         # stage 1: match-edge-only CC (the monotone, warm-startable
@@ -549,7 +546,7 @@ def recluster(spark: SparkSession, catalog: Catalog, warm: bool = False):
         e = match_e.unionByName(abbr_e)
     res = connected_components(e, nodes=nodes, shuffle_partitions=CC_PARTITIONS)
     return res.components.select(
-        F.split_part("node", F.lit(sep), F.lit(1)).cast("timestamp").alias("snapshot_ts"),
-        F.split_part("node", F.lit(sep), F.lit(2)).alias("norm"),
-        F.split_part("component", F.lit(sep), F.lit(2)).alias("component"),
+        F.split_part("node", F.lit(NODE_SEP), F.lit(1)).cast("timestamp").alias("snapshot_ts"),
+        F.split_part("node", F.lit(NODE_SEP), F.lit(2)).alias("norm"),
+        F.split_part("component", F.lit(NODE_SEP), F.lit(2)).alias("component"),
     )

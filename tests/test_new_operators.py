@@ -483,6 +483,19 @@ def test_tsv_and_jsonl_readers(spark):
         assert rows == {"Q90": 3, "Q1": 7}
 
 
+def _optimized_plan_nodes(df):
+    """(operator name, line) for each node line of the optimized
+    logical plan's tree string; tree edges are stripped."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [
+        (m.group(1), line)
+        for line in plan.splitlines()
+        if (m := re.match(r"[\s:|+-]*(\w+)", line))
+    ]
+
+
 def test_sorted_neighborhood_pairs(spark):
     """Sorted-neighborhood blocking: each record pairs with its next
     window-1 sort neighbors per group; payload columns ride along;
@@ -490,7 +503,9 @@ def test_sorted_neighborhood_pairs(spark):
     parallel (a window keyed by the group alone would sort each
     group in one task; a sampled range partition is not a value
     function of the data — see the operator docstring)."""
-    from tempel_spark.operators.blocking import sorted_neighborhood_pairs
+    import re
+
+    from tempel_spark.operators.blocking import _sn_rank, sorted_neighborhood_pairs
 
     df = spark.createDataFrame(
         [("g", 1, "colour", "t1"), ("g", 2, "color", "t2"),
@@ -499,7 +514,7 @@ def test_sorted_neighborhood_pairs(spark):
         "grp string, id long, name string, txt string",
     )
     out = sorted_neighborhood_pairs(
-        df, "name", "id", window=3, group_cols=["grp"], payload_cols=["txt"]
+        df, "name", "id", group_cols=["grp"], payload_cols=["txt"]
     )
     pairs = {(r.id_a, r.id_b) for r in out.collect()}
     # sort order in g: color(2), colour(1), colr(3)... lexicographic:
@@ -510,30 +525,51 @@ def test_sorted_neighborhood_pairs(spark):
     # 'h' has a single record → no pairs; 'colour'/'color' paired
     # despite sharing no equality block key (the method's point)
     assert all(a != 5 and b != 5 for a, b in pairs)
-    # the default path pins the rank frame (one scan+window chain for
+    # the operator pins the rank frame (one scan+window chain for
     # both join sides) — the optimized plan must read it from a
     # LogicalRDD, not recompute it per side
-    plan_pinned = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in plan_pinned, plan_pinned
+    nodes = _optimized_plan_nodes(out)
+    assert any(name == "LogicalRDD" for name, _ in nodes), nodes
     # parallel shape pinned: every ranking window is keyed by the
     # value-defined bucket column, never by the group columns alone
     # (which would serialize each group into one task) — asserted on
-    # the unpinned variant where the full lineage is visible
-    out2 = sorted_neighborhood_pairs(
-        df, "name", "id", window=3, group_cols=["grp"], payload_cols=["txt"],
-        pin_rank=False,
+    # the rank frame before it is pinned, where the full lineage is
+    # visible
+    base = df.select(
+        "grp", F.col("id").alias("id_a"), F.col("name").alias("key_a"),
+        F.col("txt").alias("txt_a"),
     )
-    assert {(r.id_a, r.id_b) for r in out2.collect()} == pairs
-    plan = out2._jdf.queryExecution().optimizedPlan().toString()
-    assert "windowspecdefinition(grp#" in plan and "_bkt#" in plan, plan
-    import re
-
-    bad = [
-        ln for ln in plan.splitlines()
-        if "row_number() windowspecdefinition" in ln
-        and not re.search(r"windowspecdefinition\([^)]*_bkt#", ln)
+    ranked = _sn_rank(base, ["grp"])
+    by_rank = {(r.grp, r._r): r.id_a for r in ranked.collect()}
+    assert {
+        (a, by_rank[(g, k + j)])
+        for (g, k), a in by_rank.items()
+        for j in (1, 2)
+        if (g, k + j) in by_rank
+    } == pairs
+    ranks = [
+        line for name, line in _optimized_plan_nodes(ranked)
+        if name == "Window" and "row_number()" in line
     ]
-    assert not bad, bad
+    assert ranks, ranked._jdf.queryExecution().optimizedPlan().toString()
+    for line in ranks:
+        # a logical Window node ends with [partition spec], [order spec]
+        spec = re.search(r"\], \[([^\]]*)\], \[[^\]]*\]$", line)
+        assert spec, line
+        keys = [re.sub(r"#\d+L?$", "", c.strip()) for c in spec.group(1).split(",")]
+        assert keys == ["grp", "_bkt"], line
+
+
+def test_sorted_neighborhood_rejects_non_string_key(spark):
+    """Prefix buckets only order strings; any other key type is
+    refused up front rather than ranked in one task per group."""
+    import pytest
+
+    from tempel_spark.operators.blocking import sorted_neighborhood_pairs
+
+    df = spark.createDataFrame([("g", 1), ("g", 2)], "grp string, id long")
+    with pytest.raises(TypeError, match="bigint"):
+        sorted_neighborhood_pairs(df, "id", "id", group_cols=["grp"])
 
 
 def test_read_tsv_explicit_schema(spark, tmp_path):
@@ -614,7 +650,7 @@ def test_sorted_neighborhood_parallelism_invariant(spark):
         for nshuf, nin in ((3, 2), (31, 17)):
             spark.conf.set("spark.sql.shuffle.partitions", str(nshuf))
             out = sorted_neighborhood_pairs(
-                df.repartition(nin), "name", "id", window=3, group_cols=["grp"]
+                df.repartition(nin), "name", "id", group_cols=["grp"]
             )
             outs.append(sorted((r.grp, r.id_a, r.id_b) for r in out.collect()))
     finally:
@@ -623,16 +659,18 @@ def test_sorted_neighborhood_parallelism_invariant(spark):
     assert len(outs[0]) > 1000  # non-trivial corpus actually paired
 
 
-def test_sorted_neighborhood_adaptive_deepening(spark):
+def test_sorted_neighborhood_adaptive_deepening(spark, monkeypatch):
     """The single-shared-prefix cliff: every key starts 'zz', so the
     2-char bucketing alone would put the whole group in ONE task.
-    With bucket_max_rows exceeded, buckets deepen adaptively (2→4→8
+    With SN_BUCKET_MAX_ROWS exceeded, buckets deepen adaptively (2→4→8
     chars); the output must equal the exact Python-computed SN pairs
     and stay byte-identical across shuffle/input partitionings —
     variable-length prefix labels sort consistently with full keys,
     keeping the rank a pure value function."""
+    from tempel_spark.operators import blocking
     from tempel_spark.operators.blocking import sorted_neighborhood_pairs
 
+    monkeypatch.setattr(blocking, "SN_BUCKET_MAX_ROWS", 50)
     rows = [("zzname%04d" % (i * 7919 % 500), i) for i in range(400)]
     df = spark.createDataFrame(rows, "name string, id long")
     # exact ground truth: rank by (name, id), pair rank r with r+1, r+2
@@ -648,10 +686,7 @@ def test_sorted_neighborhood_adaptive_deepening(spark):
     try:
         for nshuf, nin in ((3, 2), (29, 13)):
             spark.conf.set("spark.sql.shuffle.partitions", str(nshuf))
-            out = sorted_neighborhood_pairs(
-                df.repartition(nin), "name", "id", window=3,
-                bucket_max_rows=50, max_deepen_rounds=3,
-            )
+            out = sorted_neighborhood_pairs(df.repartition(nin), "name", "id")
             outs.append(sorted((r.id_a, r.id_b) for r in out.collect()))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -30,17 +30,18 @@ def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i+1:03d}") for i in range(n - 1)], "id_a string, id_b string"
     )
-    res = connected_components(edges, max_iter=15)
+    res = connected_components(edges)
     assert res.converged
     comps = {r.component for r in res.components.collect()}
     assert comps == {"n000"}
     assert res.iterations <= 10
 
 
-def test_cc_local_contract_parity_and_fewer_rounds(spark):
+def test_cc_local_contract_parity_and_fewer_rounds(spark, monkeypatch):
     """The partition-local union-find pre-pass must not change the
     components — only the number of global star rounds (each round is
     a driver barrier, so fewer rounds = less serial time)."""
+    from tempel_spark.operators import clustering
     from tempel_spark.operators.clustering import connected_components
 
     edges = spark.createDataFrame(
@@ -49,11 +50,15 @@ def test_cc_local_contract_parity_and_fewer_rounds(spark):
         + [("k1", "k2"), ("k2", "k3"), ("k1", "k3"), ("z", "z")],
         "id_a string, id_b string",
     )
-    base = connected_components(edges, shuffle_partitions=4, local_contract=False)
-    fast = connected_components(edges, shuffle_partitions=4, local_contract=True)
-    # single_task_edges=0 exercises the DISTRIBUTED contraction branch
+    # no-contraction baseline: a resume state skips the union-find
+    # pass, so the raw edges go straight into the star loop
+    raw = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+    base = connected_components(edges, shuffle_partitions=4, resume_state=raw)
+    fast = connected_components(edges, shuffle_partitions=4)
+    # SINGLE_TASK_EDGES=0 exercises the DISTRIBUTED contraction branch
     # (multi-partition union-find) on the same fixture
-    dist = connected_components(edges, shuffle_partitions=4, local_contract=True, single_task_edges=0)
+    monkeypatch.setattr(clustering, "SINGLE_TASK_EDGES", 0)
+    dist = connected_components(edges, shuffle_partitions=4)
     exp = {r.node: r.component for r in base.components.collect()}
     got = {r.node: r.component for r in fast.components.collect()}
     got_dist = {r.node: r.component for r in dist.components.collect()}

@@ -49,9 +49,7 @@ EDGES = st.lists(
 )
 
 
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-@given(EDGES)
-def test_connected_components_matches_union_find(spark, edges):
+def _cc_matches_union_find(spark, edges):
     from tempel_spark.operators.clustering import connected_components
 
     edges = [(f"n{a:02d}", f"n{b:02d}") for a, b in edges if a != b]
@@ -69,6 +67,23 @@ def test_connected_components_matches_union_find(spark, edges):
     exp = {n: uf.find(n) for n in nodes}
     # same partition AND same representative (min of component)
     assert got == exp
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(EDGES)
+def test_connected_components_matches_union_find(spark, edges):
+    _cc_matches_union_find(spark, edges)
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(EDGES)
+def test_distributed_connected_components_matches_union_find(spark, monkeypatch, edges):
+    """Same check through the multi-partition contraction and the star
+    loop, which one-task union-find skips on graphs this small."""
+    from tempel_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "SINGLE_TASK_EDGES", 0)
+    _cc_matches_union_find(spark, edges)
 
 
 def test_pipeline_handles_extreme_skew(spark):
