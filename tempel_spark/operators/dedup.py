@@ -21,6 +21,7 @@ them can slot into the ER pipeline's blocking stage.
 from __future__ import annotations
 
 import hashlib
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -251,6 +252,65 @@ def simhash_dedup(
     )
 
 
+def _dup_gram_positions(
+    df: DataFrame, id_col: str, text_col: str, n: int, min_count: int
+) -> DataFrame:
+    """(_gh, id_col, pos) for every token n-gram (split on " ") whose
+    xxhash64 occurs ≥ ``min_count`` times corpus-wide; pos is the
+    gram's 1-based first-token position. The duplicated-gram scan of
+    `repeated_passages` and `passage_dedup`."""
+    tk = F.split(F.col(text_col), " ")
+    npos = F.size(tk) - (n - 1)
+    # guard: sequence(1, 0) is DESCENDING [1, 0], not empty — docs
+    # shorter than n tokens must yield NULL (dropped by posexplode)
+    grams = F.when(
+        npos >= 1,
+        F.transform(
+            F.sequence(F.lit(1), npos),
+            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tk, i, n))),
+        ),
+    )
+    g = df.select(F.col(id_col), F.posexplode(grams).alias("_p0", "_gh")).select(
+        id_col, (F.col("_p0") + 1).alias("pos"), "_gh"
+    )
+    dup = g.groupBy("_gh").agg(F.count(F.lit(1)).alias("_cnt")).filter(
+        F.col("_cnt") >= min_count
+    )
+    return g.join(dup.select("_gh"), "_gh")
+
+
+def _excise_tokens(
+    joined: DataFrame,
+    text_col: str,
+    out_col: str,
+    removed: Callable[[Column], Column],
+    drop: tuple[str, ...],
+) -> DataFrame:
+    """The excision tail of `passage_dedup` and `excise_spans`: split
+    ``text_col`` on " ", keep each token whose 0-based index i fails
+    ``removed(i)``, rejoin the survivors into ``out_col`` and count
+    ``n_tokens_removed`` (both NULL for NULL text), then drop the
+    caller's helper columns ``drop``."""
+    kept = F.filter(F.col("_tk"), lambda t, i: ~removed(i))
+    return (
+        joined.withColumn("_tk", F.split(F.col(text_col), " "))
+        .withColumn("_kept", kept)
+        .withColumn(
+            out_col,
+            F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
+                F.array_join(F.col("_kept"), " ")
+            ),
+        )
+        .withColumn(
+            "n_tokens_removed",
+            F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
+                F.size("_tk") - F.size("_kept")
+            ),
+        )
+        .drop(*drop, "_tk", "_kept")
+    )
+
+
 def repeated_passages(
     df: DataFrame,
     id_col: str,
@@ -289,24 +349,7 @@ def repeated_passages(
     the first/last duplicated gram), n_dup_grams, n_tokens (span
     length in tokens, = span_end − span_start + n).
     """
-    tk = F.split(F.col(text_col), " ")
-    npos = F.size(tk) - (n - 1)
-    # guard: sequence(1, 0) is DESCENDING [1, 0], not empty — docs
-    # shorter than n tokens must yield NULL (dropped by posexplode)
-    grams = F.when(
-        npos >= 1,
-        F.transform(
-            F.sequence(F.lit(1), npos),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tk, i, n))),
-        ),
-    )
-    g = df.select(F.col(id_col), F.posexplode(grams).alias("_p0", "_gh")).select(
-        id_col, (F.col("_p0") + 1).alias("pos"), "_gh"
-    )
-    dup = g.groupBy("_gh").agg(F.count(F.lit(1)).alias("_cnt")).filter(
-        F.col("_cnt") >= min_count
-    )
-    d = g.join(dup.select("_gh"), "_gh").select(id_col, "pos")
+    d = _dup_gram_positions(df, id_col, text_col, n, min_count).select(id_col, "pos")
     w = Window.partitionBy(id_col).orderBy("pos")
     isl = d.withColumn("_grp", F.col("pos") - F.row_number().over(w))
     return (
@@ -352,22 +395,7 @@ def passage_dedup(
     Output: df columns + out_col + n_tokens_removed (same shape as
     `excise_spans`).
     """
-    tk = F.split(F.col(text_col), " ")
-    npos = F.size(tk) - (n - 1)
-    grams = F.when(
-        npos >= 1,
-        F.transform(
-            F.sequence(F.lit(1), npos),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tk, i, n))),
-        ),
-    )
-    g = df.select(F.col(id_col), F.posexplode(grams).alias("_p0", "_gh")).select(
-        id_col, (F.col("_p0") + 1).alias("pos"), "_gh"
-    )
-    dup = g.groupBy("_gh").agg(F.count(F.lit(1)).alias("_cnt")).filter(
-        F.col("_cnt") >= min_count
-    )
-    occ = g.join(dup.select("_gh"), "_gh")
+    occ = _dup_gram_positions(df, id_col, text_col, n, min_count)
     first = occ.groupBy("_gh").agg(
         F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p"))).alias("_f")
     )
@@ -385,9 +413,7 @@ def passage_dedup(
         .groupBy(id_col)
         .agg(F.collect_list("pos").alias("_cut"))
     )
-    joined = (
-        df.join(cut, id_col, "left").join(keep, id_col, "left").withColumn("_tk", tk)
-    )
+    joined = df.join(cut, id_col, "left").join(keep, id_col, "left")
 
     def _covered(arr, i):
         # token index i (0-based) covered by an occurrence starting at
@@ -398,25 +424,12 @@ def passage_dedup(
             F.lit(False),
         )
 
-    kept = F.filter(
-        F.col("_tk"),
-        lambda t, i: ~(_covered(F.col("_cut"), i) & ~_covered(F.col("_keep"), i)),
-    )
-    return (
-        joined.withColumn("_kept", kept)
-        .withColumn(
-            out_col,
-            F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
-                F.array_join(F.col("_kept"), " ")
-            ),
-        )
-        .withColumn(
-            "n_tokens_removed",
-            F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
-                F.size("_tk") - F.size("_kept")
-            ),
-        )
-        .drop("_cut", "_keep", "_tk", "_kept")
+    return _excise_tokens(
+        joined,
+        text_col,
+        out_col,
+        lambda i: _covered(F.col("_cut"), i) & ~_covered(F.col("_keep"), i),
+        ("_cut", "_keep"),
     )
 
 
@@ -453,29 +466,15 @@ def excise_spans(
             F.struct(F.col(start_col).alias("s"), F.col(end_col).alias("e"))
         ).alias("_sp")
     )
-    joined = df.join(sp, id_col, "left").withColumn("_tk", F.split(F.col(text_col), " "))
-    kept = F.filter(
-        F.col("_tk"),
-        lambda t, i: ~F.coalesce(
+    return _excise_tokens(
+        df.join(sp, id_col, "left"),
+        text_col,
+        out_col,
+        lambda i: F.coalesce(
             F.exists(F.col("_sp"), lambda s: (i + 1 >= s["s"]) & (i + 1 <= s["e"])),
             F.lit(False),
         ),
-    )
-    return (
-        joined.withColumn("_kept", kept)
-        .withColumn(
-            out_col,
-            F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
-                F.array_join(F.col("_kept"), " ")
-            ),
-        )
-        .withColumn(
-            "n_tokens_removed",
-            F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
-                F.size("_tk") - F.size("_kept")
-            ),
-        )
-        .drop("_sp", "_tk", "_kept")
+        ("_sp",),
     )
 
 

@@ -46,7 +46,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tempel_spark.operators.topk import _cosine_topk
+
 __all__ = ["kmeans", "kmeans_assign", "kmeans_ivf_topk", "KMeansResult"]
+
+# decimals every centroid coordinate and distance is rounded to (the
+# DuckDB oracles round the same way)
+ROUND_DP = 6
 
 
 @dataclass
@@ -104,7 +110,7 @@ def kmeans_assign(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_dp: int = 6,
+    round_dp: int = ROUND_DP,
 ) -> DataFrame:
     """Label every row with its nearest centroid (one GEMM pass).
     Output: (id_col, cluster_id, dist) with dist rounded to
@@ -140,7 +146,6 @@ def _probe_assign(
     id_col: str,
     emb_col: str,
     nprobe: int,
-    round_dp: int,
 ) -> DataFrame:
     """Per row, the ``nprobe`` nearest centroids (rounded-distance
     order, ties to the smallest cluster id) — the embedding column is
@@ -152,7 +157,7 @@ def _probe_assign(
             if len(pdf) == 0:
                 continue
             x = np.stack(pdf[emb_col].to_list()).astype("float64")
-            dist = np.round(_dist_matrix(x, cents), round_dp)
+            dist = np.round(_dist_matrix(x, cents), ROUND_DP)
             # lexsort: primary rounded dist, secondary centroid id —
             # np.argsort(kind="stable") on dist gives exactly that
             order = np.argsort(dist, axis=1, kind="stable")[:, :nprobe]
@@ -178,11 +183,6 @@ def kmeans_ivf_topk(
     centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 1,
-    query_id: str = "query_id",
-    cand_id: str = "cand_id",
-    q_emb: str = "q_emb",
-    c_emb: str = "c_emb",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Approximate top-k with a TRAINED coarse quantizer — the actual
     FAISS IVF shape (train k-means, assign each candidate to its
@@ -197,23 +197,15 @@ def kmeans_ivf_topk(
     shuffles on cluster_id with no replication. AQE handles cell
     skew; recall floors are pinned in tests.
 
-    Output: (query_id, cand_id, score, rank) — cosine, like the
-    other top-k tiers.
+    Input and output follow ``topk``'s contract: queries (query_id,
+    q_emb), candidates (cand_id, c_emb) → (query_id, cand_id, score,
+    rank), scored by the same cosine as the other tiers — with
+    ``nprobe`` = every cell, exactly ``brute_force_topk``'s rows.
     """
-    from tempel_spark.functions.similarity import cosine_sim
-    from pyspark.sql import Window
-
     cents = np.asarray(centroids, dtype="float64")
-    qb = _probe_assign(queries, cents, query_id, q_emb, nprobe, round_dp)
-    cb = _probe_assign(candidates, cents, cand_id, c_emb, 1, round_dp)
-    w = Window.partitionBy(query_id).orderBy(F.col("_score").desc(), F.col(cand_id))
-    return (
-        qb.join(cb, "cluster_id")
-        .withColumn("_score", cosine_sim(q_emb, c_emb))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.col("_score").alias("score"), "rank")
-    )
+    qb = _probe_assign(queries, cents, "query_id", "q_emb", nprobe)
+    cb = _probe_assign(candidates, cents, "cand_id", "c_emb", 1)
+    return _cosine_topk(qb, cb, k, lambda q, c: q.join(c, "cluster_id"))
 
 
 def kmeans(
@@ -222,7 +214,7 @@ def kmeans(
     emb_col: str = "embedding",
     k: int = 8,
     n_iter: int = 2,
-    round_dp: int = 6,
+    round_dp: int = ROUND_DP,
 ) -> KMeansResult:
     """Lloyd's k-means: ``n_iter`` assign→update rounds from the
     deterministic seed (the k smallest-id vectors), then a final

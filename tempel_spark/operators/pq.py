@@ -38,10 +38,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tempel_spark.operators.kmeans import kmeans
+from tempel_spark.operators.kmeans import ROUND_DP, kmeans
+from tempel_spark.operators.topk import _rank_cut
 
 __all__ = ["pq_train", "pq_encode", "pq_adc_topk", "ivfpq_topk", "PQCodebooks"]
 
@@ -61,7 +62,7 @@ def pq_train(
     m: int = 2,
     k: int = 8,
     n_iter: int = 2,
-    round_dp: int = 6,
+    round_dp: int = ROUND_DP,
 ) -> PQCodebooks:
     """Train m per-subspace codebooks with the engine's deterministic
     k-means. The embedding dimension must divide evenly by ``m``."""
@@ -96,7 +97,7 @@ def pq_encode(
     books: PQCodebooks,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_dp: int = 6,
+    round_dp: int = ROUND_DP,
 ) -> DataFrame:
     """(id, codes array<int>): per subspace the nearest codebook entry
     by rounded squared distance, ties to the smallest code id."""
@@ -125,10 +126,6 @@ def pq_adc_topk(
     queries: DataFrame,
     books: PQCodebooks,
     k: int = 5,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    emb_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance top-k, query side DISTRIBUTED (r6):
 
@@ -145,16 +142,17 @@ def pq_adc_topk(
       to the per-query form (same summation length and order, same
       rounding), verified by tests/test_new_operators.py.
 
-    Candidates are scored by m LUT lookups on their codes. Returns
-    query_id, vec_id, adc_dist, rank (ties by candidate id).
+    Candidates (vec_id, codes) are scored by m LUT lookups on their
+    codes against queries (query_id, embedding). Returns query_id,
+    vec_id, adc_dist, rank (ties by candidate id).
     """
     cents = [np.asarray(b, dtype="float64") for b in books.codebooks]
     m, d_sub = books.m, books.d_sub
-    qpdf = queries.select(query_id_col, emb_col).toPandas()
+    qpdf = queries.select("query_id", "embedding").toPandas()
     if not len(qpdf):
         raise ValueError("queries frame is empty")
-    qids_arr = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([list(v) for v in qpdf[emb_col]], dtype="float64")
+    qids_arr = qpdf["query_id"].to_numpy()
+    qmat = np.asarray([list(v) for v in qpdf["embedding"]], dtype="float64")
     bc = codes.sparkSession.sparkContext.broadcast((qids_arr, qmat))
 
     def gen(batches):
@@ -162,7 +160,7 @@ def pq_adc_topk(
         # m × n_q × k LUT tensor, built once per task executor-side
         luts = np.stack(
             [
-                _sub_sq_dists(qv[:, s * d_sub : (s + 1) * d_sub], cents[s], round_dp)
+                _sub_sq_dists(qv[:, s * d_sub : (s + 1) * d_sub], cents[s], ROUND_DP)
                 for s in range(m)
             ]
         )
@@ -170,14 +168,14 @@ def pq_adc_topk(
             if not len(pdf):
                 continue
             c = np.asarray(list(pdf["codes"]), dtype="int64")  # n × m
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             take = min(k, len(ids))
             # Σ_s lut[s, q, code_s] for every (query, candidate) at
             # once; sum over the stacked m axis reproduces the
             # per-query (n, m).sum(axis=1) float order exactly
             dist_all = np.round(
                 np.stack([luts[s][:, c[:, s]] for s in range(m)]).sum(axis=0),
-                round_dp,
+                ROUND_DP,
             )
             for qi in range(len(qids)):
                 dist = dist_all[qi]
@@ -185,22 +183,14 @@ def pq_adc_topk(
                 part = np.lexsort((ids, dist))[:take]
                 yield pd.DataFrame(
                     {
-                        query_id_col: [qids[qi]] * take,
-                        id_col: ids[part],
+                        "query_id": [qids[qi]] * take,
+                        "vec_id": ids[part],
                         "adc_dist": dist[part],
                     }
                 )
 
-    partials = codes.mapInPandas(
-        gen, f"{query_id_col} long, {id_col} long, adc_dist double"
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("adc_dist"), F.asc(id_col)
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    partials = codes.mapInPandas(gen, "query_id long, vec_id long, adc_dist double")
+    return _rank_cut(partials, k, F.asc("adc_dist"), tie="vec_id")
 
 
 def ivfpq_topk(
@@ -212,10 +202,6 @@ def ivfpq_topk(
     k_pq: int = 8,
     n_iter: int = 2,
     k: int = 5,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_dp: int = 6,
 ) -> DataFrame:
     """The full FAISS IVFPQ shape: coarse k-means cells + PRODUCT
     QUANTIZATION OF THE RESIDUALS + per-cell asymmetric distance.
@@ -227,6 +213,8 @@ def ivfpq_topk(
     cells (rounded coarse distance, ties to the smaller cell id) and
     ADC-score only those cells' candidates, each against the LUT of
     ITS cell's query residual. Candidates are touched as codes only.
+    Input: vectors df (vec_id, embedding) and queries (query_id,
+    embedding); output as ``pq_adc_topk``.
 
     Scale: training is n_iter+m bounded passes; the scan reads
     nprobe/n_cells of the codes, one map pass, local top-k per batch,
@@ -236,44 +224,43 @@ def ivfpq_topk(
     # validate + fetch queries FIRST (compact Arrow→NumPy, no Row
     # collect): an empty query frame must cost nothing, not a full
     # coarse + residual training run
-    qpdf = queries.select(query_id_col, emb_col).toPandas()
+    qpdf = queries.select("query_id", "embedding").toPandas()
     if not len(qpdf):
         raise ValueError("queries frame is empty")
-    qids_arr = qpdf[query_id_col].to_numpy()
-    qmat = np.asarray([list(v) for v in qpdf[emb_col]], dtype="float64")
+    qids_arr = qpdf["query_id"].to_numpy()
+    qmat = np.asarray([list(v) for v in qpdf["embedding"]], dtype="float64")
 
-    coarse = kmeans(df, id_col, emb_col, k=n_cells, n_iter=n_iter, round_dp=round_dp)
+    coarse = kmeans(df, "vec_id", "embedding", k=n_cells, n_iter=n_iter)
     cents = np.asarray(coarse.centroids, dtype="float64")
     cent_map = {i: cents[i] for i in range(len(cents))}
 
     # residuals against the ASSIGNED cell's centroid (one map pass;
     # centroids ride the closure)
-    assigned = df.select(id_col, emb_col).join(
-        coarse.assignments.select(id_col, "cluster_id"), id_col
+    assigned = df.select("vec_id", "embedding").join(
+        coarse.assignments.select("vec_id", "cluster_id"), "vec_id"
     )
 
     def res_gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.asarray([list(v) for v in pdf[emb_col]], dtype="float64")
+            x = np.asarray([list(v) for v in pdf["embedding"]], dtype="float64")
             c = np.stack([cent_map[i] for i in pdf["cluster_id"]])
             out = pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "cluster_id": pdf["cluster_id"],
-                    emb_col: list(x - c),
+                    "embedding": list(x - c),
                 }
             )
             yield out
 
     residuals = assigned.mapInPandas(
-        res_gen, f"{id_col} long, cluster_id int, {emb_col} array<double>"
+        res_gen, "vec_id long, cluster_id int, embedding array<double>"
     )
-    books = pq_train(residuals, id_col, emb_col, m=m, k=k_pq, n_iter=n_iter,
-                     round_dp=round_dp)
-    codes = pq_encode(residuals, books, id_col, emb_col, round_dp=round_dp).join(
-        coarse.assignments.select(id_col, "cluster_id"), id_col
+    books = pq_train(residuals, m=m, k=k_pq, n_iter=n_iter)
+    codes = pq_encode(residuals, books).join(
+        coarse.assignments.select("vec_id", "cluster_id"), "vec_id"
     )
 
     sub_cents = [np.asarray(b, dtype="float64") for b in books.codebooks]
@@ -289,7 +276,7 @@ def ivfpq_topk(
         np.sqrt(
             np.clip(((qmat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2), 0.0, None)
         ),
-        round_dp,
+        ROUND_DP,
     )
     cell_idx = np.arange(len(cents))
     probed: list[tuple] = []
@@ -297,9 +284,7 @@ def ivfpq_topk(
         order = np.lexsort((cell_idx, cd_all[qi]))[:nprobe]
         probed.extend((int(qids_arr[qi]), int(cell)) for cell in order)
 
-    probed_df = df.sparkSession.createDataFrame(
-        probed, f"{query_id_col} long, cluster_id int"
-    )
+    probed_df = df.sparkSession.createDataFrame(probed, "query_id long, cluster_id int")
     cand = codes.join(F.broadcast(probed_df), "cluster_id")
     bc = df.sparkSession.sparkContext.broadcast((qids_arr, qmat))
 
@@ -316,7 +301,7 @@ def ivfpq_topk(
                     [
                         _sub_sq_dists(
                             qres[s * d_sub : (s + 1) * d_sub][None, :], sub_cents[s],
-                            round_dp,
+                            ROUND_DP,
                         )[0]
                         for s in range(m)
                     ]
@@ -326,25 +311,20 @@ def ivfpq_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            for (qid, cell), grp in pdf.groupby([query_id_col, "cluster_id"]):
+            for (qid, cell), grp in pdf.groupby(["query_id", "cluster_id"]):
                 lut = lut_for(int(qid), int(cell))
                 c = np.asarray(list(grp["codes"]), dtype="int64")
-                ids = grp[id_col].to_numpy()
-                dist = np.round(lut[np.arange(m), c].sum(axis=1), round_dp)
+                ids = grp["vec_id"].to_numpy()
+                dist = np.round(lut[np.arange(m), c].sum(axis=1), ROUND_DP)
                 take = min(k, len(ids))
                 part = np.lexsort((ids, dist))[:take]
                 yield pd.DataFrame(
                     {
-                        query_id_col: [qid] * take,
-                        id_col: ids[part],
+                        "query_id": [qid] * take,
+                        "vec_id": ids[part],
                         "adc_dist": dist[part],
                     }
                 )
 
-    partials = cand.mapInPandas(
-        adc_gen, f"{query_id_col} long, {id_col} long, adc_dist double"
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return partials.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    partials = cand.mapInPandas(adc_gen, "query_id long, vec_id long, adc_dist double")
+    return _rank_cut(partials, k, F.asc("adc_dist"), tie="vec_id")

@@ -5,7 +5,7 @@ nn_prediction.py:76).
 Three tiers, in preference order at scale:
 
 1. ``brute_force_topk`` — exact: broadcast the (small) query side
-   against the partitioned candidate side, native dot/cosine, window
+   against the partitioned candidate side, native cosine, window
    rank-filter. This IS the reference's IndexFlatIP semantics.
 2. ``ivf_topk`` — approximate: both sides bucketed by a deterministic
    coarse quantizer (sign bits of random-ish hyperplane projections —
@@ -17,14 +17,20 @@ Three tiers, in preference order at scale:
    GEMM against the broadcast query matrix. Use when the candidate
    row count per partition is large enough that BLAS beats codegen
    (wide embeddings, many queries).
+
+One column contract: queries are (query_id, q_emb), candidates
+(cand_id, c_emb) — (query_id, embedding)/(cand_id, embedding) for the
+int8 tier — and every tier, the trained-quantizer and PQ tiers of
+``kmeans.py``/``pq.py`` included, ends in the same ``_rank_cut``
+(row_number per query, ties to the smaller candidate id).
 """
 
 from __future__ import annotations
 
-import math
+from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tempel_spark.functions.similarity import dot_product
@@ -40,39 +46,47 @@ __all__ = [
 ]
 
 
-def brute_force_topk(
+def _rank_cut(
+    df: DataFrame,
+    k: int,
+    order: Column,
+    tie: str = "cand_id",
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The top-k tail every vector top-k operator shares: number the
+    rows of each query_id by ``order``, ties broken by ascending ``tie``
+    (the candidate id), and keep ranks ≤ k in ``rank_col``."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col(tie))
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+
+
+def _cosine_topk(
     queries: DataFrame,
     candidates: DataFrame,
-    k: int = 64,
-    query_id: str = "query_id",
-    cand_id: str = "cand_id",
-    q_emb: str = "q_emb",
-    c_emb: str = "c_emb",
-    metric: str = "cosine",
+    k: int,
+    join: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> DataFrame:
-    """Exact top-k: candidates stay partitioned (the 10^12 side),
-    queries broadcast. Output: (query_id, cand_id, score, rank)."""
-    if metric == "cosine":
-        # norms hoisted to one evaluation PER ROW on each side before
-        # the crossJoin — cosine_sim per pair re-folds sqrt(v·v) for
-        # both sides on every (query, candidate) combination; identical
-        # doubles (same fold over the same values)
-        queries = queries.withColumn("_qn", F.sqrt(dot_product(q_emb, q_emb)))
-        candidates = candidates.withColumn("_cn", F.sqrt(dot_product(c_emb, c_emb)))
-        denom = F.col("_qn") * F.col("_cn")
-        sim = (
-            dot_product(q_emb, c_emb) / F.when(denom > 0, denom).otherwise(F.lit(1.0))
-        ).cast("double")
-    else:
-        sim = dot_product(q_emb, c_emb)
-    w = Window.partitionBy(query_id).orderBy(F.col("_score").desc(), F.col(cand_id))
-    return (
-        candidates.crossJoin(F.broadcast(queries))
-        .withColumn("_score", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.col("_score").alias("score"), "rank")
+    """Cosine top-k of ``join(queries, candidates)`` →
+    (query_id, cand_id, score, rank). Each side's norm is evaluated
+    ONCE PER ROW before the join: cosine_sim per pair re-folds
+    sqrt(v·v) for both sides on every (query, candidate) combination
+    for identical doubles (same fold over the same values)."""
+    q = queries.withColumn("_qn", F.sqrt(dot_product("q_emb", "q_emb")))
+    c = candidates.withColumn("_cn", F.sqrt(dot_product("c_emb", "c_emb")))
+    denom = F.col("_qn") * F.col("_cn")
+    sim = (
+        dot_product("q_emb", "c_emb") / F.when(denom > 0, denom).otherwise(F.lit(1.0))
+    ).cast("double")
+    return _rank_cut(join(q, c).withColumn("_score", sim), k, F.col("_score").desc()).select(
+        "query_id", "cand_id", F.col("_score").alias("score"), "rank"
     )
+
+
+def brute_force_topk(queries: DataFrame, candidates: DataFrame, k: int = 64) -> DataFrame:
+    """Exact cosine top-k of queries (query_id, q_emb) over candidates
+    (cand_id, c_emb): candidates stay partitioned (the 10^12 side),
+    queries broadcast. Output: (query_id, cand_id, score, rank)."""
+    return _cosine_topk(queries, candidates, k, lambda q, c: c.crossJoin(F.broadcast(q)))
 
 
 def _hyperplane_proj(emb, b: int, dim: int | None = None):
@@ -179,10 +193,6 @@ def ivf_topk(
     candidates: DataFrame,
     k: int = 64,
     n_bits: int = 4,
-    query_id: str = "query_id",
-    cand_id: str = "cand_id",
-    q_emb: str = "q_emb",
-    c_emb: str = "c_emb",
     nprobe: int = 1,
     probe: str = "hamming1",
     dim: int | None = None,
@@ -212,13 +222,13 @@ def ivf_topk(
     if dim is None:
         # one tiny job on the (small) query side turns every per-row
         # hyperplane weight md5 into a plan-time literal
-        row = queries.select(q_emb).first()
+        row = queries.select("q_emb").first()
         if row is not None and row[0] is not None:
             dim = len(row[0])
-    base = hyperplane_bucket(q_emb, n_bits, dim=dim)
+    base = hyperplane_bucket("q_emb", n_bits, dim=dim)
     if nprobe > 1 and probe == "adaptive":
         masks = _adaptive_probe_masks(
-            hyperplane_projections(q_emb, n_bits, dim=dim), n_bits, nprobe
+            hyperplane_projections("q_emb", n_bits, dim=dim), n_bits, nprobe
         )
         probes = F.concat(F.array(base), F.transform(masks, lambda m: base.bitwiseXOR(m)))
         qb = queries.withColumn("_bucket", F.explode(probes))
@@ -229,33 +239,17 @@ def ivf_topk(
         qb = queries.withColumn("_bucket", F.explode(probes))
     else:
         qb = queries.withColumn("_bucket", base)
-    cb = candidates.withColumn("_bucket", hyperplane_bucket(c_emb, n_bits, dim=dim))
-    # norms once per row on each side (see brute_force_topk) — the
-    # bucket join then scores with one fold per pair, same doubles
-    qb = qb.withColumn("_qn", F.sqrt(dot_product(q_emb, q_emb)))
-    cb = cb.withColumn("_cn", F.sqrt(dot_product(c_emb, c_emb)))
-    denom = F.col("_qn") * F.col("_cn")
-    sim = (
-        dot_product(q_emb, c_emb) / F.when(denom > 0, denom).otherwise(F.lit(1.0))
-    ).cast("double")
-    w = Window.partitionBy(query_id).orderBy(F.col("_score").desc(), F.col(cand_id))
-    return (
-        qb.join(cb, "_bucket")
-        .withColumn("_score", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.col("_score").alias("score"), "rank")
-    )
+    cb = candidates.withColumn("_bucket", hyperplane_bucket("c_emb", n_bits, dim=dim))
+    return _cosine_topk(qb, cb, k, lambda q, c: q.join(c, "_bucket"))
 
 
 def matmul_topk_pandas(
     queries_pdf: pd.DataFrame,
     candidates: DataFrame,
     k: int = 64,
-    cand_id: str = "cand_id",
-    c_emb: str = "c_emb",
 ) -> DataFrame:
-    """Exact top-k via per-partition numpy GEMM (Arrow batches).
+    """Exact top-k of candidates (cand_id, c_emb) via per-partition
+    numpy GEMM (Arrow batches).
 
     queries_pdf: small pandas frame (query_id, embedding list) —
     broadcast via closure, one BLAS matmul per Arrow batch. The
@@ -273,7 +267,7 @@ def matmul_topk_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cmat = np.stack(pdf[c_emb].to_list()).astype("float64")
+            cmat = np.stack(pdf["c_emb"].to_list()).astype("float64")
             cnorm = np.linalg.norm(cmat, axis=1)
             cnorm[cnorm == 0] = 1.0
             sims = (qmat @ cmat.T) / qnorm[:, None] / cnorm[None, :]
@@ -282,18 +276,18 @@ def matmul_topk_pandas(
             rows = []
             for qi in range(sims.shape[0]):
                 for ci in idx[qi]:
-                    rows.append((qids[qi], pdf[cand_id].iloc[ci], float(sims[qi, ci])))
+                    rows.append((qids[qi], pdf["cand_id"].iloc[ci], float(sims[qi, ci])))
             yield pd.DataFrame(rows, columns=["query_id", "cand_id", "score"])
 
     partial = candidates.mapInPandas(gen, schema="query_id long, cand_id long, score double")
     # per-partition top-k → global top-k (tree reduction, no full sort)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("cand_id"))
-    return partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_cut(partial, k, F.col("score").desc())
 
 
-def recall_at_k(approx: DataFrame, exact: DataFrame, query_id: str = "query_id", cand_id: str = "cand_id") -> float:
-    """Fraction of exact top-k pairs the approximate index returned."""
-    hit = approx.join(exact, [query_id, cand_id], "inner").count()
+def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:
+    """Fraction of exact top-k (query_id, cand_id) pairs the
+    approximate index returned."""
+    hit = approx.join(exact, ["query_id", "cand_id"], "inner").count()
     total = exact.count()
     return hit / total if total else 1.0
 
@@ -329,39 +323,35 @@ def quantized_dot_topk(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 3,
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    cand_id: str = "cand_id",
 ) -> DataFrame:
-    """Brute-force top-k by int8-quantized dot product. Output
+    """Brute-force top-k of queries (query_id, embedding) over
+    candidates (cand_id, embedding) by int8-quantized dot product. Output
     (query_id, cand_id, qdot, approx_dot, rn): qdot is the exact
     integer quantized dot (the ranking key — deterministic, no float
     tiebreak ambiguity), approx_dot = qdot * scale_q * scale_c the
     dequantized estimate. Queries broadcast; candidates stay
     partitioned (the IndexFlatIP shape of brute_force_topk, 4x
     cheaper per byte)."""
-    qz = quantize_embeddings(queries, vec_col).select(
-        F.col(query_id), F.col("qvec").alias("_qa"), F.col("qscale").alias("_sa")
+    qz = quantize_embeddings(queries).select(
+        "query_id", F.col("qvec").alias("_qa"), F.col("qscale").alias("_sa")
     )
-    cz = quantize_embeddings(candidates, vec_col).select(
-        F.col(cand_id), F.col("qvec").alias("_qb"), F.col("qscale").alias("_sb")
+    cz = quantize_embeddings(candidates).select(
+        "cand_id", F.col("qvec").alias("_qb"), F.col("qscale").alias("_sb")
     )
     qdot = F.aggregate(
         F.zip_with("_qa", "_qb", lambda a, b: (a * b).cast("long")),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("qdot").desc(), F.col(cand_id))
-    return (
-        cz.crossJoin(F.broadcast(qz))
-        .withColumn("qdot", qdot)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            query_id,
-            cand_id,
-            "qdot",
-            F.round(F.col("qdot") * F.col("_sa") * F.col("_sb"), 6).alias("approx_dot"),
-            "rn",
-        )
+    return _rank_cut(
+        cz.crossJoin(F.broadcast(qz)).withColumn("qdot", qdot),
+        k,
+        F.col("qdot").desc(),
+        rank_col="rn",
+    ).select(
+        "query_id",
+        "cand_id",
+        "qdot",
+        F.round(F.col("qdot") * F.col("_sa") * F.col("_sb"), 6).alias("approx_dot"),
+        "rn",
     )

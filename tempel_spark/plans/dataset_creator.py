@@ -259,6 +259,57 @@ def keep_fully_covered(
     return assigned.join(F.broadcast(cover), "entity_id")
 
 
+def _capped_counts(assigned: DataFrame, max_mentions_per_entity: int) -> DataFrame:
+    """(entity_id, snapshot_ts, subset, _n): the link total of each
+    (entity, cut, subset), capped at ``max_mentions_per_entity``
+    (0 = uncapped)."""
+    n0 = assigned.groupBy("entity_id", "snapshot_ts", "subset").agg(
+        F.sum("nr_links").alias("_n")
+    )
+    if max_mentions_per_entity > 0:
+        n0 = n0.withColumn("_n", F.least(F.col("_n"), F.lit(max_mentions_per_entity)))
+    return n0
+
+
+def _unit_race(d: DataFrame, seed: int, tag: str | None = None) -> DataFrame:
+    """The deterministic weighted unit race both V3 balancers end in.
+    Every row of ``d`` (entity_id, snapshot_ts, subset, _n, _diff,
+    _reduce) offers ``_diff`` removable units; per (subset, cut) the
+    ``_reduce`` units with the smallest md5 race key
+    "[tag:]entity:cut:subset:unit" (ties: entity id, unit) are removed.
+    Output: (entity_id, snapshot_ts, subset, quota = _n − removed)."""
+    # unit multiset: one row per removable unit
+    units = d.filter(F.col("_diff") > 0).select(
+        "entity_id",
+        "snapshot_ts",
+        "subset",
+        "_reduce",
+        F.posexplode(F.sequence(F.lit(1), F.col("_diff"))).alias("_pos", "_unit"),
+    )
+    key = [
+        F.col("entity_id").cast("string"),
+        F.col("snapshot_ts").cast("string"),
+        "subset",
+        F.col("_unit").cast("string"),
+    ]
+    race = md5_uniform(F.concat_ws(":", *([F.lit(tag)] if tag else []), *key), seed=seed)
+    w_units = Window.partitionBy("subset", "snapshot_ts").orderBy(
+        race.asc(), F.col("entity_id").cast("string").asc(), F.col("_unit").asc()
+    )
+    dropped = (
+        units.withColumn("_urn", F.row_number().over(w_units))
+        .filter(F.col("_urn") <= F.col("_reduce"))
+        .groupBy("entity_id", "snapshot_ts", "subset")
+        .agg(F.count(F.lit(1)).alias("_removed"))
+    )
+    return d.join(dropped, ["entity_id", "snapshot_ts", "subset"], "left").select(
+        "entity_id",
+        "snapshot_ts",
+        "subset",
+        (F.col("_n") - F.coalesce("_removed", F.lit(0))).cast("long").alias("quota"),
+    )
+
+
 def balanced_quotas(
     assigned: DataFrame,
     max_mentions_per_entity: int = 500,
@@ -288,11 +339,7 @@ def balanced_quotas(
 
     Output: (entity_id, snapshot_ts, subset, quota).
     """
-    n0 = assigned.groupBy("entity_id", "snapshot_ts", "subset").agg(
-        F.sum("nr_links").alias("_n")
-    )
-    if max_mentions_per_entity > 0:
-        n0 = n0.withColumn("_n", F.least(F.col("_n"), F.lit(max_mentions_per_entity)))
+    n0 = _capped_counts(assigned, max_mentions_per_entity)
 
     w_es = Window.partitionBy("entity_id", "subset")
     w_sc = Window.partitionBy("subset", "snapshot_ts")
@@ -314,37 +361,7 @@ def balanced_quotas(
         "_reduce", F.col("_total") - F.col("_target")
     ).localCheckpoint(eager=False)  # consumed by units AND the final join
 
-    # unit multiset: one row per removable unit, deterministic race
-    units = d.filter(F.col("_diff") > 0).select(
-        "entity_id",
-        "snapshot_ts",
-        "subset",
-        "_reduce",
-        F.posexplode(F.sequence(F.lit(1), F.col("_diff"))).alias("_pos", "_unit"),
-    )
-    race = md5_uniform(
-        F.concat_ws(":", F.col("entity_id").cast("string"), F.col("snapshot_ts").cast("string"),
-                    "subset", F.col("_unit").cast("string")),
-        seed=seed,
-    )
-    w_units = Window.partitionBy("subset", "snapshot_ts").orderBy(
-        race.asc(), F.col("entity_id").cast("string").asc(), F.col("_unit").asc()
-    )
-    dropped = (
-        units.withColumn("_urn", F.row_number().over(w_units))
-        .filter(F.col("_urn") <= F.col("_reduce"))
-        .groupBy("entity_id", "snapshot_ts", "subset")
-        .agg(F.count(F.lit(1)).alias("_removed"))
-    )
-    return (
-        d.join(dropped, ["entity_id", "snapshot_ts", "subset"], "left")
-        .select(
-            "entity_id",
-            "snapshot_ts",
-            "subset",
-            (F.col("_n") - F.coalesce("_removed", F.lit(0))).cast("long").alias("quota"),
-        )
-    )
+    return _unit_race(d, seed)
 
 
 def allocate_mentions(assigned: DataFrame, quotas: DataFrame) -> DataFrame:
@@ -440,11 +457,7 @@ def balanced_quotas_positional(
 
     Output: (entity_id, snapshot_ts, subset, quota ≥ 1).
     """
-    n0 = assigned.groupBy("entity_id", "snapshot_ts", "subset").agg(
-        F.sum("nr_links").alias("_n")
-    )
-    if max_mentions_per_entity > 0:
-        n0 = n0.withColumn("_n", F.least(F.col("_n"), F.lit(max_mentions_per_entity)))
+    n0 = _capped_counts(assigned, max_mentions_per_entity)
 
     w_rank = Window.partitionBy("subset", "snapshot_ts").orderBy(
         F.col("_n").desc(), F.col("entity_id").cast("string").asc()
@@ -488,34 +501,7 @@ def balanced_quotas_positional(
         .withColumn("_reduce", F.col("_total") - F.col("_target"))
         .localCheckpoint(eager=False)  # consumed by units AND the final join
     )
-    units = d.filter(F.col("_diff") > 0).select(
-        "entity_id", "snapshot_ts", "subset", "_reduce",
-        F.posexplode(F.sequence(F.lit(1), F.col("_diff"))).alias("_pos", "_unit"),
-    )
-    race = md5_uniform(
-        F.concat_ws(
-            ":", F.lit("new"), F.col("entity_id").cast("string"),
-            F.col("snapshot_ts").cast("string"), "subset", F.col("_unit").cast("string"),
-        ),
-        seed=seed,
-    )
-    w_units = Window.partitionBy("subset", "snapshot_ts").orderBy(
-        race.asc(), F.col("entity_id").cast("string").asc(), F.col("_unit").asc()
-    )
-    dropped = (
-        units.withColumn("_urn", F.row_number().over(w_units))
-        .filter(F.col("_urn") <= F.col("_reduce"))
-        .groupBy("entity_id", "snapshot_ts", "subset")
-        .agg(F.count(F.lit(1)).alias("_removed"))
-    )
-    return (
-        d.join(dropped, ["entity_id", "snapshot_ts", "subset"], "left")
-        .select(
-            "entity_id", "snapshot_ts", "subset",
-            (F.col("_n") - F.coalesce("_removed", F.lit(0))).cast("long").alias("quota"),
-        )
-        .filter(F.col("quota") > 0)
-    )
+    return _unit_race(d, seed, tag="new").filter(F.col("quota") > 0)
 
 
 def create_new_entities_dataset(

@@ -64,6 +64,8 @@ from tempel_spark.sources.catalog import Catalog
 __all__ = [
     "run_pipeline",
     "extract_mention_table",
+    "surface_vocab",
+    "norm_vocab",
     "build_block_keys",
     "bipartite_first_token_pairs",
 ]
@@ -85,6 +87,24 @@ def extract_mention_table(transcripts: DataFrame, snapshots: list[str] | None = 
         "mention_id",
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"), F.col("span_start").cast("string")),
     ).withColumn("surface", F.col("mention_text"))
+
+
+def surface_vocab(mentions: DataFrame) -> DataFrame:
+    """Mentions → (snapshot_ts, surface, n_mentions, norm): the
+    distinct surfaces per cut, their mention count and normalized key
+    — `run_pipeline`'s `surfaces` stage."""
+    return (
+        mentions.groupBy("snapshot_ts", "surface")
+        .agg(F.count(F.lit(1)).alias("n_mentions"))
+        .withColumn("norm", norm_key("surface"))
+    )
+
+
+def norm_vocab(surfaces: DataFrame) -> DataFrame:
+    """`surface_vocab` rows → (snapshot_ts, norm, n_mentions): the
+    distinct norms per cut, mention counts summed — `run_pipeline`'s
+    `norms` stage."""
+    return surfaces.groupBy("snapshot_ts", "norm").agg(F.sum("n_mentions").alias("n_mentions"))
 
 
 def build_block_keys(norms: DataFrame) -> DataFrame:
@@ -260,13 +280,7 @@ def run_pipeline(
     # n_mentions = the alias-table mention frequency (s02's
     # count_mentions) — carried so ambiguity resolution can rank by
     # prior like the reference (prior_rank = 1 wins, s02:434-440)
-    surfaces = ck(
-        "surfaces",
-        lambda: mentions.groupBy("snapshot_ts", "surface")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .withColumn("norm", norm_key("surface")),
-        cache=True,
-    )
+    surfaces = ck("surfaces", lambda: surface_vocab(mentions), cache=True)
 
     # ---- second pivot: NORM vocabulary -------------------------------
     # same-norm surfaces ("Granite Ember"/"granite ember"/
@@ -279,13 +293,7 @@ def run_pipeline(
     # BEFORE stats, s02:253-267). Surfaces map back to norm clusters
     # afterwards, relabeled to min(surface) so component ids stay
     # actual surfaces.
-    norms = ck(
-        "norms",
-        lambda: surfaces.groupBy("snapshot_ts", "norm").agg(
-            F.sum("n_mentions").alias("n_mentions")
-        ),
-        cache=True,
-    )
+    norms = ck("norms", lambda: norm_vocab(surfaces), cache=True)
 
     blocks = ck("blocks", lambda: build_block_keys(norms), cache=True)
 

@@ -21,6 +21,8 @@ from tempel_spark.functions.hashing import fingerprint64
 from tempel_spark.functions.similarity import cosine_sim, dot_product, levenshtein_ratio, token_jaccard
 from tempel_spark.functions.text import normalize_mention, word_count
 from tempel_spark.operators.blocking import bind_once, minhash_signature
+from tempel_spark.operators.dedup import exact_dedup
+from tempel_spark.operators.topk import brute_force_topk
 from tempel_spark.plans.testdata_queries import register, spread, t
 
 # SQL fragment: normalize_mention equivalent (lower, _→space, collapse, trim)
@@ -181,13 +183,10 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on normalized content, keep min id —
-    map-side-combinable, no row ever leaves the executor."""
-    d = t(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5(normalize_mention("text")).alias("content_hash"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    """Exact dedup (``dedup.exact_dedup``): hash-groupBy on normalized
+    content, keep min id — map-side-combinable, no row ever leaves the
+    executor."""
+    return exact_dedup(t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -372,34 +371,18 @@ def q_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J11: brute-force cosine top-k join (the FAISS IndexFlatIP role,
-    faiss_indexer.py:40) — broadcast queries × candidates, rank-filter.
-    At scale the candidate side stays partitioned; only the query side
-    broadcasts."""
+    faiss_indexer.py:40) — ``topk.brute_force_topk``: broadcast
+    queries × candidates, rank-filter. At scale the candidate side
+    stays partitioned; only the query side broadcasts."""
     e = t(spark, sf_dir, "embeddings")
-    # norms computed ONCE PER ROW before the crossJoin (guide §2.3
-    # "project before the exchange"): cosine_sim per pair re-folds
-    # sqrt(v·v) for both sides on every candidate×query combination —
-    # 2/3 of the per-pair array work for the identical doubles (same
-    # sequential fold over the same values).
     q = e.filter(F.col("vec_id") <= 7).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.sqrt(dot_product("embedding", "embedding")).alias("_qn"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     c = spread(e.filter(F.col("vec_id") > 7)).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        F.sqrt(dot_product("embedding", "embedding")).alias("_cn"),
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb")
     )
-    denom = F.col("_qn") * F.col("_cn")
-    sim = (dot_product("q_emb", "c_emb") / F.when(denom > 0, denom).otherwise(F.lit(1.0))).cast("double")
-    w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(), F.col("cand_id"))
-    return (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("_cos", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "cand_id", F.round("_cos", 6).alias("cosine"), "rn")
+    return brute_force_topk(q, c, k=3).select(
+        "query_id", "cand_id", F.round("score", 6).alias("cosine"), F.col("rank").alias("rn")
     )
 
 

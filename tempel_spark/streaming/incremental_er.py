@@ -75,17 +75,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tempel_spark.operators.blocking import (
-    cap_block_size,
-    norm_key,
-    sorted_neighborhood_pairs,
-)
+from tempel_spark.operators.blocking import cap_block_size, sorted_neighborhood_pairs
 from tempel_spark.operators.scoring import abbreviation_edges, score_pairs, with_embeddings
 from tempel_spark.plans.pipeline import (
     CC_PARTITIONS,
     bipartite_first_token_pairs,
     build_block_keys,
     extract_mention_table,
+    norm_vocab,
+    surface_vocab,
 )
 from tempel_spark.sources.catalog import Catalog
 from tempel_spark.streaming._replay import batch_content_fp, check_replay, make_marker
@@ -111,14 +109,7 @@ def _vocab_keys(catalog: Catalog) -> DataFrame:
 def _batch_norms(transcripts: DataFrame, snapshots: list[str] | None) -> DataFrame:
     """Micro-batch → (snapshot_ts, norm, n_mentions), the same two
     pivots (surface, then norm) as the batch pipeline."""
-    mentions = extract_mention_table(transcripts, snapshots)
-    return (
-        mentions.groupBy("snapshot_ts", "surface")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .withColumn("norm", norm_key("surface"))
-        .groupBy("snapshot_ts", "norm")
-        .agg(F.sum("n_mentions").alias("n_mentions"))
-    )
+    return norm_vocab(surface_vocab(extract_mention_table(transcripts, snapshots)))
 
 
 def _new_pairs(

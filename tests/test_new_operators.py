@@ -1086,6 +1086,40 @@ def test_kmeans_ivf_recall_trained_quantizer(spark):
     assert sweep[1] <= sweep[2] <= sweep[4], sweep
 
 
+def test_kmeans_ivf_all_cells_equals_brute_force(spark):
+    """Probing every trained cell makes kmeans_ivf_topk exact: each
+    candidate sits in one cell and each query visits all of them, so
+    it must return brute_force_topk's rows — same (query_id, cand_id,
+    rank) and scores equal bit for bit, because both tiers score with
+    the one hoisted-norm cosine of topk._cosine_topk."""
+    import random
+
+    from tempel_spark.operators.kmeans import kmeans, kmeans_ivf_topk
+    from tempel_spark.operators.topk import brute_force_topk
+
+    rnd = random.Random(5)
+    dim, n_cells = 16, 6
+    cdf = spark.createDataFrame(
+        [(i, [rnd.gauss(0, 1) for _ in range(dim)]) for i in range(300)],
+        "cand_id long, c_emb array<double>",
+    )
+    qdf = spark.createDataFrame(
+        [(i, [rnd.gauss(0, 1) for _ in range(dim)]) for i in range(12)],
+        "query_id long, q_emb array<double>",
+    )
+    fit = kmeans(cdf, id_col="cand_id", emb_col="c_emb", k=n_cells, n_iter=2)
+    cols = ["query_id", "cand_id", "score", "rank"]
+    exact = sorted(tuple(r) for r in brute_force_topk(qdf, cdf, k=20).select(cols).collect())
+    ivf = sorted(
+        tuple(r)
+        for r in kmeans_ivf_topk(qdf, cdf, fit.centroids, k=20, nprobe=n_cells)
+        .select(cols)
+        .collect()
+    )
+    assert len(exact) == 12 * 20
+    assert ivf == exact
+
+
 def test_bigram_logprob_hand_computed(spark):
     """Add-0.5-smoothed corpus-bigram LM on a 3-doc corpus, checked
     against hand arithmetic. Corpus bigrams: d1 'a b a b' → (a,b)×2,
