@@ -52,17 +52,17 @@ MENTION_SCHEMA = (
 )
 
 
-def extract_mentions(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Every `[[target|mention]]` (or `[[target]]`) anchor of
-    ``text_col`` → one ``MENTION_SCHEMA`` row, span offsets 1-based
-    inclusive in code points. Anchors with an empty or namespaced
-    target are skipped.
+def extract_mentions(df: DataFrame) -> DataFrame:
+    """Every `[[target|mention]]` (or `[[target]]`) anchor of ``text``
+    → one ``MENTION_SCHEMA`` row, span offsets 1-based inclusive in
+    code points. Anchors with an empty or namespaced target are
+    skipped.
 
-    Input needs columns conv_id, turn_idx, snapshot_ts, ``text_col``.
+    Input needs columns conv_id, turn_idx, snapshot_ts, text.
     """
     keys = ["conv_id", "turn_idx", "snapshot_ts"]
     # a turn without "[[" can't yield a mention
-    turns = df.select(*keys, F.col(text_col).alias("text")).filter(F.col("text").contains("[["))
+    turns = df.select(*keys, "text").filter(F.col("text").contains("[["))
     arrays = turns.select(
         *keys,
         F.regexp_extract_all("text", F.lit(ANCHOR_RE), 1).alias("inner"),

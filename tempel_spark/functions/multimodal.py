@@ -157,13 +157,13 @@ def decode_header(payload: bytes) -> dict:
     return _decode_unknown_stub(p)
 
 
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """mapInPandas pass that decodes payload headers into the typed
+def attach_media_metadata(df: DataFrame) -> DataFrame:
+    """mapInPandas pass that decodes ``payload`` headers into the typed
     meta struct — Arrow batches in, one extra struct column out."""
 
     def gen(batches):
         for pdf in batches:
-            metas = [decode_header(p) for p in pdf[payload_col]]
+            metas = [decode_header(p) for p in pdf["payload"]]
             out = pdf.copy()
             out["meta"] = [
                 {
@@ -184,8 +184,9 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     )
 
 
-def image_features(df: DataFrame, payload_col: str = "payload", n_dims: int = 8) -> DataFrame:
-    """Deterministic fake feature-extraction (md5-derived floats) with
+def image_features(df: DataFrame) -> DataFrame:
+    """Deterministic fake feature-extraction (8 md5-derived floats of
+    ``payload``) with
     the REAL signature a model UDF has: iterator-of-batches in,
     array<float> feature column out, per-executor state would hold the
     model (reference encode stage shape, s05_wikipedia_encode.py)."""
@@ -193,9 +194,9 @@ def image_features(df: DataFrame, payload_col: str = "payload", n_dims: int = 8)
     def gen(batches):
         for pdf in batches:
             feats = []
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 h = hashlib.md5(p or b"").digest()
-                feats.append([b / 255.0 for b in h[:n_dims]])
+                feats.append([b / 255.0 for b in h[:8]])
             out = pdf[["media_id"]].copy()
             out["features"] = feats
             yield out

@@ -30,13 +30,13 @@ def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:
     return (F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b), F.lit(1))).cast("double")
 
 
-def token_jaccard(a: Column | str, b: Column | str, sep: str = " ") -> Column:
-    """Distinct-token Jaccard similarity
+def token_jaccard(a: Column | str, b: Column | str) -> Column:
+    """Distinct-token Jaccard similarity of single-space tokens
     (reference src/stats/s07_analyze_similarity_of_predicted_candidates.py:165-228)."""
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    ta = F.array_distinct(F.split(a, sep))
-    tb = F.array_distinct(F.split(b, sep))
+    ta = F.array_distinct(F.split(a, " "))
+    tb = F.array_distinct(F.split(b, " "))
     inter = F.size(F.array_intersect(ta, tb))
     union = F.size(F.array_union(ta, tb))
     return (inter / F.greatest(union, F.lit(1))).cast("double")

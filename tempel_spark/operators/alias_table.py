@@ -28,11 +28,9 @@ __all__ = ["build_alias_table"]
 def build_alias_table(
     links: DataFrame,
     entities: DataFrame | None = None,
-    mention_col: str = "mention_text",
-    entity_col: str = "target_id",
-    snapshot_col: str = "snapshot_ts",
 ) -> DataFrame:
-    """links: one row per extracted anchor (mention, entity, snapshot).
+    """links: one row per extracted anchor (mention_text, target_id,
+    snapshot_ts).
     entities: optional dimension (entity_id, canonical_name) for the
     edit-distance / overlap features (broadcast — it's the small side,
     exactly the dict the reference copies into each worker process,
@@ -42,9 +40,9 @@ def build_alias_table(
     (s02:420-532 / FIXTURES.md `alias_stats`).
     """
     base = links.select(
-        normalize_mention(mention_col).alias("mention_norm"),
-        F.col(entity_col).alias("entity_id"),
-        F.col(snapshot_col).alias("snapshot_ts"),
+        normalize_mention("mention_text").alias("mention_norm"),
+        F.col("target_id").alias("entity_id"),
+        "snapshot_ts",
     ).filter(F.col("mention_norm") != "")
 
     # A1: nr_links per (mention, entity, snapshot)  [the only groupBy

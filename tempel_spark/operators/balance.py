@@ -21,19 +21,21 @@ __all__ = [
     "shuffle_rank",
 ]
 
+SEED = 42  # hash seed of the weighted race and of the group shuffle
+
 
 def round_robin_assign(
     df: DataFrame,
     group_col: str,
     order_cols: list[str],
     n_buckets: int,
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """O6: distribute each group's rows 0,1,2,…,0,1,2 across buckets
+    (column ``bucket``)
     (reference round-robin quota allocation, s03_utils:160-169) —
     window arithmetic, parallel across groups."""
     w = Window.partitionBy(group_col).orderBy(*order_cols)
-    return df.withColumn(bucket_col, F.pmod(F.row_number().over(w) - 1, F.lit(n_buckets)))
+    return df.withColumn("bucket", F.pmod(F.row_number().over(w) - 1, F.lit(n_buckets)))
 
 
 def capped_round_robin_alloc(
@@ -127,21 +129,20 @@ def weighted_reduce_to_quota(
     weight_col: str,
     quota: int,
     id_col: str,
-    seed: int = 42,
 ) -> DataFrame:
     """R3: per group, keep `quota` rows sampled ∝ weight — the
     reference's weighted reduction multiset sampler (s03:544-571)
     re-expressed with exponential-race weighted sampling
     (Efraimidis-Spirakis): key = u^(1/w) with u = hash-uniform;
     top-quota keys per group win. Deterministic, one window."""
-    u = hash_uniform(id_col, seed=seed)
+    u = hash_uniform(id_col, seed=SEED)
     # avoid log(0): clamp u into (0,1)
     race = F.pow(F.greatest(u, F.lit(1e-12)), 1.0 / F.greatest(F.col(weight_col), F.lit(1e-12)))
     w = Window.partitionBy(group_col).orderBy(F.desc(race), F.col(id_col))
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= quota).drop("_rn")
 
 
-def _shuffle_key(group_col: str, seed: int):
+def _shuffle_key(group_col: str):
     """THE deterministic shuffle sort key — one definition shared by
     `shuffle_groups` (row reordering) and `shuffle_rank` (materialized
     permutation), so the two can never disagree. Engine-portable md5
@@ -149,19 +150,19 @@ def _shuffle_key(group_col: str, seed: int):
     'u{seed}:' prefix convention): the oracle computes the identical
     bigint."""
     return fingerprint64(
-        F.concat(F.lit(f"u{seed}:"), F.col(group_col).cast("string"))
+        F.concat(F.lit(f"u{SEED}:"), F.col(group_col).cast("string"))
     )
 
 
-def shuffle_groups(df: DataFrame, group_col: str, seed: int = 42) -> DataFrame:
+def shuffle_groups(df: DataFrame, group_col: str) -> DataFrame:
     """R2: randomize group processing order deterministically —
     a hash sort key per group (reference random.shuffle of per-entity
     frames, s03:301-304). Ordering = `_shuffle_key` (ties by group),
     exactly the permutation `shuffle_rank` materializes."""
-    return df.orderBy(_shuffle_key(group_col, seed).asc(), F.col(group_col).asc())
+    return df.orderBy(_shuffle_key(group_col).asc(), F.col(group_col).asc())
 
 
-def shuffle_rank(df: DataFrame, group_col: str, seed: int = 42) -> DataFrame:
+def shuffle_rank(df: DataFrame, group_col: str) -> DataFrame:
     """The R2 permutation MATERIALIZED: one row per distinct group
     with its position in `shuffle_groups`' order. Where the reordered
     ROWS are invisible to an order-insensitive comparison, this
@@ -169,5 +170,5 @@ def shuffle_rank(df: DataFrame, group_col: str, seed: int = 42) -> DataFrame:
     oracle-checkable; groups-cardinality output only, so the window is
     over groups, never rows."""
     g = df.select(group_col).distinct()
-    w = Window.orderBy(_shuffle_key(group_col, seed).asc(), F.col(group_col).asc())
+    w = Window.orderBy(_shuffle_key(group_col).asc(), F.col(group_col).asc())
     return g.select(group_col, F.row_number().over(w).alias("shuffle_rank"))

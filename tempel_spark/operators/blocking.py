@@ -94,9 +94,9 @@ def bind_once(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
-def char_shingles(col: Column | str, k: int = 3, normalize: bool = True) -> Column:
-    """array<string> of k-char shingles, fully native:
-    transform(sequence(1, len-k+1), i -> substr(text, i, k)).
+def char_shingles(col: Column | str, normalize: bool = True) -> Column:
+    """array<string> of 3-char shingles, fully native:
+    transform(sequence(1, len-2), i -> substr(text, i, 3)).
 
     The (possibly normalized) input string is bound ONCE per row via
     `bind_once` — without it the input expression lands INSIDE the
@@ -107,16 +107,17 @@ def char_shingles(col: Column | str, k: int = 3, normalize: bool = True) -> Colu
     c = normalize_mention(col) if normalize else (F.col(col) if isinstance(col, str) else col)
 
     def _shingle(x: Column) -> Column:
-        n = F.greatest(F.length(x) - (k - 1), F.lit(1))
-        return F.transform(F.sequence(F.lit(1), n), lambda i: x.substr(i, F.lit(k)))
+        n = F.greatest(F.length(x) - 2, F.lit(1))
+        return F.transform(F.sequence(F.lit(1), n), lambda i: x.substr(i, F.lit(3)))
 
     return bind_once(c, _shingle)
 
 
-def minhash_signature(col: Column | str, n_hashes: int = 6, k: int = 3, normalize: bool = True) -> Column:
+def minhash_signature(col: Column | str, n_hashes: int = 6, normalize: bool = True) -> Column:
     """array<string> of length n_hashes: per seed, the lexicographic
-    min md5 over the shingle set (classic MinHash with md5-derived
-    permutations; J12's candidate-generation role in SURVEY.md).
+    min md5 over the char-3-gram shingle set (classic MinHash with
+    md5-derived permutations; J12's candidate-generation role in
+    SURVEY.md).
 
     The shingle array is bound ONCE per row (`bind_once`), so one
     evaluation of the signature costs one shingle construction plus
@@ -134,7 +135,7 @@ def minhash_signature(col: Column | str, n_hashes: int = 6, k: int = 3, normaliz
     def _hasher(seed: int):
         return lambda s: md5_minhash_value(s, seed)
 
-    sh = char_shingles(col, k, normalize=normalize)
+    sh = char_shingles(col, normalize=normalize)
     return bind_once(
         sh,
         lambda s: F.array(
@@ -148,17 +149,16 @@ def lsh_band_blocks(
     text_col: str,
     n_hashes: int = 6,
     bands: int = 3,
-    k: int = 3,
     normalize: bool = True,
 ) -> DataFrame:
     """Explode each row into `bands` rows keyed by the band's slice of
-    the MinHash signature. Rows sharing any band key are candidates.
+    the char-3-gram MinHash signature. Rows sharing any band key are candidates.
     Output adds (band_id int, block_key string)."""
     rows_per_band = n_hashes // bands
     # materialize the signature ONCE: element_at over a plain column
     # reference — inlining `sig` would duplicate the whole
     # shingle+md5 expression tree per band element (n_hashes× the work)
-    sig_df = df.withColumn("_sig", minhash_signature(text_col, n_hashes, k, normalize=normalize))
+    sig_df = df.withColumn("_sig", minhash_signature(text_col, n_hashes, normalize=normalize))
     sig = F.col("_sig")
     bandkeys = F.array(
         *[
@@ -416,14 +416,11 @@ def _sn_rank(base: DataFrame, groups: list[str]) -> DataFrame:
 
 def meta_block_prune(
     assignments: DataFrame,
-    node_col: str = "node",
-    block_col: str = "block",
     max_block_size: int | None = None,
     block_filter_ratio: float | None = None,
-    decimals: int = 6,
 ) -> DataFrame:
     """Meta-blocking over a MULTI-key blocking scheme (Papadakis et
-    al.): turn overlapping block assignments into a weighted candidate
+    al.): turn overlapping (node, block) assignments into a weighted candidate
     graph and prune the low-evidence pairs, instead of comparing every
     co-blocked pair.
 
@@ -449,9 +446,7 @@ def meta_block_prune(
     an equi-join on block/pair keys; the only global is the one-row
     mean. Skewed (hot) blocks are precisely what purging removes.
     """
-    a = assignments.select(
-        F.col(node_col).alias("node"), F.col(block_col).alias("block")
-    ).distinct()
+    a = assignments.select("node", "block").distinct()
     sizes = a.groupBy("block").agg(F.count(F.lit(1)).alias("_bs"))
     if max_block_size is not None:
         sizes = sizes.filter(F.col("_bs") <= max_block_size)
@@ -480,7 +475,7 @@ def meta_block_prune(
         # recomputing the whole self-join for each
         .localCheckpoint(eager=True)
     )
-    stats = pairs.agg(F.round(F.avg("weight"), decimals).alias("mean_weight"))
+    stats = pairs.agg(F.round(F.avg("weight"), 6).alias("mean_weight"))
     return pairs.crossJoin(F.broadcast(stats)).select(
         "id_a",
         "id_b",

@@ -293,8 +293,6 @@ def _star_labels(e, nodes, iterations, converged, history) -> CCResult:
 def cluster_evolution(
     df,
     snapshot_col: str = "snapshot_ts",
-    member_col: str = "member",
-    comp_col: str = "component",
     jaccard_threshold: float = 0.5,
 ):
     """Track clusters across consecutive snapshots — the temporal-
@@ -336,7 +334,7 @@ def cluster_evolution(
     cluster-pair overlap frame (bounded by co-membership, never the
     corpus). No collects, no global sorts.
 
-    Output: (snapshot_col, comp_col, n_members, prev_component,
+    Output: (snapshot_col, component, n_members, prev_component,
     overlap, jaccard, status, n_predecessors, prev_component_2,
     overlap_2, n_split_into).
     """
@@ -346,17 +344,17 @@ def cluster_evolution(
         F.col(snapshot_col).alias("_next"),
         F.lag(snapshot_col).over(w_adj).alias("_prev_snap"),
     )
-    sizes = df.groupBy(snapshot_col, comp_col).agg(
+    sizes = df.groupBy(snapshot_col, "component").agg(
         F.count(F.lit(1)).alias("n_members")
     )
     cur = df.join(adj, df[snapshot_col] == adj["_next"]).select(
         F.col(snapshot_col).alias("_s"), "_prev_snap",
-        F.col(member_col).alias("_m"), F.col(comp_col).alias("_c"),
+        F.col("member").alias("_m"), F.col("component").alias("_c"),
     )
     prev = df.select(
         F.col(snapshot_col).alias("_prev_snap"),
-        F.col(member_col).alias("_m"),
-        F.col(comp_col).alias("_pc"),
+        F.col("member").alias("_m"),
+        F.col("component").alias("_pc"),
     )
     ov = (
         cur.join(prev, ["_prev_snap", "_m"])
@@ -369,36 +367,36 @@ def cluster_evolution(
     ranked = ov.withColumn("_rn", F.row_number().over(w_best))
     best = ranked.filter(F.col("_rn") == 1)
     second = ranked.filter(F.col("_rn") == 2).select(
-        F.col("_s").alias(snapshot_col), F.col("_c").alias(comp_col),
+        F.col("_s").alias(snapshot_col), F.col("_c").alias("component"),
         F.col("_pc").alias("prev_component_2"), F.col("overlap").alias("overlap_2"),
     )
     npred = ov.groupBy("_s", "_c").agg(
         F.count(F.lit(1)).alias("n_predecessors")
     ).select(
-        F.col("_s").alias(snapshot_col), F.col("_c").alias(comp_col), "n_predecessors"
+        F.col("_s").alias(snapshot_col), F.col("_c").alias("component"), "n_predecessors"
     )
     siblings = best.groupBy("_s", "_pc").agg(
         F.count(F.lit(1)).alias("n_split_into")
     ).select(F.col("_s").alias(snapshot_col), "_pc", "n_split_into")
     psz = sizes.select(
         F.col(snapshot_col).alias("_prev_snap"),
-        F.col(comp_col).alias("_pc"),
+        F.col("component").alias("_pc"),
         F.col("n_members").alias("_pn"),
     )
     out = (
         sizes.join(adj, sizes[snapshot_col] == adj["_next"], "inner")
-        .select(snapshot_col, comp_col, "n_members", "_prev_snap")
+        .select(snapshot_col, "component", "n_members", "_prev_snap")
         .join(
             best.select(
-                F.col("_s").alias(snapshot_col), F.col("_c").alias(comp_col),
+                F.col("_s").alias(snapshot_col), F.col("_c").alias("component"),
                 F.col("_pc"), "overlap",
             ),
-            [snapshot_col, comp_col],
+            [snapshot_col, "component"],
             "left",
         )
         .join(psz, ["_prev_snap", "_pc"], "left")
-        .join(npred, [snapshot_col, comp_col], "left")
-        .join(second, [snapshot_col, comp_col], "left")
+        .join(npred, [snapshot_col, "component"], "left")
+        .join(second, [snapshot_col, "component"], "left")
         .join(siblings, [snapshot_col, "_pc"], "left")
         .withColumn(
             "jaccard",
@@ -415,7 +413,7 @@ def cluster_evolution(
             .otherwise(F.lit("changed")),
         )
         .select(
-            snapshot_col, comp_col, "n_members",
+            snapshot_col, "component", "n_members",
             F.col("_pc").alias("prev_component"), "overlap", "jaccard", "status",
             "n_predecessors", "prev_component_2", "overlap_2", "n_split_into",
         )

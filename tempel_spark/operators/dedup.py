@@ -91,14 +91,11 @@ def ngram_jaccard_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     threshold: float = 0.8,
-    n_hashes: int = 6,
-    bands: int = 3,
-    cap: int = 1000,
 ) -> DataFrame:
-    """Near-dup pairs: LSH-blocked candidates verified by exact
-    char-k-gram Jaccard ≥ threshold. Output (id_a, id_b, jaccard).
+    """Near-dup pairs: LSH-blocked candidates (6 MinHashes in 3 bands,
+    at most 1,000 rows per band key) verified by exact char-3-gram
+    Jaccard ≥ threshold. Output (id_a, id_b, jaccard).
 
     The distinct shingle set is computed ONCE PER DOC before blocking
     and carried through the pair join as the payload — shingling the
@@ -106,11 +103,11 @@ def ngram_jaccard_dedup(
     ~pair_fanout× per doc (r6; same fix as the flagship ER scorer)."""
     shingled = df.select(
         id_col, text_col,
-        F.array_distinct(char_shingles(text_col, k)).alias("_sh"),
+        F.array_distinct(char_shingles(text_col)).alias("_sh"),
     )
-    blocked = lsh_band_blocks(shingled, text_col, n_hashes, bands, k)
+    blocked = lsh_band_blocks(shingled, text_col)
     blocked = blocked.withColumn("_bk", F.concat_ws(":", F.col("band_id"), F.col("block_key")))
-    pairs = candidate_pairs(blocked, ["_bk"], id_col, ["_sh"], cap=cap, group_cols=[])
+    pairs = candidate_pairs(blocked, ["_bk"], id_col, ["_sh"], cap=1000, group_cols=[])
     return (
         pairs.withColumn("jaccard", _jaccard_arrays(F.col("_sh_a"), F.col("_sh_b")))
         .filter(F.col("jaccard") >= threshold)
@@ -118,8 +115,8 @@ def ngram_jaccard_dedup(
     )
 
 
-def simhash64(text_col: Column | str, k: int = 3) -> Column:
-    """64-bit SimHash of the char-k-gram multiset, fully native:
+def simhash64(text_col: Column | str) -> Column:
+    """64-bit SimHash of the char-3-gram multiset, fully native:
 
     bit_j = sign( Σ_g  (md5-bit_j(g) ? +1 : -1) )
 
@@ -134,7 +131,7 @@ def simhash64(text_col: Column | str, k: int = 3) -> Column:
             F.shiftright(w, j).bitwiseAND(F.lit(1)) == 1, 1
         ).otherwise(-1)
 
-    sh = F.array_distinct(char_shingles(text_col, k))
+    sh = F.array_distinct(char_shingles(text_col))
     word = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"))
     bits = []
     for j in range(60):  # 60 usable bits from 15 hex chars
@@ -150,7 +147,6 @@ def simhash64_agg(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     out_col: str = "simhash",
 ) -> DataFrame:
     """SimHash as explode → native hash aggregation — the SCALE form
@@ -176,7 +172,7 @@ def simhash64_agg(
     ex = (
         df.select(
             id_col,
-            F.explode_outer(F.array_distinct(char_shingles(text_col, k))).alias("_s"),
+            F.explode_outer(F.array_distinct(char_shingles(text_col))).alias("_s"),
         )
         .select(id_col, F.conv(F.substring(F.md5("_s"), 1, 15), 16, 10).cast("bigint").alias("_w"))
     )
@@ -206,7 +202,6 @@ def simhash_dedup(
     text_col: str,
     max_hamming: int = 3,
     n_bands: int | None = None,
-    band_cap: int = 2_000,
 ) -> DataFrame:
     """SimHash near-dup: Hamming(simhash_a, simhash_b) ≤ max_hamming.
     Blocking = the pigeonhole bands trick: a pair within Hamming r
@@ -215,12 +210,11 @@ def simhash_dedup(
     recall), and candidates come from band-key equi-joins, never a
     cross join.
 
-    band_cap bounds any single hot band to ≤ cap·(cap−1)/2 pairs
-    (2,000 → ≤ 2×10^6 per band). A pathological band (all-zero
-    simhashes from near-empty documents) otherwise produces O(n²) at
-    web scale; members past the cap are hash-ranked out
-    deterministically — lower recall on that one degenerate band,
-    never a blowup."""
+    A cap of 2,000 rows bounds any single hot band to ≤ 2×10^6 pairs.
+    A pathological band (all-zero simhashes from near-empty documents)
+    otherwise produces O(n²) at web scale; members past the cap are
+    hash-ranked out deterministically — lower recall on that one
+    degenerate band, never a blowup."""
     n_bands = n_bands or (max_hamming + 1)
     bits_per_band = 60 // n_bands
     # agg form: 8× cheaper than the expression fold on document-length
@@ -243,7 +237,7 @@ def simhash_dedup(
         ]
     )
     blocked = with_hash.select(id_col, "_sh", F.explode(band_keys).alias("_band"))
-    pairs = candidate_pairs(blocked, ["_band"], id_col, ["_sh"], cap=band_cap, group_cols=[])
+    pairs = candidate_pairs(blocked, ["_band"], id_col, ["_sh"], cap=2_000, group_cols=[])
     ham = F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
     return (
         pairs.withColumn("hamming", ham)
@@ -282,13 +276,12 @@ def _dup_gram_positions(
 def _excise_tokens(
     joined: DataFrame,
     text_col: str,
-    out_col: str,
     removed: Callable[[Column], Column],
     drop: tuple[str, ...],
 ) -> DataFrame:
     """The excision tail of `passage_dedup` and `excise_spans`: split
     ``text_col`` on " ", keep each token whose 0-based index i fails
-    ``removed(i)``, rejoin the survivors into ``out_col`` and count
+    ``removed(i)``, rejoin the survivors into ``text_clean`` and count
     ``n_tokens_removed`` (both NULL for NULL text), then drop the
     caller's helper columns ``drop``."""
     kept = F.filter(F.col("_tk"), lambda t, i: ~removed(i))
@@ -296,7 +289,7 @@ def _excise_tokens(
         joined.withColumn("_tk", F.split(F.col(text_col), " "))
         .withColumn("_kept", kept)
         .withColumn(
-            out_col,
+            "text_clean",
             F.when(F.col(text_col).isNull(), F.lit(None)).otherwise(
                 F.array_join(F.col("_kept"), " ")
             ),
@@ -370,7 +363,6 @@ def passage_dedup(
     text_col: str,
     n: int = 8,
     min_count: int = 2,
-    out_col: str = "text_clean",
 ) -> DataFrame:
     """Policy-complete substring dedup (Lee et al. 2022 semantics):
     for every duplicated token-n-gram, KEEP the first occurrence
@@ -392,7 +384,7 @@ def passage_dedup(
     survives INTACT even where later self-overlapping occurrences
     (e.g. a run of identical tokens) cover its tokens.
 
-    Output: df columns + out_col + n_tokens_removed (same shape as
+    Output: df columns + text_clean + n_tokens_removed (same shape as
     `excise_spans`).
     """
     occ = _dup_gram_positions(df, id_col, text_col, n, min_count)
@@ -427,7 +419,6 @@ def passage_dedup(
     return _excise_tokens(
         joined,
         text_col,
-        out_col,
         lambda i: _covered(F.col("_cut"), i) & ~_covered(F.col("_keep"), i),
         ("_cut", "_keep"),
     )
@@ -438,9 +429,6 @@ def excise_spans(
     spans: DataFrame,
     id_col: str,
     text_col: str,
-    start_col: str = "start_tok",
-    end_col: str = "end_tok",
-    out_col: str = "text_clean",
 ) -> DataFrame:
     """Remove token ranges from documents — the excision half of
     substring-level dedup (`repeated_passages` finds the spans; a
@@ -459,17 +447,16 @@ def excise_spans(
     of spaces round-trip), so an untouched document returns
     byte-identical text.
 
-    Output: df columns + out_col + n_tokens_removed.
+    Output: df columns + text_clean + n_tokens_removed.
     """
     sp = spans.groupBy(id_col).agg(
         F.collect_list(
-            F.struct(F.col(start_col).alias("s"), F.col(end_col).alias("e"))
+            F.struct(F.col("start_tok").alias("s"), F.col("end_tok").alias("e"))
         ).alias("_sp")
     )
     return _excise_tokens(
         df.join(sp, id_col, "left"),
         text_col,
-        out_col,
         lambda i: F.coalesce(
             F.exists(F.col("_sp"), lambda s: (i + 1 >= s["s"]) & (i + 1 <= s["e"])),
             F.lit(False),

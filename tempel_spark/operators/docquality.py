@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 
 __all__ = ["repetition_signals"]
 
+ROUND_DP = 6  # every fraction and mean is rounded to this
+
 
 def _grams(n: int):
     """n-gram strings over the internal `_w` words column (the name is
@@ -50,75 +52,63 @@ def _grams(n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def repetition_signals(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_n: int = 2,
-    dup_n: int = 5,
-    decimals: int = 6,
-) -> DataFrame:
-    """Per-document repetition battery: n_words, mean_word_len,
-    alpha_word_frac, top_ngram_frac (size ``top_n``), dup_ngram_frac
-    (size ``dup_n``). Documents shorter than the gram size report 0
-    for that fraction."""
+def repetition_signals(df: DataFrame) -> DataFrame:
+    """Per-document repetition battery over (doc_id, text): n_words,
+    mean_word_len, alpha_word_frac, top_2gram_frac, dup_5gram_frac.
+    Documents shorter than the gram size report 0 for that fraction."""
     base = df.select(
-        id_col,
-        F.length(F.col(text_col)).alias("_chars"),
-        F.filter(F.split(F.col(text_col), " "), lambda w: w != "").alias("_w"),
+        "doc_id",
+        F.length(F.col("text")).alias("_chars"),
+        F.filter(F.split(F.col("text"), " "), lambda w: w != "").alias("_w"),
     )
     words = base.select(
-        id_col,
+        "doc_id",
         F.size("_w").alias("n_words"),
         F.round(
             F.aggregate("_w", F.lit(0), lambda a, w: a + F.length(w)).cast("double")
             / F.greatest(F.size("_w"), F.lit(1)),
-            decimals,
+            ROUND_DP,
         ).alias("mean_word_len"),
         F.round(
             F.size(F.filter("_w", lambda w: w.rlike("[A-Za-z]")))
             / F.greatest(F.size("_w"), F.lit(1)),
-            decimals,
+            ROUND_DP,
         ).alias("alpha_word_frac"),
     )
 
     def gram_stats(n: int, top: bool) -> DataFrame:
         g = base.select(
-            id_col, "_chars", F.explode(_grams(n)).alias("_g")
+            "doc_id", "_chars", F.explode(_grams(n)).alias("_g")
         )
-        counts = g.groupBy(id_col, "_chars", "_g").agg(
+        counts = g.groupBy("doc_id", "_chars", "_g").agg(
             F.count(F.lit(1)).alias("_c")
         )
         if top:
-            w = Window.partitionBy(id_col).orderBy(F.desc("_c"), F.asc("_g"))
+            w = Window.partitionBy("doc_id").orderBy(F.desc("_c"), F.asc("_g"))
             picked = counts.withColumn("_rn", F.row_number().over(w)).filter(
                 F.col("_rn") == 1
             )
             frac = F.col("_c") * F.length("_g") / F.col("_chars")
             return picked.select(
-                id_col, F.round(frac, decimals).alias(f"top_{n}gram_frac")
+                "doc_id", F.round(frac, ROUND_DP).alias(f"top_{n}gram_frac")
             )
         dup = counts.filter(F.col("_c") >= 2)
-        return dup.groupBy(id_col).agg(
+        return dup.groupBy("doc_id").agg(
             F.round(
-                F.sum(F.col("_c") * F.length("_g")) / F.first("_chars"), decimals
+                F.sum(F.col("_c") * F.length("_g")) / F.first("_chars"), ROUND_DP
             ).alias(f"dup_{n}gram_frac")
         )
 
     out = (
-        words.join(gram_stats(top_n, top=True), id_col, "left")
-        .join(gram_stats(dup_n, top=False), id_col, "left")
+        words.join(gram_stats(2, top=True), "doc_id", "left")
+        .join(gram_stats(5, top=False), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_words",
             "mean_word_len",
             "alpha_word_frac",
-            F.coalesce(F.col(f"top_{top_n}gram_frac"), F.lit(0.0)).alias(
-                f"top_{top_n}gram_frac"
-            ),
-            F.coalesce(F.col(f"dup_{dup_n}gram_frac"), F.lit(0.0)).alias(
-                f"dup_{dup_n}gram_frac"
-            ),
+            F.coalesce(F.col("top_2gram_frac"), F.lit(0.0)).alias("top_2gram_frac"),
+            F.coalesce(F.col("dup_5gram_frac"), F.lit(0.0)).alias("dup_5gram_frac"),
         )
     )
     return out

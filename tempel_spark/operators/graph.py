@@ -34,14 +34,11 @@ from pyspark.sql import functions as F
 
 __all__ = ["edge_triangle_support", "robust_components", "cluster_cohesion"]
 
+ROUND_DP = 6  # cohesion scores and densities are rounded to this
 
-def edge_triangle_support(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    out_col: str = "n_triangles",
-) -> DataFrame:
-    """Per-edge triangle count over an undirected edge list.
+
+def edge_triangle_support(edges: DataFrame) -> DataFrame:
+    """Per-edge triangle count over an undirected (id_a, id_b) edge list.
 
     Returns one row per distinct undirected edge: ``id_a`` < ``id_b``
     (canonical order), ``n_triangles`` = number of common neighbors of
@@ -50,10 +47,7 @@ def edge_triangle_support(
     Self-loops are dropped; duplicate edges count once.
     """
     e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
+        edges.select(F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
         # pinned: e feeds the degree census, the orientation join, the
@@ -107,18 +101,13 @@ def edge_triangle_support(
         .select(
             F.col("a").alias("id_a"),
             F.col("b").alias("id_b"),
-            F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias(out_col),
+            F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias("n_triangles"),
             (F.coalesce(F.col("_n"), F.lit(0)) == 0).alias("is_bridge_like"),
         )
     )
 
 
-def robust_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    min_support: int = 1,
-):
+def robust_components(edges: DataFrame, min_support: int = 1):
     """Bridge-pruned connected components: drop every edge with fewer
     than ``min_support`` triangles (the bridge-like candidate false
     matches), then recluster — the standard repair for two entities
@@ -133,28 +122,20 @@ def robust_components(
     """
     from tempel_spark.operators.clustering import connected_components
 
-    sup = edge_triangle_support(edges, src, dst)
+    sup = edge_triangle_support(edges)
     kept = sup.filter(F.col("n_triangles") >= min_support).select("id_a", "id_b")
     nodes = (
-        edges.select(F.least(F.col(src), F.col(dst)).alias("id_a"))
-        .unionAll(edges.select(F.greatest(F.col(src), F.col(dst)).alias("id_a")))
+        edges.select(F.least("id_a", "id_b").alias("id_a"))
+        .unionAll(edges.select(F.greatest("id_a", "id_b").alias("id_a")))
         .distinct()
     )
     return connected_components(kept, nodes=nodes)
 
 
-def cluster_cohesion(
-    components: DataFrame,
-    scored_pairs: DataFrame,
-    node_col: str = "node",
-    component_col: str = "component",
-    src: str = "id_a",
-    dst: str = "id_b",
-    score_col: str = "score",
-    decimals: int = 6,
-) -> DataFrame:
-    """Per-cluster quality report for an ER clustering: how well does
-    the pairwise evidence actually hold each cluster together?
+def cluster_cohesion(components: DataFrame, scored_pairs: DataFrame) -> DataFrame:
+    """Per-cluster quality report for an ER clustering (``components``:
+    node, component; ``scored_pairs``: id_a, id_b, score): how well
+    does the pairwise evidence actually hold each cluster together?
 
     For every component: n_members, n_edges (scored pairs with BOTH
     endpoints inside), avg_score / min_score over those edges
@@ -169,18 +150,16 @@ def cluster_cohesion(
     edge-scale data, no per-cluster collect; a head-entity mega-cluster
     costs what its edge count costs.
     """
-    comp = components.select(
-        F.col(node_col).alias("_n"), F.col(component_col).alias("_c")
-    )
+    comp = components.select(F.col("node").alias("_n"), F.col("component").alias("_c"))
     # canonicalize like edge_triangle_support: reversed duplicates of
     # the same pair must count ONE edge (matcher output is often
     # un-canonicalized; double-counting would corrupt density, the
     # very signal this reports). Duplicate scores resolve to the max.
     canon = (
         scored_pairs.select(
-            F.least(F.col(src), F.col(dst)).alias("_a"),
-            F.greatest(F.col(src), F.col(dst)).alias("_b"),
-            F.col(score_col).alias("_s"),
+            F.least("id_a", "id_b").alias("_a"),
+            F.greatest("id_a", "id_b").alias("_b"),
+            F.col("score").alias("_s"),
         )
         .filter(F.col("_a") != F.col("_b"))
         .groupBy("_a", "_b")
@@ -194,8 +173,8 @@ def cluster_cohesion(
     )
     per_edge = e.groupBy(F.col("_ca").alias("component")).agg(
         F.count(F.lit(1)).alias("n_edges"),
-        F.round(F.avg("_s"), decimals).alias("avg_score"),
-        F.round(F.min("_s"), decimals).alias("min_score"),
+        F.round(F.avg("_s"), ROUND_DP).alias("avg_score"),
+        F.round(F.min("_s"), ROUND_DP).alias("min_score"),
     )
     sizes = comp.groupBy(F.col("_c").alias("component")).agg(
         F.count(F.lit(1)).alias("n_members")
@@ -211,7 +190,7 @@ def cluster_cohesion(
             "min_score",
             F.when(
                 possible > 0,
-                F.round(F.coalesce(F.col("n_edges"), F.lit(0)) / possible, decimals),
+                F.round(F.coalesce(F.col("n_edges"), F.lit(0)) / possible, ROUND_DP),
             )
             .otherwise(F.lit(1.0))
             .alias("density"),

@@ -27,11 +27,11 @@ Determinism (repo rule: round-before-compare):
 
 - init: the k rows with the smallest ids, cluster id = rank in that
   order — no RNG anywhere.
-- every updated centroid coordinate is rounded to ``round_dp``
+- every updated centroid coordinate is rounded to ``ROUND_DP``
   decimals, so iteration n+1 starts from engine-identical centroids
   even though float partial-sum order differs across partitionings
   and engines (the DuckDB oracle rounds the same way).
-- argmin over centroids orders by (round(dist, round_dp), cluster)
+- argmin over centroids orders by (round(dist, ROUND_DP), cluster)
   — boundary ties break to the smallest cluster id in both engines.
 - empty clusters keep their previous centroid (no re-seeding), so a
   run is a pure function of (input, k, n_iter).
@@ -75,15 +75,13 @@ def _dist_matrix(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return np.sqrt(np.clip(d2, 0.0, None))
 
 
-def _argmin_rounded(dist: np.ndarray, round_dp: int) -> np.ndarray:
+def _argmin_rounded(dist: np.ndarray) -> np.ndarray:
     # np.argmin returns the FIRST minimum → smallest cluster id on a
     # rounded tie, matching the oracle's ORDER BY round(dist), cid
-    return np.argmin(np.round(dist, round_dp), axis=1)
+    return np.argmin(np.round(dist, ROUND_DP), axis=1)
 
 
-def _partial_sums(
-    df: DataFrame, emb_col: str, cents: np.ndarray, round_dp: int
-) -> DataFrame:
+def _partial_sums(df: DataFrame, emb_col: str, cents: np.ndarray) -> DataFrame:
     """One fitting pass: per Arrow batch, GEMM-assign and emit k
     partial (cluster, n, sum-vector) rows."""
     k, d = cents.shape
@@ -93,7 +91,7 @@ def _partial_sums(
             if len(pdf) == 0:
                 continue
             x = np.stack(pdf[emb_col].to_list()).astype("float64")
-            lab = _argmin_rounded(_dist_matrix(x, cents), round_dp)
+            lab = _argmin_rounded(_dist_matrix(x, cents))
             rows = []
             for cid in np.unique(lab):
                 m = lab == cid
@@ -110,11 +108,10 @@ def kmeans_assign(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_dp: int = ROUND_DP,
 ) -> DataFrame:
     """Label every row with its nearest centroid (one GEMM pass).
     Output: (id_col, cluster_id, dist) with dist rounded to
-    ``round_dp`` — usable standalone as the coarse-quantizer bucket
+    ``ROUND_DP`` — usable standalone as the coarse-quantizer bucket
     assignment for a trained IVF."""
     cents = np.asarray(centroids, dtype="float64")
 
@@ -124,12 +121,12 @@ def kmeans_assign(
                 continue
             x = np.stack(pdf[emb_col].to_list()).astype("float64")
             dist = _dist_matrix(x, cents)
-            lab = _argmin_rounded(dist, round_dp)
+            lab = _argmin_rounded(dist)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
                     "cluster_id": lab.astype("int32"),
-                    "dist": np.round(dist[np.arange(len(lab)), lab], round_dp),
+                    "dist": np.round(dist[np.arange(len(lab)), lab], ROUND_DP),
                 }
             )
 
@@ -214,7 +211,6 @@ def kmeans(
     emb_col: str = "embedding",
     k: int = 8,
     n_iter: int = 2,
-    round_dp: int = ROUND_DP,
 ) -> KMeansResult:
     """Lloyd's k-means: ``n_iter`` assign→update rounds from the
     deterministic seed (the k smallest-id vectors), then a final
@@ -228,7 +224,7 @@ def kmeans(
         raise ValueError(f"k={k} but only {len(cents)} input rows")
 
     for _ in range(n_iter):
-        partials = _partial_sums(df, emb_col, cents, round_dp)
+        partials = _partial_sums(df, emb_col, cents)
         # reduce to k×d cells JVM-side; only that bounded frame is
         # collected (posexplode keeps the shuffle at k×d×batches tiny
         # rows — never per-point)
@@ -250,11 +246,11 @@ def kmeans(
             sums[r["cluster_id"], r["idx"]] = r["s"]
         new = cents.copy()  # empty cluster keeps its previous centroid
         for cid, n in counts.items():
-            new[cid] = np.round(sums[cid] / n, round_dp)
+            new[cid] = np.round(sums[cid] / n, ROUND_DP)
         cents = new
 
     return KMeansResult(
-        assignments=kmeans_assign(df, cents.tolist(), id_col, emb_col, round_dp),
+        assignments=kmeans_assign(df, cents.tolist(), id_col, emb_col),
         centroids=cents.tolist(),
         k=k,
         n_iter=n_iter,

@@ -35,20 +35,21 @@ from pyspark.sql import functions as F
 
 __all__ = ["fs_weights", "fs_score", "fs_em", "fs_weights_leveled", "fs_score_leveled", "fs_posterior"]
 
+ROUND_DP = 6  # every probability, weight and score is rounded to this
+SMOOTHING = 0.5  # additive (Jeffreys) smoothing of every m/u estimate
+FS_SCORE = "fs_score"  # summed-weight column `fs_score*` write, `fs_posterior` reads
+
 
 def fs_weights(
     labeled: DataFrame,
     feature_cols: list[str],
-    label_col: str = "is_match",
-    smoothing: float = 0.5,
-    decimals: int = 6,
 ) -> DataFrame:
     """Estimate per-feature m/u probabilities and log2 match weights
     from a labeled pair sample.
 
     ``labeled`` carries one row per pair with boolean agreement columns
-    (``feature_cols``) and a boolean ``label_col``. Additive smoothing
-    (default 0.5, Jeffreys) keeps every probability strictly inside
+    (``feature_cols``) and a boolean ``is_match``. Additive smoothing
+    (``SMOOTHING``, Jeffreys) keeps every probability strictly inside
     (0, 1) so the log weights stay finite even for a feature that
     always (or never) agrees in the sample.
 
@@ -59,13 +60,13 @@ def fs_weights(
 
     Returns one row per feature: feature, n_match, n_nonmatch (global
     label counts), m, u, agree_weight, disagree_weight — all
-    probabilities/weights rounded to ``decimals`` (the repo's
+    probabilities/weights rounded to ``ROUND_DP`` (the repo's
     round-before-compare determinism rule: a double sum's addition
     order is partition-dependent).
     """
     if not feature_cols:
         raise ValueError("feature_cols must be non-empty")
-    lbl = F.col(label_col).cast("boolean")
+    lbl = F.col("is_match").cast("boolean")
     aggs = [
         F.sum(F.when(lbl, 1).otherwise(0)).alias("_nm"),
         F.sum(F.when(~lbl, 1).otherwise(0)).alias("_nu"),
@@ -99,26 +100,21 @@ def fs_weights(
             )
         ).alias("_f"),
     ).select("_nm", "_nu", "_f.feature", "_f._am", "_f._anm", "_f._au", "_f._anu")
-    s = float(smoothing)
+    s = SMOOTHING
     m = (F.col("_am") + s) / (F.col("_anm") + 2 * s)
     u = (F.col("_au") + s) / (F.col("_anu") + 2 * s)
     return melted.select(
         "feature",
         F.col("_nm").cast("long").alias("n_match"),
         F.col("_nu").cast("long").alias("n_nonmatch"),
-        F.round(m, decimals).alias("m"),
-        F.round(u, decimals).alias("u"),
-        F.round(F.log2(m / u), decimals).alias("agree_weight"),
-        F.round(F.log2((1 - m) / (1 - u)), decimals).alias("disagree_weight"),
+        F.round(m, ROUND_DP).alias("m"),
+        F.round(u, ROUND_DP).alias("u"),
+        F.round(F.log2(m / u), ROUND_DP).alias("agree_weight"),
+        F.round(F.log2((1 - m) / (1 - u)), ROUND_DP).alias("disagree_weight"),
     )
 
 
-def fs_score(
-    pairs: DataFrame,
-    weights: DataFrame,
-    out_col: str = "fs_score",
-    decimals: int = 6,
-) -> DataFrame:
+def fs_score(pairs: DataFrame, weights: DataFrame) -> DataFrame:
     """Score candidate pairs with a Fellegi–Sunter weight table.
 
     ``weights`` is `fs_weights` output (or any frame with feature /
@@ -129,7 +125,8 @@ def fs_score(
 
     The collected weights are the ROUNDED values `fs_weights` emits,
     so the score is a sum of fixed 6-dp constants — deterministic and
-    engine-portable; the final sum is rounded again to ``decimals``.
+    engine-portable; the final sum, ``fs_score``, is rounded again to
+    ``ROUND_DP``.
     """
     rows = weights.select("feature", "agree_weight", "disagree_weight").collect()
     if not rows:
@@ -145,18 +142,13 @@ def fs_score(
             .when(fc == False, F.lit(float(r["disagree_weight"])))  # noqa: E712
             .otherwise(F.lit(0.0))
         )
-    return pairs.withColumn(out_col, F.round(score, decimals))
+    return pairs.withColumn(FS_SCORE, F.round(score, ROUND_DP))
 
 
 def fs_em(
     pairs: DataFrame,
     feature_cols: list[str],
     n_iter: int = 3,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    init_lambda: float = 0.1,
-    smoothing: float = 0.5,
-    decimals: int = 6,
 ) -> DataFrame:
     """UNSUPERVISED Fellegi–Sunter estimation by expectation-
     maximization (Winkler 1988; the calibration loop behind Splink):
@@ -170,7 +162,8 @@ def fs_em(
     and the M-step re-estimates λ = mean posterior and the smoothed
     posterior-weighted agreement rates
         m_i = (Σ P·[x_i] + s) / (Σ P·[x_i non-null] + 2s)   (u_i dual).
-    Every parameter is rounded to ``decimals`` BEFORE the next E-step —
+    The fit starts from λ = 0.1, m_i = 0.9, u_i = 0.1.
+    Every parameter is rounded to ``ROUND_DP`` BEFORE the next E-step —
     the repo's round-before-compare rule — so each iteration's
     expression uses fixed constants and the trajectory is reproducible
     on any engine or partitioning.
@@ -180,15 +173,13 @@ def fs_em(
     iteration — bounded by n_iter·k, never by pairs). Returns the
     same weight-table shape as `fs_weights` plus the final match
     prior: feature, m, u, agree_weight, disagree_weight, lam, n_pairs.
+    An empty ``pairs`` frame has no mixture to fit: `ValueError`.
     """
     if not feature_cols:
         raise ValueError("feature_cols must be non-empty")
-    if not (0.0 < init_lambda < 1.0):
-        raise ValueError("init_lambda must be in (0, 1)")
-    s = float(smoothing)
-    lam = round(float(init_lambda), decimals)
-    params = {f: (round(float(init_m), decimals), round(float(init_u), decimals))
-              for f in feature_cols}
+    s = SMOOTHING
+    lam = 0.1
+    params = {f: (0.9, 0.1) for f in feature_cols}
     n_pairs = None
     for _ in range(n_iter):
         pm = F.lit(lam)
@@ -218,11 +209,13 @@ def fs_em(
             aggs.append(F.sum((1 - F.col("_p")) * nn).alias(f"_bn_{f}"))
         row = base.agg(*aggs).collect()[0]
         n_pairs = int(row["_n"])
-        lam = round(row["_sp"] / row["_n"], decimals)
+        if n_pairs == 0:
+            raise ValueError("fs_em: the pair frame is empty")
+        lam = round(row["_sp"] / row["_n"], ROUND_DP)
         params = {
             f: (
-                round((row[f"_a_{f}"] + s) / (row[f"_an_{f}"] + 2 * s), decimals),
-                round((row[f"_b_{f}"] + s) / (row[f"_bn_{f}"] + 2 * s), decimals),
+                round((row[f"_a_{f}"] + s) / (row[f"_an_{f}"] + 2 * s), ROUND_DP),
+                round((row[f"_b_{f}"] + s) / (row[f"_bn_{f}"] + 2 * s), ROUND_DP),
             )
             for f in feature_cols
         }
@@ -236,8 +229,8 @@ def fs_em(
     )
     return out.select(
         "feature", "m", "u",
-        F.round(F.log2(F.col("m") / F.col("u")), decimals).alias("agree_weight"),
-        F.round(F.log2((1 - F.col("m")) / (1 - F.col("u"))), decimals).alias(
+        F.round(F.log2(F.col("m") / F.col("u")), ROUND_DP).alias("agree_weight"),
+        F.round(F.log2((1 - F.col("m")) / (1 - F.col("u"))), ROUND_DP).alias(
             "disagree_weight"
         ),
         "lam", "n_pairs",
@@ -247,9 +240,6 @@ def fs_em(
 def fs_weights_leveled(
     labeled: DataFrame,
     features: dict[str, list],
-    label_col: str = "is_match",
-    smoothing: float = 0.5,
-    decimals: int = 6,
 ) -> DataFrame:
     """Fellegi–Sunter estimation over MULTI-LEVEL comparison features
     (the Splink comparison-level model): each feature column holds one
@@ -260,7 +250,7 @@ def fs_weights_leveled(
     For feature i, level l:
         m_il = P(level l | match),  u_il = P(level l | non-match),
         weight_il = log2(m_il / u_il),
-    smoothed additively with ``smoothing`` per level (denominator adds
+    smoothed additively with ``SMOOTHING`` per level (denominator adds
     |levels|·s, so the per-feature distribution still sums to ~1).
 
     A value outside the declared level list raises — a silent
@@ -277,7 +267,7 @@ def fs_weights_leveled(
             raise ValueError(f"feature {f!r} has no levels")
         if len(set(levels)) != len(levels):
             raise ValueError(f"feature {f!r} has duplicate levels")
-    lbl = F.col(label_col).cast("boolean")
+    lbl = F.col("is_match").cast("boolean")
     aggs = []
     checks = []
     for f, levels in features.items():
@@ -304,7 +294,7 @@ def fs_weights_leveled(
         raise ValueError(
             f"values outside the declared levels (rows per feature): {bad}"
         )
-    s = float(smoothing)
+    s = SMOOTHING
     out = []
     for f, levels in features.items():
         nm, nu = row[f"_nm_{f}"], row[f"_nu_{f}"]
@@ -312,20 +302,15 @@ def fs_weights_leveled(
             m = (row[f"_m_{f}_{i}"] + s) / (nm + len(levels) * s)
             u = (row[f"_u_{f}_{i}"] + s) / (nu + len(levels) * s)
             out.append(
-                (f, str(lv), round(m, decimals), round(u, decimals),
-                 round(math.log2(m / u), decimals))
+                (f, str(lv), round(m, ROUND_DP), round(u, ROUND_DP),
+                 round(math.log2(m / u), ROUND_DP))
             )
     return labeled.sparkSession.createDataFrame(
         out, "feature string, level string, m double, u double, weight double"
     )
 
 
-def fs_score_leveled(
-    pairs: DataFrame,
-    weights: DataFrame,
-    out_col: str = "fs_score",
-    decimals: int = 6,
-) -> DataFrame:
+def fs_score_leveled(pairs: DataFrame, weights: DataFrame) -> DataFrame:
     """Score pairs with a leveled weight table (`fs_weights_leveled`
     output): per feature one CASE chain over its levels (collected —
     bounded by Σ|levels|), NULL → 0. Same determinism contract as
@@ -347,30 +332,25 @@ def fs_score_leveled(
         # an undeclared value scores NULL -> surface it loudly instead
         # of silently scoring 0 (estimation would have raised on it)
         score = score + expr
-    return pairs.withColumn(out_col, F.round(score, decimals))
+    return pairs.withColumn(FS_SCORE, F.round(score, ROUND_DP))
 
 
-def fs_posterior(
-    pairs: DataFrame,
-    match_prior: float,
-    score_col: str = "fs_score",
-    out_col: str = "match_probability",
-    decimals: int = 6,
-) -> DataFrame:
+def fs_posterior(pairs: DataFrame, match_prior: float) -> DataFrame:
     """Turn a Fellegi–Sunter log2-weight score into a calibrated match
     probability (Splink's match_probability):
 
         P(M | x) = 1 / (1 + 2^-(score + log2(λ / (1 − λ))))
 
     — the posterior of the two-class model whose evidence is the
-    summed weights and whose prior odds are λ/(1−λ). ``match_prior``
-    is λ: pass a known rate, or `fs_em`'s estimated ``lam``.
+    summed weights (``fs_score``) and whose prior odds are λ/(1−λ).
+    ``match_prior`` is λ: pass a known rate, or `fs_em`'s estimated
+    ``lam``. Writes ``match_probability``.
     Pure expression — codegen, no shuffle, no Python."""
     if not (0.0 < match_prior < 1.0):
         raise ValueError("match_prior must be in (0, 1)")
     prior_weight = math.log2(match_prior / (1.0 - match_prior))
-    odds_exp = F.col(score_col) + F.lit(prior_weight)
+    odds_exp = F.col(FS_SCORE) + F.lit(prior_weight)
     return pairs.withColumn(
-        out_col,
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.pow(F.lit(2.0), -odds_exp)), decimals),
+        "match_probability",
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.pow(F.lit(2.0), -odds_exp)), ROUND_DP),
     )

@@ -31,6 +31,7 @@ __all__ = [
 ]
 
 DEFAULT_KS = [1, 2, 4, 8, 16, 32, 64]
+ROUND_DP = 6  # round-before-compare digits of the rates and shares
 
 
 def strict_majority(
@@ -84,9 +85,6 @@ def _n_choose_2(c) -> F.Column:
 def pairwise_f1(
     pred: DataFrame,
     gold: DataFrame,
-    node_col: str = "node",
-    pred_col: str = "component",
-    gold_col: str = "gold_entity_id",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """pred: (node, component [, group…]); gold: (node, gold label).
@@ -100,18 +98,18 @@ def pairwise_f1(
     shared = [c for c in groups if c in gold.columns and c in pred.columns]
     extra = [c for c in groups if c in gold.columns and c not in pred.columns]
     j = pred.join(
-        gold.select(node_col, gold_col, *shared, *extra), [node_col, *shared]
+        gold.select("node", "gold_entity_id", *shared, *extra), ["node", *shared]
     ).localCheckpoint(eager=False)  # feeds the tp/pred/gold censuses
 
-    cont = j.groupBy(*groups, pred_col, gold_col).agg(F.count(F.lit(1)).alias("n"))
+    cont = j.groupBy(*groups, "component", "gold_entity_id").agg(F.count(F.lit(1)).alias("n"))
     tp = cont.groupBy(*groups).agg(F.sum(_n_choose_2(F.col("n"))).alias("tp"))
 
     ppairs = (
-        j.groupBy(*groups, pred_col).agg(F.count(F.lit(1)).alias("n"))
+        j.groupBy(*groups, "component").agg(F.count(F.lit(1)).alias("n"))
         .groupBy(*groups).agg(F.sum(_n_choose_2(F.col("n"))).alias("pred_pairs"))
     )
     gpairs = (
-        j.groupBy(*groups, gold_col).agg(F.count(F.lit(1)).alias("n"))
+        j.groupBy(*groups, "gold_entity_id").agg(F.count(F.lit(1)).alias("n"))
         .groupBy(*groups).agg(F.sum(_n_choose_2(F.col("n"))).alias("gold_pairs"))
     )
     if groups:
@@ -137,9 +135,6 @@ def pairwise_f1(
 def bcubed(
     pred: DataFrame,
     gold: DataFrame,
-    node_col: str = "node",
-    pred_col: str = "component",
-    gold_col: str = "gold_entity_id",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """B-cubed clustering precision/recall/F1 (Bagga & Baldwin 1998)
@@ -163,12 +158,10 @@ def bcubed(
     # ride along on the select
     shared = [c for c in groups if c in gold.columns and c in pred.columns]
     extra = [c for c in groups if c in gold.columns and c not in pred.columns]
-    j = pred.join(
-        gold.select(node_col, gold_col, *shared, *extra), [node_col, *shared]
-    )
-    cont = j.groupBy(*groups, pred_col, gold_col).agg(F.count(F.lit(1)).alias("i"))
-    wc = Window.partitionBy(*groups, pred_col)
-    wg = Window.partitionBy(*groups, gold_col)
+    j = pred.join(gold.select("node", "gold_entity_id", *shared, *extra), ["node", *shared])
+    cont = j.groupBy(*groups, "component", "gold_entity_id").agg(F.count(F.lit(1)).alias("i"))
+    wc = Window.partitionBy(*groups, "component")
+    wg = Window.partitionBy(*groups, "gold_entity_id")
     cells = cont.withColumn("sc", F.sum("i").over(wc)).withColumn(
         "sg", F.sum("i").over(wg)
     )
@@ -191,9 +184,6 @@ def bcubed(
 def blocking_quality(
     blocks: DataFrame,
     gold: DataFrame,
-    node_col: str = "node",
-    block_col: str = "block",
-    gold_col: str = "gold_entity_id",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Blocking-scheme evaluation (Christen 2012): pairs completeness
@@ -233,17 +223,17 @@ def blocking_quality(
     # column (`extra`) puts unlabeled nodes in a NULL group — use full
     # coverage when grouping that way.
     j = blocks.join(
-        gold.select(node_col, gold_col, *shared, *extra), [node_col, *shared], "left"
+        gold.select("node", "gold_entity_id", *shared, *extra), ["node", *shared], "left"
     )
-    cont = j.groupBy(*groups, block_col, gold_col).agg(
+    cont = j.groupBy(*groups, "block", "gold_entity_id").agg(
         F.count(F.lit(1)).alias("i")
     ).localCheckpoint(eager=False)  # feeds labeled AND the candidate census
-    labeled = cont.filter(F.col(gold_col).isNotNull())
+    labeled = cont.filter(F.col("gold_entity_id").isNotNull())
     matched = labeled.groupBy(*groups).agg(
         F.sum(_n_choose_2(F.col("i"))).alias("matched_pairs")
     )
     cand = (
-        cont.groupBy(*groups, block_col).agg(F.sum("i").alias("n"))
+        cont.groupBy(*groups, "block").agg(F.sum("i").alias("n"))
         .groupBy(*groups)
         .agg(
             F.sum(_n_choose_2(F.col("n"))).alias("cand_pairs"),
@@ -251,7 +241,7 @@ def blocking_quality(
         )
     )
     gpairs = (
-        labeled.groupBy(*groups, gold_col).agg(F.sum("i").alias("n"))
+        labeled.groupBy(*groups, "gold_entity_id").agg(F.sum("i").alias("n"))
         .groupBy(*groups)
         .agg(F.sum(_n_choose_2(F.col("n"))).alias("gold_pairs"))
     )
@@ -283,16 +273,15 @@ def blocking_quality(
 
 def pr_curve(
     pairs: DataFrame,
-    score_col: str = "score",
-    label_col: str = "is_match",
     decimals: int = 3,
     group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Precision-recall curve for a pairwise matcher: one row per
-    distinct score threshold t with precision/recall of the decision
-    ``score >= t`` — the report that picks the operating threshold
-    (the reference tunes its must-link ratio the same way, by eye on
-    scored-pair distributions; this makes it one operator).
+    """Precision-recall curve for a pairwise matcher over (score,
+    is_match) pairs: one row per distinct score threshold t with
+    precision/recall of the decision ``score >= t`` — the report that
+    picks the operating threshold (the reference tunes its must-link
+    ratio the same way, by eye on scored-pair distributions; this
+    makes it one operator).
 
     Scores are rounded to ``decimals`` FIRST, so the curve has at most
     ~2·10^decimals points: the per-threshold aggregation is a plain
@@ -307,12 +296,12 @@ def pr_curve(
     # group into a threshold=NULL row that sorts last and absorbs all
     # pairs into a bogus final operating point — a pair with no score
     # is not a decision the curve can describe, so drop it.
-    pairs = pairs.filter(F.col(score_col).isNotNull())
+    pairs = pairs.filter(F.col("score").isNotNull())
     agg = pairs.groupBy(
-        *groups, F.round(F.col(score_col), decimals).alias("threshold")
+        *groups, F.round(F.col("score"), decimals).alias("threshold")
     ).agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(F.col(label_col).cast("long")).alias("n_pos"),
+        F.sum(F.col("is_match").cast("long")).alias("n_pos"),
     )
     w = (
         Window.partitionBy(*groups)
@@ -335,12 +324,7 @@ def pr_curve(
     )
 
 
-def eval_labeled_pairs(
-    components: DataFrame,
-    labeled_pairs: DataFrame,
-    node_col: str = "mention_id",
-    comp_col: str = "component",
-) -> DataFrame:
+def eval_labeled_pairs(components: DataFrame, labeled_pairs: DataFrame) -> DataFrame:
     """BASELINE.json headline check, on its own terms: labeled pairs
     (snapshot_ts, mention_id_a, mention_id_b, same_entity boolean)
     scored against predicted components. Two broadcast-joinable lookups
@@ -348,13 +332,13 @@ def eval_labeled_pairs(
     tp/fp/fn/tn + precision/recall/f1 over the LABELED pairs."""
     ca = components.select(
         "snapshot_ts",
-        F.col(node_col).alias("mention_id_a"),
-        F.col(comp_col).alias("_comp_a"),
+        F.col("mention_id").alias("mention_id_a"),
+        F.col("component").alias("_comp_a"),
     )
     cb = components.select(
         "snapshot_ts",
-        F.col(node_col).alias("mention_id_b"),
-        F.col(comp_col).alias("_comp_b"),
+        F.col("mention_id").alias("mention_id_b"),
+        F.col("component").alias("_comp_b"),
     )
     j = (
         labeled_pairs.join(ca, ["snapshot_ts", "mention_id_a"])
@@ -400,23 +384,20 @@ def cluster_canonical_names(
 
 def acc_at_k(
     candidates: DataFrame,
-    query_col: str = "mention_id",
-    score_col: str = "score",
-    correct_col: str = "correct",
     group_cols: list[str] | None = None,
     ks: list[int] | None = None,
 ) -> DataFrame:
-    """candidates: one row per (query, candidate) with a score and a
-    correctness flag. Ranks per query by score desc (ties broken by
+    """candidates: one row per (mention_id, candidate) with a ``score``
+    and a ``correct`` flag. Ranks per query by score desc (ties broken by
     the correct flag *last*, matching the reference's re-sort at eval,
     s07_calculate_results_and_metrics_blink.py:220-227), then
     micro-averages hit@k per group (misc_utils.py:209-242)."""
     groups = group_cols or []
     ks = ks or DEFAULT_KS
-    w = Window.partitionBy(*groups, query_col).orderBy(F.col(score_col).desc(), F.col(correct_col).asc())
+    w = Window.partitionBy(*groups, "mention_id").orderBy(F.col("score").desc(), F.col("correct").asc())
     ranked = candidates.withColumn("rank", F.row_number().over(w))
-    per_query = ranked.groupBy(*groups, query_col).agg(
-        F.min(F.when(F.col(correct_col), F.col("rank"))).alias("gold_rank")
+    per_query = ranked.groupBy(*groups, "mention_id").agg(
+        F.min(F.when(F.col("correct"), F.col("rank"))).alias("gold_rank")
     )
     return per_query.groupBy(*groups).agg(
         F.count(F.lit(1)).alias("n_queries"),
@@ -433,11 +414,7 @@ def acc_at_k(
 
 def mean_reciprocal_rank(
     ranked: DataFrame,
-    query_col: str = "query_id",
-    correct_col: str = "correct",
-    rank_col: str = "rank",
     group_cols: list[str] | None = None,
-    round_dp: int = 6,
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """MRR over pre-ranked retrieval output (e.g. `bm25_topk`): each
@@ -457,17 +434,17 @@ def mean_reciprocal_rank(
 
     Output: group_cols…, n_queries, mrr."""
     groups = group_cols or []
-    per_q = ranked.groupBy(*groups, query_col).agg(
-        F.min(F.when(F.col(correct_col), F.col(rank_col))).alias("_gr")
+    per_q = ranked.groupBy(*groups, "query_id").agg(
+        F.min(F.when(F.col("correct"), F.col("rank"))).alias("_gr")
     )
     if queries is not None:
-        universe = queries.select(*groups, query_col).distinct()
-        per_q = universe.join(per_q, [*groups, query_col], "left")
+        universe = queries.select(*groups, "query_id").distinct()
+        per_q = universe.join(per_q, [*groups, "query_id"], "left")
     return per_q.groupBy(*groups).agg(
         F.count(F.lit(1)).alias("n_queries"),
         F.round(
             F.avg(F.when(F.col("_gr").isNotNull(), 1.0 / F.col("_gr")).otherwise(0.0)),
-            round_dp,
+            ROUND_DP,
         ).alias("mrr"),
     )
 
@@ -475,17 +452,9 @@ def mean_reciprocal_rank(
 def paper_stats_matrix(
     candidates: DataFrame,
     years: list[int],
-    k: int = 64,
-    category_col: str = "category",
-    train_col: str = "train_year",
-    test_col: str = "test_year",
-    subset_col: str = "subset",
-    query_col: str = "mention_id",
-    score_col: str = "score",
-    correct_col: str = "correct",
 ) -> DataFrame:
     """The s08 paper-stats composition end to end: test-subset
-    predictions → micro-averaged acc@k per (category, train-year,
+    predictions → micro-averaged acc@64 per (category, train-year,
     test-year) → train-year × test-year pivot per category — the
     paper's Table-2 layout (s08_all_paper_stats.py:249-365,504-526;
     metric definition misc_utils.py:209-242; the reference builds it
@@ -494,38 +463,24 @@ def paper_stats_matrix(
 
     `years` is required (explicit pivot values keep the schema static
     — no extra discovery pass over a potentially huge predictions
-    table). Output: (category, train_year, y{yyyy}...) with acc@k in
+    table). Output: (category, train_year, y{yyyy}...) with acc@64 in
     each test-year cell; cells with no predictions stay NULL, exactly
     like the reference's pivot_table holes."""
-    test = candidates.filter(F.col(subset_col) == "test")
-    acc = acc_at_k(
-        test,
-        query_col=query_col,
-        score_col=score_col,
-        correct_col=correct_col,
-        group_cols=[category_col, train_col, test_col],
-        ks=[k],
-    )
+    test = candidates.filter(F.col("subset") == "test")
+    acc = acc_at_k(test, group_cols=["category", "train_year", "test_year"], ks=[64])
     piv = (
-        acc.groupBy(category_col, train_col)
-        .pivot(test_col, years)
-        .agg(F.first(f"acc_at_{k}"))
+        acc.groupBy("category", "train_year")
+        .pivot("test_year", years)
+        .agg(F.first("acc_at_64"))
     )
     return piv.select(
-        category_col,
-        train_col,
+        "category",
+        "train_year",
         *[F.round(F.col(f"`{y}`"), 6).alias(f"y{y}") for y in years],
     )
 
 
-def candidate_similarity_by_cut(
-    candidates: DataFrame,
-    cut_col: str = "cut",
-    finetune_col: str = "finetune_cut",
-    query_col: str = "mention_id",
-    rank_col: str = "rank",
-    text_col: str = "cand_text",
-) -> DataFrame:
+def candidate_similarity_by_cut(candidates: DataFrame) -> DataFrame:
     """The s07 candidate-similarity analysis end to end
     (s07_analyze_similarity_of_predicted_candidates.py:165-228): per
     mention, token-set Jaccard between CONSECUTIVE ranked candidates
@@ -542,9 +497,10 @@ def candidate_similarity_by_cut(
     # partition by the FULL evaluation key: the same mention can be
     # scored under several (cut, finetune_cut) runs, and each run's
     # candidate list must rank/lag/min-length independently
-    w_m = Window.partitionBy(query_col, cut_col, finetune_col)
-    w_r = Window.partitionBy(query_col, cut_col, finetune_col).orderBy(rank_col)
-    toks_raw = F.split(F.col(text_col), " ")
+    run = ["mention_id", "cut", "finetune_cut"]
+    w_m = Window.partitionBy(*run)
+    w_r = Window.partitionBy(*run).orderBy("rank")
+    toks_raw = F.split(F.col("cand_text"), " ")
     cand = candidates.withColumn("_ml", F.min(F.size(toks_raw)).over(w_m)).withColumn(
         "_toks", F.array_distinct(F.slice(toks_raw, 1, F.col("_ml")))
     )
@@ -554,21 +510,19 @@ def candidate_similarity_by_cut(
     jac = F.size(F.array_intersect("_toks", "_prev")) / F.size(
         F.array_union("_toks", "_prev")
     )
-    per_mention = paired.groupBy(query_col, cut_col, finetune_col).agg(
-        F.avg(jac).alias("_aj")
-    )
-    micro = per_mention.groupBy(cut_col).agg(
+    per_mention = paired.groupBy(*run).agg(F.avg(jac).alias("_aj"))
+    micro = per_mention.groupBy("cut").agg(
         F.round(F.avg("_aj"), 6).alias("jaccard_micro"),
         F.count(F.lit(1)).alias("n_mentions"),
     )
     macro = (
-        per_mention.groupBy(cut_col, finetune_col)
+        per_mention.groupBy("cut", "finetune_cut")
         .agg(F.avg("_aj").alias("_ajf"))
-        .groupBy(cut_col)
+        .groupBy("cut")
         .agg(F.round(F.avg("_ajf"), 6).alias("jaccard_macro"))
     )
-    return micro.join(macro, cut_col).select(
-        cut_col, "jaccard_micro", "jaccard_macro", "n_mentions"
+    return micro.join(macro, "cut").select(
+        "cut", "jaccard_micro", "jaccard_macro", "n_mentions"
     )
 
 
@@ -576,7 +530,6 @@ def key_skew_profile(
     df: DataFrame,
     key_cols: list[str],
     top_n: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Hot-key census — the diagnostic that decides whether a join or
     groupBy on ``key_cols`` needs salting (blocking.salt_hot_blocks) or
@@ -612,8 +565,8 @@ def key_skew_profile(
             "rank",
             *key_cols,
             F.col("n_rows").cast("long").alias("n_rows"),
-            F.round(F.col("n_rows") / F.col("n_total"), decimals).alias("share"),
-            F.round(F.col("n_rows") / F.col("_mean"), decimals).alias("skew_factor"),
+            F.round(F.col("n_rows") / F.col("n_total"), ROUND_DP).alias("share"),
+            F.round(F.col("n_rows") / F.col("_mean"), ROUND_DP).alias("skew_factor"),
             F.col("n_keys").cast("long").alias("n_keys"),
             F.col("n_total").cast("long").alias("n_total"),
         )

@@ -46,6 +46,8 @@ from tempel_spark.operators.topk import _rank_cut
 
 __all__ = ["pq_train", "pq_encode", "pq_adc_topk", "ivfpq_topk", "PQCodebooks"]
 
+N_ITER = 2  # k-means rounds of every codebook (and of IVFPQ's coarse cells)
+
 
 @dataclass
 class PQCodebooks:
@@ -57,31 +59,30 @@ class PQCodebooks:
 
 def pq_train(
     df: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     m: int = 2,
     k: int = 8,
-    n_iter: int = 2,
-    round_dp: int = ROUND_DP,
+    n_iter: int = N_ITER,
 ) -> PQCodebooks:
-    """Train m per-subspace codebooks with the engine's deterministic
-    k-means. The embedding dimension must divide evenly by ``m``."""
-    dim = len(df.select(emb_col).first()[0])
+    """Train m per-subspace codebooks over (vec_id, embedding) with the
+    engine's deterministic k-means. The embedding dimension must divide
+    evenly by ``m``; an empty ``df`` raises `ValueError`."""
+    first = df.select("embedding").first()
+    if first is None:
+        raise ValueError("pq_train: the input frame is empty")
+    dim = len(first[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     d_sub = dim // m
     books = []
     for s in range(m):
         sub = df.select(
-            id_col, F.slice(F.col(emb_col), s * d_sub + 1, d_sub).alias(emb_col)
+            "vec_id", F.slice(F.col("embedding"), s * d_sub + 1, d_sub).alias("embedding")
         )
-        books.append(
-            kmeans(sub, id_col, emb_col, k=k, n_iter=n_iter, round_dp=round_dp).centroids
-        )
+        books.append(kmeans(sub, k=k, n_iter=n_iter).centroids)
     return PQCodebooks(codebooks=books, m=m, k=k, d_sub=d_sub)
 
 
-def _sub_sq_dists(x: np.ndarray, cents: np.ndarray, round_dp: int) -> np.ndarray:
+def _sub_sq_dists(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     """Rounded squared L2 distances of every row of x (n×d_sub) to
     every centroid (k×d_sub) — one GEMM."""
     d = (
@@ -89,36 +90,30 @@ def _sub_sq_dists(x: np.ndarray, cents: np.ndarray, round_dp: int) -> np.ndarray
         - 2.0 * (x @ cents.T)
         + (cents * cents).sum(axis=1)
     )
-    return np.round(d, round_dp)
+    return np.round(d, ROUND_DP)
 
 
-def pq_encode(
-    df: DataFrame,
-    books: PQCodebooks,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    round_dp: int = ROUND_DP,
-) -> DataFrame:
-    """(id, codes array<int>): per subspace the nearest codebook entry
-    by rounded squared distance, ties to the smallest code id."""
+def pq_encode(df: DataFrame, books: PQCodebooks) -> DataFrame:
+    """(vec_id, codes array<int>) of (vec_id, embedding) rows: per
+    subspace the nearest codebook entry by rounded squared distance,
+    ties to the smallest code id."""
     cents = [np.asarray(b, dtype="float64") for b in books.codebooks]
     m, d_sub = books.m, books.d_sub
 
     def gen(batches):
         for pdf in batches:
-            x = np.asarray([list(v) for v in pdf[emb_col]], dtype="float64")
+            x = np.asarray([list(v) for v in pdf["embedding"]], dtype="float64")
             if not len(x):
                 continue
             codes = np.empty((len(x), m), dtype="int32")
             for s in range(m):
-                d = _sub_sq_dists(x[:, s * d_sub : (s + 1) * d_sub], cents[s], round_dp)
+                d = _sub_sq_dists(x[:, s * d_sub : (s + 1) * d_sub], cents[s])
                 # rounded argmin with ties to the smallest code: argmin
                 # scans left to right and keeps the FIRST minimum
                 codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "codes": list(codes)})
 
-    out_schema = f"{id_col} long, codes array<int>"
-    return df.select(id_col, emb_col).mapInPandas(gen, out_schema)
+    return df.select("vec_id", "embedding").mapInPandas(gen, "vec_id long, codes array<int>")
 
 
 def pq_adc_topk(
@@ -160,7 +155,7 @@ def pq_adc_topk(
         # m × n_q × k LUT tensor, built once per task executor-side
         luts = np.stack(
             [
-                _sub_sq_dists(qv[:, s * d_sub : (s + 1) * d_sub], cents[s], ROUND_DP)
+                _sub_sq_dists(qv[:, s * d_sub : (s + 1) * d_sub], cents[s])
                 for s in range(m)
             ]
         )
@@ -200,7 +195,6 @@ def ivfpq_topk(
     nprobe: int = 2,
     m: int = 2,
     k_pq: int = 8,
-    n_iter: int = 2,
     k: int = 5,
 ) -> DataFrame:
     """The full FAISS IVFPQ shape: coarse k-means cells + PRODUCT
@@ -216,7 +210,7 @@ def ivfpq_topk(
     Input: vectors df (vec_id, embedding) and queries (query_id,
     embedding); output as ``pq_adc_topk``.
 
-    Scale: training is n_iter+m bounded passes; the scan reads
+    Scale: training is N_ITER+m bounded passes; the scan reads
     nprobe/n_cells of the codes, one map pass, local top-k per batch,
     window merge — the plan is identical at 10^12 codes with the cell
     count scaled up.
@@ -230,7 +224,7 @@ def ivfpq_topk(
     qids_arr = qpdf["query_id"].to_numpy()
     qmat = np.asarray([list(v) for v in qpdf["embedding"]], dtype="float64")
 
-    coarse = kmeans(df, "vec_id", "embedding", k=n_cells, n_iter=n_iter)
+    coarse = kmeans(df, k=n_cells, n_iter=N_ITER)
     cents = np.asarray(coarse.centroids, dtype="float64")
     cent_map = {i: cents[i] for i in range(len(cents))}
 
@@ -258,7 +252,7 @@ def ivfpq_topk(
     residuals = assigned.mapInPandas(
         res_gen, "vec_id long, cluster_id int, embedding array<double>"
     )
-    books = pq_train(residuals, m=m, k=k_pq, n_iter=n_iter)
+    books = pq_train(residuals, m=m, k=k_pq)
     codes = pq_encode(residuals, books).join(
         coarse.assignments.select("vec_id", "cluster_id"), "vec_id"
     )
@@ -299,10 +293,7 @@ def ivfpq_topk(
                 qres = qm[qpos[qid]] - cents[cell]
                 luts[key] = np.stack(
                     [
-                        _sub_sq_dists(
-                            qres[s * d_sub : (s + 1) * d_sub][None, :], sub_cents[s],
-                            ROUND_DP,
-                        )[0]
+                        _sub_sq_dists(qres[s * d_sub : (s + 1) * d_sub][None, :], sub_cents[s])[0]
                         for s in range(m)
                     ]
                 )

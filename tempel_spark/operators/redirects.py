@@ -24,12 +24,7 @@ from pyspark.sql import functions as F
 __all__ = ["resolve_redirects", "strip_redirected"]
 
 
-def resolve_redirects(
-    redirects: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 64,
-) -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_hops: int = 64) -> DataFrame:
     """redirects: one row per redirect page (src → dst). Returns
     (src, resolved, n_hops, is_cycle): `resolved` is the first
     non-redirect target reached (NULL when the chain is a cycle or
@@ -38,7 +33,7 @@ def resolve_redirects(
     Duplicate sources are invalid input (a page has one redirect
     target) and raise rather than silently picking one.
     """
-    base = redirects.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    base = redirects.select("src", "dst")
     n_all = base.count()
     n_src = base.select("src").distinct().count()
     if n_all != n_src:
@@ -79,11 +74,9 @@ def resolve_redirects(
     return out.withColumnRenamed("hops", "n_hops")
 
 
-def strip_redirected(
-    df: DataFrame, redirects: DataFrame, id_col: str, src: str = "src"
-) -> DataFrame:
+def strip_redirected(df: DataFrame, redirects: DataFrame, id_col: str) -> DataFrame:
     """P6/U3: drop rows whose id is a redirect source — the
     reference's 'target qids with redirects in history' exclusion
     (s03_utils:595-596) as a left-anti join."""
-    keys = redirects.select(F.col(src).alias(id_col)).distinct()
+    keys = redirects.select(F.col("src").alias(id_col)).distinct()
     return df.join(keys, id_col, "left_anti")

@@ -23,7 +23,7 @@ Spark shape (designed for the 100 TB posture):
 * top-k per query is the standard window rank-filter, partitioned by
   query id (no global sort).
 
-Scores are rounded (default 6 dp) INSIDE the operator so that
+Scores are rounded (to `ROUND_DP`, 6 dp) INSIDE the operator so that
 per-query sums of double-precision term contributions — whose
 addition order Spark does not fix — compare stably across plans,
 partitionings, and the DuckDB oracle; ranking ties on the rounded
@@ -44,6 +44,8 @@ __all__ = [
     "unigram_logprob",
     "bigram_logprob",
 ]
+
+ROUND_DP = 6  # every score is rounded to this before it is compared
 
 
 def doc_term_freqs(
@@ -71,11 +73,6 @@ def bm25_scores(
     queries: DataFrame,
     doc_id: str = "doc_id",
     text_col: str = "text",
-    query_id: str = "query_id",
-    query_col: str = "query",
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_dp: int = 6,
 ) -> DataFrame:
     """BM25 relevance of every (query, doc) pair sharing ≥1 term.
 
@@ -84,8 +81,9 @@ def bm25_scores(
     query weights its contribution by its query term frequency —
     score = Σ_t qtf(t)·idf(t)·tf_part(t, d), the standard qtf·idf·tf
     form (qtf unsaturated, i.e. the k3→∞ limit of the full Okapi
-    query-side saturation).
-    Output: (query_id, doc_id, score) — score rounded to `round_dp`.
+    query-side saturation), with k1 = 1.2 and b = 0.75.
+    `queries` carries (query_id, query).
+    Output: (query_id, doc_id, score) — score rounded to `ROUND_DP`.
     """
     # pins (lazy localCheckpoint): tf feeds dl AND the pruned probe,
     # dl feeds the stats AND the candidate join, qterms feeds the
@@ -98,10 +96,10 @@ def bm25_scores(
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
     qterms = (
         queries.select(
-            F.col(query_id), F.explode(F.split(F.col(query_col), " ")).alias("term")
+            F.col("query_id"), F.explode(F.split(F.col("query"), " ")).alias("term")
         )
         .filter(F.col("term") != "")
-        .groupBy(query_id, "term")
+        .groupBy("query_id", "term")
         .agg(F.count(F.lit(1)).alias("qtf"))
         .localCheckpoint(eager=False)
     )
@@ -115,26 +113,21 @@ def bm25_scores(
         F.lit(1.0)
         + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    tf_part = (F.col("tf") * (1.0 + k1)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+    tf_part = (F.col("tf") * (1.0 + 1.2)) / (
+        F.col("tf") + 1.2 * (1.0 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
     )
     scored = (
         pruned.join(F.broadcast(qterms), "term")  # inverted-index probe
         .join(dl, doc_id)  # candidate-doc-scale, not corpus-scale
         .join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
-        .groupBy(query_id, doc_id)
-        .agg(F.round(F.sum(F.col("qtf") * idf * tf_part), round_dp).alias("score"))
+        .groupBy("query_id", doc_id)
+        .agg(F.round(F.sum(F.col("qtf") * idf * tf_part), ROUND_DP).alias("score"))
     )
     return scored
 
 
-def unigram_logprob(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_dp: int = 6,
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean token log-probability under the corpus's own
     unigram distribution — the C4/Gopher-style fluency signal a
     training-data pipeline thresholds on (gibberish and boilerplate
@@ -146,35 +139,29 @@ def unigram_logprob(
     count per term); total_tokens rides a one-row broadcast. Docs with
     no tokens produce no row (no probability mass to average).
 
-    Output: (id_col, n_tokens, logprob) — logprob rounded."""
-    postings = doc_term_freqs(docs, id_col, text_col).localCheckpoint(eager=False)
+    Output: (doc_id, n_tokens, logprob) — logprob rounded."""
+    postings = doc_term_freqs(docs, "doc_id", "text").localCheckpoint(eager=False)
     counts = postings.groupBy("term").agg(F.sum("tf").alias("c")).localCheckpoint(eager=False)
     total = counts.agg(F.sum("c").alias("total"))
     scored = (
         postings.join(counts, "term")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             F.round(
                 F.sum(F.col("tf") * F.log(F.col("c") / F.col("total")))
                 / F.sum("tf"),
-                round_dp,
+                ROUND_DP,
             ).alias("logprob"),
         )
     )
     return scored
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.5,
-    round_dp: int = 6,
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
-    add-α-smoothed bigram LM — the second-order fluency signal next to
+    add-α-smoothed (α = 0.5) bigram LM — the second-order fluency signal next to
     ``unigram_logprob`` (word salad scores low even when every word is
     common, because the TRANSITIONS are rare):
     score(d) = mean_{(v,w)∈d} ln((c(v,w) + α) / (c(v,·) + α·|V|)).
@@ -186,28 +173,29 @@ def bigram_logprob(
     row each. Docs with < 2 tokens emit no row (no transitions to
     average).
 
-    Output: (id_col, n_bigrams, logprob) — logprob rounded."""
-    arr = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    docs_a = docs.select(F.col(id_col), arr.alias("_toks")).filter(
+    Output: (doc_id, n_bigrams, logprob) — logprob rounded."""
+    alpha = 0.5
+    arr = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    docs_a = docs.select(F.col("doc_id"), arr.alias("_toks")).filter(
         F.size("_toks") >= 2
     )
     n1 = F.size(F.col("_toks")) - 1
     bg = docs_a.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.arrays_zip(
                 F.slice(F.col("_toks"), F.lit(1), n1).alias("v"),
                 F.slice(F.col("_toks"), F.lit(2), n1).alias("w"),
             )
         ).alias("_bg"),
-    ).select(id_col, F.col("_bg.v").alias("v"), F.col("_bg.w").alias("w"))
-    btf = bg.groupBy(id_col, "v", "w").agg(
+    ).select("doc_id", F.col("_bg.v").alias("v"), F.col("_bg.w").alias("w"))
+    btf = bg.groupBy("doc_id", "v", "w").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)
     cvw = btf.groupBy("v", "w").agg(F.sum("tf").alias("c")).localCheckpoint(eager=False)
     cv = cvw.groupBy("v").agg(F.sum("c").alias("cv"))
     vocab = (
-        docs.select(F.explode(F.filter(F.split(F.col(text_col), " "), lambda x: x != "")).alias("t"))
+        docs.select(F.explode(F.filter(F.split(F.col("text"), " "), lambda x: x != "")).alias("t"))
         # NOT "V": Spark's resolver is case-insensitive by default, so
         # a column named V is ambiguous with the bigram head column v
         # after the crossJoin
@@ -217,7 +205,7 @@ def bigram_logprob(
         btf.join(cvw, ["v", "w"])
         .join(cv, "v")
         .crossJoin(F.broadcast(vocab))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_bigrams"),
             F.round(
@@ -226,46 +214,40 @@ def bigram_logprob(
                     * F.log((F.col("c") + alpha) / (F.col("cv") + alpha * F.col("vsize")))
                 )
                 / F.sum("tf"),
-                round_dp,
+                ROUND_DP,
             ).alias("logprob"),
         )
     )
 
 
-def tfidf_keywords(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    round_dp: int = 6,
-) -> DataFrame:
+def tfidf_keywords(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF — the
     keyword-extraction pass a training-data pipeline uses for topic
     tagging and near-dup triage. tf-idf = (tf / dl) · ln(N / df)
     (length-normalized tf, plain idf — documented variant). Same
     postings + one-row-stats shape as BM25; ranking is per-document
-    (window over id_col), rounded-score ties break lexicographically
+    (window over doc_id), rounded-score ties break lexicographically
     on the term so the cut is deterministic.
 
-    Output: (id_col, term, tfidf, rank)."""
-    postings = doc_term_freqs(docs, id_col, text_col).localCheckpoint(eager=False)
-    df_ = postings.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
-    stats = postings.select(id_col, "dl").distinct().agg(
+    Output: (doc_id, term, tfidf, rank)."""
+    postings = doc_term_freqs(docs, "doc_id", "text").localCheckpoint(eager=False)
+    df_ = postings.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    stats = postings.select("doc_id", "dl").distinct().agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     scored = (
         postings.join(df_, "term")
         .crossJoin(F.broadcast(stats))
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.round(
                 (F.col("tf") / F.col("dl")) * F.log(F.col("n_docs") / F.col("df")),
-                round_dp,
+                ROUND_DP,
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("term").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
@@ -273,28 +255,21 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    **kw,
+    doc_id: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
     """Top-k documents per query by BM25 — rank over the scored pairs,
     partitioned by query (no global sort), rounded-score ties broken
     by doc id so the cut is deterministic."""
-    scored = bm25_scores(docs, queries, **kw)
-    qid = kw.get("query_id", "query_id")
-    did = kw.get("doc_id", "doc_id")
-    w = Window.partitionBy(qid).orderBy(F.col("score").desc(), F.col(did).asc())
+    scored = bm25_scores(docs, queries, doc_id, text_col)
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(doc_id).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
-) -> DataFrame:
+def tfidf_cosine_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """TF-IDF cosine similarity for CANDIDATE PAIRS (Cohen 1998's
     record-linkage string metric): each document is a tf·idf vector
     (idf = ln((N+1)/(df+1)) + 1, the smoothed sklearn form, so a
@@ -313,15 +288,15 @@ def tfidf_cosine_pairs(
     Output: id_a, id_b, tfidf_cosine (rounded).
     """
     toks = docs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
-            F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
         ).alias("tok"),
     )
     tf = toks.groupBy("_id", "tok").agg(
         F.count(F.lit(1)).alias("_tf")
     ).localCheckpoint(eager=False)
-    n_docs = docs.select(F.countDistinct(id_col).alias("_n"))
+    n_docs = docs.select(F.countDistinct("doc_id").alias("_n"))
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("_df"))
     w = (
         tf.join(dfreq, "tok")
@@ -358,7 +333,7 @@ def tfidf_cosine_pairs(
             F.round(
                 F.coalesce(F.col("_dot"), F.lit(0.0))
                 / (F.col("_na") * F.col("_nb")),
-                decimals,
+                ROUND_DP,
             ).alias("tfidf_cosine"),
         )
     )

@@ -25,28 +25,19 @@ from pyspark.sql import functions as F
 __all__ = ["build_title_history", "asof_join"]
 
 
-def build_title_history(
-    revisions: DataFrame,
-    page_col: str = "page_id",
-    title_col: str = "title",
-    ts_col: str = "rev_ts",
-) -> DataFrame:
-    """Revision stream → title-change events (title, valid_from,
-    page_id): one row whenever a page's title differs from its own
+def build_title_history(revisions: DataFrame) -> DataFrame:
+    """Revision stream (page_id, title, rev_ts) → title-change events
+    (title, valid_from, page_id): one row whenever a page's title differs from its own
     previous revision (the reference's detect-changed-title fold,
     wikipedia_history_reader.py:301-368). Deterministic: ties on
     (page, ts) ordered by title."""
-    w = Window.partitionBy(page_col).orderBy(F.col(ts_col).asc(), F.col(title_col).asc())
-    prev = F.lag(title_col).over(w)
+    w = Window.partitionBy("page_id").orderBy(F.col("rev_ts").asc(), F.col("title").asc())
+    prev = F.lag("title").over(w)
     return (
-        revisions.select(page_col, title_col, ts_col)
+        revisions.select("page_id", "title", "rev_ts")
         .withColumn("_prev", prev)
-        .filter(F.col("_prev").isNull() | (F.col("_prev") != F.col(title_col)))
-        .select(
-            F.col(title_col).alias("title"),
-            F.col(ts_col).alias("valid_from"),
-            F.col(page_col).alias("page_id"),
-        )
+        .filter(F.col("_prev").isNull() | (F.col("_prev") != F.col("title")))
+        .select("title", F.col("rev_ts").alias("valid_from"), "page_id")
     )
 
 
@@ -55,29 +46,28 @@ def asof_join(
     changes: DataFrame,
     key: str,
     probe_ts: str,
-    change_ts: str = "valid_from",
     payload: list[str] | None = None,
 ) -> DataFrame:
     """For each probe row: attributes of the LATEST change with
-    change_ts ≤ probe_ts for the same key (equal timestamps match —
+    valid_from ≤ probe_ts for the same key (equal timestamps match —
     the reference joins stats to the title row OF the cut itself,
     s02:275-277).
 
-    changes must be unique per (key, change_ts) — enforced here,
+    changes must be unique per (key, valid_from) — enforced here,
     because a tie would make the carried payload nondeterministic.
     Payload columns come back NULL for probes before the first
     change.
     """
-    payload = payload or [c for c in changes.columns if c not in (key, change_ts)]
+    payload = payload or [c for c in changes.columns if c not in (key, "valid_from")]
     # pin: the eager uniqueness probe below materializes the change
     # frame once and the union-merge then reads the pinned RDD instead
     # of re-deriving the whole changes chain a second time
     changes = changes.localCheckpoint(eager=False)
     dup = (
-        changes.groupBy(key, change_ts).count().filter(F.col("count") > 1).limit(1).count()
+        changes.groupBy(key, "valid_from").count().filter(F.col("count") > 1).limit(1).count()
     )
     if dup:
-        raise ValueError(f"changes not unique per ({key}, {change_ts})")
+        raise ValueError(f"changes not unique per ({key}, valid_from)")
 
     probe_cols = probes.columns
     clash = set(probe_cols) & ({*payload, "asof_valid_from"})
@@ -91,11 +81,11 @@ def asof_join(
     # retry-nondeterministic), the union itself preserves identity.
     c = changes.select(
         F.col(key).alias("_k"),
-        F.col(change_ts).alias("_ts"),
+        F.col("valid_from").alias("_ts"),
         F.lit(1).alias("_is_change"),
         *[F.lit(None).cast(probe_types[pc]).alias(pc) for pc in probe_cols],
         *[F.col(p) for p in payload],
-        F.col(change_ts).alias("asof_valid_from"),
+        F.col("valid_from").alias("asof_valid_from"),
     )
     pu = probes.select(
         F.col(key).alias("_k"),
@@ -103,7 +93,7 @@ def asof_join(
         F.lit(0).alias("_is_change"),
         *probe_cols,
         *[F.lit(None).cast(change_types[p]).alias(p) for p in payload],
-        F.lit(None).cast(change_types[change_ts]).alias("asof_valid_from"),
+        F.lit(None).cast(change_types["valid_from"]).alias("asof_valid_from"),
     )
     # change rows sort BEFORE probe rows at equal ts (desc on the tag)
     w = (

@@ -49,16 +49,14 @@ def golden_record(
     components: DataFrame,
     records: DataFrame,
     rules: dict[str, str],
-    id_col: str = "node",
-    cluster_col: str = "component",
     ts_col: str = "ts",
 ) -> DataFrame:
     """Fuse each cluster's member records into one canonical row.
 
-    components: (id_col, cluster_col) assignment (e.g. the output of
-    ``clustering.connected_components``). records: one row per id with
-    the attribute columns named in ``rules``. Output: one row per
-    cluster — cluster_col, n_members, and one column per rule keeping
+    components: (node, component) assignment (e.g. the output of
+    ``clustering.connected_components``). records: one row per node
+    with the attribute columns named in ``rules``. Output: one row per
+    cluster — component, n_members, and one column per rule keeping
     its attribute name.
 
     ``latest``/``earliest`` read the record timestamp from ``ts_col``.
@@ -71,44 +69,44 @@ def golden_record(
     # Project records down to the columns the rules actually read:
     # callers often pass a frame that still carries its own cluster
     # assignment (components and records usually come from the same
-    # join), and an un-pruned join would make cluster_col ambiguous.
+    # join), and an un-pruned join would make `component` ambiguous.
     keep = list(dict.fromkeys(
-        [id_col, *rules, *((ts_col,) if needs_ts else ())]
+        ["node", *rules, *((ts_col,) if needs_ts else ())]
     ))
-    if cluster_col in keep:
+    if "component" in keep:
         raise ValueError(
-            f"records column {cluster_col!r} collides with cluster_col — "
+            "records column 'component' collides with the cluster column — "
             "rename one of them"
         )
-    j = components.select(id_col, cluster_col).join(records.select(*keep), id_col)
-    out = j.groupBy(cluster_col).agg(F.count(F.lit(1)).alias("n_members"))
+    j = components.select("node", "component").join(records.select(*keep), "node")
+    out = j.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))
     for col, rule in rules.items():
         c = F.col(col)
         if rule == "majority":
             counted = (
                 j.filter(c.isNotNull())
-                .groupBy(cluster_col, col)
+                .groupBy("component", col)
                 .agg(F.count(F.lit(1)).alias("_n"))
             )
             # most frequent, smallest value on ties: min of (-n, value)
-            picked = counted.groupBy(cluster_col).agg(
+            picked = counted.groupBy("component").agg(
                 F.min(F.struct((-F.col("_n")).alias("k"), c.alias("v")))["v"].alias(col)
             )
         elif rule == "longest":
-            picked = j.groupBy(cluster_col).agg(
+            picked = j.groupBy("component").agg(
                 F.min(_guarded(c, -F.length(c)))["v"].alias(col)
             )
         elif rule == "latest":
-            picked = j.groupBy(cluster_col).agg(
+            picked = j.groupBy("component").agg(
                 F.max(_guarded(c, F.col(ts_col)))["v"].alias(col)
             )
         elif rule == "earliest":
-            picked = j.groupBy(cluster_col).agg(
+            picked = j.groupBy("component").agg(
                 F.min(_guarded(c, F.col(ts_col)))["v"].alias(col)
             )
         elif rule == "min":
-            picked = j.groupBy(cluster_col).agg(F.min(c).alias(col))
+            picked = j.groupBy("component").agg(F.min(c).alias(col))
         else:  # max
-            picked = j.groupBy(cluster_col).agg(F.max(c).alias(col))
-        out = out.join(picked, cluster_col, "left")
+            picked = j.groupBy("component").agg(F.max(c).alias(col))
+        out = out.join(picked, "component", "left")
     return out

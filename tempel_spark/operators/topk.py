@@ -133,7 +133,7 @@ def _hyperplane_proj(emb, b: int, dim: int | None = None):
     )
 
 
-def hyperplane_bucket(emb_col, n_bits: int = 4, dim: int | None = None, seed: int = 7):
+def hyperplane_bucket(emb_col, n_bits: int = 4, dim: int | None = None):
     """Deterministic coarse quantizer: sign of Σ w_i·x_i per bit (see
     ``_hyperplane_proj``). Pass ``dim`` when the embedding width is
     known so the weights become literals instead of per-row md5s."""
@@ -292,15 +292,10 @@ def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:
     return hit / total if total else 1.0
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    q_col: str = "qvec",
-    scale_col: str = "qscale",
-) -> DataFrame:
-    """Symmetric per-vector int8 scalar quantization: scale =
-    max|x| / 127, q_i = round(x_i / scale) in [-127, 127] as
-    array<int>; an all-zero vector gets scale 0 and a zero qvec.
+def quantize_embeddings(df: DataFrame) -> DataFrame:
+    """Symmetric per-vector int8 scalar quantization of ``embedding``:
+    qscale = max|x| / 127, qvec_i = round(x_i / qscale) in [-127, 127]
+    as array<int>; an all-zero vector gets qscale 0 and a zero qvec.
 
     The memory/bandwidth half of the similarity-search scale path: at
     100 TB the embedding column is the dominant shuffle and cache
@@ -309,14 +304,14 @@ def quantize_embeddings(
     bit-identical on any engine or partitioning) — rank by quantized
     dot, refine the short list at full precision. All native
     expressions (array_max + transform), whole-stage codegen."""
-    v = F.transform(vec_col, lambda x: x.cast("double"))
-    mx = F.array_max(F.transform(vec_col, lambda x: F.abs(x.cast("double"))))
+    v = F.transform("embedding", lambda x: x.cast("double"))
+    mx = F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
     scale = mx / F.lit(127.0)
     q = F.when(
         scale > 0,
         F.transform(v, lambda x: F.round(x / scale, 0).cast("int")),
     ).otherwise(F.transform(v, lambda x: F.lit(0)))
-    return df.withColumn(scale_col, scale).withColumn(q_col, q)
+    return df.withColumn("qscale", scale).withColumn("qvec", q)
 
 
 def quantized_dot_topk(

@@ -89,6 +89,7 @@ def stats_from_pipeline(pipeline_out: dict) -> DataFrame:
 
 
 DEFAULT_SUBSETS = ("train", "validation", "test")
+SEED = 42  # hash seed of every deterministic draw (balancing, instance pick)
 
 
 def apply_quality_filters(stats: DataFrame, filters: dict) -> DataFrame:
@@ -271,7 +272,7 @@ def _capped_counts(assigned: DataFrame, max_mentions_per_entity: int) -> DataFra
     return n0
 
 
-def _unit_race(d: DataFrame, seed: int, tag: str | None = None) -> DataFrame:
+def _unit_race(d: DataFrame, tag: str | None = None) -> DataFrame:
     """The deterministic weighted unit race both V3 balancers end in.
     Every row of ``d`` (entity_id, snapshot_ts, subset, _n, _diff,
     _reduce) offers ``_diff`` removable units; per (subset, cut) the
@@ -292,7 +293,7 @@ def _unit_race(d: DataFrame, seed: int, tag: str | None = None) -> DataFrame:
         "subset",
         F.col("_unit").cast("string"),
     ]
-    race = md5_uniform(F.concat_ws(":", *([F.lit(tag)] if tag else []), *key), seed=seed)
+    race = md5_uniform(F.concat_ws(":", *([F.lit(tag)] if tag else []), *key), seed=SEED)
     w_units = Window.partitionBy("subset", "snapshot_ts").orderBy(
         race.asc(), F.col("entity_id").cast("string").asc(), F.col("_unit").asc()
     )
@@ -313,7 +314,6 @@ def _unit_race(d: DataFrame, seed: int, tag: str | None = None) -> DataFrame:
 def balanced_quotas(
     assigned: DataFrame,
     max_mentions_per_entity: int = 500,
-    seed: int = 42,
 ) -> DataFrame:
     """The V3 balancing algorithm (s03:430-604): per (entity, cut,
     subset) quota = capped link total, then every cut is reduced to
@@ -361,7 +361,7 @@ def balanced_quotas(
         "_reduce", F.col("_total") - F.col("_target")
     ).localCheckpoint(eager=False)  # consumed by units AND the final join
 
-    return _unit_race(d, seed)
+    return _unit_race(d)
 
 
 def allocate_mentions(assigned: DataFrame, quotas: DataFrame) -> DataFrame:
@@ -405,7 +405,7 @@ def assign_birth_cut(
 
 
 def equalize_entity_counts(
-    assigned: DataFrame, seed: int = 42, portable_hash: bool = False
+    assigned: DataFrame, portable_hash: bool = False
 ) -> DataFrame:
     """s03:845-883: every cut keeps the same number of NEW entities —
     cuts above the minimum are downsampled. Deterministic hash-rank
@@ -421,9 +421,9 @@ def equalize_entity_counts(
     counts = per_cut.groupBy("snapshot_ts").agg(F.count(F.lit(1)).alias("_n"))
     min_n = counts.agg(F.min("_n").alias("m")).collect()[0]["m"]
     rank_u = (
-        md5_uniform(F.col("entity_id").cast("string"), seed=seed + 3)
+        md5_uniform(F.col("entity_id").cast("string"), seed=SEED + 3)
         if portable_hash
-        else hash_uniform("entity_id", seed=seed + 3)
+        else hash_uniform("entity_id", seed=SEED + 3)
     )
     w = Window.partitionBy("snapshot_ts").orderBy(
         rank_u.asc(), F.col("entity_id").asc()
@@ -439,7 +439,6 @@ def equalize_entity_counts(
 def balanced_quotas_positional(
     assigned: DataFrame,
     max_mentions_per_entity: int = 500,
-    seed: int = 42,
 ) -> DataFrame:
     """The NEW-entities V3 balancing (s03:894-1033): entities are NOT
     shared across cuts, so the surplus of a (subset, cut) row is
@@ -501,7 +500,7 @@ def balanced_quotas_positional(
         .withColumn("_reduce", F.col("_total") - F.col("_target"))
         .localCheckpoint(eager=False)  # consumed by units AND the final join
     )
-    return _unit_race(d, seed, tag="new").filter(F.col("quota") > 0)
+    return _unit_race(d, tag="new").filter(F.col("quota") > 0)
 
 
 def create_new_entities_dataset(
@@ -511,10 +510,8 @@ def create_new_entities_dataset(
     mentions: DataFrame | None = None,
     subsets: tuple[str, ...] = DEFAULT_SUBSETS,
     filters: dict | None = None,
-    must_link_ratio: float = 0.2,
     containment_links: bool = True,
     max_mentions_per_entity: int = 500,
-    seed: int = 42,
     fanout_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """The reference's NEW-entities category (s03:616-1036): entities
@@ -523,10 +520,10 @@ def create_new_entities_dataset(
     allocation / instance pick / fan-out as the continual flow."""
     filtered = apply_quality_filters(stats, filters) if filters else stats
     scoped = assign_birth_cut(filtered, created, snapshots)
-    assigned = assign_subsets_leakage_safe(scoped, subsets, must_link_ratio, containment_links)
+    assigned = assign_subsets_leakage_safe(scoped, subsets, containment_links=containment_links)
     covered = keep_fully_covered(assigned, n_subsets=len(subsets))
-    equalized = equalize_entity_counts(covered, seed=seed)
-    quotas = balanced_quotas_positional(equalized, max_mentions_per_entity, seed=seed)
+    equalized = equalize_entity_counts(covered)
+    quotas = balanced_quotas_positional(equalized, max_mentions_per_entity)
     allocations = allocate_mentions(equalized, quotas)
     out = {
         "scoped": scoped,
@@ -537,7 +534,7 @@ def create_new_entities_dataset(
         "allocations": allocations,
     }
     if mentions is not None:
-        out["dataset_mentions"] = select_mention_instances(mentions, allocations, seed=seed)
+        out["dataset_mentions"] = select_mention_instances(mentions, allocations)
         if fanout_path is not None:
             from tempel_spark.sources.sinks import write_fanout
 
@@ -548,14 +545,12 @@ def create_new_entities_dataset(
 def select_mention_instances(
     mentions: DataFrame,
     allocations: DataFrame,
-    seed: int = 42,
-    context_chars: int = 100,
 ) -> DataFrame:
     """R4 + F14: pick exactly n_to_extract occurrences per
     (snapshot, subset, surface) by deterministic hash rank (the
     reference shuffles anchor pages and takes the first n,
-    s03_utils:62-65,184), then cut left/right context windows around
-    the span (s03_utils:70-91).
+    s03_utils:62-65,184), then cut 100-character left/right context
+    windows around the span (s03_utils:70-91).
 
     mentions: occurrence table (snapshot_ts, surface, mention_id,
     text, span_start) — 10^12-scale; the allocation table is small →
@@ -601,12 +596,12 @@ def select_mention_instances(
         )
         m = mentions.join(F.broadcast(al), ["snapshot_ts", "surface"])
     w = Window.partitionBy("snapshot_ts", "subset", "surface", "entity_id").orderBy(
-        hash_uniform("mention_id", seed=seed).asc(), F.col("mention_id").asc()
+        hash_uniform("mention_id", seed=SEED).asc(), F.col("mention_id").asc()
     )
     picked = m.withColumn("_irn", F.row_number().over(w)).filter(
         F.col("_irn") <= F.col("n_to_extract")
     )
-    left, right = context_window("text", F.col("span_start") + 1, context_chars)
+    left, right = context_window("text", F.col("span_start") + 1, 100)
     return picked.select(
         "snapshot_ts",
         "subset",
@@ -623,11 +618,9 @@ def create_dataset(
     mentions: DataFrame | None = None,
     subsets: tuple[str, ...] = DEFAULT_SUBSETS,
     filters: dict | None = None,
-    must_link_ratio: float = 0.2,
     containment_links: bool = True,
     max_mentions_per_entity: int = 500,
     n_snapshots: int | None = None,
-    seed: int = 42,
     fanout_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """The composed s03 plan. Returns every stage (for checkpointing /
@@ -635,17 +628,16 @@ def create_dataset(
     (snapshot_ts, subset) like the reference's per-(cut,subset) JSONL
     sinks (S8).
 
-    containment_links / must_link_ratio tune the leakage rule to the
-    corpus: the reference's containment link is right for Wikipedia
+    containment_links tunes the leakage rule to the corpus: the reference's containment link is right for Wikipedia
     aliases; over ER-resolved clusters whose members are lexically
     similar by construction it can collapse every entity into one
     subset-cluster (then keep_fully_covered drops everything) —
     disable it and/or reduce the subset count there."""
     filtered = apply_quality_filters(stats, filters) if filters else stats
     common = entities_in_all_snapshots(filtered, n_snapshots)
-    assigned = assign_subsets_leakage_safe(common, subsets, must_link_ratio, containment_links)
+    assigned = assign_subsets_leakage_safe(common, subsets, containment_links=containment_links)
     covered = keep_fully_covered(assigned, n_subsets=len(subsets))
-    quotas = balanced_quotas(covered, max_mentions_per_entity, seed=seed)
+    quotas = balanced_quotas(covered, max_mentions_per_entity)
     allocations = allocate_mentions(covered, quotas)
     out = {
         "filtered": filtered,
@@ -656,7 +648,7 @@ def create_dataset(
         "allocations": allocations,
     }
     if mentions is not None:
-        out["dataset_mentions"] = select_mention_instances(mentions, allocations, seed=seed)
+        out["dataset_mentions"] = select_mention_instances(mentions, allocations)
         if fanout_path is not None:
             from tempel_spark.sources.sinks import write_fanout
 

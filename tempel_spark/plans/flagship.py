@@ -35,9 +35,10 @@ def _docs_with_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def er_match_pairs(spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+def er_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocking (first-2-words key) + within-block pair generation +
-    distinct-token-Jaccard scoring → match edges (id_a < id_b).
+    distinct-token-Jaccard scoring → match edges (id_a < id_b) with
+    Jaccard ≥ ``JACCARD_THRESHOLD``.
 
     Jaccard on the pre-tokenized distinct sets: |A∩B| via
     array_intersect, |A∪B| = |A|+|B|−|A∩B| (exact set identity — both
@@ -59,16 +60,16 @@ def er_match_pairs(spark: SparkSession, sf_dir: str, threshold: float = JACCARD_
         a.join(b, "block_key")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("_j", jac)
-        .filter(F.col("_j") >= threshold)  # threshold on the raw double in BOTH engines
+        .filter(F.col("_j") >= JACCARD_THRESHOLD)  # threshold on the raw double in BOTH engines
         .select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
         .dropDuplicates(["id_a", "id_b"])
     )
 
 
-def er_components(spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+def er_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive clusters over the match edges (large-star/small-star
     CC) with every document as a node (singletons keep their own id)."""
-    edges = er_match_pairs(spark, sf_dir, threshold)
+    edges = er_match_pairs(spark, sf_dir)
     nodes = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     res = connected_components(edges, nodes=nodes)
     return res.components.select(

@@ -241,7 +241,7 @@ def run_pipeline(
     """
     # default = the reference's 10 yearly cuts 2013-2022
     # (s01_config_content.json:29-40)
-    snaps = snapshots or yearly_snapshots(2013, 10)
+    snaps = snapshots or yearly_snapshots()
     timings: dict[str, float] = {}
     compiles: dict[str, int] = {}
 

@@ -191,7 +191,7 @@ def q_dataset_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats, subsets=_SUBS, must_link_ratio=0.0, containment_links=False
     )
     covered = keep_fully_covered(assigned, n_subsets=_N_SUBSETS)
-    quotas = balanced_quotas(covered, max_mentions_per_entity=_CAP, seed=42)
+    quotas = balanced_quotas(covered, max_mentions_per_entity=_CAP)
     return quotas.groupBy("subset", "snapshot_ts").agg(
         F.sum("quota").cast("long").alias("total_quota")
     )
@@ -307,8 +307,8 @@ def q_dataset_new_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats, subsets=_SUBS, must_link_ratio=0.0, containment_links=False
     )
     covered = keep_fully_covered(assigned, n_subsets=_N_SUBSETS)
-    equalized = equalize_entity_counts(covered, seed=42, portable_hash=True)
-    quotas = balanced_quotas_positional(equalized, max_mentions_per_entity=25, seed=42)
+    equalized = equalize_entity_counts(covered, portable_hash=True)
+    quotas = balanced_quotas_positional(equalized, max_mentions_per_entity=25)
     return quotas.groupBy("subset", "snapshot_ts").agg(
         F.sum("quota").cast("long").alias("total_quota"),
         F.count(F.lit(1)).alias("n_entities"),
@@ -347,7 +347,7 @@ def q_title_scd(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = o.filter(F.col("o_orderkey") % 10 == 5).select(
         "o_orderkey", F.col("o_orderpriority").alias("title"), F.col("o_orderdate").alias("ts")
     )
-    out = asof_join(probes, changes, key="title", probe_ts="ts", change_ts="valid_from")
+    out = asof_join(probes, changes, key="title", probe_ts="ts")
     return out.select("o_orderkey", "title", "page_id", "asof_valid_from")
 
 

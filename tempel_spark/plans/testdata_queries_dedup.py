@@ -72,7 +72,7 @@ def q_ngram_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     g = d.select(
         "doc_id", "lang",
-        F.array_distinct(char_shingles(F.substring("text", 1, 40), 3)).alias("grams"),
+        F.array_distinct(char_shingles(F.substring("text", 1, 40))).alias("grams"),
     )
     a = g.select(F.col("doc_id").alias("id_a"), "lang", F.col("grams").alias("ga"))
     b = g.select(F.col("doc_id").alias("id_b"), "lang", F.col("grams").alias("gb"))
@@ -453,7 +453,7 @@ def q_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tempel_spark.operators.dedup import repeated_passages
 
     d = t(spark, sf_dir, "documents")
-    return repeated_passages(d, "doc_id", "text", n=8, min_count=2)
+    return repeated_passages(d, "doc_id", "text")
 
 
 @register(
@@ -500,7 +500,7 @@ def q_excise_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tempel_spark.operators.dedup import excise_spans, repeated_passages
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    spans = repeated_passages(d, "doc_id", "text", n=8, min_count=2).select(
+    spans = repeated_passages(d, "doc_id", "text").select(
         "doc_id",
         F.col("span_start").alias("start_tok"),
         (F.col("span_end") + 7).alias("end_tok"),
@@ -563,7 +563,7 @@ def q_passage_dedup_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tempel_spark.operators.dedup import passage_dedup
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return passage_dedup(d, "doc_id", "text", n=8, min_count=2).select(
+    return passage_dedup(d, "doc_id", "text").select(
         "doc_id", "text_clean", "n_tokens_removed"
     )
 
@@ -1200,7 +1200,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tempel_spark.operators.dedup import winnow_similar_pairs
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return winnow_similar_pairs(d, "doc_id", "text", k=20, w=10, max_df=5, min_shared=2)
+    return winnow_similar_pairs(d, k=20, w=10, max_df=5, min_shared=2)
 
 
 @register(
@@ -1240,7 +1240,7 @@ def q_quantized_dot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(F.col("vec_id").alias("query_id"), "embedding")
     c = e.filter(F.col("vec_id") >= 8).select(F.col("vec_id").alias("cand_id"), "embedding")
-    return quantized_dot_topk(q, c, k=3)
+    return quantized_dot_topk(q, c)
 
 
 @register(
@@ -1293,7 +1293,7 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("la") == F.col("lb")).alias("is_match"),
         )
     )
-    return pr_curve(pairs, score_col="score", label_col="is_match", decimals=2)
+    return pr_curve(pairs, decimals=2)
 
 
 # --- product quantization + ADC (round 5) ----------------------------
@@ -1371,7 +1371,7 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tempel_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
 
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    books = pq_train(e, m=2, k=8, n_iter=2)
+    books = pq_train(e, m=2, k=8)
     codes = pq_encode(e, books)
     queries = e.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1430,4 +1430,4 @@ def q_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = e.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivfpq_topk(e, queries, n_cells=8, nprobe=2, m=2, k_pq=8, k=5)
+    return ivfpq_topk(e, queries, n_cells=8, k=5)

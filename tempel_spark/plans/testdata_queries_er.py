@@ -160,7 +160,6 @@ def q_asof_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof_stable_version(
         e.withColumnRenamed("ts", "rev_ts"),
         key_cols=["user_id"],
-        rev_ts_col="rev_ts",
         snapshots=["2024-04-01 00:00:00", "2024-08-01 00:00:00"],
         min_days_stable=1,
         max_look_back_days=7,

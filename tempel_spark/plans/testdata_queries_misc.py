@@ -677,7 +677,7 @@ def q_paper_stats_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("mention_id") % 50) + 7 * (F.col("i") % 2)).alias("score"),
         (F.col("i") == F.col("mention_id") % 5).alias("correct"),
     )
-    return paper_stats_matrix(preds, years=[2013, 2014, 2015], k=64)
+    return paper_stats_matrix(preds, years=[2013, 2014, 2015])
 
 
 @register(
@@ -1177,9 +1177,7 @@ def q_cluster_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("snap_year", F.col("user_id").alias("member"),
                 F.col("event_type").alias("component"))
     )
-    return cluster_evolution(
-        asg, snapshot_col="snap_year", member_col="member", comp_col="component"
-    )
+    return cluster_evolution(asg, snapshot_col="snap_year")
 
 
 @register(

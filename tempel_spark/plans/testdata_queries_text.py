@@ -238,7 +238,7 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     is `spread` so the per-row md5 work uses every core instead of
     one row-group-bound task."""
     d = spread(t(spark, sf_dir, "documents"))
-    sig = minhash_signature(F.substring("text", 1, 60), n_hashes=4, k=3)
+    sig = minhash_signature(F.substring("text", 1, 60), n_hashes=4)
     fields = bind_once(
         sig,
         lambda a: F.array(
@@ -263,7 +263,7 @@ def q_lsh_block_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band → bucket-join blocking: hot-block size census (the
     skew-detection input for salting)."""
     d = spread(t(spark, sf_dir, "documents"))
-    sig = minhash_signature(F.substring("text", 1, 60), n_hashes=2, k=3)
+    sig = minhash_signature(F.substring("text", 1, 60), n_hashes=2)
     # bind the signature once: two element_at references would carry
     # two copies of the whole shingle+md5 tree (same fix as
     # q_minhash_signature)

@@ -68,9 +68,9 @@ _META_PROP = "tempel.inline_meta"
 
 
 def upsert_bucket_col(key_cols: tuple[str, ...], n_parts: int):
-    """The deterministic bucket id an upsert key hashes to — exposed so
-    callers (e.g. incremental ER's anti-join) can partition-prune their
-    own reads to exactly the buckets a delta touches."""
+    """The deterministic bucket id an upsert key hashes to — shared by
+    the fold and `Catalog.read_upsert_prior`, whose pruned reads touch
+    exactly the buckets a delta hashes to."""
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_parts)).cast("int")
 
 
@@ -441,6 +441,36 @@ class Catalog:
             .parquet(*dirs)
             .drop(_BUCKET_COL)
         )
+
+    def read_upsert_prior(
+        self, name: str, delta: DataFrame, key_cols: tuple[str, ...], n_parts: int
+    ) -> tuple[DataFrame | None, int]:
+        """The rows of upsert table `name` that a fold of `delta` can
+        meet, and the table's bucket count — or (None, n_parts) before
+        the table's first committed fold.
+
+        The bucket layout is fixed at table creation, so the table's
+        own n_parts wins over the caller's ``n_parts`` (a mismatched
+        count would read the wrong buckets and miss prior rows); the
+        caller folds with the returned count. Parquet mode reads only
+        the buckets `delta`'s keys hash to (one distinct-bucket
+        collect); Iceberg mode has no bucket dirs to prune by hand and
+        reads the whole table, leaving pruning to its bucket transform.
+        """
+        spec = self.upsert_spec(name)
+        if spec is not None:
+            n_parts = spec["n_parts"]
+        if not self.exists(name):
+            return None, n_parts
+        if self.use_iceberg:
+            return self.read(name), n_parts
+        touched = [
+            r["_b"]
+            for r in delta.select(upsert_bucket_col(key_cols, n_parts).alias("_b"))
+            .distinct()
+            .collect()
+        ]
+        return self.read_upsert_buckets(name, touched), n_parts
 
     def upsert_fold(
         self,

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tempel_spark.operators.dedup import winnow_fingerprints
-from tempel_spark.sources.catalog import Catalog, upsert_bucket_col
+from tempel_spark.sources.catalog import Catalog
 from tempel_spark.streaming._replay import batch_content_fp, check_replay, make_marker
 
 __all__ = ["stream_incremental_winnow", "read_winnow_pairs", "DOC_SCHEMA"]
@@ -109,37 +109,22 @@ def stream_incremental_winnow(
             state_desc="winnow state",
         ):
             return
-        # The bucket layout is fixed at table creation: adopt the
-        # table's n_parts for this batch's pruned reads BEFORE any
-        # append — trusting a caller-supplied state_parts that differs
-        # would read the wrong buckets, under-count df, and pollute the
-        # append-only pair log with uncappable bogus pairs.
-        parts = state_parts
-        spec = catalog.upsert_spec(_DF)
-        if spec is not None:
-            parts = spec["n_parts"]
         # delta df + bucket-priced merge with previous df state: only
         # fps touched by this batch can form new pairs, so the cap
-        # check reads exactly the delta's hash buckets.
+        # check reads exactly the delta's hash buckets. `parts` is the
+        # table's own bucket count, adopted BEFORE any append — trusting
+        # a caller-supplied state_parts that differs would read the
+        # wrong buckets, under-count df, and pollute the append-only
+        # pair log with uncappable bogus pairs.
         delta_df = fps_new.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs"))
         merged = delta_df
-        if catalog.exists(_DF):
-            if catalog.use_iceberg:
-                prev = catalog.read(_DF)
-            else:
-                touched = [
-                    r["_b"]
-                    for r in delta_df.select(
-                        upsert_bucket_col(("fp",), parts).alias("_b")
-                    ).distinct().collect()
-                ]
-                prev = catalog.read_upsert_buckets(_DF, touched)
-            if prev is not None:
-                merged = (
-                    delta_df.unionByName(prev.join(delta_df.select("fp"), "fp", "leftsemi"))
-                    .groupBy("fp")
-                    .agg(F.sum("n_docs").alias("n_docs"))
-                )
+        prev, parts = catalog.read_upsert_prior(_DF, delta_df, ("fp",), state_parts)
+        if prev is not None:
+            merged = (
+                delta_df.unionByName(prev.join(delta_df.select("fp"), "fp", "leftsemi"))
+                .groupBy("fp")
+                .agg(F.sum("n_docs").alias("n_docs"))
+            )
         # rare is tiny (<= the batch's touched fps) but its lineage
         # holds the whole bucket-pruned state read — checkpoint it once
         # so the old-side join below doesn't re-run that scan.

@@ -284,31 +284,14 @@ def stream_incremental_er(
             return
         # BUCKET-PRICED newness check: a norm can only collide with
         # vocab rows in its own hash bucket, so the anti-join reads
-        # exactly the delta's buckets (partition-pruned), never the
-        # full state table. Iceberg mode has no local bucket dirs to
-        # prune by hand — the bucket(n, norm) partition transform lets
-        # the engine prune the same way on the full read.
-        # the bucket layout is fixed at table creation — adopt the
-        # table's n_parts BEFORE any append, or a resume with a
-        # different state_parts would compute wrong bucket ids, miss
-        # prior vocab rows, and pollute the pair log before
-        # upsert_fold's spec check could fire
-        spec = catalog.upsert_spec(_VOCAB)
-        parts = spec["n_parts"] if spec is not None else state_parts
-        prev_touched = None
-        if catalog.use_iceberg:
-            if catalog.exists(_VOCAB):
-                prev_touched = catalog.read(_VOCAB)
-        else:
-            from tempel_spark.sources.catalog import upsert_bucket_col
-
-            touched = [
-                r["_b"]
-                for r in bn.select(
-                    upsert_bucket_col(("snapshot_ts", "norm"), parts).alias("_b")
-                ).distinct().collect()
-            ]
-            prev_touched = catalog.read_upsert_buckets(_VOCAB, touched)
+        # exactly the delta's buckets, never the full state table.
+        # `parts` is the table's own bucket count, adopted BEFORE any
+        # append: a resume with a different state_parts would otherwise
+        # compute wrong bucket ids, miss prior vocab rows, and pollute
+        # the pair log before upsert_fold's spec check could fire
+        prev_touched, parts = catalog.read_upsert_prior(
+            _VOCAB, bn, ("snapshot_ts", "norm"), state_parts
+        )
         if prev_touched is not None:
             # materialize BEFORE the vocab upsert swaps bucket dirs
             fresh = bn.join(

@@ -35,12 +35,10 @@ def stream_windowed_turn_counts(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> None:
     """availableNow run: aggregate new transcript files into
-    per-(event-time window, role) turn counts under a ``watermark``
-    lateness bound, append finalized windows to ``output_dir``.
+    per-(1-hour event-time window, role) turn counts under a 2-hour
+    watermark lateness bound, append finalized windows to ``output_dir``.
 
     Append mode emits a window exactly once — only after the
     watermark (max seen event time − horizon) passes the window end —
@@ -50,8 +48,8 @@ def stream_windowed_turn_counts(
     """
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "role")
+        stream.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "role")
         .agg(F.count(F.lit(1)).alias("n_turns"))
         .select(
             F.col("w.start").alias("window_start"),

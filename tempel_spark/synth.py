@@ -108,11 +108,11 @@ def synth_transcripts(
     n_convs: int = 200,
     n_entities: int = 64,
     n_snapshots: int = 3,
-    max_turns: int = 12,
     seed: int = 42,
     with_gold: bool = False,
 ) -> DataFrame:
-    """Multi-turn transcripts. With ``with_gold=True`` the result keeps
+    """Multi-turn transcripts, 4 to 12 turns per conversation. With
+    ``with_gold=True`` the result keeps
     two extra columns (`gold_entity_id`, `surface`) for tests/eval —
     production shape drops them.
     """
@@ -120,7 +120,7 @@ def synth_transcripts(
 
     conv = spark.range(n_convs).select(
         F.col("id").alias("cid"),
-        (hash_bucket(max_turns - 3, "id", seed=seed + 10) + 4).alias("n_turns"),
+        (hash_bucket(9, "id", seed=seed + 10) + 4).alias("n_turns"),
     )
     turns = conv.select(
         "cid",

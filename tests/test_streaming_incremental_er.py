@@ -363,3 +363,54 @@ def test_pair_log_does_not_store_embedding_arrays(spark, tmp_path):
     cols = set(read_scored_pairs(spark, cat).columns)
     assert "emb_a" not in cols and "emb_b" not in cols
     assert "cosine" in cols  # the embedding-mode discriminator survives
+
+
+def test_retry_after_crash_in_first_vocab_fold_matches_clean_run(spark, tmp_path):
+    """A crash inside the vocabulary table's FIRST fold leaves some
+    committed ``upsb=K`` buckets and no root commit. The retried batch
+    must treat the table as not yet created (every norm is fresh, as in
+    the crashed attempt), so its pair log after the read-side dedup and
+    its vocabulary equal a clean run's."""
+    import glob
+    import os
+    import shutil
+
+    from tempel_spark.sources.catalog import Catalog
+    from tempel_spark.streaming.incremental_er import (
+        read_scored_pairs,
+        stream_incremental_er,
+    )
+    from tempel_spark.synth import synth_transcripts
+
+    t = synth_transcripts(spark, n_convs=20, n_entities=8, n_snapshots=2)
+    landing = str(tmp_path / "landing")
+    t.write.mode("append").parquet(landing)
+
+    def vocab(cat):
+        return sorted(
+            map(tuple, cat.read("stream_norms").select("norm", "n_mentions").collect())
+        )
+
+    clean = Catalog(spark, str(tmp_path / "clean"))
+    stream_incremental_er(spark, landing, clean, snapshots=_SNAPS).awaitTermination()
+
+    cat = Catalog(spark, str(tmp_path / "crashed"))
+    stream_incremental_er(spark, landing, cat, snapshots=_SNAPS).awaitTermination()
+    # roll the first fold back to its crash window: half the buckets
+    # committed, the root sentinel and marker never written, and the
+    # stream offsets not committed, so batch 0 comes back
+    root = cat.path("stream_norms")
+    buckets = sorted(glob.glob(f"{root}/upsb=*"))
+    assert len(buckets) >= 2
+    for b in buckets[::2]:
+        shutil.rmtree(b)
+    os.remove(f"{root}/_SUCCESS_TEMPEL")
+    os.remove(f"{root}/_inline_meta.json")
+    shutil.rmtree(f"{cat.base}/_stream_er_ckpt")
+    assert not cat.exists("stream_norms")
+
+    stream_incremental_er(spark, landing, cat, snapshots=_SNAPS).awaitTermination()
+    assert _canon_pairs(read_scored_pairs(spark, cat)) == _canon_pairs(
+        read_scored_pairs(spark, clean)
+    )
+    assert vocab(cat) == vocab(clean)
