@@ -204,10 +204,10 @@ def image_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(gen, schema="media_id long, features array<float>")
 
 
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame sampling for video rows: explode n_frames into sampled
-    frame indices — pure native (sequence + filter), no decode."""
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Frame sampling for video rows: explode n_frames into every 10th
+    frame index — pure native (sequence + filter), no decode."""
     return df.withColumn(
         "frame_idx",
-        F.explode(F.sequence(F.lit(0), F.greatest(F.col("meta.n_frames") - 1, F.lit(0)), F.lit(every_n))),
+        F.explode(F.sequence(F.lit(0), F.greatest(F.col("meta.n_frames") - 1, F.lit(0)), F.lit(10))),
     )

@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 __all__ = ["assign_snapshot", "asof_stable_version", "yearly_snapshots"]
 
 
-def yearly_snapshots(start_year: int = 2013, n: int = 10) -> list[str]:
-    """The reference's time_cut_list shape: Jan-1 yearly cuts
-    (s01_config_content.json:29-40)."""
-    return [f"{start_year + i}-01-01 00:00:00" for i in range(n)]
+def yearly_snapshots() -> list[str]:
+    """The reference's time_cut_list: ten Jan-1 yearly cuts, 2013
+    through 2022 (s01_config_content.json:29-40)."""
+    return [f"{2013 + i}-01-01 00:00:00" for i in range(10)]
 
 
-def assign_snapshot(df: DataFrame, ts_col: str = "ts", snapshots: list[str] | None = None) -> DataFrame:
+def assign_snapshot(df: DataFrame, ts_col: str, snapshots: list[str]) -> DataFrame:
     """Tag each row with the *next* cut ≥ ts (rows after the last cut
     are dropped, mirroring the reference's per-cut filtering).
 
@@ -36,7 +36,7 @@ def assign_snapshot(df: DataFrame, ts_col: str = "ts", snapshots: list[str] | No
     shuffle, fully codegen'd. (A values-join + groupBy would shuffle
     the entire 10^12-row corpus just to attach one column.)
     """
-    snaps = sorted(snapshots or yearly_snapshots())
+    snaps = sorted(snapshots)
     ts = F.col(ts_col)
     expr = None
     for s in reversed(snaps):
@@ -50,16 +50,16 @@ def assign_snapshot(df: DataFrame, ts_col: str = "ts", snapshots: list[str] | No
 def asof_stable_version(
     revisions: DataFrame,
     key_cols: list[str],
-    rev_ts_col: str = "rev_ts",
-    snapshots: list[str] | None = None,
+    snapshots: list[str],
     min_days_stable: int = 10,
     max_look_back_days: int = 30,
     tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
     """One stable row per (key, snapshot) — the FULL reference
     securing rule (wikipedia_history_reader.py:255-299), as pure
-    window arithmetic (no per-group Python). A revision r (lifetime =
-    time to its successor s) is SECURED for a cut iff
+    window arithmetic (no per-group Python). Revisions carry their
+    timestamp in ``rev_ts``. A revision r (lifetime = time to its
+    successor s) is SECURED for a cut iff
 
       (a) r is already old at the cut: floor((cut − r.ts) in days)
           > max_look_back (the reader's branch-1, strict, day-
@@ -89,9 +89,8 @@ def asof_stable_version(
     Parity with the literal sequential fold is property-tested
     (tests/test_asof_reference_fold.py).
     """
-    snaps = snapshots or yearly_snapshots()
     spark = revisions.sparkSession
-    sdf = spark.createDataFrame([(s,) for s in snaps], "cut string").select(
+    sdf = spark.createDataFrame([(s,) for s in snapshots], "cut string").select(
         F.to_timestamp("cut").alias("snapshot_ts")
     )
 
@@ -99,14 +98,14 @@ def asof_stable_version(
     tb = tiebreak_cols or []
 
     # lifetime of each revision = time until the next one (per key)
-    w_life = Window.partitionBy(*key_cols).orderBy(F.col(rev_ts_col), *[F.col(c) for c in tb])
-    with_life = revisions.withColumn("_next_ts", F.lead(rev_ts_col).over(w_life))
+    w_life = Window.partitionBy(*key_cols).orderBy(F.col("rev_ts"), *[F.col(c) for c in tb])
+    with_life = revisions.withColumn("_next_ts", F.lead("rev_ts").over(w_life))
 
-    cand = with_life.join(F.broadcast(sdf), F.col(rev_ts_col) <= F.col("snapshot_ts"), "inner")
+    cand = with_life.join(F.broadcast(sdf), F.col("rev_ts") <= F.col("snapshot_ts"), "inner")
 
-    lived_secs = F.unix_timestamp("_next_ts") - F.unix_timestamp(rev_ts_col)  # null for newest
+    lived_secs = F.unix_timestamp("_next_ts") - F.unix_timestamp("rev_ts")  # null for newest
     age_days = F.floor(
-        (F.unix_timestamp("snapshot_ts") - F.unix_timestamp(rev_ts_col)) / F.lit(86400)
+        (F.unix_timestamp("snapshot_ts") - F.unix_timestamp("rev_ts")) / F.lit(86400)
     )
     succ_age_days = F.floor(
         (F.unix_timestamp("snapshot_ts") - F.unix_timestamp("_next_ts")) / F.lit(86400)
@@ -115,14 +114,14 @@ def asof_stable_version(
 
     w_prefix = (
         Window.partitionBy(*key_cols, "snapshot_ts")
-        .orderBy(F.col(rev_ts_col), *[F.col(c) for c in tb])
+        .orderBy(F.col("rev_ts"), *[F.col(c) for c in tb])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cand = cand.withColumn("_lived", lived_secs).withColumn("_in_regime", in_regime)
     runmax_before = F.coalesce(
         F.max(F.when(F.col("_in_regime"), F.col("_lived"))).over(w_prefix), F.lit(0)
     )
-    age_secs = F.unix_timestamp("snapshot_ts") - F.unix_timestamp(rev_ts_col)
+    age_secs = F.unix_timestamp("snapshot_ts") - F.unix_timestamp("rev_ts")
     # (c): end-of-stream finalization for the un-superseded newest
     # revision — age-at-cut stands in for lifetime, gated on a
     # recorded lapse (reader:370-383; lapse-to-cut of a post-cut
@@ -147,7 +146,7 @@ def asof_stable_version(
 
     # one window: secured rows first (latest wins), else earliest row —
     # encoded as a single sort key so it stays one shuffle.
-    u = F.unix_timestamp(F.col(rev_ts_col))
+    u = F.unix_timestamp(F.col("rev_ts"))
     pick_key = F.when(F.col("_stable"), u).otherwise(-u)
     w_pick = Window.partitionBy(*key_cols, "snapshot_ts").orderBy(
         F.col("_stable").desc(), pick_key.desc(), *[F.col(c).desc() for c in tb]

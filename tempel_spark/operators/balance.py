@@ -17,11 +17,10 @@ __all__ = [
     "round_robin_assign",
     "capped_round_robin_alloc",
     "weighted_reduce_to_quota",
-    "shuffle_groups",
     "shuffle_rank",
 ]
 
-SEED = 42  # hash seed of the weighted race and of the group shuffle
+SEED = 42  # hash seed of the weighted race and of the group shuffle rank
 
 
 def round_robin_assign(
@@ -142,33 +141,16 @@ def weighted_reduce_to_quota(
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= quota).drop("_rn")
 
 
-def _shuffle_key(group_col: str):
-    """THE deterministic shuffle sort key — one definition shared by
-    `shuffle_groups` (row reordering) and `shuffle_rank` (materialized
-    permutation), so the two can never disagree. Engine-portable md5
-    recipe (functions/hashing.fingerprint64 with md5_uniform's
-    'u{seed}:' prefix convention): the oracle computes the identical
-    bigint."""
-    return fingerprint64(
-        F.concat(F.lit(f"u{SEED}:"), F.col(group_col).cast("string"))
-    )
-
-
-def shuffle_groups(df: DataFrame, group_col: str) -> DataFrame:
-    """R2: randomize group processing order deterministically —
-    a hash sort key per group (reference random.shuffle of per-entity
-    frames, s03:301-304). Ordering = `_shuffle_key` (ties by group),
-    exactly the permutation `shuffle_rank` materializes."""
-    return df.orderBy(_shuffle_key(group_col).asc(), F.col(group_col).asc())
-
-
 def shuffle_rank(df: DataFrame, group_col: str) -> DataFrame:
-    """The R2 permutation MATERIALIZED: one row per distinct group
-    with its position in `shuffle_groups`' order. Where the reordered
-    ROWS are invisible to an order-insensitive comparison, this
-    returns the order as data — so the shuffle itself is
-    oracle-checkable; groups-cardinality output only, so the window is
-    over groups, never rows."""
+    """R2: the deterministic group shuffle (reference random.shuffle of
+    per-entity frames, s03:301-304) MATERIALIZED — one row per distinct
+    group with its position in the permutation, so the shuffle itself
+    is oracle-checkable; groups-cardinality output only, so the window
+    is over groups, never rows. The sort key is the engine-portable md5
+    recipe (functions/hashing.fingerprint64 with md5_uniform's
+    'u{seed}:' prefix convention; the oracle computes the identical
+    bigint), ties by group."""
     g = df.select(group_col).distinct()
-    w = Window.orderBy(_shuffle_key(group_col).asc(), F.col(group_col).asc())
+    key = fingerprint64(F.concat(F.lit(f"u{SEED}:"), F.col(group_col).cast("string")))
+    w = Window.orderBy(key.asc(), F.col(group_col).asc())
     return g.select(group_col, F.row_number().over(w).alias("shuffle_rank"))

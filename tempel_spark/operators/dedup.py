@@ -45,6 +45,11 @@ __all__ = [
     "winnow_similar_pairs",
 ]
 
+# the substring-dedup family (repeated_passages, passage_dedup): token
+# n-gram length, and the corpus-wide count that makes a gram duplicated
+GRAM_N = 8
+GRAM_MIN_COUNT = 2
+
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str, max_ids: int = 0) -> DataFrame:
     """(content_hash, keep_id, n_copies[, sample_ids]) — one map-side-
@@ -201,21 +206,19 @@ def simhash_dedup(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    n_bands: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup: Hamming(simhash_a, simhash_b) ≤ max_hamming.
     Blocking = the pigeonhole bands trick: a pair within Hamming r
     must agree exactly on at least one of r+1 disjoint bands — so
-    n_bands defaults to max_hamming+1 (fewer bands silently loses
-    recall), and candidates come from band-key equi-joins, never a
-    cross join.
+    there are max_hamming+1 bands (fewer bands silently loses recall),
+    and candidates come from band-key equi-joins, never a cross join.
 
     A cap of 2,000 rows bounds any single hot band to ≤ 2×10^6 pairs.
     A pathological band (all-zero simhashes from near-empty documents)
     otherwise produces O(n²) at web scale; members past the cap are
     hash-ranked out deterministically — lower recall on that one
     degenerate band, never a blowup."""
-    n_bands = n_bands or (max_hamming + 1)
+    n_bands = max_hamming + 1
     bits_per_band = 60 // n_bands
     # agg form: 8× cheaper than the expression fold on document-length
     # text and bit-identical (see simhash64_agg)
@@ -246,29 +249,27 @@ def simhash_dedup(
     )
 
 
-def _dup_gram_positions(
-    df: DataFrame, id_col: str, text_col: str, n: int, min_count: int
-) -> DataFrame:
-    """(_gh, id_col, pos) for every token n-gram (split on " ") whose
-    xxhash64 occurs ≥ ``min_count`` times corpus-wide; pos is the
-    gram's 1-based first-token position. The duplicated-gram scan of
-    `repeated_passages` and `passage_dedup`."""
+def _dup_gram_positions(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_gh, id_col, pos) for every token GRAM_N-gram (split on " ")
+    whose xxhash64 occurs ≥ GRAM_MIN_COUNT times corpus-wide; pos is
+    the gram's 1-based first-token position. The duplicated-gram scan
+    of `repeated_passages` and `passage_dedup`."""
     tk = F.split(F.col(text_col), " ")
-    npos = F.size(tk) - (n - 1)
+    npos = F.size(tk) - (GRAM_N - 1)
     # guard: sequence(1, 0) is DESCENDING [1, 0], not empty — docs
-    # shorter than n tokens must yield NULL (dropped by posexplode)
+    # shorter than GRAM_N tokens must yield NULL (dropped by posexplode)
     grams = F.when(
         npos >= 1,
         F.transform(
             F.sequence(F.lit(1), npos),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tk, i, n))),
+            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tk, i, GRAM_N))),
         ),
     )
     g = df.select(F.col(id_col), F.posexplode(grams).alias("_p0", "_gh")).select(
         id_col, (F.col("_p0") + 1).alias("pos"), "_gh"
     )
     dup = g.groupBy("_gh").agg(F.count(F.lit(1)).alias("_cnt")).filter(
-        F.col("_cnt") >= min_count
+        F.col("_cnt") >= GRAM_MIN_COUNT
     )
     return g.join(dup.select("_gh"), "_gh")
 
@@ -304,16 +305,11 @@ def _excise_tokens(
     )
 
 
-def repeated_passages(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def repeated_passages(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Maximal duplicated token-n-gram spans per document — exact
-    substring-level dedup (Lee et al. 2022): a token n-gram is
-    *duplicated* when it occurs ≥ ``min_count`` times corpus-wide
+    substring-level dedup (Lee et al. 2022): a token n-gram
+    (n = GRAM_N = 8) is *duplicated* when it occurs ≥ GRAM_MIN_COUNT
+    (2) times corpus-wide
     (across documents or repeated within one), and consecutive
     duplicated positions coalesce into one maximal span, the unit a
     training pipeline excises or down-weights.
@@ -324,7 +320,7 @@ def repeated_passages(
        (``transform`` over a position sequence → ``xxhash64`` of the
        joined slice) and ``posexplode`` — corpus-linear, no shuffle;
     2. one hash aggregation on the 64-bit gram hash → occurrence
-       count, filtered to ≥ min_count (map-side partial combine does
+       count, filtered to ≥ GRAM_MIN_COUNT (map-side partial combine does
        the heavy lifting: singleton grams — the vast majority —
        never leave their executor at full multiplicity);
     3. equi-join positions to the surviving hash set (AQE handles
@@ -340,9 +336,9 @@ def repeated_passages(
 
     Output: id, span_start/span_end (1-based first-token position of
     the first/last duplicated gram), n_dup_grams, n_tokens (span
-    length in tokens, = span_end − span_start + n).
+    length in tokens, = span_end − span_start + GRAM_N).
     """
-    d = _dup_gram_positions(df, id_col, text_col, n, min_count).select(id_col, "pos")
+    d = _dup_gram_positions(df, id_col, text_col).select(id_col, "pos")
     w = Window.partitionBy(id_col).orderBy("pos")
     isl = d.withColumn("_grp", F.col("pos") - F.row_number().over(w))
     return (
@@ -352,20 +348,15 @@ def repeated_passages(
             F.max("pos").alias("span_end"),
             F.count(F.lit(1)).alias("n_dup_grams"),
         )
-        .withColumn("n_tokens", F.col("span_end") - F.col("span_start") + n)
+        .withColumn("n_tokens", F.col("span_end") - F.col("span_start") + GRAM_N)
         .drop("_grp")
     )
 
 
-def passage_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def passage_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Policy-complete substring dedup (Lee et al. 2022 semantics):
-    for every duplicated token-n-gram, KEEP the first occurrence
+    for every duplicated token-n-gram (repeated_passages' GRAM_N and
+    GRAM_MIN_COUNT), KEEP the first occurrence
     corpus-wide and excise all later ones. `repeated_passages` finds
     spans and `excise_spans` cuts caller-chosen ranges; this operator
     is the composed keep-first policy as one unit.
@@ -387,7 +378,7 @@ def passage_dedup(
     Output: df columns + text_clean + n_tokens_removed (same shape as
     `excise_spans`).
     """
-    occ = _dup_gram_positions(df, id_col, text_col, n, min_count)
+    occ = _dup_gram_positions(df, id_col, text_col)
     first = occ.groupBy("_gh").agg(
         F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p"))).alias("_f")
     )
@@ -409,10 +400,10 @@ def passage_dedup(
 
     def _covered(arr, i):
         # token index i (0-based) covered by an occurrence starting at
-        # 1-based pos p iff p ≤ i+1 ≤ p+n−1; collect_list order is
-        # partition-dependent but exists() is order-insensitive
+        # 1-based pos p iff p ≤ i+1 ≤ p+GRAM_N−1; collect_list order
+        # is partition-dependent but exists() is order-insensitive
         return F.coalesce(
-            F.exists(arr, lambda p: (i + 1 >= p) & (i + 1 <= p + (n - 1))),
+            F.exists(arr, lambda p: (i + 1 >= p) & (i + 1 <= p + (GRAM_N - 1))),
             F.lit(False),
         )
 
@@ -487,8 +478,6 @@ def _winnow_select(h: np.ndarray, w: int) -> np.ndarray:
 
 def winnow_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 20,
     w: int = 10,
 ) -> DataFrame:
@@ -499,8 +488,9 @@ def winnow_fingerprints(
     between two documents shares at least one selected fingerprint,
     while only ~2/(w+1) of gram hashes are kept.
 
-    Output: (id_col, fp_pos, fp) — fp_pos is the 1-based character
-    position of the selected k-gram, fp its 60-bit md5-derived hash
+    Input (doc_id, text). Output: (doc_id, fp_pos, fp) — fp_pos is
+    the 1-based character position of the selected k-gram, fp its
+    60-bit md5-derived hash
     (`fingerprint64` recipe, hashing.py:55 — bit-identical in any SQL
     engine, so the selected set itself is oracle-checkable).
 
@@ -511,10 +501,10 @@ def winnow_fingerprints(
     window-function formulation would shuffle every gram row by doc
     for no reason. Fills the document-fingerprinting slot of the
     training-data dedup family next to passage/minhash/simhash."""
-    id_field = df.schema[id_col]
+    id_field = df.schema["doc_id"]
     schema = T.StructType(
         [
-            T.StructField(id_col, id_field.dataType),
+            T.StructField("doc_id", id_field.dataType),
             T.StructField("fp_pos", T.IntegerType()),
             T.StructField("fp", T.LongType()),
         ]
@@ -525,7 +515,7 @@ def winnow_fingerprints(
             ids: list = []
             poss: list = []
             fps: list = []
-            for did, txt in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
+            for did, txt in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
                 if txt is None:
                     continue
                 m = len(txt) - k + 1
@@ -548,27 +538,25 @@ def winnow_fingerprints(
                 fps.extend(h[sel].tolist())
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "fp_pos": pd.array(poss, dtype="int32"),
                     "fp": pd.array(fps, dtype="int64"),
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
+    return df.select("doc_id", "text").mapInPandas(gen, schema=schema)
 
 
 def winnow_similar_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 20,
     w: int = 10,
     max_df: int = 5,
     min_shared: int = 2,
 ) -> DataFrame:
     """Near-duplicate pairs by shared winnowed fingerprints (the MOSS
-    report): documents sharing >= min_shared selected fingerprints,
-    with overlap = n_shared / min(|fp_a|, |fp_b|).
+    report): documents (``doc_id``, ``text``) sharing >= min_shared
+    selected fingerprints, with overlap = n_shared / min(|fp_a|, |fp_b|).
 
     Fingerprints occurring in more than max_df documents are dropped
     BEFORE the self-join — boilerplate grams carry no near-dup signal
@@ -577,8 +565,8 @@ def winnow_similar_pairs(
     fan-out per surviving fp is <= C(max_df, 2). Overlap denominators
     use the UNFILTERED per-doc fingerprint counts so a boilerplate-
     heavy doc is not flattered by its own filtering."""
-    fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w).select(id_col, "fp").distinct()
-    n_fp = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp"))
+    fps = winnow_fingerprints(df, k=k, w=w).select("doc_id", "fp").distinct()
+    n_fp = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     rare = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -586,8 +574,8 @@ def winnow_similar_pairs(
         .select("fp")
     )
     kept = fps.join(rare, "fp")
-    a = kept.select(F.col(id_col).alias("id_a"), "fp")
-    b = kept.select(F.col(id_col).alias("id_b"), "fp")
+    a = kept.select(F.col("doc_id").alias("id_a"), "fp")
+    b = kept.select(F.col("doc_id").alias("id_b"), "fp")
     pairs = (
         a.join(b, "fp")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -596,8 +584,8 @@ def winnow_similar_pairs(
         .filter(F.col("n_shared") >= min_shared)
     )
     return (
-        pairs.join(n_fp.select(F.col(id_col).alias("id_a"), F.col("n_fp").alias("_na")), "id_a")
-        .join(n_fp.select(F.col(id_col).alias("id_b"), F.col("n_fp").alias("_nb")), "id_b")
+        pairs.join(n_fp.select(F.col("doc_id").alias("id_a"), F.col("n_fp").alias("_na")), "id_a")
+        .join(n_fp.select(F.col("doc_id").alias("id_b"), F.col("n_fp").alias("_nb")), "id_b")
         .select(
             "id_a",
             "id_b",

@@ -27,10 +27,8 @@ __all__ = [
     "candidate_similarity_by_cut",
     "strict_majority",
     "key_skew_profile",
-    "DEFAULT_KS",
 ]
 
-DEFAULT_KS = [1, 2, 4, 8, 16, 32, 64]
 ROUND_DP = 6  # round-before-compare digits of the rates and shares
 
 
@@ -384,16 +382,16 @@ def cluster_canonical_names(
 
 def acc_at_k(
     candidates: DataFrame,
+    ks: list[int],
     group_cols: list[str] | None = None,
-    ks: list[int] | None = None,
 ) -> DataFrame:
     """candidates: one row per (mention_id, candidate) with a ``score``
     and a ``correct`` flag. Ranks per query by score desc (ties broken by
     the correct flag *last*, matching the reference's re-sort at eval,
     s07_calculate_results_and_metrics_blink.py:220-227), then
-    micro-averages hit@k per group (misc_utils.py:209-242)."""
+    micro-averages hit@k per group (misc_utils.py:209-242) for each k
+    in ``ks`` (the reference reports 1, 2, 4, …, 64)."""
     groups = group_cols or []
-    ks = ks or DEFAULT_KS
     w = Window.partitionBy(*groups, "mention_id").orderBy(F.col("score").desc(), F.col("correct").asc())
     ranked = candidates.withColumn("rank", F.row_number().over(w))
     per_query = ranked.groupBy(*groups, "mention_id").agg(
@@ -414,7 +412,6 @@ def acc_at_k(
 
 def mean_reciprocal_rank(
     ranked: DataFrame,
-    group_cols: list[str] | None = None,
     queries: DataFrame | None = None,
 ) -> DataFrame:
     """MRR over pre-ranked retrieval output (e.g. `bm25_topk`): each
@@ -425,22 +422,21 @@ def mean_reciprocal_rank(
     what "every query" means: a retriever like `bm25_topk` emits ZERO
     rows for a query sharing no term with any document, and such
     queries are invisible to `ranked`. Pass the full query universe as
-    ``queries`` (one row per (group…, query)) and zero-hit queries are
+    ``queries`` (one row per query) and zero-hit queries are
     left-joined back in, contributing 0 to the average and 1 to
     n_queries. Without ``queries``, only queries PRESENT in `ranked`
     are counted — fine when the retriever guarantees output per query
     (e.g. brute-force top-k), wrong for sparse retrieval over hard
     queries.
 
-    Output: group_cols…, n_queries, mrr."""
-    groups = group_cols or []
-    per_q = ranked.groupBy(*groups, "query_id").agg(
+    Output: one row, n_queries and mrr."""
+    per_q = ranked.groupBy("query_id").agg(
         F.min(F.when(F.col("correct"), F.col("rank"))).alias("_gr")
     )
     if queries is not None:
-        universe = queries.select(*groups, "query_id").distinct()
-        per_q = universe.join(per_q, [*groups, "query_id"], "left")
-    return per_q.groupBy(*groups).agg(
+        universe = queries.select("query_id").distinct()
+        per_q = universe.join(per_q, ["query_id"], "left")
+    return per_q.groupBy().agg(
         F.count(F.lit(1)).alias("n_queries"),
         F.round(
             F.avg(F.when(F.col("_gr").isNotNull(), 1.0 / F.col("_gr")).otherwise(0.0)),

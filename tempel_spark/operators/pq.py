@@ -61,7 +61,6 @@ def pq_train(
     df: DataFrame,
     m: int = 2,
     k: int = 8,
-    n_iter: int = N_ITER,
 ) -> PQCodebooks:
     """Train m per-subspace codebooks over (vec_id, embedding) with the
     engine's deterministic k-means. The embedding dimension must divide
@@ -78,7 +77,7 @@ def pq_train(
         sub = df.select(
             "vec_id", F.slice(F.col("embedding"), s * d_sub + 1, d_sub).alias("embedding")
         )
-        books.append(kmeans(sub, k=k, n_iter=n_iter).centroids)
+        books.append(kmeans(sub, k=k, n_iter=N_ITER).centroids)
     return PQCodebooks(codebooks=books, m=m, k=k, d_sub=d_sub)
 
 
@@ -192,9 +191,6 @@ def ivfpq_topk(
     df: DataFrame,
     queries: DataFrame,
     n_cells: int = 8,
-    nprobe: int = 2,
-    m: int = 2,
-    k_pq: int = 8,
     k: int = 5,
 ) -> DataFrame:
     """The full FAISS IVFPQ shape: coarse k-means cells + PRODUCT
@@ -203,15 +199,16 @@ def ivfpq_topk(
     Train: coarse centroids via the deterministic k-means; every
     vector's residual (x − centroid[cell]) is PQ-encoded — residuals
     concentrate around 0, so the same code budget quantizes far more
-    precisely than raw-vector PQ. Query: probe the ``nprobe`` nearest
-    cells (rounded coarse distance, ties to the smaller cell id) and
+    precisely than raw-vector PQ (pq_train's 2 subspaces × 8 codes).
+    Query: probe the 2 nearest cells (rounded coarse distance, ties to
+    the smaller cell id) and
     ADC-score only those cells' candidates, each against the LUT of
     ITS cell's query residual. Candidates are touched as codes only.
     Input: vectors df (vec_id, embedding) and queries (query_id,
     embedding); output as ``pq_adc_topk``.
 
-    Scale: training is N_ITER+m bounded passes; the scan reads
-    nprobe/n_cells of the codes, one map pass, local top-k per batch,
+    Scale: training is N_ITER+2 bounded passes; the scan reads
+    2/n_cells of the codes, one map pass, local top-k per batch,
     window merge — the plan is identical at 10^12 codes with the cell
     count scaled up.
     """
@@ -252,13 +249,13 @@ def ivfpq_topk(
     residuals = assigned.mapInPandas(
         res_gen, "vec_id long, cluster_id int, embedding array<double>"
     )
-    books = pq_train(residuals, m=m, k=k_pq)
+    books = pq_train(residuals)
     codes = pq_encode(residuals, books).join(
         coarse.assignments.select("vec_id", "cluster_id"), "vec_id"
     )
 
     sub_cents = [np.asarray(b, dtype="float64") for b in books.codebooks]
-    d_sub = books.d_sub
+    m, d_sub = books.m, books.d_sub
     # probe selection: vectorized coarse distances for ALL queries at
     # once (one (n_q × n_cells) GEMM-shaped op on the compact query
     # matrix — same floats as the old per-query form: same per-pair
@@ -275,7 +272,7 @@ def ivfpq_topk(
     cell_idx = np.arange(len(cents))
     probed: list[tuple] = []
     for qi in range(len(qids_arr)):
-        order = np.lexsort((cell_idx, cd_all[qi]))[:nprobe]
+        order = np.lexsort((cell_idx, cd_all[qi]))[:2]
         probed.extend((int(qids_arr[qi]), int(cell)) for cell in order)
 
     probed_df = df.sparkSession.createDataFrame(probed, "query_id long, cluster_id int")

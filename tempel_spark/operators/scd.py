@@ -46,7 +46,6 @@ def asof_join(
     changes: DataFrame,
     key: str,
     probe_ts: str,
-    payload: list[str] | None = None,
 ) -> DataFrame:
     """For each probe row: attributes of the LATEST change with
     valid_from ≤ probe_ts for the same key (equal timestamps match —
@@ -55,10 +54,10 @@ def asof_join(
 
     changes must be unique per (key, valid_from) — enforced here,
     because a tie would make the carried payload nondeterministic.
-    Payload columns come back NULL for probes before the first
-    change.
+    The payload is every change column but key and valid_from; it
+    comes back NULL for probes before the first change.
     """
-    payload = payload or [c for c in changes.columns if c not in (key, "valid_from")]
+    payload = [c for c in changes.columns if c not in (key, "valid_from")]
     # pin: the eager uniqueness probe below materializes the change
     # frame once and the union-merge then reads the pinned RDD instead
     # of re-deriving the whole changes chain a second time

@@ -314,12 +314,8 @@ def quantize_embeddings(df: DataFrame) -> DataFrame:
     return df.withColumn("qscale", scale).withColumn("qvec", q)
 
 
-def quantized_dot_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """Brute-force top-k of queries (query_id, embedding) over
+def quantized_dot_topk(queries: DataFrame, candidates: DataFrame) -> DataFrame:
+    """Brute-force top-3 of queries (query_id, embedding) over
     candidates (cand_id, embedding) by int8-quantized dot product. Output
     (query_id, cand_id, qdot, approx_dot, rn): qdot is the exact
     integer quantized dot (the ranking key — deterministic, no float
@@ -340,7 +336,7 @@ def quantized_dot_topk(
     )
     return _rank_cut(
         cz.crossJoin(F.broadcast(qz)).withColumn("qdot", qdot),
-        k,
+        3,
         F.col("qdot").desc(),
         rank_col="rn",
     ).select(

@@ -3,7 +3,8 @@
 misc/s03_final_dataset_creator_utils.py:518-894) re-expressed as one
 declarative Spark flow over the alias-stats table:
 
-  alias stats ──quality filters (P5)──▶
+  alias stats (quality filters, P5: `apply_quality_filters`, applied
+  by the caller) ──▶
   entities present in EVERY snapshot (J5 countDistinct rewrite) ──▶
   leakage-safe subset assignment: must-link CC over surface pairs
     per entity (R5 generalized) → clusters → round-robin to
@@ -507,39 +508,30 @@ def create_new_entities_dataset(
     stats: DataFrame,
     created: DataFrame,
     snapshots: list[str],
-    mentions: DataFrame | None = None,
-    subsets: tuple[str, ...] = DEFAULT_SUBSETS,
-    filters: dict | None = None,
     containment_links: bool = True,
     max_mentions_per_entity: int = 500,
-    fanout_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """The reference's NEW-entities category (s03:616-1036): entities
     scoped to their birth cut, per-cut entity counts equalized, then
-    subset quotas balanced across cuts positionally. Same downstream
-    allocation / instance pick / fan-out as the continual flow."""
-    filtered = apply_quality_filters(stats, filters) if filters else stats
-    scoped = assign_birth_cut(filtered, created, snapshots)
-    assigned = assign_subsets_leakage_safe(scoped, subsets, containment_links=containment_links)
-    covered = keep_fully_covered(assigned, n_subsets=len(subsets))
+    quotas for the DEFAULT_SUBSETS balanced across cuts positionally.
+    Same downstream allocation as the continual flow; a caller that
+    wants quality filters or the instance pick composes
+    `apply_quality_filters` / `select_mention_instances` itself."""
+    scoped = assign_birth_cut(stats, created, snapshots)
+    assigned = assign_subsets_leakage_safe(
+        scoped, DEFAULT_SUBSETS, containment_links=containment_links
+    )
+    covered = keep_fully_covered(assigned, n_subsets=len(DEFAULT_SUBSETS))
     equalized = equalize_entity_counts(covered)
     quotas = balanced_quotas_positional(equalized, max_mentions_per_entity)
-    allocations = allocate_mentions(equalized, quotas)
-    out = {
+    return {
         "scoped": scoped,
         "assigned": assigned,
         "covered": covered,
         "equalized": equalized,
         "quotas": quotas,
-        "allocations": allocations,
+        "allocations": allocate_mentions(equalized, quotas),
     }
-    if mentions is not None:
-        out["dataset_mentions"] = select_mention_instances(mentions, allocations)
-        if fanout_path is not None:
-            from tempel_spark.sources.sinks import write_fanout
-
-            write_fanout(out["dataset_mentions"], fanout_path)
-    return out
 
 
 def select_mention_instances(
@@ -617,30 +609,28 @@ def create_dataset(
     stats: DataFrame,
     mentions: DataFrame | None = None,
     subsets: tuple[str, ...] = DEFAULT_SUBSETS,
-    filters: dict | None = None,
     containment_links: bool = True,
     max_mentions_per_entity: int = 500,
-    n_snapshots: int | None = None,
     fanout_path: str | None = None,
 ) -> dict[str, DataFrame]:
-    """The composed s03 plan. Returns every stage (for checkpointing /
-    inspection); optionally fan-out-writes the final mention rows per
-    (snapshot_ts, subset) like the reference's per-(cut,subset) JSONL
-    sinks (S8).
+    """The composed s03 plan over already-filtered stats (a caller
+    with quality filters applies `apply_quality_filters` first); the
+    entities kept are those present in every cut the stats hold.
+    Returns every stage (for checkpointing / inspection); optionally
+    fan-out-writes the final mention rows per (snapshot_ts, subset)
+    like the reference's per-(cut,subset) JSONL sinks (S8).
 
     containment_links tunes the leakage rule to the corpus: the reference's containment link is right for Wikipedia
     aliases; over ER-resolved clusters whose members are lexically
     similar by construction it can collapse every entity into one
     subset-cluster (then keep_fully_covered drops everything) —
     disable it and/or reduce the subset count there."""
-    filtered = apply_quality_filters(stats, filters) if filters else stats
-    common = entities_in_all_snapshots(filtered, n_snapshots)
+    common = entities_in_all_snapshots(stats)
     assigned = assign_subsets_leakage_safe(common, subsets, containment_links=containment_links)
     covered = keep_fully_covered(assigned, n_subsets=len(subsets))
     quotas = balanced_quotas(covered, max_mentions_per_entity)
     allocations = allocate_mentions(covered, quotas)
     out = {
-        "filtered": filtered,
         "common": common,
         "assigned": assigned,
         "covered": covered,

@@ -75,7 +75,7 @@ __all__ = [
 CC_PARTITIONS = 16
 
 
-def extract_mention_table(transcripts: DataFrame, snapshots: list[str] | None = None) -> DataFrame:
+def extract_mention_table(transcripts: DataFrame, snapshots: list[str]) -> DataFrame:
     """transcripts (input_hint schema) → mention rows with stable ids.
 
     mention_id = conv_id:turn_idx:span_start — deterministic, so every

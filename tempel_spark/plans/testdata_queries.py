@@ -34,7 +34,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Rebalance a compute-dense input whose natural parallelism is
     below the session's default parallelism.
 
@@ -53,7 +53,7 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     spark.default.parallelism, which session.py derives from the
     configured core count — never a hard-coded local constant.
     """
-    n = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df

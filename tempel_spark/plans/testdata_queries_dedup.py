@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tempel_spark.functions.hashing import md5_uniform
 from tempel_spark.operators.dedup import simhash64
-from tempel_spark.operators.topk import hyperplane_bucket, ivf_topk
+from tempel_spark.operators.topk import _rank_cut, hyperplane_bucket, ivf_topk
 from tempel_spark.plans.testdata_queries import register, t
 from tempel_spark.plans.testdata_queries_text import _NORM
 
@@ -32,6 +32,14 @@ def _simhash_sql(shingles_expr: str) -> str:
             f"THEN 1 ELSE -1 END)) > 0 THEN {2**j}::bigint ELSE 0::bigint END)"
         )
     return " + ".join(terms)
+
+
+def _top3_without_self(out: DataFrame) -> DataFrame:
+    """The IVF queries' tail over a top-4 that may hold the query
+    itself: drop the self match, re-rank by score (ties to cand_id)
+    and keep 3."""
+    ranked = _rank_cut(out.filter(F.col("query_id") != F.col("cand_id")), 3, F.col("score").desc())
+    return ranked.select("query_id", "cand_id", F.round("score", 6).alias("cosine"), "rank")
 
 
 @register(
@@ -149,13 +157,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 6).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     c = e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
     out = ivf_topk(q, c, k=4, n_bits=3)  # k=4 then drop self-match
-    return (
-        out.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("rank", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("cand_id"))))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", F.round("score", 6).alias("cosine"), "rank")
-    )
+    return _top3_without_self(out)
 
 
 @register(
@@ -317,13 +319,7 @@ def q_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 6).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     c = e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
     out = ivf_topk(q, c, k=4, n_bits=3, nprobe=4)  # k=4 then drop self-match
-    return (
-        out.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("rank", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("cand_id"))))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", F.round("score", 6).alias("cosine"), "rank")
-    )
+    return _top3_without_self(out)
 
 
 def _proj_sql(b: int) -> str:
@@ -392,13 +388,7 @@ def q_ivf_adaptive_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 6).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     c = e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
     out = ivf_topk(q, c, k=4, n_bits=3, nprobe=4, probe="adaptive")  # k=4 then drop self-match
-    return (
-        out.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("rank", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("cand_id"))))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", F.round("score", 6).alias("cosine"), "rank")
-    )
+    return _top3_without_self(out)
 
 
 @register(
@@ -1034,17 +1024,7 @@ def q_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = e.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
     out = kmeans_ivf_topk(q, c, fit.centroids, k=4, nprobe=2)
-    return (
-        out.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("cand_id"))
-            ),
-        )
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", F.round("score", 6).alias("cosine"), "rank")
-    )
+    return _top3_without_self(out)
 
 
 @register(
@@ -1167,7 +1147,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tempel_spark.operators.dedup import winnow_fingerprints
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return winnow_fingerprints(d, "doc_id", "text", k=20, w=10)
+    return winnow_fingerprints(d, k=20, w=10)
 
 
 @register(

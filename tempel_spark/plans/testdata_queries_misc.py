@@ -1268,8 +1268,8 @@ def q_shuffle_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2 deterministic group shuffle, MATERIALIZED: the permutation
     of the 25 part brands under the engine-portable md5 sort key —
     the shuffle order itself is value-checked (an order-insensitive
-    row hash cannot observe `shuffle_groups`' reordering; this
-    companion emits the order as data)."""
+    row hash cannot observe a reordering of rows; this query emits the
+    order as data)."""
     from tempel_spark.operators.balance import shuffle_rank
 
     return shuffle_rank(t(spark, sf_dir, "part"), "p_brand")

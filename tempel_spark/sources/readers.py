@@ -64,19 +64,14 @@ def parse_insert_lines(lines: DataFrame, table: str, n_fields: int) -> DataFrame
     return fields.select(*cols)
 
 
-def read_tsv(spark: SparkSession, path: str, schema: T.StructType | str | None = None) -> DataFrame:
+def read_tsv(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     """S4: TSV scan with explicit schema (reference pd.read_csv(sep='\\t'),
-    s02:129-173). Schema-on-read is banned at scale — always pass one."""
-    r = spark.read.option("sep", "\t").option("header", "true")
-    if schema is not None:
-        r = r.schema(schema)
-    return r.csv(path)
+    s02:129-173). Schema-on-read is banned at scale, so the schema is
+    required."""
+    return spark.read.option("sep", "\t").option("header", "true").schema(schema).csv(path)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str | None = None) -> DataFrame:
-    """S3: JSONL scan (reference line loops, s03:1150-1153).
-    With an explicit schema Spark skips the inference pass entirely."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.json(path)
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
+    """S3: JSONL scan (reference line loops, s03:1150-1153). The schema
+    is required, so Spark skips the inference pass entirely."""
+    return spark.read.schema(schema).json(path)

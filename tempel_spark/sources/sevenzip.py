@@ -477,7 +477,7 @@ class SevenZArchive:
             yield tail.decode(encoding, errors="replace")
 
 
-def read_text_7z(spark, path: str, member: str | None = None):
+def read_text_7z(spark, path: str):
     """All text lines of every .7z file under ``path`` as a DataFrame
     (file string, member string, line string).
 
@@ -500,8 +500,6 @@ def read_text_7z(spark, path: str, member: str | None = None):
                 # split on BYTES so multi-byte UTF-8 never straddles a
                 # decode boundary, and rows flush in bounded batches
                 for name, block in ar.iter_all():
-                    if member is not None and name != member:
-                        continue
                     buf = tails.get(name, b"") + block
                     lines = buf.split(b"\n")
                     tails[name] = lines.pop()

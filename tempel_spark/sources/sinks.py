@@ -16,7 +16,6 @@ __all__ = ["write_partitioned", "write_fanout", "write_bucketed"]
 def write_partitioned(
     df: DataFrame,
     path: str,
-    partition_by: tuple[str, ...] = ("snapshot_ts",),
     target_file_mb: int = 128,
     fmt: str = "parquet",
 ) -> None:
@@ -27,7 +26,7 @@ def write_partitioned(
     (
         df.write.mode("overwrite")
         .option("maxRecordsPerFile", max(10_000, target_file_mb * 4_000))
-        .partitionBy(*partition_by)
+        .partitionBy("snapshot_ts")
         .format(fmt)
         .save(path)
     )
@@ -45,12 +44,12 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_cols: tuple[str, ...],
+    path: str,
     n_buckets: int = 32,
     sort_cols: tuple[str, ...] | None = None,
     fmt: str = "parquet",
-    path: str | None = None,
 ) -> None:
-    """Bucketed managed table — the co-located-join layout for the
+    """Bucketed table — the co-located-join layout for the
     big⋈big joins that dominate at 100 TB (mention⋈entity on
     (snapshot_ts, target_id), edge lists on id): two tables bucketed
     the same way join with ZERO Exchange on either side, because the
@@ -58,12 +57,11 @@ def write_bucketed(
     (plan-asserted in tests/test_plans.py). Iceberg's analogue is a
     `bucket(n, col)` partition transform; the reference has no
     equivalent — it re-shards by hand per cut. sortBy within buckets
-    additionally removes the join's Sort when it matches the keys."""
+    additionally removes the join's Sort when it matches the keys.
+
+    The table is always external, its files at ``path``:
+    warehouse.dir is a static config, so the caller names the place."""
     w = df.write.mode("overwrite").format(fmt).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
-    if path:
-        # external table at an explicit location (warehouse.dir is a
-        # static config — tests and ad-hoc runs pass a tmp path)
-        w = w.option("path", path)
-    w.saveAsTable(table)
+    w.option("path", path).saveAsTable(table)

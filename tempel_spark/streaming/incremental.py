@@ -39,7 +39,7 @@ def stream_mentions(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    snapshots: list[str] | None = None,
+    snapshots: list[str],
 ) -> None:
     """Process all transcript parquet files not yet seen (offsets in
     ``checkpoint_dir``), append extracted mentions to ``output_dir``

@@ -91,7 +91,7 @@ def stream_incremental_winnow(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         fps_new = (
-            winnow_fingerprints(batch_df.select("doc_id", "text"), "doc_id", "text", k=k, w=w)
+            winnow_fingerprints(batch_df, k=k, w=w)
             .select("doc_id", "fp")
             .distinct()
             .localCheckpoint(eager=True)

@@ -14,8 +14,9 @@ micro-batch:
       │   block keys as batch (pipeline.build_block_keys — keys are
       │   derived from norm text alone, so a norm is keyed once,
       │   appended to a persisted key log, and joins against any
-      │   future vocabulary) + the bipartite first-token key in both
-      │   (new, all) / (all, new) roles
+      │   future vocabulary) + the bipartite first-token pairs
+      │   that touch a new norm; each touched block is capped once
+      │   over all of its members, as batch caps it
       ▼
   score_pairs (texts only ⇒ identical scores to batch) ──append──▶
       │   durable scored-pair log
@@ -42,7 +43,13 @@ so the sorted distance between two norms never shrinks: any pair
 within the window in the final order was within the window when its
 newer side arrived). The extras — pairs adjacent at insert time that
 later drifted apart — stay in the append-only log; they are scored
-candidates like any others and can only add recall. At
+candidates like any others and can only add recall. When a cap
+binds, every logged pair is one the batch pipeline emits on the corpus
+as of the ingest that logged it: a touched block (or first-token
+group) is capped over all of its members at that ingest, exactly as
+batch caps it, and only its surviving fresh members pair. Later
+ingests can push a logged pair's members past the cap; the log keeps
+it, as it keeps drifted SN pairs. At
 10^12-turn scale this is the difference between re-scoring the full
 vocabulary² candidate space per ingest and scoring only the
 new-norm frontier (new norms grow ~log-like while turns grow
@@ -60,9 +67,12 @@ incremental, components are recomputed from the pair log on demand" —
 connected_components re-solves the vocabulary-scale edge list, never
 the corpus.
 
-Pair frequencies (`n_mentions_*`) in the log are arrival-time values;
-consumers that need current priors (abbreviation resolution) join the
-live `stream_norms` vocab instead, as `recluster` does.
+The pair log stores ids, norms, features, scores and decisions, but
+no mention counts: consumers that need priors (abbreviation
+resolution) join the live `stream_norms` vocab, as `recluster` does.
+A log written while it still stored arrival-time `n_mentions_a`/
+`n_mentions_b` fails the pair-log schema check on the next append,
+with the error naming both column sets; rebuild such a log.
 
 Reference: the TempEL pipeline has no incremental path at all — a new
 dump re-runs the multi-day batch (BASELINE.md); this module is part of
@@ -96,17 +106,19 @@ _PAIRS = "stream_scored_pairs"
 _KEYS = "stream_block_keys"
 
 
-def _vocab_keys(catalog: Catalog) -> DataFrame:
-    """The persisted block-key log (append-only, one append per ingest
-    frontier). The dedupe undoes replayed-batch appends; n_mentions is
-    the arrival-time count, which is benign here — keys drive block
-    membership and hot-block caps only, never scores."""
-    return catalog.read_append(_KEYS).dropDuplicates(
+def _vocab_keys(catalog: Catalog, kf: DataFrame) -> DataFrame:
+    """The frontier's keys `kf` plus the persisted block-key log
+    (append-only, one append per ingest frontier). The dedupe undoes
+    replayed-batch appends — a retried batch finds its own keys in the
+    log already — so each member counts once against a block's cap."""
+    if not catalog.append_has_data(_KEYS):
+        return kf
+    return kf.unionByName(catalog.read_append(_KEYS)).dropDuplicates(
         ["snapshot_ts", "norm", "block_key"]
     )
 
 
-def _batch_norms(transcripts: DataFrame, snapshots: list[str] | None) -> DataFrame:
+def _batch_norms(transcripts: DataFrame, snapshots: list[str]) -> DataFrame:
     """Micro-batch → (snapshot_ts, norm, n_mentions), the same two
     pivots (surface, then norm) as the batch pipeline."""
     return norm_vocab(surface_vocab(extract_mention_table(transcripts, snapshots)))
@@ -122,9 +134,13 @@ def _new_pairs(
     """Candidate pairs with ≥ 1 fresh side: the fresh norms' block
     keys (`kf`) equi-join the full vocabulary's keys (`ka`, the
     persisted key log — fresh ⊆ vocab, so fresh×vocab covers
-    fresh×fresh too), plus the bipartite first-token key in both role
-    assignments. Hot blocks stay capped on the vocabulary side — the
-    same guardrail as batch, applied per ingest."""
+    fresh×fresh too), plus the bipartite first-token pairs of `vocab`
+    (the merged counts of every norm sharing a first token with the
+    frontier) that touch a fresh norm. Each touched block is capped
+    ONCE over all of its members, as batch caps it, and the fresh side
+    is the capped block's fresh rows — so a block past pair_cap emits
+    only pairs among the members batch keeps, never a fresh norm that
+    the cap drops."""
     # frontier-price the vocabulary side: only blocks the FRESH norms
     # participate in can emit pairs, so restrict the (vocab-scale) key
     # log to kf's block keys BEFORE the cap window — per-(snapshot,
@@ -132,21 +148,19 @@ def _new_pairs(
     # equi-join below would discard every other group anyway. AQE
     # broadcasts the (frontier-sized) key set, so the log is scanned,
     # never shuffled.
-    ka = ka.join(
+    touched = ka.join(
         kf.select("snapshot_ts", "block_key").distinct(),
         ["snapshot_ts", "block_key"],
         "leftsemi",
     )
-    ka = cap_block_size(ka, ["snapshot_ts", "block_key"], "norm", cap=pair_cap)
-    kf = cap_block_size(kf, ["snapshot_ts", "block_key"], "norm", cap=pair_cap)
-    j = kf.select(
-        "snapshot_ts", "block_key",
-        F.col("norm").alias("fn"), F.col("n_mentions").alias("fc"),
-    ).join(
-        ka.select(
-            "snapshot_ts", "block_key",
-            F.col("norm").alias("on"), F.col("n_mentions").alias("oc"),
-        ),
+    # pinned: the cap window feeds both join sides (see candidate_pairs)
+    capped = cap_block_size(touched, ["snapshot_ts", "block_key"], "norm", cap=pair_cap)
+    capped = capped.localCheckpoint(eager=False)
+    capped_fresh = capped.join(
+        fresh.select("snapshot_ts", "norm"), ["snapshot_ts", "norm"], "leftsemi"
+    )
+    j = capped_fresh.select("snapshot_ts", "block_key", F.col("norm").alias("fn")).join(
+        capped.select("snapshot_ts", "block_key", F.col("norm").alias("on")),
         ["snapshot_ts", "block_key"],
     ).filter(F.col("fn") != F.col("on"))
     lt = F.col("fn") < F.col("on")
@@ -154,29 +168,29 @@ def _new_pairs(
         "snapshot_ts",
         F.when(lt, F.col("fn")).otherwise(F.col("on")).alias("id_a"),
         F.when(lt, F.col("on")).otherwise(F.col("fn")).alias("id_b"),
-        F.when(lt, F.col("fn")).otherwise(F.col("on")).alias("norm_a"),
-        F.when(lt, F.col("on")).otherwise(F.col("fn")).alias("norm_b"),
-        F.when(lt, F.col("fc")).otherwise(F.col("oc")).alias("n_mentions_a"),
-        F.when(lt, F.col("oc")).otherwise(F.col("fc")).alias("n_mentions_b"),
     )
-    bip = bipartite_first_token_pairs(fresh, vocab, pair_cap=pair_cap).unionByName(
-        bipartite_first_token_pairs(vocab, fresh, pair_cap=pair_cap)
+    # one abbreviation per (snapshot, first token), so this product is
+    # ≤ pair_cap pairs per touched first token
+    fa = fresh.select("snapshot_ts", F.col("norm").alias("id_a"), F.lit(True).alias("_fa"))
+    fb = fresh.select("snapshot_ts", F.col("norm").alias("id_b"), F.lit(True).alias("_fb"))
+    bip = (
+        bipartite_first_token_pairs(vocab, vocab, pair_cap=pair_cap)
+        .join(fa, ["snapshot_ts", "id_a"], "left")
+        .join(fb, ["snapshot_ts", "id_b"], "left")
+        .filter(F.col("_fa") | F.col("_fb"))
     )
-    return blocked.unionByName(bip).dropDuplicates(["snapshot_ts", "id_a", "id_b"])
+    return blocked.unionByName(bip.select("snapshot_ts", "id_a", "id_b"))
 
 
-def _insert_time_sn(bn: DataFrame, prev: DataFrame | None, fresh: DataFrame) -> DataFrame:
+def _insert_time_sn(prev: DataFrame | None, fresh: DataFrame) -> DataFrame:
     """Insert-time sorted-neighborhood pairs for the frontier (the
     incremental counterpart of pipeline._pairs' SN union — module
     docstring has the superset proof).
 
     Cost posture: the neighbor probe is one narrow (norm-column)
     vocabulary-scale sort per ingest — the same cost class as the
-    per-ingest key-log read in the stationary families; the count
-    payload fold is restricted to the SN *participants* (a
-    delta-proportional set: ≤ 2·(SN_WINDOW−1) neighbors per fresh norm),
-    so the vocabulary is never re-aggregated. An Iceberg vocab table
-    with a declared sort order would make the probe itself
+    per-ingest key-log read in the stationary families. An Iceberg
+    vocab table with a declared sort order would make the probe itself
     delta-priced (range-file pruning); with hash-bucketed parquet
     state the full narrow sort is the honest price.
     """
@@ -188,43 +202,15 @@ def _insert_time_sn(bn: DataFrame, prev: DataFrame | None, fresh: DataFrame) -> 
     sn = sorted_neighborhood_pairs(
         names, sort_key="norm", id_col="norm",
         group_cols=["snapshot_ts"], payload_cols=["_fresh"],
-    ).filter(F.col("_fresh_a") | F.col("_fresh_b"))
-    parts = (
-        sn.select("snapshot_ts", F.col("id_a").alias("norm"))
-        .unionByName(sn.select("snapshot_ts", F.col("id_b").alias("norm")))
-        .distinct()
     )
-    counts = bn.select("snapshot_ts", "norm", "n_mentions")
-    if prev is not None:
-        counts = counts.unionByName(prev.select("snapshot_ts", "norm", "n_mentions"))
-    counts = (
-        counts.join(parts, ["snapshot_ts", "norm"], "leftsemi")
-        .groupBy("snapshot_ts", "norm")
-        .agg(F.sum("n_mentions").alias("n_mentions"))
-    )
-    ca = counts.select(
-        "snapshot_ts", F.col("norm").alias("id_a"),
-        F.col("n_mentions").alias("n_mentions_a"),
-    )
-    cb = counts.select(
-        "snapshot_ts", F.col("norm").alias("id_b"),
-        F.col("n_mentions").alias("n_mentions_b"),
-    )
-    return (
-        sn.join(ca, ["snapshot_ts", "id_a"]).join(cb, ["snapshot_ts", "id_b"])
-        .select(
-            "snapshot_ts", "id_a", "id_b",
-            F.col("id_a").alias("norm_a"), F.col("id_b").alias("norm_b"),
-            "n_mentions_a", "n_mentions_b",
-        )
-    )
+    return sn.filter(F.col("_fresh_a") | F.col("_fresh_b")).select("snapshot_ts", "id_a", "id_b")
 
 
 def stream_incremental_er(
     spark: SparkSession,
     input_dir: str,
     catalog: Catalog,
-    snapshots: list[str] | None = None,
+    snapshots: list[str],
     pair_cap: int = 200,
     checkpoint_dir: str | None = None,
     embeddings: DataFrame | None = None,
@@ -239,8 +225,10 @@ def stream_incremental_er(
 
     Scoring uses score_pairs' default MATCH_THRESHOLD and blocking the
     fixed LSH_HASHES/LSH_BANDS/SN_WINDOW — the batch pipeline's
-    defaults, so the pair log and a batch run agree. pair_cap must
-    equal the batch run's for the parity to hold.
+    defaults, so the pair log and a batch run agree. snapshots is the
+    cut list, as for run_pipeline. pair_cap must equal the batch run's
+    for the parity to hold; where it binds, each touched block is
+    capped once over all of its members (module docstring).
 
     embeddings: optional cached NORM-keyed embeddings (snapshot_ts,
     surface, embedding) — the same contract as run_pipeline's: when
@@ -315,11 +303,7 @@ def stream_incremental_er(
             # over its lifetime — per-ingest cost tracks the frontier,
             # not |vocab|)
             kf = build_block_keys(fresh).localCheckpoint(eager=True)
-            ka = (
-                kf.unionByName(_vocab_keys(catalog))
-                if catalog.append_has_data(_KEYS)
-                else kf
-            )
+            ka = _vocab_keys(catalog, kf)
             # bipartite vocabulary side: the first-token pairing only
             # links norms sharing a first token with the frontier, so
             # restrict the (vocab-scale) table to those tokens BEFORE
@@ -347,8 +331,12 @@ def stream_incremental_er(
             )
             pairs = (
                 _new_pairs(kf, ka, fresh, merged_hot, pair_cap)
-                .unionByName(_insert_time_sn(bn, prev_full, fresh))
+                .unionByName(_insert_time_sn(prev_full, fresh))
                 .dropDuplicates(["snapshot_ts", "id_a", "id_b"])
+                .select(
+                    "snapshot_ts", "id_a", "id_b",
+                    F.col("id_a").alias("norm_a"), F.col("id_b").alias("norm_b"),
+                )
             )
             if embeddings is not None:
                 pairs = with_embeddings(pairs, embeddings)
@@ -373,7 +361,8 @@ def stream_incremental_er(
                         "pair-log schema mismatch: existing log has columns "
                         f"{sorted(existing)} but this ingest produces "
                         f"{sorted(now)} — the embeddings option must be used "
-                        "consistently over the log's lifetime"
+                        "consistently over the log's lifetime, and a log that "
+                        "still stores n_mentions_a/n_mentions_b must be rebuilt"
                     )
             catalog.append(scored, _PAIRS)
             catalog.append(kf, _KEYS)
@@ -459,11 +448,10 @@ def recluster(spark: SparkSession, catalog: Catalog, warm: bool = False):
         return vocab.select(
             "snapshot_ts", "norm", F.col("norm").alias("component")
         )
-    # refresh priors: arrival-time frequencies in the log are stale
+    # priors: the log stores no counts, so join the CURRENT ones
     cur = vocab.select("snapshot_ts", F.col("norm"), F.col("n_mentions"))
     refreshed = (
-        scored.drop("n_mentions_a", "n_mentions_b")
-        .join(
+        scored.join(
             cur.select(
                 "snapshot_ts", F.col("norm").alias("id_a"),
                 F.col("n_mentions").alias("n_mentions_a"),

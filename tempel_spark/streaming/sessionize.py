@@ -41,6 +41,7 @@ _OUT_SCHEMA = T.StructType(
         T.StructField("n_turns", T.LongType()),
     ]
 )
+GAP_SECONDS = 30 * 60  # silence that closes a session
 # (start, last, n) as epoch seconds — GroupState tuples are positional
 _STATE_SCHEMA = T.StructType(
     [
@@ -64,59 +65,56 @@ def _session_row(conv_id: str, start_s: int, last_s: int, n: int) -> pd.DataFram
     )
 
 
-def _make_sessionizer(gap_seconds: int):
-    def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        conv_id = key[0]
-        # ts_epoch is computed JVM-side (timestamp→long cast = true UTC
-        # epoch seconds); Arrow's pdf["ts"] would be session-timezone-
-        # naive and skew the timeout math against the UTC watermark
-        ts: list[int] = []
-        for pdf in pdfs:
-            ts.extend(int(x) for x in pdf["ts_epoch"])
+def _sessionize(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+    conv_id = key[0]
+    # ts_epoch is computed JVM-side (timestamp→long cast = true UTC
+    # epoch seconds); Arrow's pdf["ts"] would be session-timezone-
+    # naive and skew the timeout math against the UTC watermark
+    ts: list[int] = []
+    for pdf in pdfs:
+        ts.extend(int(x) for x in pdf["ts_epoch"])
 
-        if state.hasTimedOut:
-            # watermark passed last+gap with no new turns → close
-            start_s, last_s, n = state.get
-            state.remove()
-            return iter([_session_row(conv_id, start_s, last_s, n)])
+    if state.hasTimedOut:
+        # watermark passed last+gap with no new turns → close
+        start_s, last_s, n = state.get
+        state.remove()
+        return iter([_session_row(conv_id, start_s, last_s, n)])
 
-        # Interval merge over (sorted) turns + the open session: a turn
-        # belongs to a session iff it lies within `gap` of it. A late
-        # (watermark-permitted) turn arriving more than `gap` BEFORE
-        # the open session's start is gap-separated from it, so it
-        # forms (or extends) an EARLIER session that closes immediately
-        # instead of being absorbed — with watermark ≤ gap this branch
-        # never fires (lateness < gap), but a caller configuring
-        # watermark > gap gets correct splits rather than spuriously
-        # merged sessions. Only the LAST (latest) session stays open;
-        # earlier ones can, in principle, still miss a not-yet-arrived
-        # turn between them — the watermark bounds that to the same
-        # degree it bounds any append-mode emission.
-        items = [(t, t, 1) for t in sorted(ts)]
-        if state.exists:
-            items.append(tuple(state.get))
-            items.sort()
-        if not items:
-            return iter([])
-        merged: list[list[int]] = []
-        for s, e, n in items:
-            if merged and s - merged[-1][1] <= gap_seconds:
-                cur = merged[-1]
-                cur[1] = max(cur[1], e)
-                cur[2] += n
-            else:
-                merged.append([s, e, n])
-        out = [_session_row(conv_id, s, e, n) for s, e, n in merged[:-1]]
-        start_s, last_s, n = merged[-1]
-        state.update((int(start_s), int(last_s), int(n)))
-        # timeout must sit strictly past the current watermark
-        timeout_ms = max(
-            (last_s + gap_seconds) * 1000, state.getCurrentWatermarkMs() + 1
-        )
-        state.setTimeoutTimestamp(timeout_ms)
-        return iter(out)
-
-    return fn
+    # Interval merge over (sorted) turns + the open session: a turn
+    # belongs to a session iff it lies within `gap` of it. A late
+    # (watermark-permitted) turn arriving more than `gap` BEFORE
+    # the open session's start is gap-separated from it, so it
+    # forms (or extends) an EARLIER session that closes immediately
+    # instead of being absorbed — with watermark ≤ gap this branch
+    # never fires (lateness < gap), but a caller configuring
+    # watermark > gap gets correct splits rather than spuriously
+    # merged sessions. Only the LAST (latest) session stays open;
+    # earlier ones can, in principle, still miss a not-yet-arrived
+    # turn between them — the watermark bounds that to the same
+    # degree it bounds any append-mode emission.
+    items = [(t, t, 1) for t in sorted(ts)]
+    if state.exists:
+        items.append(tuple(state.get))
+        items.sort()
+    if not items:
+        return iter([])
+    merged: list[list[int]] = []
+    for s, e, n in items:
+        if merged and s - merged[-1][1] <= GAP_SECONDS:
+            cur = merged[-1]
+            cur[1] = max(cur[1], e)
+            cur[2] += n
+        else:
+            merged.append([s, e, n])
+    out = [_session_row(conv_id, s, e, n) for s, e, n in merged[:-1]]
+    start_s, last_s, n = merged[-1]
+    state.update((int(start_s), int(last_s), int(n)))
+    # timeout must sit strictly past the current watermark
+    timeout_ms = max(
+        (last_s + GAP_SECONDS) * 1000, state.getCurrentWatermarkMs() + 1
+    )
+    state.setTimeoutTimestamp(timeout_ms)
+    return iter(out)
 
 
 def stream_sessionize(
@@ -124,13 +122,12 @@ def stream_sessionize(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    gap_minutes: int = 30,
     watermark: str = "10 minutes",
 ) -> None:
     """availableNow run: consume new transcript files and append every
     CLOSED session to ``output_dir``; open sessions persist in the
-    checkpoint and close on a later run (new turn past the gap, or
-    watermark timeout)."""
+    checkpoint and close on a later run (new turn past the 30-minute
+    gap, or watermark timeout)."""
     from pyspark.sql import functions as F
 
     stream = (
@@ -140,7 +137,7 @@ def stream_sessionize(
         .withColumn("ts_epoch", F.col("ts").cast("long"))
     )
     sessions = stream.groupBy("conv_id").applyInPandasWithState(
-        _make_sessionizer(gap_minutes * 60),
+        _sessionize,
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",

@@ -50,7 +50,7 @@ def stream_first_seen_surfaces(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    snapshots: list[str] | None = None,
+    snapshots: list[str],
 ) -> None:
     """availableNow run: consume new transcript files, extract
     mentions, and append only never-before-seen (snapshot, surface)

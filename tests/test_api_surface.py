@@ -1,12 +1,14 @@
-"""The library runs one configuration: no defaulted parameter goes unpassed.
+"""The library runs one configuration: no defaulted parameter goes
+unpassed, and no public function goes uncalled.
 
 An AST scan of every public top-level function under ``tempel_spark/``
 against every call site in ``tempel_spark/``, ``tests/``, ``scripts/``,
-``perfbench/`` and ``bench*.py``. A call passes a parameter by position
-or by keyword. A call that forwards its enclosing function's own
-``*args``/``**kwargs`` passes what that function's call sites put into
-them, resolved through any further forwarding; any other ``*``/``**``
-argument passes every parameter it could reach. Call sites are matched
+``perfbench/``, ``bench*.py`` and ``__spark_entry__.py``. A call passes
+a parameter by position or by keyword. A call that forwards its
+enclosing function's own ``*args``/``**kwargs`` passes what that
+function's call sites put into them, resolved through any further
+forwarding; any other ``*``/``**`` argument passes every parameter it
+could reach. Call sites are matched
 by the callee's name (``f(...)`` or ``mod.f(...)``), so two public
 functions of one name share their call sites.
 
@@ -14,8 +16,12 @@ A parameter whose default is not ``None`` is an option with one value
 in use, and fails the scan, when no call site passes it, or when every
 call site that passes it passes one literal equal to the default. Make
 it a constant, or list it in ``ALLOWED`` with the reason it must stay
-settable. ``None`` defaults select a capability or a computed value and
-are out of the scan.
+settable. A ``None`` default selects a capability or a computed value;
+it fails when no call site gives it anything but a literal ``None``
+(the capability is off everywhere), or when every call site surely
+passes it (its ``None`` branch is unreachable). A public function fails
+when no call site names it, unless ``@register`` puts it in the query
+registry.
 
 Run as a script to print the counts and the list.
 """
@@ -32,10 +38,8 @@ LIB = ROOT / "tempel_spark"
 
 _ABLATION = "tuning keyword scripts/diag_hidden_gold.py sets through inspect.signature"
 _SINK = "output setting of a sink, chosen per deployment"
-
-
-def _held(tests: str) -> str:
-    return f"{tests} pass the default explicitly; the parameter goes with those arguments"
+_STATE = "bucket count of the stream state table, fixed when the table is created"
+_PROBE = "embedding width; decided with ivf_topk's build-time first() probe (ROADMAP)"
 
 
 # (module relative to tempel_spark/, function, parameter) -> reason.
@@ -44,32 +48,14 @@ ALLOWED = {
     ("operators/context_disambig.py", "disambiguate_occurrences", "sample_per_surface"): _ABLATION,
     ("operators/context_disambig.py", "disambiguate_occurrences", "stop_df"): _ABLATION,
     ("operators/context_disambig.py", "disambiguate_occurrences", "margin"): _ABLATION,
-    ("streaming/incremental_dedup.py", "stream_incremental_winnow", "state_parts"): (
-        "bucket count of the stream state table, fixed when the table is created"
-    ),
+    ("streaming/incremental_dedup.py", "stream_incremental_winnow", "state_parts"): _STATE,
+    ("streaming/incremental_er.py", "stream_incremental_er", "state_parts"): _STATE,
+    ("operators/topk.py", "ivf_topk", "dim"): _PROBE,
+    ("operators/topk.py", "hyperplane_projections", "dim"): _PROBE,
     ("sources/sinks.py", "write_partitioned", "target_file_mb"): _SINK,
     ("sources/sinks.py", "write_partitioned", "fmt"): _SINK,
     ("sources/sinks.py", "write_fanout", "fmt"): _SINK,
     ("sources/sinks.py", "write_bucketed", "fmt"): _SINK,
-    ("functions/multimodal.py", "frame_sample", "every_n"): _held("test_new_operators"),
-    ("operators/asof.py", "yearly_snapshots", "start_year"): _held("test_ten_snapshots"),
-    ("operators/asof.py", "yearly_snapshots", "n"): _held("test_ten_snapshots"),
-    ("operators/asof.py", "asof_stable_version", "rev_ts_col"): _held("test_asof_reference_fold"),
-    ("operators/dedup.py", "repeated_passages", "n"): _held("test_new_operators"),
-    ("operators/dedup.py", "repeated_passages", "min_count"): _held("test_new_operators"),
-    ("operators/dedup.py", "passage_dedup", "n"): _held("test_new_operators"),
-    ("operators/dedup.py", "passage_dedup", "min_count"): _held("test_new_operators"),
-    ("operators/dedup.py", "winnow_similar_pairs", "id_col"): _held("test_incremental_dedup"),
-    ("operators/dedup.py", "winnow_similar_pairs", "text_col"): _held("test_incremental_dedup"),
-    ("operators/pq.py", "pq_train", "n_iter"): _held("test_pq_distributed_queries"),
-    ("operators/pq.py", "ivfpq_topk", "nprobe"): _held("test_pq_distributed_queries"),
-    ("operators/pq.py", "ivfpq_topk", "m"): _held("test_pq_distributed_queries"),
-    ("operators/pq.py", "ivfpq_topk", "k_pq"): _held("test_pq_distributed_queries"),
-    ("operators/topk.py", "quantized_dot_topk", "k"): _held("test_new_operators"),
-    ("plans/dataset_creator.py", "create_new_entities_dataset", "subsets"): _held("test_dataset_creator"),
-    ("sources/sinks.py", "write_partitioned", "partition_by"): _held("test_sources_tokenize"),
-    ("streaming/incremental_er.py", "stream_incremental_er", "state_parts"): _held("test_upsert_catalog"),
-    ("streaming/sessionize.py", "stream_sessionize", "gap_minutes"): _held("test_stateful_streaming"),
 }
 
 _UNKNOWN = object()  # a passed value the scan cannot evaluate
@@ -80,6 +66,7 @@ def _caller_files() -> list[Path]:
     for d in ("tests", "scripts", "perfbench"):
         files += (ROOT / d).rglob("*.py")
     files += ROOT.glob("bench*.py")
+    files.append(ROOT / "__spark_entry__.py")
     return sorted(set(files))
 
 
@@ -131,21 +118,20 @@ def _public_functions():
                     yield mod, node, consts
 
 
-def public_defaults():
+def public_defaults(none: bool):
     """(module, function, parameter, position or None if keyword-only,
-    default value) for every non-``None`` default of a public top-level
-    function."""
+    default value) for every ``None`` default of a public top-level
+    function if `none`, else for every other default."""
     out = []
     for mod, node, consts in _public_functions():
         a = node.args
         positional = a.posonlyargs + a.args
         first = len(positional) - len(a.defaults)
-        for i, (arg, d) in enumerate(zip(positional[first:], a.defaults)):
-            if not _is_none(d):
-                out.append((mod, node.name, arg.arg, first + i, _value(d, consts)))
-        for arg, d in zip(a.kwonlyargs, a.kw_defaults):
-            if d is not None and not _is_none(d):
-                out.append((mod, node.name, arg.arg, None, _value(d, consts)))
+        named = [(arg, d, first + i) for i, (arg, d) in enumerate(zip(positional[first:], a.defaults))]
+        named += [(arg, d, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for arg, d, pos in named:
+            if _is_none(d) == none:
+                out.append((mod, node.name, arg.arg, pos, _value(d, consts)))
     return out
 
 
@@ -233,27 +219,77 @@ def bindings(name: str) -> list:
     return out
 
 
+_ABSENT = object()  # a call that cannot pass the parameter
+_MAYBE = object()  # a call whose ``*``/``**`` argument may pass it
+
+
+def _passed(fn: str, param: str, pos: int | None) -> list:
+    """Per call of `fn`: the value it passes for `param`, ``_MAYBE``
+    when a ``*``/``**`` argument may or may not fill it, or
+    ``_ABSENT``."""
+    out = []
+    for bound, open_from, any_kw in bindings(fn):
+        if pos is not None and pos in bound:
+            out.append(bound[pos])
+        elif param in bound:
+            out.append(bound[param])
+        elif any_kw or (pos is not None and open_from is not None and pos >= open_from):
+            out.append(_MAYBE)
+        else:
+            out.append(_ABSENT)
+    return out
+
+
 @cache
 def scan() -> tuple[list, list]:
     """(unpassed, restated): (module, function, parameter) of every
     non-``None`` default no call passes, and of every one whose passing
     calls all pass one literal equal to the default."""
     unpassed, restated = [], []
-    for mod, fn, param, pos, default in public_defaults():
-        passed = []
-        for bound, open_from, any_kw in bindings(fn):
-            if pos is not None and pos in bound:
-                passed.append(bound[pos])
-            elif param in bound:
-                passed.append(bound[param])
-            elif any_kw or (pos is not None and open_from is not None and pos >= open_from):
-                passed.append(_UNKNOWN)
+    for mod, fn, param, pos, default in public_defaults(none=False):
+        passed = [
+            _UNKNOWN if v is _MAYBE else v for v in _passed(fn, param, pos) if v is not _ABSENT
+        ]
         key = (mod, fn, param)
         if not passed:
             unpassed.append(key)
         elif default is not _UNKNOWN and all(v == default for v in passed):
             restated.append(key)
     return unpassed, restated
+
+
+@cache
+def scan_none() -> tuple[list, list]:
+    """(never, always): (module, function, parameter) of every ``None``
+    default that no call gives a value other than a literal ``None``,
+    and of every one that each call surely passes."""
+    none = (type(None), None)
+    never, always = [], []
+    for mod, fn, param, pos, _ in public_defaults(none=True):
+        passed = _passed(fn, param, pos)
+        if all(v is _ABSENT or v == none for v in passed):
+            never.append((mod, fn, param))
+        elif all(v is not _ABSENT and v is not _MAYBE and v != none for v in passed):
+            always.append((mod, fn, param))
+    return never, always
+
+
+def _registered(node: ast.FunctionDef) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in node.decorator_list
+    )
+
+
+def uncalled() -> list[tuple[str, str]]:
+    """(module, function) of every public top-level function that no
+    call site names and no ``@register`` puts in the query registry."""
+    calls = _calls()
+    return [
+        (mod, node.name)
+        for mod, node, _ in _public_functions()
+        if node.name not in calls and not _registered(node)
+    ]
 
 
 def test_every_defaulted_parameter_is_passed_somewhere():
@@ -274,9 +310,28 @@ def test_no_caller_only_restates_a_default():
     )
 
 
+def test_every_none_default_selects_something():
+    dead = [(m, f, p, why) for why, rows in zip(("never set", "always set"), scan_none())
+            for m, f, p in rows if (m, f, p) not in ALLOWED]
+    assert not dead, (
+        f"{len(dead)} None-defaulted parameters whose None branch is the only "
+        "one reached, or never reached; drop the parameter or make it required:\n"
+        + "\n".join(f"  {m}:{f}({p}) {why}" for m, f, p, why in dead)
+    )
+
+
+def test_every_public_function_is_called():
+    missing = uncalled()
+    assert not missing, (
+        f"{len(missing)} public functions nothing calls; delete each:\n"
+        + "\n".join(f"  {m}:{f}" for m, f in missing)
+    )
+
+
 def test_allowlist_names_real_unpassed_parameters():
     unpassed, restated = scan()
-    stale = set(ALLOWED) - set(unpassed) - set(restated)
+    never, always = scan_none()
+    stale = set(ALLOWED) - set(unpassed) - set(restated) - set(never) - set(always)
     assert not stale, f"allowlisted but varied or gone: {sorted(stale)}"
 
 
@@ -286,9 +341,15 @@ if __name__ == "__main__":
         for _, n, _ in _public_functions()
     )
     unpassed, restated = scan()
-    print(f"defaulted: {n_all} (non-None {len(public_defaults())})  "
+    never, always = scan_none()
+    flagged = unpassed + restated + never + always
+    print(f"defaulted: {n_all} (non-None {len(public_defaults(none=False))})  "
           f"unpassed: {len(unpassed)}  restated: {len(restated)}  "
-          f"allowlisted: {sum(r in ALLOWED for r in unpassed + restated)}")
-    for tag, rows in (("unpassed", unpassed), ("restated", restated)):
+          f"None never set: {len(never)}  None always set: {len(always)}  "
+          f"allowlisted: {sum(r in ALLOWED for r in flagged)}  uncalled: {len(uncalled())}")
+    for m, f in uncalled():
+        print(f"uncalled {m}:{f}")
+    for tag, rows in (("unpassed", unpassed), ("restated", restated),
+                      ("none-never", never), ("none-always", always)):
         for m, f, p in rows:
             print(f"{tag} {m}:{f}({p}){'  [allowed]' if (m, f, p) in ALLOWED else ''}")

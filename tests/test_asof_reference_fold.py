@@ -95,7 +95,6 @@ def test_asof_matches_reference_fold_randomized(spark):
     out = asof_stable_version(
         df,
         key_cols=["page"],
-        rev_ts_col="rev_ts",
         snapshots=[c.strftime("%Y-%m-%d %H:%M:%S") for c in cuts],
         min_days_stable=min_days,
         max_look_back_days=look_back,
@@ -133,7 +132,7 @@ def test_finalization_branch_secures_young_unsuperseded_newest(spark):
     )
     cut = "2021-01-08 00:00:00"  # newest is 5 days old at the cut
     out = asof_stable_version(
-        df, ["page"], "rev_ts", snapshots=[cut], min_days_stable=7, max_look_back_days=30
+        df, ["page"], snapshots=[cut], min_days_stable=7, max_look_back_days=30
     ).collect()
     assert len(out) == 1
     assert str(out[0].rev_ts) == "2021-01-03 00:00:00"

@@ -309,7 +309,7 @@ def test_new_entities_dataset(spark):
     assert scoped.select("entity_id", "snapshot_ts").distinct().count() == 9
 
     res = create_new_entities_dataset(
-        stats, cdf, cuts, subsets=("train", "validation", "test"),
+        stats, cdf, cuts,
         containment_links=False, max_mentions_per_entity=8,
     )
     quotas = res["quotas"].cache()
@@ -338,7 +338,7 @@ def test_new_entities_dataset(spark):
 
     # determinism
     res2 = create_new_entities_dataset(
-        stats, cdf, cuts, subsets=("train", "validation", "test"),
+        stats, cdf, cuts,
         containment_links=False, max_mentions_per_entity=8,
     )
     assert sorted(map(tuple, quotas.collect())) == sorted(map(tuple, res2["quotas"].collect()))

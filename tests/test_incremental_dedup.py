@@ -59,7 +59,7 @@ def test_incremental_winnow_matches_batch(spark, tmp_path):
     want = {
         (r.id_a, r.id_b): r.n_shared
         for r in winnow_similar_pairs(
-            df, "doc_id", "text", k=_K, w=_W, max_df=_BIG, min_shared=_MS
+            df, k=_K, w=_W, max_df=_BIG, min_shared=_MS
         ).collect()
     }
     assert got == want

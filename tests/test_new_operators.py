@@ -226,7 +226,7 @@ def test_multimodal_plumbing(spark):
         F.lit("width"), F.col("meta.width"), F.lit("height"), F.col("meta.height"),
         F.lit("n_frames"), F.lit(25), F.lit("sample_rate"), F.lit(0),
     ))
-    sampled = frame_sample(vids, every_n=10)
+    sampled = frame_sample(vids)
     assert sampled.filter("media_id = 1").count() == 3  # frames 0, 10, 20
 
 
@@ -614,7 +614,7 @@ def test_repeated_passages_spans(spark):
     df = spark.createDataFrame(rows, "doc_id int, text string")
     out = {
         (r.doc_id, r.span_start): r
-        for r in repeated_passages(df, "doc_id", "text", n=8, min_count=2).collect()
+        for r in repeated_passages(df, "doc_id", "text").collect()
     }
     # doc 1: positions 1-3 share grams with doc 2's positions 4-6
     r1 = out[(1, 1)]
@@ -756,7 +756,7 @@ def test_passage_dedup_keep_first(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     got = {r.doc_id: (r.text_clean, r.n_tokens_removed)
-           for r in passage_dedup(df, "doc_id", "text", n=8, min_count=2).collect()}
+           for r in passage_dedup(df, "doc_id", "text").collect()}
     assert got[1] == (boiler + " x y", 0)
     assert got[2] == ("p q", 8)
     assert got[3] == ("z w", 8)
@@ -775,7 +775,7 @@ def test_passage_dedup_keep_first(spark):
         spark.conf.set("spark.sql.shuffle.partitions", "7")
         got2 = {r.doc_id: (r.text_clean, r.n_tokens_removed)
                 for r in passage_dedup(
-                    df.repartition(5), "doc_id", "text", n=8, min_count=2
+                    df.repartition(5), "doc_id", "text"
                 ).collect()}
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -1245,7 +1245,7 @@ def test_winnow_fingerprints_hand_computed(spark):
     df = spark.createDataFrame(texts, "doc_id long, text string")
     got = {
         (r.doc_id, r.fp_pos, r.fp)
-        for r in winnow_fingerprints(df, "doc_id", "text", k=8, w=4).collect()
+        for r in winnow_fingerprints(df, k=8, w=4).collect()
     }
     want = set()
     for did, txt in texts:
@@ -1271,7 +1271,7 @@ def test_winnow_guarantee_shared_substring(spark):
         ],
         "doc_id long, text string",
     )
-    fps = winnow_fingerprints(df, "doc_id", "text", k=k, w=w).collect()
+    fps = winnow_fingerprints(df, k=k, w=w).collect()
     a = {r.fp for r in fps if r.doc_id == 1}
     b = {r.fp for r in fps if r.doc_id == 2}
     assert a & b, "guaranteed shared fingerprint missing"
@@ -1287,7 +1287,7 @@ def test_winnow_similar_pairs_fixture(spark):
         [(1, base), (2, near), (3, other)], "doc_id long, text string"
     )
     rows = winnow_similar_pairs(
-        df, "doc_id", "text", k=8, w=4, max_df=3, min_shared=2
+        df, k=8, w=4, max_df=3, min_shared=2
     ).collect()
     pairs = {(r.id_a, r.id_b): r for r in rows}
     assert (1, 2) in pairs
@@ -1313,7 +1313,7 @@ def test_quantized_dot_topk_hand_computed(spark):
         ],
         "cand_id long, embedding array<float>",
     )
-    rows = {r.cand_id: r for r in quantized_dot_topk(q, c, k=3).collect()}
+    rows = {r.cand_id: r for r in quantized_dot_topk(q, c).collect()}
     assert rows[10].qdot == 127 * 127 + 64 * 64 + 32 * 32
     assert rows[12].qdot == 127 * (127 - 64 + 32)
     assert rows[11].qdot == 0
@@ -1716,7 +1716,7 @@ def test_pq_encode_and_adc_match_numpy_mirror(spark):
         "vec_id long, embedding array<double>",
     ).repartition(4)
 
-    books = pq_train(df, m=2, k=4, n_iter=2)
+    books = pq_train(df, m=2, k=4)
     assert len(books.codebooks) == 2 and books.d_sub == 4
 
     cents = [np.asarray(b) for b in books.codebooks]
@@ -1802,7 +1802,7 @@ def test_ivfpq_recall_on_clustered_corpus(spark):
         "vec_id", "query_id"
     )
     out = {}
-    for r in ivfpq_topk(df, queries, n_cells=6, nprobe=2, m=2, k_pq=8, k=5).collect():
+    for r in ivfpq_topk(df, queries, n_cells=6, k=5).collect():
         out.setdefault(r.query_id, []).append((r.rank, r.vec_id))
     for qid in (0, 40, 90):
         got = sorted(out[qid])

@@ -111,7 +111,7 @@ def test_asof_stable_version(spark):
     ]
     df = spark.createDataFrame(rows, "page string, rev_ts timestamp")
     out = asof_stable_version(
-        df, ["page"], "rev_ts", snapshots=["2014-01-01 00:00:00"],
+        df, ["page"], snapshots=["2014-01-01 00:00:00"],
         min_days_stable=10, max_look_back_days=30,
     )
     got = {r.page: r.rev_ts for r in out.collect()}
@@ -127,7 +127,7 @@ def test_asof_stable_version(spark):
     rows2 = rows + [("A", dt.datetime(2013, 12, 27))]
     df2 = spark.createDataFrame(rows2, "page string, rev_ts timestamp")
     out2 = asof_stable_version(
-        df2, ["page"], "rev_ts", snapshots=["2014-01-01 00:00:00"],
+        df2, ["page"], snapshots=["2014-01-01 00:00:00"],
         min_days_stable=10, max_look_back_days=30,
     )
     got2 = {r.page: r.rev_ts for r in out2.collect()}

@@ -30,7 +30,7 @@ def test_adc_many_queries_no_row_collect(spark, monkeypatch):
     from tempel_spark.operators import pq as pq_mod
 
     df, x = _corpus(spark)
-    books = pq_mod.pq_train(df, m=2, k=8, n_iter=2)
+    books = pq_mod.pq_train(df, m=2, k=8)
     codes = pq_mod.pq_encode(df, books)
 
     n_q = 3000  # far past any per-query driver-loop comfort zone
@@ -92,7 +92,7 @@ def test_ivfpq_queries_not_row_collected(spark, monkeypatch):
         return real_collect(self)
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    out_df = pq_mod.ivfpq_topk(df, queries, n_cells=4, nprobe=2, m=2, k_pq=8, k=3)
+    out_df = pq_mod.ivfpq_topk(df, queries, n_cells=4, k=3)
     build_collects = list(seen)
     monkeypatch.undo()
     # kmeans legitimately collects k-row centroid seeds/centroids; the

@@ -107,7 +107,7 @@ def test_partitioned_and_fanout_sinks(spark):
         "mention_id string, snapshot_ts string, subset string, v long",
     )
     with tempfile.TemporaryDirectory() as tmp:
-        write_partitioned(df, f"{tmp}/p", ("snapshot_ts",))
+        write_partitioned(df, f"{tmp}/p")
         back = spark.read.parquet(f"{tmp}/p")
         assert back.count() == 20
         dirs = {d for d in os.listdir(f"{tmp}/p") if d.startswith("snapshot_ts=")}

@@ -100,7 +100,7 @@ def test_stream_sessionize_gap_and_timeout(spark):
     with tempfile.TemporaryDirectory(prefix="sess_") as tmp:
         inp, outp, ck = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ck"
         run = lambda: stream_sessionize(spark, f"{inp}/*", outp, ck,
-                                        gap_minutes=30, watermark="10 minutes")
+                                        watermark="10 minutes")
         emitted = lambda: (
             spark.read.parquet(outp).collect() if glob.glob(f"{outp}/*.parquet") else []
         )
@@ -151,7 +151,7 @@ def test_stream_sessionize_splits_gap_separated_late_turn(spark):
     with tempfile.TemporaryDirectory(prefix="sess_late_") as tmp:
         inp, outp, ck = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ck"
         run = lambda: stream_sessionize(spark, f"{inp}/*", outp, ck,
-                                        gap_minutes=30, watermark="3 hours")
+                                        watermark="3 hours")
         emitted = lambda: (
             spark.read.parquet(outp).collect() if glob.glob(f"{outp}/*.parquet") else []
         )

@@ -414,3 +414,84 @@ def test_retry_after_crash_in_first_vocab_fold_matches_clean_run(spark, tmp_path
         read_scored_pairs(spark, clean)
     )
     assert vocab(cat) == vocab(clean)
+
+
+
+def _stream_within_batch(spark, tmp_path, wave1, wave2, cap):
+    """Ingest two waves with `cap`; assert that every logged pair is
+    one `run_pipeline` emits on the wave-1 corpus or on the full
+    corpus. Returns both batch results."""
+    from tempel_spark.plans.pipeline import run_pipeline
+    from tempel_spark.sources.catalog import Catalog
+    from tempel_spark.streaming.incremental_er import (
+        read_scored_pairs,
+        stream_incremental_er,
+    )
+
+    landing = str(tmp_path / "landing")
+    cat = Catalog(spark, str(tmp_path / "er_state"))
+    for wave in (wave1, wave2):
+        wave.write.mode("append").parquet(landing)
+        stream_incremental_er(
+            spark, landing, cat, snapshots=_SNAPS, pair_cap=cap
+        ).awaitTermination()
+    full = run_pipeline(spark, wave1.unionByName(wave2), snapshots=_SNAPS, pair_cap=cap)
+    first = run_pipeline(spark, wave1, snapshots=_SNAPS, pair_cap=cap)
+
+    def ids(df):
+        return {
+            tuple(r)
+            for r in df.select(F.col("snapshot_ts").cast("string"), "id_a", "id_b").collect()
+        }
+
+    extra = ids(read_scored_pairs(spark, cat)) - ids(full["pairs"]) - ids(first["pairs"])
+    assert not extra, f"stream pairs batch never emits: {sorted(extra)[:5]}"
+    return full, first
+
+
+def test_stream_caps_each_block_once_like_batch(spark, tmp_path):
+    """With a pair_cap that binds, a block touched by wave 2 is capped
+    once over all of its members, as batch caps it: the stream log
+    holds only pairs that batch emits on the wave-1 corpus or on the
+    full corpus, never a fresh norm paired past the cap."""
+    from tempel_spark.plans.pipeline import build_block_keys
+    from tempel_spark.synth import synth_transcripts
+
+    cap = 3
+    t = synth_transcripts(spark, n_convs=50, n_entities=14, n_snapshots=2)
+    full, first = _stream_within_batch(
+        spark, tmp_path,
+        t.filter(F.crc32("conv_id") % 2 == 0), t.filter(F.crc32("conv_id") % 2 == 1), cap,
+    )
+    # the cap binds on a block that holds a norm new in wave 2
+    new = full["norms"].join(first["norms"], ["snapshot_ts", "norm"], "left_anti")
+    keys = build_block_keys(full["norms"])
+    touched = keys.join(new.select("snapshot_ts", "norm"), ["snapshot_ts", "norm"], "leftsemi")
+    sizes = keys.join(
+        touched.select("snapshot_ts", "block_key").distinct(), ["snapshot_ts", "block_key"]
+    ).groupBy("snapshot_ts", "block_key").count()
+    assert sizes.filter(F.col("count") > cap).count() > 0
+
+
+def test_stream_caps_first_token_group_once_like_batch(spark, tmp_path):
+    """The bipartite first-token family under a binding cap: batch
+    pairs the abbreviation "ox" with its 3 most frequent full forms
+    only, so the rare "ox delta" arriving in wave 2 must not pair with
+    it. No other family links the two (no shared character 3-gram,
+    no shared sorted-token or prefix key, not sorted neighbors)."""
+    import datetime as dt
+
+    from tempel_spark.streaming.incremental import TRANSCRIPT_SCHEMA
+
+    def wave(conv, anchors):
+        rows = [
+            (conv, i, "user", f"about [[{a}]] today", "", dt.datetime(2012, 6, 1, 0, i))
+            for i, a in enumerate(anchors)
+        ]
+        return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+
+    w1 = wave("c1", ["Ox"] + ["Ox alpha", "Ox beta", "Ox gamma"] * 5)
+    w2 = wave("c2", ["Ox delta"])
+    full, _ = _stream_within_batch(spark, tmp_path, w1, w2, cap=3)
+    # the first-token group is past the cap: 4 full forms for one abbreviation
+    assert full["norms"].filter(F.col("norm").startswith("ox ")).count() == 4

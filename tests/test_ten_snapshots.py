@@ -11,7 +11,7 @@ def test_pipeline_ten_snapshots_oracle_parity(spark):
     from tempel_spark.plans.pipeline import run_pipeline
     from tempel_spark.synth import synth_transcripts
 
-    snaps = yearly_snapshots(2013, 10)
+    snaps = yearly_snapshots()
     # corpus spans 9 years → mentions land in (almost) every cut
     t = synth_transcripts(spark, n_convs=80, n_entities=14, n_snapshots=9, with_gold=True).cache()
     res = run_pipeline(spark, t.drop("gold_entity_id", "surface"))  # default snapshots
