@@ -33,8 +33,8 @@ def hash_uniform(*cols: Column | str, seed: int = 42) -> Column:
 
 
 def hash_bucket(n: int, *cols: Column | str, seed: int = 42) -> Column:
-    """Deterministic int bucket in [0, n) — used for salting hot
-    blocking keys (SURVEY.md §4 item 1) and round-robin assignment."""
+    """Deterministic int bucket in [0, n) — the synthetic corpus's
+    categorical draws (synth.py)."""
     return F.pmod(F.xxhash64(*cols, F.lit(seed)), F.lit(n)).cast("int")
 
 

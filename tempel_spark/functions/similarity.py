@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 
 __all__ = [
     "levenshtein_ratio",
+    "set_jaccard",
     "token_jaccard",
     "overlap_type",
     "jaro_winkler_udf",
@@ -30,16 +31,20 @@ def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:
     return (F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b), F.lit(1))).cast("double")
 
 
+def set_jaccard(a: Column | str, b: Column | str) -> Column:
+    """|A∩B| / max(|A∪B|, 1) of two duplicate-free arrays, as a double:
+    the one set-similarity verification every Jaccard filter ends in
+    (two empty sets score 0). |A∪B| is |A|+|B|−|A∩B|, exact for
+    duplicate-free arrays, so no union array is built per pair."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return (inter / F.greatest(union, F.lit(1))).cast("double")
+
+
 def token_jaccard(a: Column | str, b: Column | str) -> Column:
     """Distinct-token Jaccard similarity of single-space tokens
     (reference src/stats/s07_analyze_similarity_of_predicted_candidates.py:165-228)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    ta = F.array_distinct(F.split(a, " "))
-    tb = F.array_distinct(F.split(b, " "))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return (inter / F.greatest(union, F.lit(1))).cast("double")
+    return set_jaccard(F.array_distinct(F.split(a, " ")), F.array_distinct(F.split(b, " ")))
 
 
 def overlap_type(mention: Column | str, title: Column | str) -> Column:

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tempel_spark.functions.hashing import fingerprint64, hash_uniform
+from tempel_spark.functions.hashing import fingerprint64, md5_uniform
 
 __all__ = [
     "round_robin_assign",
@@ -132,9 +132,10 @@ def weighted_reduce_to_quota(
     """R3: per group, keep `quota` rows sampled ∝ weight — the
     reference's weighted reduction multiset sampler (s03:544-571)
     re-expressed with exponential-race weighted sampling
-    (Efraimidis-Spirakis): key = u^(1/w) with u = hash-uniform;
-    top-quota keys per group win. Deterministic, one window."""
-    u = hash_uniform(id_col, seed=SEED)
+    (Efraimidis-Spirakis): key = u^(1/w) with u = md5_uniform, the
+    engine-portable uniform a SQL oracle recomputes; top-quota keys per
+    group win. Deterministic, one window."""
+    u = md5_uniform(id_col, seed=SEED)
     # avoid log(0): clamp u into (0,1)
     race = F.pow(F.greatest(u, F.lit(1e-12)), 1.0 / F.greatest(F.col(weight_col), F.lit(1e-12)))
     w = Window.partitionBy(group_col).orderBy(F.desc(race), F.col(id_col))

@@ -17,8 +17,9 @@ MinHashLSH would work too but its hash family is JVM-private, which
 would make correctness unverifiable against the DuckDB oracle.
 
 Skew (north_rule): Zipf-head mentions create hot blocks. Two levers:
-  * `salt_blocks` — append pmod(xxhash64(id), n) to the key where the
-    downstream op is aggregation-shaped (safe: per-key results merge).
+  * `salt_blocks` — append pmod(fingerprint64(id), n) to the key where
+    the downstream op is aggregation-shaped (safe: per-key results
+    merge).
   * `cap_block_size` — deterministic hash-ordered top-N per block for
     pair generation (mirrors the reference's max_mentions_per_entity
     caps, s03_final_dataset_creator.py:491-501) so no block produces
@@ -32,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from tempel_spark.functions.hashing import hash_bucket, md5_minhash_value
+from tempel_spark.functions.hashing import fingerprint64, md5_minhash_value
 from tempel_spark.functions.text import normalize_mention
 
 __all__ = [
@@ -176,13 +177,15 @@ def lsh_band_blocks(
     )
 
 
-def salt_blocks(df: DataFrame, key_col: str, id_col: str, n_salt: int = 8, hot_threshold: int = 10_000) -> DataFrame:
+def salt_blocks(df: DataFrame, key_col: str, id_col: str, n_salt: int = 8, hot_threshold: int = 500) -> DataFrame:
     """Append a deterministic salt to keys whose block size exceeds
     ``hot_threshold``. Adds (block_size long, salted_key string).
-    Aggregation-safe only — never use for pair generation."""
+    The salt is pmod(fingerprint64('salt:' || id), n_salt), which a SQL
+    oracle recomputes. Aggregation-safe only — never use for pair
+    generation."""
     sizes = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("block_size"))
     out = df.join(F.broadcast(sizes.filter(F.col("block_size") > hot_threshold)), key_col, "left")
-    salt = hash_bucket(n_salt, id_col, seed=7)
+    salt = F.pmod(fingerprint64(F.concat(F.lit("salt:"), F.col(id_col).cast("string"))), F.lit(n_salt))
     return out.withColumn(
         "salted_key",
         F.when(F.col("block_size").isNotNull(), F.concat(F.col(key_col), F.lit("#"), salt.cast("string")))

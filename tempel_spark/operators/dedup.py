@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tempel_spark.functions.similarity import set_jaccard
 from tempel_spark.functions.text import normalize_mention
 from tempel_spark.operators.blocking import candidate_pairs, char_shingles, lsh_band_blocks
 
@@ -86,12 +87,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str, max_ids: int = 0) -> 
     )
 
 
-def _jaccard_arrays(a: Column, b: Column) -> Column:
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return (inter / F.greatest(union, F.lit(1))).cast("double")
-
-
 def ngram_jaccard_dedup(
     df: DataFrame,
     id_col: str,
@@ -114,7 +109,7 @@ def ngram_jaccard_dedup(
     blocked = blocked.withColumn("_bk", F.concat_ws(":", F.col("band_id"), F.col("block_key")))
     pairs = candidate_pairs(blocked, ["_bk"], id_col, ["_sh"], cap=1000, group_cols=[])
     return (
-        pairs.withColumn("jaccard", _jaccard_arrays(F.col("_sh_a"), F.col("_sh_b")))
+        pairs.withColumn("jaccard", set_jaccard(F.col("_sh_a"), F.col("_sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

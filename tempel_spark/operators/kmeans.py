@@ -11,10 +11,9 @@ Scale shape (the plan at 100 TB):
 
 - The centroid matrix is k×d floats — broadcast via closure into one
   ``mapInPandas`` pass per iteration. Each Arrow batch does ONE
-  numpy GEMM against it (same tier as ``matmul_topk_pandas``) and
-  emits k partial rows (cluster, count, sum-vector): a map-side
-  combine, so the shuffle after it carries k rows per batch, never
-  per-point data.
+  numpy GEMM against it and emits k partial rows (cluster, count,
+  sum-vector): a map-side combine, so the shuffle after it carries k
+  rows per batch, never per-point data.
 - The partials reduce to exactly k×d cells with one hash aggregate;
   only that bounded frame (e.g. 8 clusters × 64 dims) is collected.
   Driver traffic per iteration is O(k·d), independent of corpus size

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tempel_spark.functions.similarity import set_jaccard
+
 __all__ = [
     "mean_reciprocal_rank",
     "pairwise_f1",
@@ -503,10 +505,7 @@ def candidate_similarity_by_cut(candidates: DataFrame) -> DataFrame:
     paired = cand.withColumn("_prev", F.lag("_toks").over(w_r)).filter(
         F.col("_prev").isNotNull()
     )
-    jac = F.size(F.array_intersect("_toks", "_prev")) / F.size(
-        F.array_union("_toks", "_prev")
-    )
-    per_mention = paired.groupBy(*run).agg(F.avg(jac).alias("_aj"))
+    per_mention = paired.groupBy(*run).agg(F.avg(set_jaccard("_toks", "_prev")).alias("_aj"))
     micro = per_mention.groupBy("cut").agg(
         F.round(F.avg("_aj"), 6).alias("jaccard_micro"),
         F.count(F.lit(1)).alias("n_mentions"),

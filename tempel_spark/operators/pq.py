@@ -21,8 +21,7 @@ Scale shape:
 * ADC top-k = one `mapInPandas` pass over the codes with the queries'
   m×k distance tables broadcast in the closure; each batch emits its
   LOCAL top-k per query (k·n_queries rows, never the batch), and one
-  tiny window rank merges the partials — the `matmul_topk_pandas`
-  shape.
+  tiny window rank merges the partials.
 
 Determinism (repo rule: round-before-compare): codebooks come from
 the deterministic kmeans (seeded by smallest ids, 6-dp centroids);
@@ -115,6 +114,16 @@ def pq_encode(df: DataFrame, books: PQCodebooks) -> DataFrame:
     return df.select("vec_id", "embedding").mapInPandas(gen, "vec_id long, codes array<int>")
 
 
+def _query_matrix(queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids, n_q × d float64 matrix) of a (query_id, embedding)
+    frame, fetched once as Arrow; an empty frame raises."""
+    qpdf = queries.select("query_id", "embedding").toPandas()
+    if not len(qpdf):
+        raise ValueError("queries frame is empty")
+    qmat = np.asarray([list(v) for v in qpdf["embedding"]], dtype="float64")
+    return qpdf["query_id"].to_numpy(), qmat
+
+
 def pq_adc_topk(
     codes: DataFrame,
     queries: DataFrame,
@@ -142,11 +151,7 @@ def pq_adc_topk(
     """
     cents = [np.asarray(b, dtype="float64") for b in books.codebooks]
     m, d_sub = books.m, books.d_sub
-    qpdf = queries.select("query_id", "embedding").toPandas()
-    if not len(qpdf):
-        raise ValueError("queries frame is empty")
-    qids_arr = qpdf["query_id"].to_numpy()
-    qmat = np.asarray([list(v) for v in qpdf["embedding"]], dtype="float64")
+    qids_arr, qmat = _query_matrix(queries)
     bc = codes.sparkSession.sparkContext.broadcast((qids_arr, qmat))
 
     def gen(batches):
@@ -215,11 +220,7 @@ def ivfpq_topk(
     # validate + fetch queries FIRST (compact Arrow→NumPy, no Row
     # collect): an empty query frame must cost nothing, not a full
     # coarse + residual training run
-    qpdf = queries.select("query_id", "embedding").toPandas()
-    if not len(qpdf):
-        raise ValueError("queries frame is empty")
-    qids_arr = qpdf["query_id"].to_numpy()
-    qmat = np.asarray([list(v) for v in qpdf["embedding"]], dtype="float64")
+    qids_arr, qmat = _query_matrix(queries)
 
     coarse = kmeans(df, k=n_cells, n_iter=N_ITER)
     cents = np.asarray(coarse.centroids, dtype="float64")

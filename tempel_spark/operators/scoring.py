@@ -31,7 +31,7 @@ from tempel_spark.functions.similarity import (
     cosine_sim,
     jaro_winkler_udf,
     levenshtein_ratio,
-    token_jaccard,
+    set_jaccard,
 )
 
 __all__ = [
@@ -89,16 +89,11 @@ def score_pairs(pairs: DataFrame, threshold: float = MATCH_THRESHOLD) -> DataFra
     def _feats(t):
         ta, tb = t["ta"], t["tb"]
 
-        def _jac(d):
-            inter = F.size(F.array_intersect(d["da"], d["db"]))
-            union = F.size(F.array_union(d["da"], d["db"]))
-            return (inter / F.greatest(union, F.lit(1))).cast("double")
-
         jac = bind_once(
             F.struct(
                 F.array_distinct(ta).alias("da"), F.array_distinct(tb).alias("db")
             ),
-            _jac,
+            lambda d: set_jaccard(d["da"], d["db"]),
         )
         subset = (F.size(F.array_except(ta, tb)) == 0) | (
             F.size(F.array_except(tb, ta)) == 0

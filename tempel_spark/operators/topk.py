@@ -2,7 +2,7 @@
 IndexFlatIP brute-force + HNSW, faiss_indexer.py:40,61-126,
 nn_prediction.py:76).
 
-Three tiers, in preference order at scale:
+Two tiers, in preference order at scale:
 
 1. ``brute_force_topk`` — exact: broadcast the (small) query side
    against the partitioned candidate side, native cosine, window
@@ -13,10 +13,6 @@ Three tiers, in preference order at scale:
    searched only within the query's bucket (+ optional multi-probe).
    Turns O(Q×N) into O(Q×N/2^bits) with a bucket-key equi-join Spark
    shuffles normally (AQE handles bucket skew).
-3. ``matmul_topk_pandas`` — exact, Arrow-batched: per-partition numpy
-   GEMM against the broadcast query matrix. Use when the candidate
-   row count per partition is large enough that BLAS beats codegen
-   (wide embeddings, many queries).
 
 One column contract: queries are (query_id, q_emb), candidates
 (cand_id, c_emb) — (query_id, embedding)/(cand_id, embedding) for the
@@ -29,7 +25,6 @@ from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,7 +35,6 @@ __all__ = [
     "quantized_dot_topk",
     "brute_force_topk",
     "ivf_topk",
-    "matmul_topk_pandas",
     "hyperplane_bucket",
     "hyperplane_projections",
 ]
@@ -241,47 +235,6 @@ def ivf_topk(
         qb = queries.withColumn("_bucket", base)
     cb = candidates.withColumn("_bucket", hyperplane_bucket("c_emb", n_bits, dim=dim))
     return _cosine_topk(qb, cb, k, lambda q, c: q.join(c, "_bucket"))
-
-
-def matmul_topk_pandas(
-    queries_pdf: pd.DataFrame,
-    candidates: DataFrame,
-    k: int = 64,
-) -> DataFrame:
-    """Exact top-k of candidates (cand_id, c_emb) via per-partition
-    numpy GEMM (Arrow batches).
-
-    queries_pdf: small pandas frame (query_id, embedding list) —
-    broadcast via closure, one BLAS matmul per Arrow batch. The
-    reference's `embedding_ctxt.mm(cand_encs.t())` (biencoder.py:105)
-    with the partition as the candidate block.
-    """
-    import numpy as np
-
-    qids = queries_pdf.iloc[:, 0].to_numpy()
-    qmat = np.stack(queries_pdf.iloc[:, 1].to_list()).astype("float64")
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.stack(pdf["c_emb"].to_list()).astype("float64")
-            cnorm = np.linalg.norm(cmat, axis=1)
-            cnorm[cnorm == 0] = 1.0
-            sims = (qmat @ cmat.T) / qnorm[:, None] / cnorm[None, :]
-            n_take = min(k, sims.shape[1])
-            idx = np.argpartition(-sims, n_take - 1, axis=1)[:, :n_take]
-            rows = []
-            for qi in range(sims.shape[0]):
-                for ci in idx[qi]:
-                    rows.append((qids[qi], pdf["cand_id"].iloc[ci], float(sims[qi, ci])))
-            yield pd.DataFrame(rows, columns=["query_id", "cand_id", "score"])
-
-    partial = candidates.mapInPandas(gen, schema="query_id long, cand_id long, score double")
-    # per-partition top-k → global top-k (tree reduction, no full sort)
-    return _rank_cut(partial, k, F.col("score").desc())
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:

@@ -112,7 +112,7 @@ def apply_quality_filters(stats: DataFrame, filters: dict) -> DataFrame:
     return out
 
 
-def entities_in_all_snapshots(stats: DataFrame, n_snapshots: int | None = None) -> DataFrame:
+def entities_in_all_snapshots(stats: DataFrame) -> DataFrame:
     """J5 rewrite: entities present in every cut — ONE countDistinct
     aggregate instead of the reference's 10 chained inner joins
     (s03:219-224). Returns the filtered stats (inner join against the
@@ -129,17 +129,14 @@ def entities_in_all_snapshots(stats: DataFrame, n_snapshots: int | None = None) 
     per_entity = stats.groupBy("entity_id").agg(
         F.countDistinct("snapshot_ts").alias("_n_cuts")
     )
-    if n_snapshots:
-        keep = per_entity.filter(F.col("_n_cuts") == n_snapshots)
-    else:
-        # snapshot census as a LAZY 1-row broadcast instead of an
-        # eager distinct().count() at construction time: the census
-        # rides the query's own job rather than a separate
-        # driver-serial job per query build (same value: no NULL cuts)
-        census = stats.agg(F.countDistinct("snapshot_ts").alias("_tot"))
-        keep = per_entity.crossJoin(F.broadcast(census)).filter(
-            F.col("_n_cuts") == F.col("_tot")
-        )
+    # snapshot census as a LAZY 1-row broadcast instead of an eager
+    # distinct().count() at construction time: the census rides the
+    # query's own job rather than a separate driver-serial job per
+    # query build (same value: no NULL cuts)
+    census = stats.agg(F.countDistinct("snapshot_ts").alias("_tot"))
+    keep = per_entity.crossJoin(F.broadcast(census)).filter(
+        F.col("_n_cuts") == F.col("_tot")
+    )
     return stats.join(F.broadcast(keep.select("entity_id")), "entity_id")
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tempel_spark.functions.similarity import set_jaccard
 from tempel_spark.operators.clustering import connected_components
 
 __all__ = ["er_match_pairs", "er_components", "er_cluster_summary"]
@@ -40,12 +41,10 @@ def er_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-token-Jaccard scoring → match edges (id_a < id_b) with
     Jaccard ≥ ``JACCARD_THRESHOLD``.
 
-    Jaccard on the pre-tokenized distinct sets: |A∩B| via
-    array_intersect, |A∪B| = |A|+|B|−|A∩B| (exact set identity — both
-    sides are distinct arrays), which skips materializing the union
-    array per pair. Identical doubles to token_jaccard on the raw
-    texts. The probe side is `spread` so the pair scoring isn't bound
-    to the input's row-group count."""
+    Jaccard is ``set_jaccard`` on the pre-tokenized distinct sets:
+    identical doubles to token_jaccard on the raw texts. The probe
+    side is `spread` so the pair scoring isn't bound to the input's
+    row-group count."""
     from tempel_spark.plans.testdata_queries import spread
 
     d = _docs_with_key(spark, sf_dir)
@@ -53,13 +52,10 @@ def er_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_a"), F.col("toks").alias("toks_a"), "block_key"
     )
     b = d.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("toks_b"), "block_key")
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
-    jac = (inter / F.greatest(union, F.lit(1))).cast("double")
     return (
         a.join(b, "block_key")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_j", jac)
+        .withColumn("_j", set_jaccard("toks_a", "toks_b"))
         .filter(F.col("_j") >= JACCARD_THRESHOLD)  # threshold on the raw double in BOTH engines
         .select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
         .dropDuplicates(["id_a", "id_b"])

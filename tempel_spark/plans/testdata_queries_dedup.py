@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tempel_spark.functions.hashing import md5_uniform
+from tempel_spark.functions.similarity import set_jaccard
 from tempel_spark.operators.dedup import simhash64
 from tempel_spark.operators.topk import _rank_cut, hyperplane_bucket, ivf_topk
 from tempel_spark.plans.testdata_queries import register, t
@@ -84,14 +84,10 @@ def q_ngram_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = g.select(F.col("doc_id").alias("id_a"), "lang", F.col("grams").alias("ga"))
     b = g.select(F.col("doc_id").alias("id_b"), "lang", F.col("grams").alias("gb"))
-    jac = (
-        F.size(F.array_intersect("ga", "gb"))
-        / F.greatest(F.size(F.array_union("ga", "gb")), F.lit(1))
-    ).cast("double")
     return (
         a.join(b, "lang")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_j", jac)
+        .withColumn("_j", set_jaccard("ga", "gb"))
         .filter(F.col("_j") >= 0.5)
         .select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
     )
@@ -180,14 +176,11 @@ def q_weighted_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     Efraimidis-Spirakis races (u^(1/w), u = md5-uniform) — the
     reference's multiset weighted sampler (s03:544-571) without a
     single nondeterministic draw."""
+    from tempel_spark.operators.balance import weighted_reduce_to_quota
+
     o = t(spark, sf_dir, "orders")
-    u = md5_uniform("o_orderkey", seed=42)
-    race = F.pow(F.greatest(u, F.lit(1e-12)), 1.0 / F.greatest(F.col("o_totalprice"), F.lit(1e-12)))
-    w = Window.partitionBy("o_orderpriority").orderBy(F.desc(race), F.col("o_orderkey"))
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("o_orderpriority", "o_orderkey")
+    return weighted_reduce_to_quota(o, "o_orderpriority", "o_totalprice", 5, "o_orderkey").select(
+        "o_orderpriority", "o_orderkey"
     )
 
 

@@ -356,19 +356,14 @@ def q_salted_hot_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key salting census (north_rule skew lever, SURVEY §4 item 1):
     keys above the hot threshold fan out into 8 salted sub-keys via an
     md5-derived deterministic salt; cold keys pass through."""
-    from pyspark.sql import Window
+    from tempel_spark.operators.blocking import salt_blocks
 
     e = t(spark, sf_dir, "events")
-    sized = e.withColumn("block_size", F.count(F.lit(1)).over(Window.partitionBy("event_type")))
-    salt = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("salt:"), F.col("event_id").cast("string"))), 1, 15), 16, 10).cast("bigint"),
-        F.lit(8),
+    return (
+        salt_blocks(e, "event_type", "event_id")
+        .groupBy("salted_key")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    key = F.when(
-        F.col("block_size") > 500,
-        F.concat(F.col("event_type"), F.lit("#"), salt.cast("string")),
-    ).otherwise(F.col("event_type"))
-    return sized.groupBy(key.alias("salted_key")).agg(F.count(F.lit(1)).alias("n"))
 
 
 @register(

@@ -508,10 +508,11 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_round_robin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6: round-robin allocation (s03_utils:160-169) as modular
     row_number — parallel across groups, no per-group Python."""
+    from tempel_spark.operators.balance import round_robin_assign
+
     o = t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
-        o.select("o_custkey", F.pmod(F.row_number().over(w) - 1, F.lit(3)).alias("bucket"))
+        round_robin_assign(o, "o_custkey", ["o_orderdate", "o_orderkey"], 3)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("o_custkey").alias("n_custs"))
     )

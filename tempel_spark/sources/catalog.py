@@ -38,26 +38,6 @@ from pyspark.sql import functions as F
 __all__ = ["Catalog"]
 
 
-def _split_ddl_fields(ddl: str) -> list[str]:
-    """Split `a:int,b:array<struct<x:int,y:int>>` on TOP-LEVEL commas
-    only (nested array/struct/map types contain commas of their own,
-    as does decimal(p,s))."""
-    out, depth, cur = [], 0, []
-    for ch in ddl:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
 # upsert-table internals: the hash-bucket partition column (parquet
 # mode; no leading underscore — Spark's file index hides _-prefixed
 # partition dirs), the per-row applied-marker column (Iceberg mode),
@@ -711,20 +691,19 @@ class Catalog:
             cols = ", ".join(q(c) for c in spec["bucket_by"])
             sort = (f" SORTED BY ({', '.join(q(c) for c in spec['sort_by'])})"
                     if spec.get("sort_by") else "")
-            if "schema_json" in spec:
-                from pyspark.sql.types import StructType
+            if "schema_json" not in spec:
+                raise ValueError(
+                    f"stage {name!r}: bucket spec has no schema_json (an older "
+                    "format); re-run write_bucketed_stage for it"
+                )
+            from pyspark.sql.types import StructType
 
-                st = StructType.fromJson(json.loads(spec["schema_json"]))
-                ddl = ", ".join(
-                    f"{q(f.name)} {f.dataType.simpleString()}"
-                    f"{'' if f.nullable else ' NOT NULL'}"
-                    for f in st.fields
-                )
-            else:  # legacy spec (pre-round-4): lossy simpleString DDL
-                ddl = ", ".join(
-                    f"`{p.split(':', 1)[0]}` {p.split(':', 1)[1]}"
-                    for p in _split_ddl_fields(spec["schema_ddl"])
-                )
+            st = StructType.fromJson(json.loads(spec["schema_json"]))
+            ddl = ", ".join(
+                f"{q(f.name)} {f.dataType.simpleString()}"
+                f"{'' if f.nullable else ' NOT NULL'}"
+                for f in st.fields
+            )
             self.spark.sql(
                 f"CREATE TABLE {tbl} ({ddl}) USING parquet "
                 f"CLUSTERED BY ({cols}){sort} INTO {spec['n_buckets']} BUCKETS "

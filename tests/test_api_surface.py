@@ -1,5 +1,6 @@
 """The library runs one configuration: no defaulted parameter goes
-unpassed, and no public function goes uncalled.
+unpassed, no public function goes uncalled, and no operator runs only
+in its tests.
 
 An AST scan of every public top-level function under ``tempel_spark/``
 against every call site in ``tempel_spark/``, ``tests/``, ``scripts/``,
@@ -21,7 +22,9 @@ it fails when no call site gives it anything but a literal ``None``
 (the capability is off everywhere), or when every call site surely
 passes it (its ``None`` branch is unreachable). A public function fails
 when no call site names it, unless ``@register`` puts it in the query
-registry.
+registry. A public function under ``operators/`` or ``functions/``
+fails when only tests reach it (``unreached``), unless ``TEST_ONLY``
+says why.
 
 Run as a script to print the counts and the list.
 """
@@ -56,6 +59,26 @@ ALLOWED = {
     ("sources/sinks.py", "write_partitioned", "fmt"): _SINK,
     ("sources/sinks.py", "write_fanout", "fmt"): _SINK,
     ("sources/sinks.py", "write_bucketed", "fmt"): _SINK,
+}
+
+_MEDIA = "media-header decoding no query or pipeline stage reads yet (ROADMAP item 5)"
+_DEDUP = "near-dup pair operator; q_ngram_dedup_pairs and q_simhash check its steps, not its blocking"
+_EVAL = "evaluation helper a test scores the library's output with"
+
+# (module relative to tempel_spark/, function) -> why only tests run it.
+TEST_ONLY = {
+    ("functions/multimodal.py", "decode_header"): _MEDIA,
+    ("functions/multimodal.py", "attach_media_metadata"): _MEDIA,
+    ("functions/multimodal.py", "image_features"): _MEDIA,
+    ("functions/multimodal.py", "frame_sample"): _MEDIA,
+    ("functions/tokenize.py", "tokenize_udf"): "forward half of the WordPiece round trip; q_detokenize builds its pieces inline",
+    ("operators/dedup.py", "ngram_jaccard_dedup"): _DEDUP,
+    ("operators/dedup.py", "simhash_dedup"): _DEDUP,
+    ("operators/metrics.py", "eval_labeled_pairs"): _EVAL,
+    ("operators/metrics.py", "cluster_canonical_names"): "per-cluster display name; no plan names clusters yet",
+    ("operators/redirects.py", "strip_redirected"): "redirect exclusion the dataset plans do not apply yet",
+    ("operators/scd.py", "build_title_history"): "title-change fold; q_title_scd builds its change table from orders",
+    ("operators/topk.py", "recall_at_k"): _EVAL,
 }
 
 _UNKNOWN = object()  # a passed value the scan cannot evaluate
@@ -292,6 +315,99 @@ def uncalled() -> list[tuple[str, str]]:
     ]
 
 
+_OWNED = ("operators/", "functions/")
+
+
+def _imports(tree: ast.Module) -> dict[str, tuple[str, str | None]]:
+    """Local name -> (module relative to tempel_spark/, imported name,
+    or None when the name is the module) of every ``tempel_spark``
+    import in the file, function-level ones included."""
+    out = {}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.ImportFrom) and (n.module or "").startswith("tempel_spark."):
+            base = n.module.removeprefix("tempel_spark.").replace(".", "/")
+            for a in n.names:
+                sub = f"{base}/{a.name}.py"
+                out[a.asname or a.name] = (sub, None) if (LIB / sub).exists() else (f"{base}.py", a.name)
+        elif isinstance(n, ast.Import):
+            for a in n.names:
+                if a.name.startswith("tempel_spark.") and a.asname:
+                    out[a.asname] = (a.name.removeprefix("tempel_spark.").replace(".", "/") + ".py", None)
+    return out
+
+
+def _targets(node: ast.AST, mod: str, local: set[str], imports: dict) -> set[tuple[str | None, str]]:
+    """(module, name) of every function `node` calls, or hands to a call
+    as an argument (as to ``Series.map`` or ``mapInPandas``): a name
+    resolves through the file's imports or its own top-level defs, and
+    ``mod.f`` through an imported module; any other ``x.f(...)`` gives
+    (None, "f"), a method that any def of that name may be."""
+    out = set()
+    for n in ast.walk(node):
+        if not isinstance(n, ast.Call):
+            continue
+        for e in (n.func, *n.args, *(k.value for k in n.keywords)):
+            e = e.value if isinstance(e, ast.Starred) else e
+            if isinstance(e, ast.Name):
+                if imports.get(e.id, (None, None))[1] is not None:
+                    out.add(imports[e.id])
+                elif e.id in local:
+                    out.add((mod, e.id))
+            elif isinstance(e, ast.Attribute):
+                v = getattr(e.value, "id", None)
+                if v in imports and imports[v][1] is None:
+                    out.add((imports[v][0], e.attr))
+                elif e is n.func:
+                    out.add((None, e.attr))
+    return out
+
+
+@cache
+def unreached() -> list[tuple[str, str]]:
+    """(module, function) of every public top-level function under
+    ``operators/`` or ``functions/`` that no root reaches. The roots
+    are everything else in ``tempel_spark/`` (plans, registered
+    queries, streaming, sources, ``synth``, ``session``), the import-time
+    code of the operator modules, ``scripts/``, ``perfbench/``,
+    ``bench*.py`` and ``__spark_entry__.py``; tests are not roots. A
+    reached function or class reaches what its body calls (``_targets``);
+    a method call reaches every def of that name under ``operators/``
+    and ``functions/``."""
+    edges: dict[tuple[str, str], set] = {}
+    reached: set = set()
+    owned = []
+    for path in _caller_files():
+        if path.is_relative_to(ROOT / "tests"):
+            continue
+        tree = ast.parse(path.read_text())
+        mod = path.relative_to(LIB).as_posix() if path.is_relative_to(LIB) else ""
+        imports = _imports(tree)
+        defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        local = {n.name for n in tree.body if isinstance(n, defs)}
+        if not mod.startswith(_OWNED):
+            reached |= _targets(tree, mod, local, imports)
+            continue
+        for node in tree.body:
+            if isinstance(node, defs):
+                edges[(mod, node.name)] = _targets(node, mod, local, imports)
+                if not isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                    owned.append((mod, node.name))
+            else:
+                reached |= _targets(node, mod, local, imports)
+    by_name = defaultdict(set)
+    for key in edges:
+        by_name[key[1]].add(key)
+    seen: set = set()
+    todo = list(reached)
+    while todo:
+        m, name = todo.pop()
+        for key in by_name[name] if m is None else {(m, name)}:
+            if key not in seen:
+                seen.add(key)
+                todo.extend(edges.get(key, ()))
+    return [k for k in owned if k not in seen]
+
+
 def test_every_defaulted_parameter_is_passed_somewhere():
     missing = [k for k in scan()[0] if k not in ALLOWED]
     assert not missing, (
@@ -328,6 +444,17 @@ def test_every_public_function_is_called():
     )
 
 
+def test_every_operator_runs_outside_tests():
+    missing = [k for k in unreached() if k not in TEST_ONLY]
+    stale = set(TEST_ONLY) - set(unreached())
+    assert not missing, (
+        f"{len(missing)} operators and functions only tests run; call each "
+        "from a query, plan or script, delete it, or allowlist it with a reason:\n"
+        + "\n".join(f"  {m}:{f}" for m, f in missing)
+    )
+    assert not stale, f"allowlisted as test-only but run elsewhere or gone: {sorted(stale)}"
+
+
 def test_allowlist_names_real_unpassed_parameters():
     unpassed, restated = scan()
     never, always = scan_none()
@@ -346,9 +473,12 @@ if __name__ == "__main__":
     print(f"defaulted: {n_all} (non-None {len(public_defaults(none=False))})  "
           f"unpassed: {len(unpassed)}  restated: {len(restated)}  "
           f"None never set: {len(never)}  None always set: {len(always)}  "
-          f"allowlisted: {sum(r in ALLOWED for r in flagged)}  uncalled: {len(uncalled())}")
+          f"allowlisted: {sum(r in ALLOWED for r in flagged)}  uncalled: {len(uncalled())}  "
+          f"test-only: {len(unreached())}")
     for m, f in uncalled():
         print(f"uncalled {m}:{f}")
+    for m, f in unreached():
+        print(f"test-only {m}:{f}{'  [allowed]' if (m, f) in TEST_ONLY else ''}")
     for tag, rows in (("unpassed", unpassed), ("restated", restated),
                       ("none-never", never), ("none-always", always)):
         for m, f, p in rows:

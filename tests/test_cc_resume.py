@@ -188,3 +188,29 @@ def test_bucketed_stage_quoted_columns_survive_restart(spark, tmp_path):
     assert back.count() == 100
     assert back.filter(F.col("`tick``mark`") == 7).count() == 1
     cat.delete("b_q")
+
+
+def test_bucket_spec_without_schema_json_is_refused(spark, tmp_path):
+    """A bucket spec of the older format (a simpleString `schema_ddl`,
+    no `schema_json`) is not re-registered after a session restart:
+    reading the stage fails naming it and the way to rebuild it."""
+    import json
+
+    import pytest
+
+    from tempel_spark.sources.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "ckpt"))
+    df = spark.range(0, 20).selectExpr("id AS k", "id * 2 AS v")
+    cat.write_bucketed_stage(df, "b_old", ("k",), n_buckets=4)
+    spec_path = f"{cat.path('b_old')}/_bucket_spec.json"
+    with open(spec_path) as fh:
+        spec = json.load(fh)
+    del spec["schema_json"]
+    spec["schema_ddl"] = "k:bigint,v:bigint"
+    with open(spec_path, "w") as fh:
+        json.dump(spec, fh)
+    spark.sql(f"DROP TABLE {cat._tbl('b_old')}")
+    with pytest.raises(ValueError, match="'b_old'.*write_bucketed_stage"):
+        cat.read("b_old")
+    cat.delete("b_old")
